@@ -12,7 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
+    // spawn-free `file:` I/O (graft.io.NioLocalFileSystem) for every
+    // checkpoint, source-log, state and sink file; registered on the
+    // builder because the SparkContext's first FileSystem.get fixes the
+    // cached class
+    val spark = graft.io.NioLocalFileSystem.register(SparkSession.builder())
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

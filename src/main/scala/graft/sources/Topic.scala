@@ -93,11 +93,14 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
         org.apache.spark.sql.SparkSession.getActiveSession
           .map(_.sparkContext.hadoopConfiguration)
           .getOrElse(new org.apache.hadoop.conf.Configuration()))
-      // local fast path (optimization round 20): Hadoop's local FS
-      // fork/execs chmod per create and readlink per rename, and writes a
-      // .crc sidecar per file (see NioCheckpointFileManager's header for
-      // the measurement) — per-wave fixed cost on every publish. java.nio
-      // does the identical dot-tmp → atomic-rename protocol forklessly.
+      // local fast path (optimization round 20): Hadoop's stock local FS
+      // fork/execs chmod per create when libhadoop's NativeIO is absent
+      // (graft.io.NioLocalFileSystem, registered by GraftSession.local,
+      // removes that spawn) and writes a .crc sidecar per file — per-wave
+      // fixed cost on every publish (see NioCheckpointFileManager's header
+      // for the measurement). java.nio does the identical dot-tmp →
+      // atomic-rename protocol with no spawn and no sidecar under any
+      // session.
       // Non-local roots (hdfs://, s3a://) keep the Hadoop FS path — the
       // whole point of resolving the FS from the session conf.
       if (fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||

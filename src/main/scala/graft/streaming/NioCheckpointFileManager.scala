@@ -11,33 +11,35 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
 /** Local-filesystem [[CheckpointFileManager]] over java.nio, for `file:`
-  * checkpoints (optimization round 20, guide §6: small files hurt twice —
-  * and here each small file also pays PROCESS FORKS).
+  * checkpoints (optimization round 20, guide §6: small files hurt twice).
   *
-  * Why it exists — measured on this box (thread-dump sampling of the
-  * stream execution thread during the per-micro-batch floor probe,
-  * `graft.tools.ProbeBatchFloor`): with the default managers every
-  * checkpoint file (offset log, commit log, every state delta) routes
-  * through Hadoop's local filesystem, which
+  * Why it exists — measured on a host without libhadoop's NativeIO
+  * (thread-dump sampling of the stream execution thread during the
+  * per-micro-batch floor probe, `graft.tools.ProbeBatchFloor`): with the
+  * default managers every checkpoint file (offset log, commit log, every
+  * state delta) routed through Hadoop's stock local filesystem, which
   *
-  *   - fork/execs `chmod` on EVERY file create
-  *     (`RawLocalFileSystem.setPermission` shells out when libhadoop's
-  *     NativeIO is absent, as on this box — one fork per data file plus
-  *     one per `.crc` sidecar),
-  *   - fork/execs `readlink` on EVERY rename
-  *     (`FileSystem.rename` → `getFileLinkStatus` →
+  *   - fork/execs `chmod` on every file create
+  *     (`RawLocalFileSystem.setPermission` shells out when NativeIO is
+  *     absent — one fork per data file plus one per `.crc` sidecar),
+  *   - fork/execs `readlink` on every FileContext rename
+  *     (`AbstractFileSystem.rename` → `getFileLinkStatus` →
   *     `FileUtil.readLink` shells out), and
   *   - writes a `.crc` SIDECAR beside every file (`ChecksumFs`), doubling
-  *     the small-file count and paying a second create+chmod fork — this
-  *     is the HADOOP checksum layer, separate from (and additional to)
-  *     Spark 4.1's `spark.sql.streaming.checkpoint.fileChecksum.enabled`
-  *     sidecars, which the replay sessions already disable.
+  *     the small-file count — this is the HADOOP checksum layer, separate
+  *     from (and additional to) Spark 4.1's
+  *     `spark.sql.streaming.checkpoint.fileChecksum.enabled` sidecars,
+  *     which the replay sessions already disable.
   *
   * Sampling attributed ~19% of the stream execution thread to
-  * `ProcessImpl.forkAndExec` and ~34% to checksum/local-FS machinery —
-  * none of it query work. A replay checkpoint lives on local disk for
-  * under a minute; java.nio `createDirectories`/`move`/`list` do the same
-  * job with zero forks, zero sidecars and OS-native atomic rename.
+  * `ProcessImpl.forkAndExec` and ~34% to checksum/local-FS machinery.
+  * Sessions built by `GraftSession.local` (and the test session) now
+  * register [[graft.io.NioLocalFileSystem]], which removes the two spawns
+  * for every `file:` caller but keeps the sidecars; this manager still
+  * skips the sidecars and the FileContext layers. A replay checkpoint
+  * lives on local disk for under a minute; java.nio
+  * `createDirectories`/`createLink`/`move`/`list` do the same job with
+  * zero forks, zero sidecars and OS-native atomic publish.
   *
   * Scope: LOCAL PATHS ONLY — construction refuses a non-`file:` scheme
   * loudly. Production checkpoints on HDFS/S3 keep Spark's default
@@ -49,12 +51,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * restores the default).
   *
   * Semantics mirrored from Spark's `FileContextBasedCheckpointFileManager`:
-  *   - `createAtomic` writes a dot-tmp in the target directory and renames
-  *     on close; with `overwriteIfPossible=false` an existing destination
-  *     raises Hadoop's `FileAlreadyExistsException` (the type
-  *     `HDFSMetadataLog` catches for concurrent-writer detection; the
-  *     exists-check-then-rename race window matches the built-in, which
-  *     checks via `Options.Rename.NONE` the same way).
+  *   - `createAtomic` writes a dot-tmp in the target directory and
+  *     publishes it on close. With `overwriteIfPossible=false` the publish
+  *     is a hard link (`Files.createLink`), which refuses an existing
+  *     destination atomically, so of two concurrent writers exactly one
+  *     wins and the other gets Hadoop's `FileAlreadyExistsException` (the
+  *     type `HDFSMetadataLog` catches for concurrent-writer detection).
+  *     A rename cannot do this on Linux: `ATOMIC_MOVE` replaces an
+  *     existing target even without `REPLACE_EXISTING`. With
+  *     `overwriteIfPossible=true` it is an atomic replacing move.
   *   - `list`/`open` on a missing path raise `FileNotFoundException`
   *     (java.nio's `NoSuchFileException` is translated — callers catch the
   *     Hadoop/java.io type).
@@ -94,16 +99,15 @@ class NioCheckpointFileManager(path: Path, hadoopConf: Configuration)
         if (!terminated) {
           terminated = true
           underlying.close()
-          if (!overwriteIfPossible && Files.exists(dst)) {
-            Files.deleteIfExists(tmp)
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-              s"rename destination $dst already exists")
-          }
-          try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-          catch { case e: java.nio.file.FileAlreadyExistsException =>
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(e.getMessage)
-          }
+          if (overwriteIfPossible)
+            Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
+              StandardCopyOption.REPLACE_EXISTING)
+          else
+            try Files.createLink(dst, tmp)
+            catch { case _: java.nio.file.FileAlreadyExistsException =>
+              throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+                s"destination $dst already exists")
+            } finally Files.deleteIfExists(tmp)
         }
       }
       override def cancel(): Unit = synchronized {

@@ -86,6 +86,18 @@ final class PageEventPipeline(spark: SparkSession, root: String,
   /** Entry point B job: T2 -> filter -> 5 s window count -> T4 + analytics.
     * Update output mode = the KTable changelog (SURVEY.md §2.1 #10); each
     * micro-batch's refinements go to the T4 topic and the snapshot store.
+    *
+    * Serve before sink: the snapshot store is updated first, so the first
+    * action on the persisted batch (the Analytics collect) runs the
+    * stateful stage and a refinement is visible without waiting for the
+    * T4 write job and its commit protocol — as the reference's interactive
+    * query reads the window store before the changelog commit. A crash
+    * between the two re-runs the uncommitted batch on restart: the store
+    * upsert is idempotent, T4 stays per-batchId idempotent, and
+    * `restoreAnalytics` still rebuilds the store from T4. A `stop()` that
+    * lands after the update waits for the T4 write (see
+    * [[PageEventPipeline.completeDespiteStop]]), so a stopped job's T4
+    * holds everything its store served.
     */
   def startJob(checkpoint: String): StreamingQuery =
     countsStream(PageEventCodec.fromWire(t2.stream(spark)))
@@ -96,8 +108,10 @@ final class PageEventPipeline(spark: SparkSession, root: String,
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val out = batch.persist()
         try {
-          t4.sinkBatch(out.select(col("name"), col("window_start"), col("cnt")), id)
           analytics.update(out, id)
+          PageEventPipeline.completeDespiteStop(spark) {
+            t4.sinkBatch(out.select(col("name"), col("window_start"), col("cnt")), id)
+          }
         } finally out.unpersist()
       }
       .start()
@@ -125,5 +139,37 @@ final class PageEventPipeline(spark: SparkSession, root: String,
       .groupBy(col("name"), col("window_start"))
       .agg(max(col("cnt")).as("cnt"))
     analytics.update(latest, -1L)
+  }
+}
+
+object PageEventPipeline {
+  /** Runs a sink write to completion even when its query is stopped
+    * meanwhile. `StreamingQuery.stop()` cancels the query's job group and
+    * interrupts the stream thread, which aborts a write in flight; after
+    * serve-before-sink that would leave a refinement the store already
+    * served missing from T4 until the next restart. The write runs on its
+    * own thread, in a job group of its own (the thread inherits the
+    * batch's other local properties), and the stream thread waits it out
+    * through interrupts, then restores its interrupt status so the stop
+    * proceeds. A failing write still fails the batch.
+    */
+  private def completeDespiteStop(spark: SparkSession)(write: => Unit): Unit = {
+    val task = new java.util.concurrent.FutureTask[Unit](() => {
+      spark.sparkContext.setJobGroup("graft-sink", "sink write",
+        interruptOnCancel = false)
+      write
+    })
+    val thread = new Thread(task, "graft-sink")
+    thread.setDaemon(true)
+    thread.start()
+    var interrupted = false
+    try {
+      var done = false
+      while (!done)
+        try { task.get(); done = true }
+        catch { case _: InterruptedException => interrupted = true }
+    } catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    } finally if (interrupted) Thread.currentThread().interrupt()
   }
 }

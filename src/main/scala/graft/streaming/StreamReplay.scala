@@ -206,15 +206,18 @@ object StreamReplay {
       // java.nio checkpoint I/O for the replay children (optimization
       // round 20): thread-dump sampling during ProbeBatchFloor attributed
       // ~19% of the stream execution thread to Hadoop local-FS PROCESS
-      // FORKS (chmod per file create, readlink per rename — libhadoop's
-      // NativeIO is absent on this box) and ~34% to ChecksumFs CRC
+      // FORKS (chmod per file create, readlink per rename, on a host
+      // without libhadoop's NativeIO) and ~34% to ChecksumFs CRC
       // machinery — per-batch fixed cost on every offset/commit-log write
-      // and state delta, none of it query work. NioCheckpointFileManager
-      // (local `file:` paths only, refuses anything else loudly) does the
-      // same create-temp→atomic-rename protocol through java.nio with
-      // zero forks and zero `.crc` sidecars. Production checkpoints on
-      // HDFS/S3 keep Spark's default managers (the parent session is
-      // untouched); env knob restores the default for A/B.
+      // and state delta, none of it query work. A session from
+      // GraftSession.local now registers graft.io.NioLocalFileSystem,
+      // which removes the forks for every `file:` caller; this manager
+      // (local `file:` paths only, refuses anything else loudly) still
+      // skips the `.crc` sidecars and the FileContext layers, and keeps
+      // the forks off sessions built without that registration (the
+      // Bench session). Production checkpoints on HDFS/S3
+      // keep Spark's default managers (the parent session is untouched);
+      // env knob restores the default for A/B.
       if (!sys.env.contains("SPARK_GRAFT_REPLAY_CKPT_MANAGER"))
         child.conf.set("spark.sql.streaming.checkpointFileManagerClass",
           "graft.streaming.NioCheckpointFileManager")
@@ -232,19 +235,15 @@ object StreamReplay {
       // class loads 279 -> 79 per warm run. Production streams (parent
       // session) keep codegen — at real volume the amortization argument
       // flips, which is exactly why this is per-session and not global.
-      val replayCodegen =
-        sys.env.getOrElse("SPARK_GRAFT_REPLAY_CODEGEN", "false").toBoolean
-      if (!replayCodegen) {
-        child.conf.set("spark.sql.codegen.wholeStage", "false")
-        // factoryMode is marked internal in Spark (testing-only knob for
-        // the expression-codegen fallback path, ADVICE r19) — acceptable
-        // here precisely because these child sessions ARE a test harness;
-        // if a future Spark drops it, the set throws AnalysisException at
-        // session build and the env knob restores codegen as the escape
-        // hatch. wholeStage=false alone still leaves per-expression
-        // codegen compiling watermark-literal predicates every batch.
-        child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      }
+      child.conf.set("spark.sql.codegen.wholeStage", "false")
+      // factoryMode is marked internal in Spark (testing-only knob for the
+      // expression-codegen fallback path, ADVICE r19) — acceptable here
+      // precisely because these child sessions ARE a test harness; if a
+      // future Spark drops it, the set throws AnalysisException at session
+      // build, loudly, and these two lines are the place to revisit.
+      // wholeStage=false alone still leaves per-expression codegen
+      // compiling watermark-literal predicates every batch.
+      child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       child
     })
   }

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.NioCheckpointFileManager
 
@@ -13,13 +11,14 @@ import graft.streaming.NioCheckpointFileManager
   * through it before it shipped); this spec pins the MECHANISM pieces an
   * oracle hash can't separate: the exception TYPES the streaming
   * machinery dispatches on (`HDFSMetadataLog` catches Hadoop's
-  * `FileAlreadyExistsException` for concurrent-writer detection; state
+  * `FileAlreadyExistsException` for concurrent-writer detection, and only
+  * one of two racing writers may publish; state
   * store listing catches `FileNotFoundException`), atomicity (no partial
   * file ever visible under the final name; cancel leaves nothing), and
   * the local-only guard (a remote scheme must refuse at construction,
   * not corrupt silently at first write).
   */
-class NioCheckpointFileManagerSpec extends AnyFunSuite {
+class NioCheckpointFileManagerSpec extends SparkSpec {
 
   private def freshFm(): (NioCheckpointFileManager, java.nio.file.Path) = {
     val root = java.nio.file.Files.createTempDirectory("graft_niocfm")
@@ -69,6 +68,37 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     assert(read(fm, f) == "third")
   }
 
+  test("two writers racing to publish the same name: exactly one wins") {
+    // HDFSMetadataLog's concurrent-writer detection: of two writers that
+    // both reach the publish step, one must get FileAlreadyExistsException
+    // and the winner's bytes must survive
+    val (fm, root) = freshFm()
+    val writers = 4
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    try (0 until 300).foreach { round =>
+      val f = new Path(root.toString, s"offsets/$round")
+      val barrier = new java.util.concurrent.CyclicBarrier(writers)
+      val outs = (0 until writers).map { w =>
+        val out = fm.createAtomic(f, overwriteIfPossible = false)
+        out.write(s"writer-$w".getBytes("UTF-8"))
+        out
+      }
+      val results = outs.map { out =>
+        pool.submit(() => {
+          barrier.await()
+          try { out.close(); true }
+          catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+        })
+      }.map(_.get())
+      assert(results.count(identity) == 1, s"round $round: winners $results")
+      assert(read(fm, f) == s"writer-${results.indexOf(true)}",
+        s"round $round: the winner's bytes were replaced")
+    } finally pool.shutdown()
+    val leftovers = fm.list(new Path(root.toString, "offsets"))
+      .map(_.getPath.getName).filter(_.endsWith(".tmp"))
+    assert(leftovers.isEmpty, s"tmp litter: ${leftovers.mkString(",")}")
+  }
+
   test("cancel leaves no trace; open/list on missing raise FileNotFoundException") {
     val (fm, root) = freshFm()
     val f = new Path(root.toString, "state/1.delta")
@@ -116,13 +146,9 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("replay child sessions opt in; the parent session does not") {
-    val parent = SparkSession.builder()
-      .master("local[2]").appName("graft-niocfm")
-      .config("spark.ui.enabled", "false").getOrCreate()
-      // getOrCreate may hand back the suite-shared session in one sbt JVM
-      // — never stop it; a fresh child keeps this spec's conf reads
-      // isolated either way
-      .newSession()
+    // a fresh child of the suite-shared session keeps this spec's conf
+    // reads isolated
+    val parent = spark.newSession()
     // build a replay child the way the harnesses do; read the conf back
     val child = graft.streaming.StreamReplay.testReplaySession(parent)
     assert(child.conf.get("spark.sql.streaming.checkpointFileManagerClass")

@@ -213,6 +213,114 @@ class PipelineSpec extends SparkSpec {
     assert(fV.startsWith("data: {"), s"unexpected SSE frame: $fV")
   }
 
+  test("serve before sink: a T4 write failing after the Analytics update recovers exactly") {
+    // the job updates Analytics before it writes T4; a T4 write that fails
+    // after the update fails the batch, which is not committed, so the
+    // restart re-runs it: T4 and the store must end where a no-fault
+    // control ends, with no refinement lost or doubled. No-data batches
+    // are off so the only batch after phase 1 is phase 2's data batch,
+    // whatever the trigger timing.
+    val session = GraftSession.tune(spark.newSession())
+    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val control = new PageEventPipeline(session, tmpDir("topicsC"))
+    val rootV = tmpDir("topicsV")
+    val victim = new PageEventPipeline(session, rootV)
+    val (ckC, ckV) = (tmpDir("ckptC"), tmpDir("ckptV"))
+    def phase1(p: PageEventPipeline) = p.t2.append(Seq(
+      ("P1", "U1", 10001L, 101L), ("P1", "U2", 12000L, 300L),
+      ("P2", "U1", 14000L, 5000L)).toDF("name", "user", "date", "duration"))
+    def phase2(p: PageEventPipeline) = p.t2.append(Seq(
+      ("P1", "U1", 13500L, 999L), ("P2", "U2", 16100L, 200L),
+      ("P1", "U1", 20500L, 150L)).toDF("name", "user", "date", "duration"))
+    def t4Final(p: PageEventPipeline) = p.t4.batch(spark)
+      .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
+      .as[(String, Long, Long)].collect().toSet
+
+    val jobC = control.startJob(ckC)
+    try {
+      phase1(control); jobC.processAllAvailable()
+      phase2(control); jobC.processAllAvailable()
+    } finally jobC.stop()
+
+    val jobV = victim.startJob(ckV)
+    val t4 = java.nio.file.Paths.get(rootV, victim.t4.name)
+    val aside = java.nio.file.Paths.get(rootV, "T4.aside")
+    try {
+      phase1(victim); jobV.processAllAvailable()
+      // a regular file where the T4 directory was: the next T4 write
+      // cannot create its batch directory and fails the batch
+      java.nio.file.Files.move(t4, aside)
+      java.nio.file.Files.createFile(t4)
+      phase2(victim)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        jobV.processAllAvailable()
+      }
+    } finally jobV.stop()
+    // the store already serves phase 2: the update ran before the write
+    assert(victim.analytics.snapshot(20L) == control.analytics.snapshot(20L))
+    assert(t4Final(victim) != t4Final(control), "the T4 write must have failed")
+
+    java.nio.file.Files.delete(t4)
+    java.nio.file.Files.move(aside, t4)
+    val jobV2 = victim.startJob(ckV)
+    try jobV2.processAllAvailable() finally jobV2.stop()
+
+    assert(t4Final(victim) == t4Final(control))
+    assert(t4Final(victim) == Set(("P1", 10L, 3L), ("P2", 10L, 1L),
+      ("P2", 15L, 1L), ("P1", 20L, 1L)))
+    Seq(10L, 14L, 15L, 16L, 20L, 23L).foreach { now =>
+      assert(victim.analytics.snapshot(now) == control.analytics.snapshot(now),
+        s"snapshots diverge at now=$now")
+    }
+    // and a store rebuilt from the repaired T4 serves the same answer
+    victim.restoreAnalytics()
+    Seq(14L, 16L, 20L).foreach { now =>
+      assert(victim.analytics.snapshot(now) == control.analytics.snapshot(now),
+        s"rebuilt snapshot diverges at now=$now")
+    }
+  }
+
+  test("stop() during the T4 write leaves T4 holding what the store served") {
+    // stop() cancels the query's jobs and interrupts its thread; with the
+    // store updated first, a T4 write aborted by it would leave served
+    // refinements out of T4 until a restart
+    val root = tmpDir("topics")
+    val p = new PageEventPipeline(spark, root)
+    p.t2.append(Seq(
+      ("P1", "U1", 10001L, 101L), ("P1", "U2", 12000L, 300L),
+      ("P2", "U1", 14000L, 5000L)).toDF("name", "user", "date", "duration"))
+    val job = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.sql.streaming.StreamingQuery]()
+    val stopper = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelation") &&
+                x.physicalPlanDescription.contains(s"$root/${p.t4.name}") =>
+            val t = new Thread(() => {
+              while (job.get == null) Thread.sleep(1)
+              job.get.stop()
+            })
+            if (stopper.compareAndSet(null, t)) t.start()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      job.set(p.startJob(tmpDir("ckpt")))
+      job.get.awaitTermination(60000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stopper.get != null, "the T4 write never started")
+    stopper.get.join()
+    assert(job.get.exception.isEmpty, s"stop must not fail the job: ${job.get.exception}")
+    assert(p.analytics.snapshot(14L) == Map("P1" -> 2L, "P2" -> 1L))
+    val t4 = p.t4.batch(spark)
+      .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
+      .as[(String, Long, Long)].collect().toSet
+    assert(t4 == Set(("P1", 10L, 2L), ("P2", 10L, 1L)))
+  }
+
   test("sinkBatch is idempotent when foreachBatch replays a micro-batch") {
     val p = new PageEventPipeline(spark, tmpDir("topics"))
     val df = Seq(("P1", "U1", 1000L, 200L)).toDF("name", "user", "date", "duration")

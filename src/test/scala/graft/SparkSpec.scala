@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.tune(
-    SparkSession.builder()
+    // the same spawn-free `file:` filesystem as GraftSession.local, so
+    // every suite runs its I/O through it
+    graft.io.NioLocalFileSystem.register(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
