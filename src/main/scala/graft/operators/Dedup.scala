@@ -368,7 +368,7 @@ object Dedup {
   // session-default-partition variant against the 8-partition baseline)
   //
   // Cached per (parent, partitions) — the same churn argument as
-  // StreamReplay.replaySession: a fresh newSession per invocation makes
+  // ReplayHarness.session: a fresh newSession per invocation makes
   // every bench pass re-initialize per-session state (session-state
   // codegen contexts, listener buses) for each of the three fixpoint
   // queries, and that re-JIT rode their warm-pass times (~3.3 s jit2

@@ -428,7 +428,7 @@ object StorageSuite {
   /** Conf-scoped child session for [[aggPushdown]], cached per parent —
     * a fresh `newSession()` per call (twice per bench pass + spec runs)
     * reintroduces the per-call child-session codegen/JIT churn the
-    * replay harness already eliminated (StreamReplay.replaySession).
+    * replay harness already eliminated (ReplayHarness.session).
     */
   // WEAK-keyed on the parent (ADVICE r13): a strong key would pin parent
   // and child sessions for the JVM lifetime — same pattern as

@@ -45,10 +45,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * loudly. Production checkpoints on HDFS/S3 keep Spark's default
   * managers (rename semantics, checksums and durability guarantees there
   * are exactly what this class strips for the local replay case); the
-  * replay child sessions opt in via
+  * replay child sessions always opt in via
   * `spark.sql.streaming.checkpointFileManagerClass` (see
-  * [[StreamReplay.replaySession]], env `SPARK_GRAFT_REPLAY_CKPT_MANAGER`
-  * restores the default).
+  * [[ReplayHarness.session]]).
   *
   * Semantics mirrored from Spark's `FileContextBasedCheckpointFileManager`:
   *   - `createAtomic` writes a dot-tmp in the target directory and

@@ -5,9 +5,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.model.Tables
+import graft.model.{PageEventCodec, Tables}
 import graft.operators.PageViews
+import graft.sources.{FileTopic, Topics}
+import graft.streaming.ReplayHarness.DayUs
 
 /** Replay row shape for the fixture-to-stream bridge (event_type -> name,
   * ts -> date, value -> duration — FIXTURES.md §B, same mapping as the
@@ -24,33 +27,20 @@ final case class ReplayTyped(user_id: Long, event_type: String,
 
 /** Bounded replays of fixture tables through the REAL streaming pipeline —
   * the driver-contract bridge that turns streaming correctness into an
-  * oracle-checkable batch row (round-5 verdict ask #5: streaming was
-  * previously parity-spec-verified only).
+  * oracle-checkable batch row. Every row runs through [[ReplayHarness]]:
+  * the row states its topics, query builders, wave schedule and finish.
   */
 object StreamReplay {
 
-  /** Each replay's checkpoint dir is deleted as soon as its query stops —
-    * a bench run starts ten replays; leaking RocksDB/changelog state per
-    * run turns /tmp into a landfill.
-    */
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: java.io.IOException => () }
-
-  /** Harness-vs-engine wall split (round-14 verdict ask #4): a replay
-    * row's wall time is mostly CHOREOGRAPHY — fixture collects, quartered
-    * topic publishes, checkpoint setup, restarts — not query execution,
-    * and stream_zscore spent three rounds as the suite's slowest/flagged
-    * row on exactly that. Every drain accumulates its
-    * `processAllAvailable` wall (the micro-batch execution the engine
-    * actually owns) here; Bench resets the counter per measured query and
-    * records `engine_sec` (this) and `harness_sec` (wall minus this) per
-    * stream_ / state_ row, so the bench ledger attributes replay seconds
-    * to the right owner. Accumulation is atomic — a replay may drain
-    * several incarnations per query — and reset/read happen on the
+  /** Harness-vs-engine wall split: a replay row's wall time is mostly
+    * CHOREOGRAPHY — fixture collects, quartered topic publishes,
+    * checkpoint setup, restarts — not query execution. Every drain
+    * accumulates its `processAllAvailable` wall (the micro-batch execution
+    * the engine actually owns) here; Bench resets the counter per measured
+    * query and records `engine_sec` (this) and `harness_sec` (wall minus
+    * this) per stream_ / state_ row, so the bench ledger attributes replay
+    * seconds to the right owner. Accumulation is atomic — a replay may
+    * drain several incarnations per query — and reset/read happen on the
     * driver's measurement thread.
     */
   object EngineTimer {
@@ -63,267 +53,30 @@ object StreamReplay {
     }
   }
 
-  /** Last-seen micro-batch id per streaming-query id, for the [drain]
-    * hook's per-drain attribution (see drainQuery). Query ids are unique
-    * per incarnation, so a restart naturally restarts attribution.
-    */
-  private val drainSeen =
-    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Long]()
-
-  /** The one blocking drain every replay funnels through: engine-owned
-    * micro-batch execution, timed into [[EngineTimer]].
-    */
-  private def drainQuery(q: org.apache.spark.sql.streaming.StreamingQuery,
-                         stopAfter: Boolean = true): Unit =
-    try {
-      EngineTimer.timed(q.processAllAvailable())
-      // measurement hook (optimization round 19, guide §1: measure first):
-      // per-drain micro-batch count + driver-side duration breakdown, the
-      // numbers that attribute a replay's engine lane to planning vs WAL
-      // vs state commit. Off unless SPARK_GRAFT_STREAM_PROGRESS is set —
-      // progress JSON assembly is itself driver work.
-      //
-      // recentProgress is CUMULATIVE across every drain of one query
-      // incarnation (and ring-buffer-capped at
-      // spark.sql.streaming.numRecentProgressUpdates = 100 entries), so a
-      // naive sum double-counts earlier drains' batches and a >100-batch
-      // drain under-reports (ADVICE r19). Attribute per-drain by keeping
-      // the last-seen batchId per query id and summing only newer entries;
-      // the 100-entry cap still silently drops history on a single drain
-      // that runs past it — replay drains are tens of batches, well under.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS")) {
-        val last = drainSeen.getOrDefault(q.id, -1L)
-        val ps = q.recentProgress.filter(_.batchId > last)
-        if (ps.nonEmpty) drainSeen.put(q.id, ps.map(_.batchId).max)
-        val keys = ps.flatMap(p =>
-          scala.jdk.CollectionConverters.MapHasAsScala(p.durationMs)
-            .asScala.keys).distinct.sorted
-        val sums = keys.map { k =>
-          k -> ps.map(p => Option(p.durationMs.get(k)).map(_.longValue)
-            .getOrElse(0L)).sum
-        }
-        System.err.println(s"[drain] batches=${ps.length} " +
-          sums.map { case (k, v) => s"$k=$v" }.mkString(" "))
-      }
-    } finally if (stopAfter) q.stop()
-
-  /** Conf-scoped child session every replay harness runs under (same
-    * pattern as Dedup's round-scoped flooding sessions): parent conf
-    * copied, HEAP state store — replay state is ~|keys x live windows|
-    * tiny rows, where HDFSBacked beats RocksDB's native round-trips
-    * (measured 21 s vs 32 s cold at sf0.1) — and a small shuffle fan-out
-    * instead of the corpus-sized session default. The DECLARED fan-outs —
-    * stream-stream joins 4 (two state stores per partition per micro-batch,
-    * so per-batch store open/commit overhead dominates), everything else 8
-    * — are divided by the replayParts divisor (default 4, floored at 2 for
-    * any multi-partition declaration so restart replays always recover
-    * cross-partition state; see replayParts). The caller's session keeps
-    * its RocksDB posture for production jobs.
-    */
-  /** Child sessions are CACHED per (parent, partitions, provider) and
-    * reused across replay invocations (round-11 verdict ask #2): each
-    * replay stops its own streaming queries, so a conf-scoped session is
-    * freely reusable, and rebuilding one per call made every bench pass
-    * re-initialize per-session state (listener buses, session-state
-    * codegen contexts) 16 times over — churn that rode the pass-2
-    * headline as unattributed JIT/class-load tax on NEIGHBORING queries.
-    */
-  private val sessionCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int, Boolean),
-      SparkSession]()
-
-  /** Replay-lane state fan-out (optimization round 19, guide §2: derive
-    * partitioning from the data, not from a constant tuned for either
-    * mode). A replay processes a few thousand sf0.001 rows, but EVERY
-    * per-micro-batch fixed cost multiplies by the shuffle-partition count:
-    * one state store per partition per stateful operator is opened at
-    * every incarnation start (RocksDB: changelog replay + native open),
-    * committed at every batch (delta/changelog file + CRC sidecar), and
-    * maintained. At the old fan-out of 8 the engine lane of the 56 replay
-    * rows was dominated by store count, not data. The env knob exists for
-    * A/B measurement and for replaying bigger fixtures (set it to taste);
-    * the default divides the declared fan-out by 4 (8 -> 2 for stateful
-    * aggs, 4 -> 1 for stream-stream joins' four-stores-per-partition) —
-    * measured on the heavy replay rows as the knee of the curve; a real
-    * deployment sizes this to event volume per trigger, exactly like
-    * spark.sql.shuffle.partitions on the batch side. The env knob is a
-    * DIVISOR over the declared fan-out (1 restores the pre-r19 behavior)
-    * so the deliberate 8-vs-4 split between aggregation and join replays
-    * survives any setting.
-    */
-  private def replayParts(declared: Int): Int = {
-    // typo-tolerant parse (ADVICE r19): a malformed value must not crash
-    // every replay with an uncaught NumberFormatException — warn and fall
-    // back to the default divisor instead
-    val div = sys.env.get("SPARK_GRAFT_REPLAY_PART_DIV").flatMap { s =>
-      scala.util.Try(s.toInt).toOption.orElse {
-        System.err.println(
-          s"[replay] ignoring non-numeric SPARK_GRAFT_REPLAY_PART_DIV='$s'" +
-            " (using default 4)")
-        None
-      }
-    }.getOrElse(4)
-    // multi-partition floor (ADVICE r19, medium): the checkpoint/restart
-    // replays exist to prove STATE RECOVERY, and a fan-out divided down to
-    // one partition exercises exactly one state store per operator — no
-    // cross-partition recovery coverage. Any multi-partition declaration
-    // keeps at least 2 partitions under every divisor (the stream-stream
-    // join lane's declared 4 was collapsing to 1 under the default div=4).
-    val raw = declared / math.max(1, div)
-    if (declared > 1) math.max(2, raw) else math.max(1, raw)
-  }
-
-  private def replaySession(spark: SparkSession,
-                            shufflePartitions: Int,
-                            keepRocksDb: Boolean = false): SparkSession = {
-    val parts = replayParts(shufflePartitions)
-    sessionCache.computeIfAbsent((spark, parts, keepRocksDb), _ => {
-      val child = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try child.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
-      // keepRocksDb: transformWithState REQUIRES the RocksDB provider (the
-      // suppress replay); every other replay's tiny stateful agg prefers the
-      // heap store's lower per-batch open/commit cost
-      if (!keepRocksDb)
-        child.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "HDFSBackedStateStoreProvider")
-      child.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      // Spark 4.1 writes a CRC32C checksum SIDECAR beside every checkpoint
-      // file (offset log, commit log, every state delta/changelog) and
-      // verifies it on read — corruption detection for long-lived
-      // checkpoints on remote object stores. A replay harness writes its
-      // checkpoint to local disk, reads it back within the same minute and
-      // deletes it; the sidecars double the small-file count per
-      // micro-batch for zero protection (optimization round 19, guide §6:
-      // small files hurt twice). Production checkpoints (the parent
-      // session) keep the Spark default.
-      child.conf.set(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CRC", "false"))
-      // java.nio checkpoint I/O for the replay children (optimization
-      // round 20): thread-dump sampling during ProbeBatchFloor attributed
-      // ~19% of the stream execution thread to Hadoop local-FS PROCESS
-      // FORKS (chmod per file create, readlink per rename, on a host
-      // without libhadoop's NativeIO) and ~34% to ChecksumFs CRC
-      // machinery — per-batch fixed cost on every offset/commit-log write
-      // and state delta, none of it query work. A session from
-      // GraftSession.local now registers graft.io.NioLocalFileSystem,
-      // which removes the forks for every `file:` caller; this manager
-      // (local `file:` paths only, refuses anything else loudly) still
-      // skips the `.crc` sidecars and the FileContext layers, and keeps
-      // the forks off sessions built without that registration (the
-      // Bench session). Production checkpoints on HDFS/S3
-      // keep Spark's default managers (the parent session is untouched);
-      // env knob restores the default for A/B.
-      if (!sys.env.contains("SPARK_GRAFT_REPLAY_CKPT_MANAGER"))
-        child.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-          "graft.streaming.NioCheckpointFileManager")
-      // INTERPRETED expression mode for replay children (optimization
-      // round 19, guide §1.2 "per-task work" inverted for tiny inputs):
-      // a micro-batch's generated code embeds the CURRENT WATERMARK as a
-      // literal, so every batch of every incarnation janino-compiles and
-      // classloads fresh predicate/projection classes that can never hit
-      // the codegen cache — measured ~280 class loads and ~9 JIT seconds
-      // per stream_asof_ttl run at STEADY STATE, with the synchronous
-      // compile riding the engine lane (addBatch). At replay scale
-      // (sf0.001, a few thousand rows) compilation can never amortize:
-      // interpreted rows cost microseconds while each compile costs
-      // milliseconds. Measured on stream_asof_ttl: engine 7.4 -> 5.0 s,
-      // class loads 279 -> 79 per warm run. Production streams (parent
-      // session) keep codegen — at real volume the amortization argument
-      // flips, which is exactly why this is per-session and not global.
-      child.conf.set("spark.sql.codegen.wholeStage", "false")
-      // factoryMode is marked internal in Spark (testing-only knob for the
-      // expression-codegen fallback path, ADVICE r19) — acceptable here
-      // precisely because these child sessions ARE a test harness; if a
-      // future Spark drops it, the set throws AnalysisException at session
-      // build, loudly, and these two lines are the place to revisit.
-      // wholeStage=false alone still leaves per-expression codegen
-      // compiling watermark-literal predicates every batch.
-      child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      child
-    })
-  }
-
   /** Test hook: build (or fetch from the cache) a replay child session
-    * exactly as the harnesses do, so specs can pin the child-vs-parent
+    * exactly as the harness does, so specs can pin the child-vs-parent
     * conf split (NioCheckpointFileManagerSpec).
     */
   private[graft] def testReplaySession(spark: SparkSession): SparkSession =
-    replaySession(spark, shufflePartitions = 8)
+    ReplayHarness.session(spark, shufflePartitions = 8)
 
-  /** The quartered publish-and-restart schedule shared by the topic
-    * replays (review finding, round 11 — previously copy-pasted per
-    * replay): the fixture streams in as four event-time quarters with the
-    * consumer stopped and restarted from its checkpoint mid-stream, then
-    * each `sentinelOffset` (days past the fixture's end) publishes one
-    * sentinel row and drains again — the two-sentinel watermark-flush
-    * pattern, N-sentinel for operator chains with deeper emission lag.
-    * Replays with a non-quartered schedule (redelivery injection, fence
-    * splits, tail-only bootstraps, two-topic joins) keep their own
-    * schedules — the schedule IS their scenario.
-    */
-  /** One-collect wire staging for a bespoke replay schedule (round 20,
-    * same rationale as [[runQuartered]]'s staged path): serializes `df`
-    * ONCE — `to_json(struct(*))` is the same JacksonGenerator as
-    * `toJSON`/the json datasource, so wire bytes are unchanged — and
-    * returns a (from, until, last) publisher whose waves are driver-side
-    * slices on the key column, replacing one filter+serialize Spark job
-    * per wave. Non-JSON wires keep the per-wave DataFrame append.
-    */
-  private def stageWire(df: DataFrame, keyCol: String,
-                        topic: graft.sources.FileTopic)
-      : (Long, Long, Boolean) => Unit =
-    if (topic.jsonWire) {
-      val staged = df.select(col(keyCol).cast("long"),
-          to_json(struct(df.columns.map(col): _*)))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      (from: Long, until: Long, last: Boolean) => topic.appendLines(
-        staged.collect { case (k, j) if k >= from && (last || k < until) => j })
-    } else
-      (from: Long, until: Long, last: Boolean) => topic.append(
-        df.filter(col(keyCol) >= from &&
-          (if (last) lit(true) else col(keyCol) < until)).coalesce(1))
+  /** Field list -> nullable StructType. */
+  private def schema(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
 
-  /** Takes the TOPIC rather than a publish callback since round 20: on a
-    * JSON wire the whole fixture is serialized ONCE (one collect job)
-    * and each wave is a driver-side slice written via appendLines,
-    * replacing one filter+serialize Spark job per wave; a non-JSON wire
-    * (the Avro transport swap) keeps the per-wave DataFrame appends.
-    * Sentinel rows stay per-publish DataFrame appends (one-row frames).
+  /** A checkpoint's state store (or one transformWithState variable of
+    * it), read offline through Spark 4's state data source.
     */
-  private def runQuartered(events: DataFrame, lo: Long, hi: Long,
-                           topic: graft.sources.FileTopic, drain: () => Unit,
-                           sentinelOffsets: Seq[Long] = Nil,
-                           sentinel: Long => DataFrame = null): Unit = {
-    val quarter = math.max(1L, (hi - lo) / 4)
-    val staged: Array[(Long, String)] =
-      if (topic.jsonWire)
-        events.select(col("date").cast("long"),
-            to_json(struct(events.columns.map(col): _*)))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-      else null
-    def publishRange(from: Long, until: Long, last: Boolean): Unit =
-      if (staged != null)
-        topic.appendLines(staged.collect {
-          case (d, j) if d >= from && (last || d < until) => j
-        })
-      else topic.append(events.filter(col("date") >= from &&
-        (if (last) lit(true) else col("date") < until)).coalesce(1))
-    publishRange(lo, lo + quarter, last = false)
-    publishRange(lo + quarter, lo + 2 * quarter, last = false)
-    drain() // incarnation 1: offsets + operator state checkpointed
-    publishRange(lo + 2 * quarter, lo + 3 * quarter, last = false)
-    publishRange(lo + 3 * quarter, Long.MaxValue, last = true)
-    if (sentinelOffsets.isEmpty) drain() // incarnation 2: recovered state
-    else sentinelOffsets.foreach { off =>
-      topic.append(sentinel(hi + off * 86400L * 1000000L))
-      drain()
-    }
-  }
+  private def stateVar(child: SparkSession, ckpt: String,
+                       name: String): DataFrame =
+    child.read.format("statestore").option("path", ckpt)
+      .option("stateVarName", name).load()
+
+  /** A replay core's finish: reads the answer from the stopped pipeline
+    * (child session, checkpoint path, out topic) BEFORE the scope's temp
+    * root is deleted.
+    */
+  private type Finish = (SparkSession, String, FileTopic) => DataFrame
 
   /** The reference topology (filter -> rekey -> 5 s tumbling window ->
     * count), executed AS A STREAM: the events fixture is replayed
@@ -354,34 +107,38 @@ object StreamReplay {
         .orderBy(col("date"))
         .as[ReplayEvent].collect()
     }
-    val child = replaySession(spark, shufflePartitions = 8)
-    import child.implicits._
-    val input = MemoryStream[ReplayEvent](child)
-    val counts = PageViews.unwrapWindow(
-      PageViews.windowedCounts(
-        PageViews.rekey(
-          PageViews.filterValid(input.toDF(), "duration"), "name", "date")
-          .withWatermark("date", "10 seconds"),
-        "date", "name"),
-      "name")
-    val sink = "stream_page_counts_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay")
-    val q = counts.writeStream.outputMode("update")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      val per = math.max(1, math.ceil(rows.length.toDouble / numBatches).toInt)
-      rows.grouped(per).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        drainQuery(q, stopAfter = false)
+    ReplayHarness(spark, partitions = 8) { r =>
+      import r.child.implicits._
+      val input = MemoryStream[ReplayEvent](r.child)
+      val q = r.memory("stream_page_counts", "update") {
+        PageViews.unwrapWindow(
+          PageViews.windowedCounts(
+            PageViews.rekey(
+              PageViews.filterValid(input.toDF(), "duration"), "name", "date")
+              .withWatermark("date", "10 seconds"),
+            "date", "name"),
+          "name")
       }
-    } finally { q.stop(); deleteTree(ckpt) }
-    child.table(sink)
-      .groupBy(col("name").as("event_type"), col("window_start"))
-      .agg(max(col("cnt")).as("cnt"))
+      chunked(r, q, input, chunksOf(rows, numBatches))
+      r.snapshot(r.table(q)
+        .groupBy(col("name").as("event_type"), col("window_start"))
+        .agg(max(col("cnt")).as("cnt")))
+    }
   }
+
+  /** The MemoryStream replays' schedule: one long-running incarnation,
+    * each chunk added and drained before the next.
+    */
+  private def chunked[A](r: ReplayScope, q: ReplayQuery,
+                         input: MemoryStream[A], chunks: Seq[Seq[A]]): Unit =
+    r.run(q) { pump =>
+      chunks.foreach { chunk => input.addData(chunk); pump() }
+    }
+
+  /** The event-time-ordered fixture in `numBatches` chunks. */
+  private def chunksOf[A](rows: Array[A], numBatches: Int): Seq[Seq[A]] =
+    rows.toSeq.grouped(
+      math.max(1, math.ceil(rows.length.toDouble / numBatches).toInt)).toSeq
 
   /** `session_window` sessionization executed AS A STREAM — the MERGING
     * stateful window (unlike tumbling, a session's extent grows as events
@@ -412,32 +169,26 @@ object StreamReplay {
         .orderBy(col("ts"))
         .as[ReplaySession].collect()
     }
-    val child = replaySession(spark, shufflePartitions = 8)
-    import child.implicits._
-    val input = MemoryStream[ReplaySession](child)
-    val sessions = input.toDF()
+    ReplayHarness(spark, partitions = 8) { r =>
+      import r.child.implicits._
+      val input = MemoryStream[ReplaySession](r.child)
+      val q = r.memory("stream_session_counts", "complete") {
+        memorySessions(input.toDF())
+      }
+      chunked(r, q, input, chunksOf(rows, numBatches))
+      r.snapshot(r.table(q))
+    }
+  }
+
+  /** The MemoryStream session-window query both session replays run. */
+  private def memorySessions(events: DataFrame): DataFrame =
+    events
       .withWatermark("ts", "10 seconds")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         col("session_window.start").cast("long").as("session_start"),
         col("n_events"))
-    val sink = "stream_session_counts_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay")
-    val q = sessions.writeStream.outputMode("complete")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      val per = math.max(1, math.ceil(rows.length.toDouble / numBatches).toInt)
-      rows.grouped(per).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        drainQuery(q, stopAfter = false)
-      }
-    } finally { q.stop(); deleteTree(ckpt) }
-    child.table(sink)
-  }
 
   /** Session windows in APPEND mode — the production emission path: a
     * session row is emitted exactly once, when the watermark passes its
@@ -463,40 +214,21 @@ object StreamReplay {
         .orderBy(col("ts"))
         .as[ReplaySession].collect()
     }
-    val child = replaySession(spark, shufflePartitions = 8)
-    import child.implicits._
-    val input = MemoryStream[ReplaySession](child)
-    val sessions = input.toDF()
-      .withWatermark("ts", "10 seconds")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        col("session_window.start").cast("long").as("session_start"),
-        col("n_events"))
-    val sink = "stream_session_append_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay")
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      val per = math.max(1, math.ceil(rows.length.toDouble / numBatches).toInt)
-      rows.grouped(per).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        drainQuery(q, stopAfter = false)
+    ReplayHarness(spark, partitions = 8) { r =>
+      import r.child.implicits._
+      val input = MemoryStream[ReplaySession](r.child)
+      val q = r.memory("stream_session_append", "append") {
+        memorySessions(input.toDF())
       }
       // two sentinel batches: the first advances the watermark (updated at
       // batch END), the second's processing acts on it and emits every
       // closed real session
       val flush = new Timestamp(rows.last.ts.getTime + 2L * 86400 * 1000)
-      input.addData(ReplaySession(-1L, flush))
-      drainQuery(q, stopAfter = false)
-      input.addData(ReplaySession(-1L,
-        new Timestamp(flush.getTime + 1000)))
-      drainQuery(q, stopAfter = false)
-    } finally { q.stop(); deleteTree(ckpt) }
-    child.table(sink).filter(col("user_id") =!= -1L)
+      chunked(r, q, input, chunksOf(rows, numBatches) ++ Seq(
+        Seq(ReplaySession(-1L, flush)),
+        Seq(ReplaySession(-1L, new Timestamp(flush.getTime + 1000)))))
+      r.snapshot(r.table(q).filter(col("user_id") =!= -1L))
+    }
   }
 
   /** Watermarked streaming dedup executed as a stream — the
@@ -525,32 +257,22 @@ object StreamReplay {
         .orderBy(col("ts"), col("event_id"))
         .as[ReplayTyped].collect()
     }
-    val child = replaySession(spark, shufflePartitions = 8)
-    import child.implicits._
-    val input = MemoryStream[ReplayTyped](child)
-    val deduped = input.toDF()
-      .withWatermark("ts", "10 seconds")
-      .dropDuplicatesWithinWatermark("event_id")
-    val sink = "stream_dedup_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      val per = math.max(1, math.ceil(rows.length.toDouble / numBatches).toInt)
-      val chunks = rows.grouped(per).toSeq
-      chunks.indices.foreach { i =>
-        val dupes = chunks(i).take(25) ++
-          (if (i > 0) chunks(i - 1) else Array.empty[ReplayTyped])
-        input.addData((chunks(i) ++ dupes).toSeq)
-        drainQuery(q, stopAfter = false)
+    ReplayHarness(spark, partitions = 8) { r =>
+      import r.child.implicits._
+      val input = MemoryStream[ReplayTyped](r.child)
+      val q = r.memory("stream_dedup", "append") {
+        input.toDF()
+          .withWatermark("ts", "10 seconds")
+          .dropDuplicatesWithinWatermark("event_id")
       }
-    } finally { q.stop(); deleteTree(ckpt) }
-    child.table(sink)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
+      val chunks = chunksOf(rows, numBatches)
+      chunked(r, q, input, chunks.indices.map { i =>
+        chunks(i) ++ chunks(i).take(25) ++ (if (i > 0) chunks(i - 1) else Nil)
+      })
+      r.snapshot(r.table(q)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events")))
+    }
   }
 
   /** Stream-STREAM inner join executed as a stream — view -> click
@@ -580,36 +302,26 @@ object StreamReplay {
         .orderBy(col("ts"), col("event_id"))
         .as[ReplayTyped].collect()
     }
-    val child = replaySession(spark, shufflePartitions = 4)
-    import child.implicits._
-    val input = MemoryStream[ReplayTyped](child)
-    val views = input.toDF().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", "10 seconds")
-    val clicks = input.toDF().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 seconds")
-    val pairs = views.join(clicks,
-      col("v_user") === col("c_user") &&
-        col("c_ts") >= col("v_ts") &&
-        col("c_ts") <= col("v_ts") + expr("INTERVAL 1 DAY"))
-    val sink = "stream_click_attrib_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay")
-    val q = pairs.writeStream.outputMode("append")
-      .format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      val per = math.max(1, math.ceil(rows.length.toDouble / numBatches).toInt)
-      rows.grouped(per).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        drainQuery(q, stopAfter = false)
+    ReplayHarness(spark, partitions = 4) { r =>
+      import r.child.implicits._
+      val input = MemoryStream[ReplayTyped](r.child)
+      val q = r.memory("stream_click_attrib", "append") {
+        val views = input.toDF().filter(col("event_type") === "view")
+          .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
+          .withWatermark("v_ts", "10 seconds")
+        val clicks = input.toDF().filter(col("event_type") === "click")
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+          .withWatermark("c_ts", "10 seconds")
+        views.join(clicks,
+          col("v_user") === col("c_user") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("INTERVAL 1 DAY"))
       }
-    } finally { q.stop(); deleteTree(ckpt) }
-    child.table(sink)
-      .groupBy(col("v_user").as("user_id"))
-      .agg(count(lit(1)).as("n_pairs"))
+      chunked(r, q, input, chunksOf(rows, numBatches))
+      r.snapshot(r.table(q)
+        .groupBy(col("v_user").as("user_id"))
+        .agg(count(lit(1)).as("n_pairs")))
+    }
   }
 
   /** The reference topology end-to-end over the PRODUCTION source and sink:
@@ -655,84 +367,62 @@ object StreamReplay {
   def streamedTopicSliding(spark: SparkSession, dir: String): DataFrame =
     streamedTopicWindows(spark, dir, slide = Some(("10 seconds", "5 seconds")))
 
-  /** Replay-fixture event-time bounds over the `date` column. A clear
-    * error instead of the opaque `val Row(lo: Long, hi: Long)` MatchError
-    * the topic replays previously threw on an empty / filtered-empty
-    * fixture (ADVICE r10).
+  /** The fixture's events in the reference wire shape
+    * ({"name","user","date":millis,"duration"}).
     */
-  private def timeBounds(events: DataFrame, fixture: String): (Long, Long) = {
-    val r = events.agg(min("date"), max("date")).head()
-    require(!r.isNullAt(0) && !r.isNullAt(1),
-      s"topic replay fixture '$fixture' has no events to replay " +
-        "(empty or filtered-empty input)")
-    (r.getLong(0), r.getLong(1))
-  }
-
-  private def streamedTopicWindows(spark: SparkSession, dir: String,
-                                   slide: Option[(String, String)],
-                                   wireFormat: String = "json"): DataFrame = {
-    import graft.model.PageEventCodec
-    import graft.sources.{FileTopic, Topics}
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("name", StringType), StructField("user", StringType),
-      StructField("date", LongType), StructField("duration", DoubleType)))
-    val outSchema = StructType(Seq(
-      StructField("name", StringType), StructField("window_start", LongType),
-      StructField("cnt", LongType)))
-    // fixture -> reference wire shape ({"name","user","date":millis,"duration"})
-    val events = PageEventCodec.toWire(
+  private def pageWire(spark: SparkSession, dir: String): DataFrame =
+    PageEventCodec.toWire(
       Tables.events(spark, dir)
         .select(col("event_type").as("name"),
           concat(lit("U"), col("user_id")).as("user"),
           col("ts").as("date"), col("value").as("duration")))
-    val (lo, hi) = timeBounds(events, s"$dir events (wire)")
-    // same conf-scoped child session as the replays above: tiny stateful
-    // agg wants the heap store + a small shuffle fan-out
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_topic")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_topic_ckpt")
-    val t2 = new FileTopic(Topics.T2, wireSchema, root.toString, wireFormat)
-    val t4 = new FileTopic(Topics.T4, outSchema, root.toString, wireFormat)
-    // one consumer incarnation: resume from the checkpointed offsets,
-    // drain everything published so far into T4, stop
-    def drain(): Unit = {
-      val keyed = PageViews.rekey(
-        PageViews.filterValid(PageEventCodec.fromWire(t2.stream(child)),
-          "duration"), "name", "date")
-        .withWatermark("date", "10 seconds")
-      val counts = PageViews.unwrapWindow(
-        slide match {
-          case Some((len, step)) =>
-            keyed.groupBy(window(col("date"), len, step), col("name"))
-              .agg(count(lit(1)).as("cnt"))
-          case None => PageViews.windowedCounts(keyed, "date", "name")
-        },
-        "name")
-      val q = counts.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          t4.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      // event-time-ordered quarters so the 10 s watermark never drops a row
-      runQuartered(events, lo, hi, t2, () => drain())
-      // converged fixpoint from the T4 changelog, snapshotted locally so
-      // the temp dirs can be deleted before the caller executes the plan
-      val rows = t4.batch(child)
-        .groupBy(col("name").as("event_type"), col("window_start"))
-        .agg(max(col("cnt")).as("cnt"))
-        .collect()
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*),
-        StructType(Seq(
-          StructField("event_type", StringType),
-          StructField("window_start", LongType),
-          StructField("cnt", LongType))))
-    } finally { deleteTree(ckpt); deleteTree(root) }
+
+  private val pageWireSchema = schema("name" -> StringType,
+    "user" -> StringType, "date" -> LongType, "duration" -> DoubleType)
+
+  /** The standard topic replay: `events` quartered onto one `in` topic
+    * keyed by its `date` column, with the consumer restarted mid-stream.
+    */
+  private def quarteredOn(r: ReplayScope, events: DataFrame, in: FileTopic,
+                          fixture: String, drain: () => Unit,
+                          sentinels: Seq[Long] = Nil,
+                          sentinel: Long => Row = null): Unit = {
+    val (lo, hi) = ReplayHarness.bounds(events, "date", fixture)
+    r.quartered(Seq(r.feed(events, "date", in, new Quarters(lo, hi))), drain,
+      sentinels = sentinels, sentinel = sentinel)
   }
+
+  private def streamedTopicWindows(spark: SparkSession, dir: String,
+                                   slide: Option[(String, String)],
+                                   wireFormat: String = "json"): DataFrame =
+    ReplayHarness(spark, partitions = 8) { r =>
+      val t2 = r.topic(Topics.T2, pageWireSchema, wireFormat)
+      val t4 = r.topic(Topics.T4, schema("name" -> StringType,
+        "window_start" -> LongType, "cnt" -> LongType), wireFormat)
+      // each incarnation resumes from the checkpointed offsets and drains
+      // everything published so far into T4
+      val q = r.query("counts", "update", t4) {
+        val keyed = PageViews.rekey(
+          PageViews.filterValid(PageEventCodec.fromWire(t2.stream(r.child)),
+            "duration"), "name", "date")
+          .withWatermark("date", "10 seconds")
+        PageViews.unwrapWindow(
+          slide match {
+            case Some((len, step)) =>
+              keyed.groupBy(window(col("date"), len, step), col("name"))
+                .agg(count(lit(1)).as("cnt"))
+            case None => PageViews.windowedCounts(keyed, "date", "name")
+          },
+          "name")
+      }
+      // event-time-ordered quarters so the 10 s watermark never drops a row
+      quarteredOn(r, pageWire(spark, dir), t2, s"$dir events (wire)",
+        () => r.drain(q))
+      // converged fixpoint from the T4 changelog
+      r.snapshot(t4.batch(r.child)
+        .groupBy(col("name").as("event_type"), col("window_start"))
+        .agg(max(col("cnt")).as("cnt")))
+    }
 
   /** Batch backfill + streaming tail across one fence — the kappa/lambda
     * unification every production migration needs: history is recomputed
@@ -756,21 +446,8 @@ object StreamReplay {
     * page_counts oracle over the whole fixture.
     */
   def streamedBackfillUnion(spark: SparkSession, dir: String): DataFrame = {
-    import graft.model.PageEventCodec
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("name", StringType), StructField("user", StringType),
-      StructField("date", LongType), StructField("duration", DoubleType)))
-    val outSchema = StructType(Seq(
-      StructField("name", StringType), StructField("window_start", LongType),
-      StructField("cnt", LongType)))
-    val wire = PageEventCodec.toWire(
-      Tables.events(spark, dir)
-        .select(col("event_type").as("name"),
-          concat(lit("U"), col("user_id")).as("user"),
-          col("ts").as("date"), col("value").as("duration")))
-    val (lo, hi) = timeBounds(wire, s"$dir events (wire)")
+    val wire = pageWire(spark, dir)
+    val (lo, hi) = ReplayHarness.bounds(wire, "date", s"$dir events (wire)")
     // deterministic fence: the straddle-eligible bucket nearest the time
     // midpoint (bounded driver read: one row)
     val typed = PageEventCodec.fromWire(wire)
@@ -803,56 +480,42 @@ object StreamReplay {
       "name")
       .select(col("name"), col("window_start"), col("cnt").as("b_cnt"))
     // STREAMING TAIL: only ts > fence ever reaches the topic
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_backfill")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_backfill_ckpt")
-    val in = new FileTopic("live_in", wireSchema, root.toString)
-    val out = new FileTopic("live_out", outSchema, root.toString)
-    try {
+    val tail = ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("live_in", pageWireSchema)
+      val out = r.topic("live_out", schema("name" -> StringType,
+        "window_start" -> LongType, "cnt" -> LongType))
       in.append(wire.filter(col("date") > fence).coalesce(1))
-      val counts = PageViews.unwrapWindow(
-        PageViews.windowedCounts(
-          PageViews.rekey(
-            PageViews.filterValid(PageEventCodec.fromWire(in.stream(child)),
-              "duration"), "name", "date")
-            .withWatermark("date", "10 seconds"),
-          "date", "name", windowLen = "1 hour"),
-        "name")
-      val q = counts.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
+      r.drain(r.query("tail", "update", out) {
+        PageViews.unwrapWindow(
+          PageViews.windowedCounts(
+            PageViews.rekey(
+              PageViews.filterValid(PageEventCodec.fromWire(in.stream(r.child)),
+                "duration"), "name", "date")
+              .withWatermark("date", "10 seconds"),
+            "date", "name", windowLen = "1 hour"),
+          "name")
+      })
       // converged update-mode fixpoint, snapshotted (bounded: names x
       // windows, the same envelope every topic replay collects) so the
-      // temp topic dirs can be deleted and the merge plans on the
-      // caller's session
-      val tailRows = out.batch(child)
+      // merge plans on the caller's session
+      r.snapshot(out.batch(r.child)
         .groupBy(col("name"), col("window_start"))
-        .agg(max(col("cnt")).as("s_cnt"))
-        .collect()
-      val tail = spark.createDataFrame(
-        java.util.Arrays.asList(tailRows: _*),
-        StructType(Seq(StructField("name", StringType),
-          StructField("window_start", LongType),
-          StructField("s_cnt", LongType))))
-      // additive merge; the straddling window sums both contributions.
-      // The picked bucket is on the BATCH side by construction (its
-      // ts_min event is <= fence and valid), so the straddle check only
-      // needs the STREAM side — a driver scan of the already-collected
-      // tail snapshot, no extra Spark job (review finding, round 11)
-      require(tailRows.exists(r =>
-          r.getString(0) == fenceName && r.getLong(1) == fenceWindow),
-        "backfill merge is vacuous: the fence-straddling bucket " +
-          s"($fenceName, $fenceWindow) received no rows from the " +
-          "streaming side — the fence failed to split a bucket")
-      backfill
-        .join(tail, Seq("name", "window_start"), "full_outer")
-        .select(col("name").as("event_type"), col("window_start"),
-          (coalesce(col("b_cnt"), lit(0L)) +
-            coalesce(col("s_cnt"), lit(0L))).as("cnt"))
-    } finally { deleteTree(ckpt); deleteTree(root) }
+        .agg(max(col("cnt")).as("s_cnt")))
+    }
+    // additive merge; the straddling window sums both contributions.
+    // The picked bucket is on the BATCH side by construction (its ts_min
+    // event is <= fence and valid), so the straddle check only needs the
+    // STREAM side — a scan of the local tail snapshot
+    require(tail.collect().exists(r =>
+        r.getString(0) == fenceName && r.getLong(1) == fenceWindow),
+      "backfill merge is vacuous: the fence-straddling bucket " +
+        s"($fenceName, $fenceWindow) received no rows from the " +
+        "streaming side — the fence failed to split a bucket")
+    backfill
+      .join(tail, Seq("name", "window_start"), "full_outer")
+      .select(col("name").as("event_type"), col("window_start"),
+        (coalesce(col("b_cnt"), lit(0L)) +
+          coalesce(col("s_cnt"), lit(0L))).as("cnt"))
   }
 
   /** Session windows over the PRODUCTION source and sink, in APPEND mode —
@@ -872,40 +535,20 @@ object StreamReplay {
     * defensively. The emitted set must equal the batch gap-islands
     * answer under the same session_counts oracle.
     */
-  def streamedTopicSessions(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("session_start", LongType),
-      StructField("n_events", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"))
-    val (lo, hi) = timeBounds(events, s"$dir events (sessions)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_topic_sess")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_topic_sess_ckpt")
-    val in = new FileTopic("sessions_in", wireSchema, root.toString)
-    val out = new FileTopic("sessions_out", outSchema, root.toString)
-    def drain(): Unit = {
-      val sessions = in.stream(child)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          col("session_window.start").cast("long").as("session_start"),
-          col("n_events"))
-      val q = sessions.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+  def streamedTopicSessions(spark: SparkSession, dir: String): DataFrame =
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("sessions_in", userDateSchema)
+      val out = r.topic("sessions_out", sessionSchema)
+      val q = r.query("sessions", "append", out) {
+        in.stream(r.child)
+          .withColumn("ts", timestamp_micros(col("date")))
+          .withWatermark("ts", "10 seconds")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("user_id"),
+            col("session_window.start").cast("long").as("session_start"),
+            col("n_events"))
+      }
       // TWO sentinel batches, not one (same workaround the MemoryStream
       // twin streamedSessionAppend documents): the watermark only
       // advances at the END of the batch that carries sentinel-1, and
@@ -913,18 +556,21 @@ object StreamReplay {
       // q.stop(). Sentinel-2 arrives in a LATER incarnation, so its DATA
       // batch acts on the already-advanced watermark and deterministically
       // flushes every real session. Both ride reserved user -1.
-      // sentinel frames built on the conf-scoped `child` like every other
-      // frame in this replay (ADVICE r10 — session-isolation consistency)
-      runQuartered(events, lo, hi, in, () => drain(),
-        sentinelOffsets = Seq(2, 4),
-        sentinel = ts => child.createDataFrame(
-          java.util.Arrays.asList(Row(-1L, ts)), wireSchema))
-      val rows = out.batch(child)
-        .filter(col("user_id") =!= -1L)
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+      quarteredOn(r, userDates(spark, dir), in, s"$dir events (sessions)",
+        () => r.drain(q), sentinels = Seq(2, 4), sentinel = ts => Row(-1L, ts))
+      r.snapshot(out.batch(r.child).filter(col("user_id") =!= -1L))
+    }
+
+  /** (user_id, date micros) — the session replays' wire. */
+  private def userDates(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("user_id"), unix_micros(col("ts")).as("date"))
+
+  private val userDateSchema =
+    schema("user_id" -> LongType, "date" -> LongType)
+
+  private val sessionSchema = schema("user_id" -> LongType,
+    "session_start" -> LongType, "n_events" -> LongType)
 
   /** DYNAMIC-gap session windows STREAMED (round-11 verdict ask #5 —
     * previously batch-only as `session_dynamic_gap`): the per-row gap
@@ -940,60 +586,36 @@ object StreamReplay {
     * the event count. Converges to the batch answer under the identical
     * running-max-islands oracle.
     */
-  def streamedDynamicSessions(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("date", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("session_start", LongType),
-      StructField("n_events", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("date"))
-    val (lo, hi) = timeBounds(events, s"$dir events (dynamic sessions)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_dyn_sess")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dyn_sess_ckpt")
-    val in = new FileTopic("dyn_sessions_in", wireSchema, root.toString)
-    val out = new FileTopic("dyn_sessions_out", outSchema, root.toString)
-    def drain(): Unit = {
-      // CalendarIntervalType via make_interval, exactly like the batch
-      // twin (INTERVAL literals are DayTimeIntervalType under ANSI)
-      val gap = when(col("event_type") === "purchase",
-        expr("make_interval(0, 0, 0, 0, 0, 60, 0)"))
-        .otherwise(expr("make_interval(0, 0, 0, 0, 0, 30, 0)"))
-      val sessions = in.stream(child)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .groupBy(session_window(col("ts"), gap), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          col("session_window.start").cast("long").as("session_start"),
-          col("n_events"))
-      val q = sessions.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+  def streamedDynamicSessions(spark: SparkSession, dir: String): DataFrame =
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("dyn_sessions_in", schema("user_id" -> LongType,
+        "event_type" -> StringType, "date" -> LongType))
+      val out = r.topic("dyn_sessions_out", sessionSchema)
+      val q = r.query("sessions", "append", out) {
+        // CalendarIntervalType via make_interval, exactly like the batch
+        // twin (INTERVAL literals are DayTimeIntervalType under ANSI)
+        val gap = when(col("event_type") === "purchase",
+          expr("make_interval(0, 0, 0, 0, 0, 60, 0)"))
+          .otherwise(expr("make_interval(0, 0, 0, 0, 0, 30, 0)"))
+        in.stream(r.child)
+          .withColumn("ts", timestamp_micros(col("date")))
+          .withWatermark("ts", "10 seconds")
+          .groupBy(session_window(col("ts"), gap), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("user_id"),
+            col("session_window.start").cast("long").as("session_start"),
+            col("n_events"))
+      }
       // sentinels ride reserved user -1 with a NON-purchase type (the
       // 30-min arm) — the sentinel session itself stays open and is
       // filtered; only its watermark advance matters
-      runQuartered(events, lo, hi, in, () => drain(),
-        sentinelOffsets = Seq(2, 4),
-        sentinel = ts => child.createDataFrame(
-          java.util.Arrays.asList(Row(-1L, "sentinel", ts)), wireSchema))
-      val rows = out.batch(child)
-        .filter(col("user_id") =!= -1L)
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+      quarteredOn(r, Tables.events(spark, dir)
+          .select(col("user_id"), col("event_type"),
+            unix_micros(col("ts")).as("date")),
+        in, s"$dir events (dynamic sessions)", () => r.drain(q),
+        sentinels = Seq(2, 4), sentinel = ts => Row(-1L, "sentinel", ts))
+      r.snapshot(out.batch(r.child).filter(col("user_id") =!= -1L))
+    }
 
   /** Streaming DEAD-LETTER QUEUE — malformed-input quarantine as a
     * production stream (the operational shape of the batch
@@ -1014,19 +636,8 @@ object StreamReplay {
     * rule.
     */
   def streamedQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("date", LongType),
-      StructField("payload", StringType)))
-    val outSchema = StructType(Seq(
-      StructField("name", StringType), StructField("value", DoubleType),
-      StructField("event_id", LongType)))
-    val dlqSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("raw", StringType)))
-    val parseSchema = StructType(Seq(
-      StructField("name", StringType), StructField("value", DoubleType),
-      StructField("_bad", StringType)))
+    val parseSchema = schema("name" -> StringType, "value" -> DoubleType,
+      "_bad" -> StringType)
     val events = Tables.events(spark, dir)
       .select(col("event_id"), unix_micros(col("ts")).as("date"),
         to_json(struct(col("event_type").as("name"), col("value"))).as("js"))
@@ -1034,55 +645,45 @@ object StreamReplay {
         when(col("event_id") % 7 === 0,
           expr("substring(js, 1, length(js) - 3)"))
           .otherwise(col("js")).as("payload"))
-    val (lo, hi) = timeBounds(events, s"$dir events (quarantine)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_dlq")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dlq_ckpt")
-    val in = new FileTopic("dlq_in", wireSchema, root.toString)
-    val out = new FileTopic("dlq_parsed", outSchema, root.toString)
-    val dlq = new FileTopic("dlq_dead", dlqSchema, root.toString)
-    def drain(): Unit = {
-      val parsed = in.stream(child)
-        .select(col("event_id"), col("payload"),
-          from_json(col("payload"), parseSchema,
-            java.util.Map.of("columnNameOfCorruptRecord", "_bad")).as("p"))
-      val q = parsed.writeStream.outputMode("append")
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-          // ONE batch, TWO idempotent sinks: the restart-spanning batch
-          // must not double-deliver to either
-          val d = df.persist()
-          try {
-            out.sinkBatch(d.filter(col("p._bad").isNull)
-              .select(col("p.name").as("name"), col("p.value").as("value"),
-                col("event_id")), id)
-            dlq.sinkBatch(d.filter(col("p._bad").isNotNull)
-              .select(col("event_id"), col("payload").as("raw")), id)
-          } finally d.unpersist()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      runQuartered(events, lo, hi, in, () => drain())
-      val parsedAgg = out.batch(child)
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("dlq_in", schema("event_id" -> LongType,
+        "date" -> LongType, "payload" -> StringType))
+      val out = r.topic("dlq_parsed", schema("name" -> StringType,
+        "value" -> DoubleType, "event_id" -> LongType))
+      val dlq = r.topic("dlq_dead",
+        schema("event_id" -> LongType, "raw" -> StringType))
+      // ONE batch, TWO idempotent sinks: the restart-spanning batch must
+      // not double-deliver to either
+      val route = (df: DataFrame, id: Long) => {
+        val d = df.persist()
+        try {
+          out.sinkBatch(d.filter(col("p._bad").isNull)
+            .select(col("p.name").as("name"), col("p.value").as("value"),
+              col("event_id")), id)
+          dlq.sinkBatch(d.filter(col("p._bad").isNotNull)
+            .select(col("event_id"), col("payload").as("raw")), id)
+        } finally d.unpersist()
+      }
+      val q = r.custom("route", "append", _.foreachBatch(route)) {
+        in.stream(r.child)
+          .select(col("event_id"), col("payload"),
+            from_json(col("payload"), parseSchema,
+              java.util.Map.of("columnNameOfCorruptRecord", "_bad")).as("p"))
+      }
+      quarteredOn(r, events, in, s"$dir events (quarantine)", () => r.drain(q))
+      val parsedAgg = out.batch(r.child)
         .groupBy(col("name").as("bucket"))
         .agg(count(lit(1)).as("n_rows"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+          sum(col("value").cast(DecimalType(18, 6)))
             .cast("double").as("checksum"))
-      val dlqRows = dlq.batch(child)
       // forensic invariant: every quarantined payload rides with its raw
       // bytes (replayable), none parses as valid JSON by accident
-      val dlqAgg = dlqRows
+      val dlqAgg = dlq.batch(r.child)
         .agg(count(lit(1)).as("n_rows"),
           sum(col("event_id")).cast("double").as("checksum"))
         .select(lit("DLQ").as("bucket"), col("n_rows"), col("checksum"))
-      val rows = parsedAgg.unionByName(dlqAgg).collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        StructType(Seq(StructField("bucket", StringType),
-          StructField("n_rows", LongType),
-          StructField("checksum", DoubleType))))
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      r.snapshot(parsedAgg.unionByName(dlqAgg))
+    }
   }
 
   /** VARIANT schema-on-read over the WIRE — the batch `variant_props`
@@ -1106,49 +707,33 @@ object StreamReplay {
     * approx_count_distinct sketch, covered in batch by sketch_accuracy).
     */
   def streamedVariantProps(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("date", LongType), StructField("doc", StringType)))
-    val outSchema = StructType(Seq(
-      StructField("src", StringType), StructField("n_rows", LongType),
-      StructField("sum_k", LongType), StructField("max_k", LongType)))
     // the same wrapped document shape as the batch twin (EventSuite
     // .variantProps): nested meta/payload so navigation is multi-level
     val events = Tables.events(spark, dir)
       .select(unix_micros(col("ts")).as("date"),
         concat(lit("""{"meta":{"src":""""), col("event_type"),
           lit(""""},"payload":"""), col("props"), lit("}")).as("doc"))
-    val (lo, hi) = timeBounds(events, s"$dir events (variant wire)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_variant")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_variant_ckpt")
-    val in = new FileTopic("variant_in", wireSchema, root.toString)
-    val out = new FileTopic("variant_agg", outSchema, root.toString)
-    def drain(): Unit = {
-      val parsed = in.stream(child)
-        .select(parse_json(col("doc")).as("v"))
-        .select(expr("variant_get(v, '$.meta.src', 'string')").as("src"),
-          expr("variant_get(v, '$.payload.k', 'long')").as("k"))
-      val agg = parsed.groupBy(col("src"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("sum_k"),
-          max(col("k")).as("max_k"))
-      val q = agg.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      runQuartered(events, lo, hi, in, () => drain())
-      val rows = out.batch(child)
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("variant_in",
+        schema("date" -> LongType, "doc" -> StringType))
+      val out = r.topic("variant_agg", schema("src" -> StringType,
+        "n_rows" -> LongType, "sum_k" -> LongType, "max_k" -> LongType))
+      val q = r.query("agg", "update", out) {
+        in.stream(r.child)
+          .select(parse_json(col("doc")).as("v"))
+          .select(expr("variant_get(v, '$.meta.src', 'string')").as("src"),
+            expr("variant_get(v, '$.payload.k', 'long')").as("k"))
+          .groupBy(col("src"))
+          .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("sum_k"),
+            max(col("k")).as("max_k"))
+      }
+      quarteredOn(r, events, in, s"$dir events (variant wire)",
+        () => r.drain(q))
+      r.snapshot(out.batch(r.child)
         .groupBy(col("src"))
         .agg(max(col("n_rows")).as("n_rows"), max(col("sum_k")).as("sum_k"),
-          max(col("max_k")).as("max_k"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+          max(col("max_k")).as("max_k")))
+    }
   }
 
   /** Streaming trailing-window anomaly detection — the batch
@@ -1175,108 +760,64 @@ object StreamReplay {
     * rolling_zscore oracle — including bit-equal z doubles, because the
     * processor replays the batch expression tree operand-for-operand.
     */
-  def streamedZscore(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("event_type", StringType), StructField("date", LongType)))
-    val hourSchema = StructType(Seq(
-      StructField("etype", StringType), StructField("hourS", LongType),
-      StructField("cnt", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("hour_s", LongType), StructField("cnt", LongType),
-      StructField("z", DoubleType), StructField("is_anomaly", BooleanType)))
-    val events = Tables.events(spark, dir)
-      .select(col("event_type"), unix_micros(col("ts")).as("date"))
-    val (lo, hi) = timeBounds(events, s"$dir events (zscore)")
-    // the chain's two jobs get DIFFERENTLY tuned sessions (round-18,
-    // halving the engine lane): the producer is a plain windowed agg —
-    // the heap store's lower per-batch open/commit cost wins (the
-    // replaySession default rationale); only the consumer's
-    // transformWithState requires RocksDB, and its key space is ~6
-    // event types, so 4 store instances per batch instead of 8 halve
-    // the per-restart store open/commit tax without losing parallelism
-    // the key count can't use anyway
-    val childP = replaySession(spark, shufflePartitions = 4)
-    val child = replaySession(spark, shufflePartitions = 4, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_zscore")
-    val ckptP = java.nio.file.Files.createTempDirectory("graft_zscore_p")
-    val ckptC = java.nio.file.Files.createTempDirectory("graft_zscore_c")
-    val in = new FileTopic("zscore_in", wireSchema, root.toString)
-    val mid = new FileTopic("zscore_hours", hourSchema, root.toString)
-    val out = new FileTopic("zscore_out", outSchema, root.toString)
-    def startProducer(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val hourly = in.stream(childP)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("event_type").as("etype"),
-          col("window.start").cast("long").as("hourS"), col("cnt"))
-      hourly.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          mid.sinkBatch(df, id))
-        .option("checkpointLocation", ckptP.toString)
-        .start()
-    }
-    def startConsumer(): org.apache.spark.sql.streaming.StreamingQuery = {
-      implicit val enc = org.apache.spark.sql.Encoders
-        .product[StreamOps.HourCount]
-      val scored = StreamOps.rollingZscoreStream(
-        mid.stream(child).as[StreamOps.HourCount])
-      scored.toDF().writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckptC.toString)
-        .start()
-    }
-    // BOTH jobs run concurrently within an incarnation — the production
-    // topology (the two queries are permanently co-resident; the hourly
-    // topic is their decoupling point), and half the serialized drains'
-    // per-batch overhead: the consumer scores hours as the producer
-    // lands them, and its own drain call only finishes the tail. The
-    // producer drains FIRST so every mid file exists before the
-    // consumer's processAllAvailable snapshot.
-    def drainBoth(): Unit = {
-      val qp = startProducer()
-      val qc = startConsumer()
-      try {
-        EngineTimer.timed { qp.processAllAvailable(); qc.processAllAvailable() }
-      } finally {
-        // stop each in its own finally: if the producer's stop throws,
-        // the consumer must still stop or it keeps tailing topic dirs
-        // the outer cleanup is about to delete (round-18 advice)
-        try qp.stop() finally qc.stop()
+  def streamedZscore(spark: SparkSession, dir: String): DataFrame =
+    // the chain's two jobs get DIFFERENTLY tuned sessions: the producer is
+    // a plain windowed agg — the heap store's lower per-batch open/commit
+    // cost wins; only the consumer's transformWithState requires RocksDB,
+    // and its key space is ~6 event types, so 4 store instances per batch
+    // instead of 8 halve the per-restart store open/commit tax without
+    // losing parallelism the key count can't use anyway
+    ReplayHarness(spark, partitions = 4, rocksDb = true) { r =>
+      val childP = ReplayHarness.session(spark, shufflePartitions = 4)
+      val in = r.topic("zscore_in",
+        schema("event_type" -> StringType, "date" -> LongType))
+      val mid = r.topic("zscore_hours", schema("etype" -> StringType,
+        "hourS" -> LongType, "cnt" -> LongType))
+      val out = r.topic("zscore_out", schema("event_type" -> StringType,
+        "hour_s" -> LongType, "cnt" -> LongType, "z" -> DoubleType,
+        "is_anomaly" -> BooleanType))
+      val producer = r.query("producer", "append", mid) {
+        in.stream(childP)
+          .withColumn("ts", timestamp_micros(col("date")))
+          .withWatermark("ts", "10 seconds")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(col("event_type").as("etype"),
+            col("window.start").cast("long").as("hourS"), col("cnt"))
       }
-    }
-    try {
+      val consumer = r.query("consumer", "update", out) {
+        implicit val enc = org.apache.spark.sql.Encoders
+          .product[StreamOps.HourCount]
+        StreamOps.rollingZscoreStream(
+          mid.stream(r.child).as[StreamOps.HourCount]).toDF()
+      }
       // construction requires the restart to be LOAD-BEARING: rows scored
       // in incarnation 1 (pre-restart) and strictly more after — the
       // post-restart scores can only come from the RECOVERED 24-hour
       // baseline buffer, the scenario this row exists for
       var preRestart = -1L
-      def scoredCount(): Long =
-        out.batch(child).filter(col("event_type") =!= "sentinel").count()
-      // ONE far-future sentinel (round-18; was two): the producer's
-      // append-mode tail hours flush within the sentinel drain itself —
-      // the data batch advances the watermark past every real hour and
-      // the engine's follow-up no-data batch emits them — and the
-      // consumer is TimeMode.None (scores on arrival), so a second
-      // sentinel only re-flushed the sentinel's own (filtered) hour at
-      // the price of two more query starts
-      runQuartered(events, lo, hi,
-        in,
+      def scored = out.batch(r.child).filter(col("event_type") =!= "sentinel")
+      // ONE far-future sentinel: the producer's append-mode tail hours
+      // flush within the sentinel drain itself — the data batch advances
+      // the watermark past every real hour and the engine's follow-up
+      // no-data batch emits them — and the consumer is TimeMode.None
+      // (scores on arrival), so a second sentinel would only re-flush the
+      // sentinel's own (filtered) hour at the price of two more starts.
+      // BOTH jobs run concurrently within an incarnation — the production
+      // topology (the two queries are permanently co-resident; the hourly
+      // topic is their decoupling point): the consumer scores hours as
+      // the producer lands them, and its own drain only finishes the
+      // tail. The producer drains FIRST so every mid file exists before
+      // the consumer's processAllAvailable snapshot.
+      quarteredOn(r, Tables.events(spark, dir)
+          .select(col("event_type"), unix_micros(col("ts")).as("date")),
+        in, s"$dir events (zscore)",
         () => {
-          drainBoth()
-          if (preRestart < 0) preRestart = scoredCount()
+          r.drain(producer, consumer)
+          if (preRestart < 0) preRestart = scored.count()
         },
-        sentinelOffsets = Seq(2),
-        sentinel = ts => child.createDataFrame(
-          java.util.Arrays.asList(Row("sentinel", ts)), wireSchema))
-      val rows = out.batch(child)
-        .filter(col("event_type") =!= "sentinel")
-        .collect()
+        sentinels = Seq(2), sentinel = ts => Row("sentinel", ts))
+      val rows = scored.collect()
       require(preRestart > 0,
         "zscore replay scored nothing before the restart — the first two " +
           "quarters never filled a 24-hour baseline (fixture too short?)")
@@ -1284,9 +825,8 @@ object StreamReplay {
         s"zscore replay scored nothing after the restart ($preRestart " +
           s"before, ${rows.length} total) — the recovered baseline buffer " +
           "produced nothing, the scenario this row exists for")
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckptP); deleteTree(ckptC); deleteTree(root) }
-  }
+      r.snapshot(rows, out.schema)
+    }
 
   /** Watermarked dedup over the PRODUCTION source, with duplicates
     * injected ACROSS the consumer restart — the at-least-once redelivery
@@ -1302,60 +842,39 @@ object StreamReplay {
     * aggregate of the ORIGINAL fixture (same oracle as stream_dedup).
     */
   def streamedTopicDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("date", LongType), StructField("event_id", LongType)))
     val events = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("date"), col("event_id"))
-    val (lo, hi) = timeBounds(events, s"$dir events (dedup)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_topic_dedup")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_topic_dedup_ckpt")
-    val in = new FileTopic("dedup_in", wireSchema, root.toString)
-    val out = new FileTopic("dedup_out", wireSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = events
-      .filter(col("date") >= from && (if (last) lit(true) else col("date") < until))
-    val pubRange = stageWire(events, "date", in)
-    def drain(): Unit = {
-      val deduped = in.stream(child)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .dropDuplicatesWithinWatermark("event_id")
-        .select(col("user_id"), col("event_type"), col("date"), col("event_id"))
-      val q = deduped.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, lo + quarter, false)
+    val (lo, hi) = ReplayHarness.bounds(events, "date", s"$dir events (dedup)")
+    val qs = new Quarters(lo, hi)
+    ReplayHarness(spark, partitions = 8) { r =>
+      val wire = schema("user_id" -> LongType, "event_type" -> StringType,
+        "date" -> LongType, "event_id" -> LongType)
+      val in = r.topic("dedup_in", wire)
+      val out = r.topic("dedup_out", wire)
+      val q = r.query("dedup", "append", out) {
+        in.stream(r.child)
+          .withColumn("ts", timestamp_micros(col("date")))
+          .withWatermark("ts", "10 seconds")
+          .dropDuplicatesWithinWatermark("event_id")
+          .select(col("user_id"), col("event_type"), col("date"),
+            col("event_id"))
+      }
+      val f = r.feed(events, "date", in, qs)
       // same-incarnation duplicate: a slice of the first quarter again
-      in.append(range(lo, lo + quarter, last = false)
-        .orderBy(col("date"), col("event_id")).limit(25).coalesce(1))
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + dedup state committed
+      val dupes: ReplayHarness.Wave = () =>
+        in.append(events.filter(col("date") >= qs(0) && col("date") < qs(1))
+          .orderBy(col("date"), col("event_id")).limit(25).coalesce(1))
       // REDELIVERY ACROSS THE RESTART: the whole second quarter again —
       // new files, so offset tracking cannot skip them; only the
       // recovered dedup state can
-      pubRange(q2lo, q2hi, false)
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2
-      val rows = out.batch(child)
+      r.waves(() => r.drain(q))(
+        Seq(f.q(0, 1), dupes, f.q(1, 2)),
+        Seq(f.q(1, 2), f.q(2, 3), f.q(3, 4)))
+      r.snapshot(out.batch(r.child)
         .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        StructType(Seq(StructField("event_type", StringType),
-          StructField("n_events", LongType))))
-    } finally { deleteTree(ckpt); deleteTree(root) }
+        .agg(count(lit(1)).as("n_events")))
+    }
   }
 
   /** Stream-STREAM join over TWO production sources: views and clicks
@@ -1404,122 +923,94 @@ object StreamReplay {
     * the two bodies briefly diverged — review finding, round 11).
     */
   private def attribReplay(spark: SparkSession, dir: String,
-                           fullOuter: Boolean): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("v_date", LongType),
-      StructField("c_date", LongType)))
-    def side(tpe: String) = Tables.events(spark, dir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"))
-    val views = side("view")
-    val clicks = side("click")
-    val (lo, hi) = timeBounds(
-      Tables.events(spark, dir)
-        .filter(col("event_type").isin("view", "click"))
-        .select(unix_micros(col("ts")).as("date")),
-      s"$dir events (view/click)")
-    val child = replaySession(spark, shufflePartitions = 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_topic_attrib")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_topic_attrib_ckpt")
-    val vIn = new FileTopic("views_in", wireSchema, root.toString)
-    val cIn = new FileTopic("clicks_in", wireSchema, root.toString)
-    val out = new FileTopic("pairs_out", outSchema, root.toString)
-    def publish(df: org.apache.spark.sql.DataFrame, topic: FileTopic,
-                from: Long, until: Long, last: Boolean): Unit =
-      topic.append(df
-        .filter(col("date") >= from && (if (last) lit(true) else col("date") < until))
-        .coalesce(1))
-    // sentinel rows ride reserved user -1, beyond hi + join bound (1 day)
-    // + watermark delay; built on the conf-scoped child (ADVICE r10)
-    def sentinel(offsetDays: Long): Unit = Seq(vIn, cIn).foreach(
-      _.append(child.createDataFrame(
-        java.util.Arrays.asList(Row(-1L, hi + offsetDays * 86400000000L)),
-        wireSchema)))
-    def drain(): Unit = {
-      val v = vIn.stream(child)
-        .select(col("user_id").as("v_user"),
-          timestamp_micros(col("date")).as("v_ts"))
-        .withWatermark("v_ts", "10 seconds")
-      val c = cIn.stream(child)
-        .select(col("user_id").as("c_user"),
-          timestamp_micros(col("date")).as("c_ts"))
-        .withWatermark("c_ts", "10 seconds")
-      val pairs = v.join(c,
-          col("v_user") === col("c_user") &&
-            col("c_ts") >= col("v_ts") &&
-            col("c_ts") <= col("v_ts") + expr("INTERVAL 1 DAY"),
-          if (fullOuter) "full_outer" else "inner")
-        .select(
-          (if (fullOuter) coalesce(col("v_user"), col("c_user"))
-           else col("v_user")).as("user_id"),
-          unix_micros(col("v_ts")).as("v_date"),
-          unix_micros(col("c_ts")).as("c_date"))
-      val q = pairs.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      publish(views, vIn, lo, lo + quarter, last = false)
-      publish(clicks, cIn, lo, lo + quarter, last = false)
-      publish(views, vIn, lo + quarter, lo + 2 * quarter, last = false)
-      publish(clicks, cIn, lo + quarter, lo + 2 * quarter, last = false)
-      drain() // incarnation 1: both offset logs + join state committed
-      val nullsBeforeRestart =
-        if (!fullOuter) 0L
-        else out.batch(child).filter(col("user_id") >= 0 &&
-          (col("c_date").isNull || col("v_date").isNull)).count()
-      publish(views, vIn, lo + 2 * quarter, lo + 3 * quarter, last = false)
-      publish(clicks, cIn, lo + 2 * quarter, lo + 3 * quarter, last = false)
-      publish(views, vIn, lo + 3 * quarter, Long.MaxValue, last = true)
-      publish(clicks, cIn, lo + 3 * quarter, Long.MaxValue, last = true)
-      if (fullOuter) sentinel(2)
-      drain() // incarnation 2: recovered state matches post-restart rows
-      if (!fullOuter) {
-        val rows = out.batch(child)
+                           fullOuter: Boolean): DataFrame =
+    ReplayHarness(spark, partitions = 4) { r =>
+      val feeds = viewClickFeeds(spark, dir, r)
+      val out = r.topic("pairs_out", schema("user_id" -> LongType,
+        "v_date" -> LongType, "c_date" -> LongType))
+      val q = r.query("pairs", "append", out) {
+        viewClickJoin(r.child, feeds, "10 seconds",
+            if (fullOuter) "full_outer" else "inner")
+          .select(
+            (if (fullOuter) coalesce(col("v_user"), col("c_user"))
+             else col("v_user")).as("user_id"),
+            unix_micros(col("v_ts")).as("v_date"),
+            unix_micros(col("c_ts")).as("c_date"))
+      }
+      def nulls(df: DataFrame) =
+        df.filter(col("c_date").isNull || col("v_date").isNull).count()
+      // incarnation 1 commits both offset logs + join state; incarnation 2's
+      // recovered state matches post-restart rows. Outer only: sentinel
+      // rows ride reserved user -1, beyond hi + join bound (1 day) +
+      // watermark delay, and incarnation 3's data batch under the advanced
+      // watermark deterministically evicts + emits every real null row
+      var nullsBeforeRestart = -1L
+      r.quartered(feeds, () => {
+          r.drain(q)
+          if (nullsBeforeRestart < 0) nullsBeforeRestart =
+            if (!fullOuter) 0L else nulls(out.batch(r.child).filter(col("user_id") >= 0))
+        },
+        sentinels = if (fullOuter) Seq(2, 4) else Nil,
+        sentinel = ts => Row(-1L, ts))
+      if (!fullOuter)
+        r.snapshot(out.batch(r.child)
           .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_pairs"))
-          .collect()
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          StructType(Seq(StructField("user_id", LongType),
-            StructField("n_pairs", LongType))))
-      } else {
-        sentinel(4)
-        drain() // incarnation 3: data batch under the advanced watermark
-                // deterministically evicts + emits every real null row
-        val emitted = out.batch(child).filter(col("user_id") >= 0)
-        val nullsTotal = emitted
-          .filter(col("c_date").isNull || col("v_date").isNull).count()
+          .agg(count(lit(1)).as("n_pairs")))
+      else {
+        val emitted = out.batch(r.child).filter(col("user_id") >= 0)
+        val nullsTotal = nulls(emitted)
         require(nullsTotal > nullsBeforeRestart,
           s"outer-join replay emitted no null rows after the restart " +
             s"($nullsBeforeRestart before, $nullsTotal total) — recovered " +
             "eviction state produced nothing, the scenario this row exists for")
-        val rows = emitted
+        val counts = emitted
           .groupBy(col("user_id"))
           .agg(count(when(col("v_date").isNotNull && col("c_date").isNotNull,
               lit(1))).as("n_matched"),
             count(when(col("c_date").isNull, lit(1))).as("n_view_only"),
             count(when(col("v_date").isNull, lit(1))).as("n_click_only"))
-          .collect()
+        val rows = counts.collect()
         require(rows.exists(_.getLong(1) > 0),
           "outer-join replay matched no pairs — inner path degenerate")
         require(rows.exists(_.getLong(2) > 0) && rows.exists(_.getLong(3) > 0),
           "outer-join replay missing an eviction side: need BOTH view-only " +
             "and click-only null rows for full-outer coverage")
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          StructType(Seq(StructField("user_id", LongType),
-            StructField("n_matched", LongType),
-            StructField("n_view_only", LongType),
-            StructField("n_click_only", LongType))))
+        r.snapshot(rows, counts.schema)
       }
-    } finally { deleteTree(ckpt); deleteTree(root) }
+    }
+
+  /** The two-topic view/click wire of the join replays: each side on its
+    * own topic, quartered over the shared view+click event-time span.
+    */
+  private def viewClickFeeds(spark: SparkSession, dir: String,
+                             r: ReplayScope): Seq[Feed] = {
+    val events = Tables.events(spark, dir)
+      .filter(col("event_type").isin("view", "click"))
+      .select(col("event_type"), col("user_id"),
+        unix_micros(col("ts")).as("date"))
+    val (lo, hi) = ReplayHarness.bounds(events, "date",
+      s"$dir events (view/click)")
+    Seq("view" -> "views_in", "click" -> "clicks_in").map { case (t, name) =>
+      r.feed(events.filter(col("event_type") === t)
+          .select(col("user_id"), col("date")),
+        "date", r.topic(name, userDateSchema), new Quarters(lo, hi))
+    }
+  }
+
+  /** view ⋈ click of the same user, click within one day after the view. */
+  private def viewClickJoin(child: SparkSession, feeds: Seq[Feed],
+                            delay: String, joinType: String): DataFrame = {
+    val Seq(v, c) = feeds.zip(Seq("v", "c")).map { case (f, p) =>
+      f.topic.stream(child)
+        .select(col("user_id").as(s"${p}_user"),
+          timestamp_micros(col("date")).as(s"${p}_ts"))
+        .withWatermark(s"${p}_ts", delay)
+    }
+    v.join(c,
+      col("v_user") === col("c_user") &&
+        col("c_ts") >= col("v_ts") &&
+        col("c_ts") <= col("v_ts") + expr("INTERVAL 1 DAY"),
+      joinType)
   }
 
   /** Offline audit of the BUILT-IN stream-stream join state (round-15
@@ -1563,72 +1054,20 @@ object StreamReplay {
     * only the unexpired tail, and the recompute bounds its scan to the
     * retention horizon — same shape, windowed input.
     */
-  def stateInspectJoin(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("side", StringType), StructField("user_id", LongType),
-      StructField("date", LongType), StructField("matched", BooleanType),
-      StructField("n", LongType)))
-    def side(tpe: String) = Tables.events(spark, dir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"))
-    val views = side("view")
-    val clicks = side("click")
-    val (lo, hi) = timeBounds(
-      Tables.events(spark, dir)
-        .filter(col("event_type").isin("view", "click"))
-        .select(unix_micros(col("ts")).as("date")),
-      s"$dir events (view/click)")
-    val child = replaySession(spark, shufflePartitions = 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_join_state")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_join_state_ckpt")
-    val vIn = new FileTopic("views_in", wireSchema, root.toString)
-    val cIn = new FileTopic("clicks_in", wireSchema, root.toString)
-    def publish(df: org.apache.spark.sql.DataFrame, topic: FileTopic,
-                from: Long, until: Long, last: Boolean): Unit =
-      topic.append(df
-        .filter(col("date") >= from && (if (last) lit(true) else col("date") < until))
-        .coalesce(1))
-    def drain(): Unit = {
-      val v = vIn.stream(child)
-        .select(col("user_id").as("v_user"),
-          timestamp_micros(col("date")).as("v_ts"))
-        .withWatermark("v_ts", "40 days")
-      val c = cIn.stream(child)
-        .select(col("user_id").as("c_user"),
-          timestamp_micros(col("date")).as("c_ts"))
-        .withWatermark("c_ts", "40 days")
-      val pairs = v.join(c,
-        col("v_user") === col("c_user") &&
-          col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr("INTERVAL 1 DAY"),
-        "full_outer")
+  def stateInspectJoin(spark: SparkSession, dir: String): DataFrame =
+    ReplayHarness(spark, partitions = 4) { r =>
+      val feeds = viewClickFeeds(spark, dir, r)
       // output discarded — the audit reads the checkpoint, not the sink
-      val q = pairs.writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      publish(views, vIn, lo, lo + quarter, last = false)
-      publish(clicks, cIn, lo, lo + quarter, last = false)
-      publish(views, vIn, lo + quarter, lo + 2 * quarter, last = false)
-      publish(clicks, cIn, lo + quarter, lo + 2 * quarter, last = false)
-      drain() // incarnation 1: both offset logs + join state committed
-      publish(views, vIn, lo + 2 * quarter, lo + 3 * quarter, last = false)
-      publish(clicks, cIn, lo + 2 * quarter, lo + 3 * quarter, last = false)
-      publish(views, vIn, lo + 3 * quarter, Long.MaxValue, last = true)
-      publish(clicks, cIn, lo + 3 * quarter, Long.MaxValue, last = true)
-      drain() // incarnation 2: post-restart arrivals must flag rows
-               // buffered (and recovered) from incarnation 1
+      val q = r.custom("join", "append", _.format("noop")) {
+        viewClickJoin(r.child, feeds, "40 days", "full_outer")
+      }
+      // incarnation 2: post-restart arrivals must flag rows buffered (and
+      // recovered) from incarnation 1
+      r.quartered(feeds, () => r.drain(q))
       def readSide(store: String, label: String, userCol: String,
                    tsCol: String) =
-        child.read.format("statestore")
-          .option("path", ckpt.toString)
+        r.child.read.format("statestore")
+          .option("path", q.ckpt)
           .option("storeName", s"$store-keyWithIndexToValue")
           .load()
           .select(lit(label).as("side"),
@@ -1645,9 +1084,8 @@ object StreamReplay {
       for (s <- Seq("left", "right"); m <- Seq(true, false))
         require(rows.exists(r => r.getString(0) == s && r.getBoolean(3) == m),
           s"join-state audit degenerate: no $s-side rows with matched=$m")
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+      r.snapshot(rows, state.schema)
+    }
 
   /** Changelog compaction through the production scaffold — the
     * [[StreamOps.emitOnChange]] (transformWithState) surface as a
@@ -1677,115 +1115,73 @@ object StreamReplay {
     * batching) must equal the batch answer under the DuckDB oracle.
     */
   def streamedSuppressedMax(spark: SparkSession, dir: String): DataFrame = {
-    import graft.model.PageEventCodec
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("name", StringType), StructField("user", StringType),
-      StructField("date", LongType), StructField("duration", DoubleType)))
-    val kvSchema = StructType(Seq(
-      StructField("key", StringType), StructField("value", LongType)))
-    val events = PageEventCodec.toWire(
-      Tables.events(spark, dir)
-        .select(col("event_type").as("name"),
-          concat(lit("U"), col("user_id")).as("user"),
-          col("ts").as("date"), col("value").as("duration")))
-    val (lo, hi) = timeBounds(events, s"$dir events (suppress)")
+    val events = pageWire(spark, dir)
+    val (lo, hi) = ReplayHarness.bounds(events, "date", s"$dir events (suppress)")
+    val qs = new Quarters(lo, hi)
+    // the redelivered quarter must fit inside the producer's 10-day
+    // watermark or incarnation 2 late-drops it and the changelog carries
+    // no unchanged re-emissions — which would then misread as a
+    // suppression leak at the keptRows check below. Fail with the real
+    // cause instead if the fixture is ever regenerated with a span beyond
+    // ~40 days.
+    require(qs.quarter <= 10L * 86400 * 1000,
+      s"fixture span ${hi - lo} ms: quarter (${qs.quarter} ms) exceeds the " +
+        "10-day redelivery watermark — widen the watermark or shrink " +
+        "the redelivered slice to keep the suppression path exercised")
     // transformWithState requires RocksDB — keep the tuned session's
     // provider instead of the heap override the other replays use
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_suppress")
-    val ckptP = java.nio.file.Files.createTempDirectory("graft_suppress_p")
-    val ckptC = java.nio.file.Files.createTempDirectory("graft_suppress_c")
-    val in = new FileTopic("suppress_in", wireSchema, root.toString)
-    val changelog = new FileTopic("suppress_changelog", kvSchema, root.toString)
-    val out = new FileTopic("suppress_out", kvSchema, root.toString)
-    def publish(from: Long, until: Long, last: Boolean): Unit =
-      in.append(events
-        .filter(col("date") >= from && (if (last) lit(true) else col("date") < until))
-        .coalesce(1))
-    def drainProducer(): Unit = {
-      // rekey's narrow (key, ts) projection would drop the duration the
-      // MAX aggregates — keep it explicitly
-      // 10-DAY watermark: the redelivery-tolerant posture a changelog
-      // producer actually runs with. The fixture spans ~30 days at ~1
-      // event per 7 minutes, so a seconds-scale watermark would silently
-      // late-drop ANY redelivered data (measured: the 8 s tail redelivery
-      // contained zero events) and the suppression path would never see
-      // an unchanged re-emission. One quarter is ~7.5 days; 10 days keeps
-      // a whole redelivered quarter inside the frontier while still
-      // bounding state eviction for a long-running stream.
-      val keyed = PageViews.filterValid(
-        PageEventCodec.fromWire(in.stream(child)), "duration")
-        .select(col("name"), col("date"), col("duration"))
-        .withWatermark("date", "10 days")
-      val maxed = keyed
-        .groupBy(window(col("date"), "5 seconds"), col("name"))
-        .agg(max(col("duration").cast("long")).as("value"))
-        .select(concat_ws("|", col("name"),
-          unix_seconds(col("window.start")).cast("string")).as("key"),
-          col("value"))
-      val q = maxed.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          changelog.sinkBatch(df, id))
-        .option("checkpointLocation", ckptP.toString)
-        .start()
-      drainQuery(q)
-    }
-    def drainConsumer(): Unit = {
-      implicit val enc = org.apache.spark.sql.Encoders
-        .product[graft.streaming.StreamOps.KeyedValue]
-      val suppressed = graft.streaming.StreamOps.emitOnChange(
-        changelog.stream(child).as[graft.streaming.StreamOps.KeyedValue])
-      val q = suppressed.toDF().writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckptC.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      // the redelivered quarter must fit inside the producer's 10-day
-      // watermark or incarnation 2 late-drops it and the changelog carries
-      // no unchanged re-emissions — which would then misread as a
-      // suppression leak at the keptRows check below. Fail with the real
-      // cause instead if the fixture is ever regenerated with a span
-      // beyond ~40 days (review finding, round 11).
-      require(quarter <= 10L * 86400 * 1000,
-        s"fixture span ${hi - lo} ms: quarter ($quarter ms) exceeds the " +
-          "10-day redelivery watermark — widen the watermark or shrink " +
-          "the redelivered slice to keep the suppression path exercised")
-      publish(lo, lo + quarter, last = false)
-      publish(lo + quarter, lo + 2 * quarter, last = false)
-      drainProducer()
-      drainConsumer() // consumer incarnation 1: values remembered in state
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val kv = schema("key" -> StringType, "value" -> LongType)
+      val in = r.topic("suppress_in", pageWireSchema)
+      val changelog = r.topic("suppress_changelog", kv)
+      val out = r.topic("suppress_out", kv)
+      val producer = r.query("producer", "update", changelog) {
+        // rekey's narrow (key, ts) projection would drop the duration the
+        // MAX aggregates — keep it explicitly
+        // 10-DAY watermark: the redelivery-tolerant posture a changelog
+        // producer actually runs with. The fixture spans ~30 days at ~1
+        // event per 7 minutes, so a seconds-scale watermark would silently
+        // late-drop ANY redelivered data (measured: the 8 s tail redelivery
+        // contained zero events) and the suppression path would never see
+        // an unchanged re-emission. One quarter is ~7.5 days; 10 days keeps
+        // a whole redelivered quarter inside the frontier while still
+        // bounding state eviction for a long-running stream.
+        PageViews.filterValid(
+          PageEventCodec.fromWire(in.stream(r.child)), "duration")
+          .select(col("name"), col("date"), col("duration"))
+          .withWatermark("date", "10 days")
+          .groupBy(window(col("date"), "5 seconds"), col("name"))
+          .agg(max(col("duration").cast("long")).as("value"))
+          .select(concat_ws("|", col("name"),
+            unix_seconds(col("window.start")).cast("string")).as("key"),
+            col("value"))
+      }
+      val consumer = r.query("consumer", "update", out) {
+        implicit val enc = org.apache.spark.sql.Encoders
+          .product[StreamOps.KeyedValue]
+        StreamOps.emitOnChange(
+          changelog.stream(r.child).as[StreamOps.KeyedValue]).toDF()
+      }
+      // consumer incarnation 1 remembers values in state; then the
       // REDELIVERY of the WHOLE second quarter (inside the checkpointed
       // 10-day watermark, so every row re-aggregates instead of dropping
       // as late): no max can change, so q2's windows become the unchanged
-      // changelog rows the consumer must suppress ACROSS its restart
-      publish(lo + quarter, lo + 2 * quarter, last = false)
-      publish(lo + 2 * quarter, lo + 3 * quarter, last = false)
-      publish(lo + 3 * quarter, Long.MaxValue, last = true)
-      drainProducer()
-      drainConsumer() // consumer incarnation 2: recovered suppression state
-      val rawRows = changelog.batch(child).count()
-      val keptRows = out.batch(child).count()
+      // changelog rows the consumer must suppress ACROSS its restart, from
+      // recovered suppression state
+      r.quartered(Seq(r.feed(events, "date", in, qs)),
+        () => { r.drain(producer); r.drain(consumer) }, redeliver = true)
+      val rawRows = changelog.batch(r.child).count()
+      val keptRows = out.batch(r.child).count()
       require(keptRows < rawRows,
         s"suppression must emit strictly fewer rows than the raw changelog " +
           s"(kept $keptRows of $rawRows) — unchanged re-emissions leaked")
-      val rows = out.batch(child)
+      r.snapshot(out.batch(r.child)
         .select(split(col("key"), "\\|").getItem(0).as("event_type"),
           split(col("key"), "\\|").getItem(1).cast("long").as("window_start"),
           col("value"))
         .groupBy(col("event_type"), col("window_start"))
-        .agg(max(col("value")).as("max_dur"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        StructType(Seq(StructField("event_type", StringType),
-          StructField("window_start", LongType),
-          StructField("max_dur", LongType))))
-    } finally { deleteTree(ckptP); deleteTree(ckptC); deleteTree(root) }
+        .agg(max(col("value")).as("max_dur")))
+    }
   }
 
   /** Gap-sessionization over the PRODUCTION source on the transformWithState
@@ -1811,62 +1207,40 @@ object StreamReplay {
     * documents). Sentinel user -1's own never-closed session is filtered
     * defensively.
     */
-  def streamedTimerSessions(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import graft.streaming.StreamOps
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("session_start", LongType),
-      StructField("n_events", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"))
-    val (lo, hi) = timeBounds(events, s"$dir events (timer sessions)")
+  def streamedTimerSessions(spark: SparkSession, dir: String): DataFrame =
     // transformWithState requires RocksDB (same posture as the suppress
     // replay) — keep the tuned provider instead of the heap override
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_timer_sess")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_timer_sess_ckpt")
-    val in = new FileTopic("timer_sessions_in", wireSchema, root.toString)
-    val out = new FileTopic("timer_sessions_out", outSchema, root.toString)
-    def drain(): Unit = {
-      implicit val enc = org.apache.spark.sql.Encoders.product[StreamOps.Stamp]
-      val stamps = in.stream(child)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .select(col("user_id").as("user"), col("ts"))
-        .as[StreamOps.Stamp]
-      // 30-minute gap in MICROS — identical to session_window's arithmetic
-      val sessions = StreamOps.gapSessions(stamps, gapUs = 30L * 60 * 1000000)
-        .toDF()
-        .select(col("user").as("user_id"),
-          // integer `div`, not `/`: Spark's `/` on longs is DOUBLE
-          // division, whose truncation only happens to be exact while the
-          // magnitude keeps the ulp under a second (ADVICE r11) — `div`
-          // is exact floor division at any epoch magnitude
-          expr("startUs div 1000000").as("session_start"),
-          col("nEvents").as("n_events"))
-      val q = sessions.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("timer_sessions_in", userDateSchema)
+      val out = r.topic("timer_sessions_out", sessionSchema)
+      val q = r.query("sessions", "append", out) {
+        // 30-minute gap in MICROS — identical to session_window's arithmetic
+        StreamOps.gapSessions(stamps(in, r.child), gapUs = 30L * 60 * 1000000)
+          .toDF()
+          .select(col("user").as("user_id"),
+            // integer `div`, not `/`: Spark's `/` on longs is DOUBLE
+            // division, whose truncation only happens to be exact while the
+            // magnitude keeps the ulp under a second — `div` is exact floor
+            // division at any epoch magnitude
+            expr("startUs div 1000000").as("session_start"),
+            col("nEvents").as("n_events"))
+      }
       // incarnation 1 checkpoints open sessions + ARMED TIMERS; the
       // sentinel drains recover and fire them (two-sentinel flush)
-      runQuartered(events, lo, hi, in, () => drain(),
-        sentinelOffsets = Seq(2, 4),
-        sentinel = ts => child.createDataFrame(
-          java.util.Arrays.asList(Row(-1L, ts)), wireSchema))
-      val rows = out.batch(child)
-        .filter(col("user_id") =!= -1L)
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      quarteredOn(r, userDates(spark, dir), in,
+        s"$dir events (timer sessions)", () => r.drain(q),
+        sentinels = Seq(2, 4), sentinel = ts => Row(-1L, ts))
+      r.snapshot(out.batch(r.child).filter(col("user_id") =!= -1L))
+    }
+
+  /** The session wire as watermarked (user, ts) stamps. */
+  private def stamps(in: FileTopic, child: SparkSession) = {
+    implicit val enc = org.apache.spark.sql.Encoders.product[StreamOps.Stamp]
+    in.stream(child)
+      .withColumn("ts", timestamp_micros(col("date")))
+      .withWatermark("ts", "10 seconds")
+      .select(col("user_id").as("user"), col("ts"))
+      .as[StreamOps.Stamp]
   }
 
   /** Streaming per-key top-k over the production source on the
@@ -1881,55 +1255,49 @@ object StreamReplay {
     * row_number top-k under the DuckDB oracle.
     */
   def streamedTopicTopK(spark: SparkSession, dir: String,
-                        k: Int = 3): DataFrame = {
-    import graft.sources.FileTopic
-    import graft.streaming.StreamOps
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("name", StringType), StructField("date", LongType),
-      StructField("value", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("event_type", StringType), StructField("rank", LongType),
-      StructField("value", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("event_type").as("name"), unix_micros(col("ts")).as("date"),
-        // trunc-to-long like stream_suppress (DuckDB CAST rounds; trunc()
-        // in the oracle matches Spark's cast)
-        col("value").cast("long").as("value"))
-    val (lo, hi) = timeBounds(events, s"$dir events (topk)")
+                        k: Int = 3): DataFrame =
     // transformWithState requires RocksDB
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_topk")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_topk_ckpt")
-    val in = new FileTopic("topk_in", wireSchema, root.toString)
-    val out = new FileTopic("topk_out", outSchema, root.toString)
-    def drain(): Unit = {
-      implicit val enc = org.apache.spark.sql.Encoders
-        .product[StreamOps.KeyedValue]
-      val ranked = StreamOps.topKPerKey(
-        in.stream(child).select(col("name").as("key"), col("value"))
-          .as[StreamOps.KeyedValue], k)
-        .toDF()
-        .select(col("key").as("event_type"), col("rank").cast("long"),
-          col("value"))
-      val q = ranked.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("topk_in", topkWireSchema)
+      val out = r.topic("topk_out", topkOutSchema)
+      val q = r.query("topk", "update", out) {
+        implicit val enc = org.apache.spark.sql.Encoders
+          .product[StreamOps.KeyedValue]
+        StreamOps.topKPerKey(
+          in.stream(r.child).select(col("name").as("key"), col("value"))
+            .as[StreamOps.KeyedValue], k)
+          .toDF()
+          .select(col("key").as("event_type"), col("rank").cast("long"),
+            col("value"))
+      }
       // incarnation 1 checkpoints the k-capped lists; incarnation 2's
       // recovered lists merge the second half
-      runQuartered(events, lo, hi, in, () => drain())
-      val rows = out.batch(child)
-        .groupBy(col("event_type"), col("rank"))
-        .agg(max(col("value")).as("value"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+      quarteredOn(r, topkEvents(spark, dir), in, s"$dir events (topk)",
+        () => r.drain(q))
+      r.snapshot(convergedRanks(out, r.child))
+    }
+
+  /** (name, date micros, value) — trunc-to-long like stream_suppress
+    * (DuckDB CAST rounds; trunc() in the oracle matches Spark's cast).
+    */
+  private def topkEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("event_type").as("name"), unix_micros(col("ts")).as("date"),
+        col("value").cast("long").as("value"))
+
+  private val topkWireSchema = schema("name" -> StringType,
+    "date" -> LongType, "value" -> LongType)
+
+  private val topkOutSchema = schema("event_type" -> StringType,
+    "rank" -> LongType, "value" -> LongType)
+
+  /** Every rank's value is monotone non-decreasing, so the max per
+    * (key, rank) over the update changelog is the converged ranking.
+    */
+  private def convergedRanks(out: FileTopic, child: SparkSession): DataFrame =
+    out.batch(child)
+      .groupBy(col("event_type"), col("rank"))
+      .agg(max(col("value")).as("value"))
 
   /** CHAINED stateful operators in one append-mode query over the
     * production source — the Spark 4 surface that lifts the historical
@@ -1953,66 +1321,37 @@ object StreamReplay {
     * query, closed at last-event + gap, counted per epoch-aligned day of
     * close.
     */
-  def streamedChainedSessions(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import graft.streaming.StreamOps
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("day_start", LongType),
-      StructField("n_sessions", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"))
-    val (lo, hi) = timeBounds(events, s"$dir events (chained sessions)")
+  def streamedChainedSessions(spark: SparkSession, dir: String): DataFrame =
     // TWO stateful operators = two RocksDB store sets per partition per
     // micro-batch, so per-batch store open/commit overhead dominates —
     // same fan-out reasoning as the stream-stream joins (4, not 8)
-    val child = replaySession(spark, shufflePartitions = 4, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_chained")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_chained_ckpt")
-    val in = new FileTopic("chained_in", wireSchema, root.toString)
-    val out = new FileTopic("chained_out", outSchema, root.toString)
-    def drain(): Unit = {
-      implicit val enc = org.apache.spark.sql.Encoders.product[StreamOps.Stamp]
-      val stamps = in.stream(child)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .select(col("user_id").as("user"), col("ts"))
-        .as[StreamOps.Stamp]
-      val closed = StreamOps.gapSessionsChained(stamps,
-          gapUs = 30L * 60 * 1000000)
-        .toDF()
-        // stateless filter BETWEEN the two stateful operators: the
-        // sentinel user's own closed sessions must not pollute the counts
-        .filter(col("user") =!= -1L)
-      val daily = closed
-        .groupBy(window(col("end"), "1 day"))
-        .agg(count(lit(1)).as("n_sessions"))
-        .select(col("window.start").cast("long").as("day_start"),
-          col("n_sessions"))
-      val q = daily.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+    ReplayHarness(spark, partitions = 4, rocksDb = true) { r =>
+      val in = r.topic("chained_in", userDateSchema)
+      val out = r.topic("chained_out",
+        schema("day_start" -> LongType, "n_sessions" -> LongType))
+      val q = r.query("chained", "append", out) {
+        StreamOps.gapSessionsChained(stamps(in, r.child),
+            gapUs = 30L * 60 * 1000000)
+          .toDF()
+          // stateless filter BETWEEN the two stateful operators: the
+          // sentinel user's own closed sessions must not pollute the counts
+          .filter(col("user") =!= -1L)
+          .groupBy(window(col("end"), "1 day"))
+          .agg(count(lit(1)).as("n_sessions"))
+          .select(col("window.start").cast("long").as("day_start"),
+            col("n_sessions"))
+      }
       // TWO sentinels suffice even with two stateful operators: in
       // sentinel-2's data batch the upstream timers fire against the
       // already-advanced watermark AND the emitted closes flow into the
       // downstream aggregate BEFORE its eviction runs with the same
       // watermark — rows added and evicted in one batch (verified: a
       // third sentinel emits nothing more at any fixture scale)
-      runQuartered(events, lo, hi, in, () => drain(),
-        sentinelOffsets = Seq(2, 4),
-        sentinel = ts => child.createDataFrame(
-          java.util.Arrays.asList(Row(-1L, ts)), wireSchema))
-      val rows = out.batch(child).collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+      quarteredOn(r, userDates(spark, dir), in,
+        s"$dir events (chained sessions)", () => r.drain(q),
+        sentinels = Seq(2, 4), sentinel = ts => Row(-1L, ts))
+      r.snapshot(out.batch(r.child))
+    }
 
   /** Batch-to-stream STATE BOOTSTRAP over the production source — the
     * [[StreamOps.TopKBootstrap]] / `StatefulProcessorWithInitialState`
@@ -2032,74 +1371,52 @@ object StreamReplay {
     */
   def streamedBootstrapTopK(spark: SparkSession, dir: String,
                             k: Int = 3): DataFrame = {
-    import graft.sources.FileTopic
-    import graft.streaming.StreamOps
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("name", StringType), StructField("date", LongType),
-      StructField("value", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("event_type", StringType), StructField("rank", LongType),
-      StructField("value", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("event_type").as("name"), unix_micros(col("ts")).as("date"),
-        col("value").cast("long").as("value"))
-    val (lo, hi) = timeBounds(events, s"$dir events (bootstrap topk)")
+    val events = topkEvents(spark, dir)
+    val (lo, hi) = ReplayHarness.bounds(events, "date",
+      s"$dir events (bootstrap topk)")
     val fence = (lo + hi) / 2
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_boot")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_boot_ckpt")
-    val in = new FileTopic("boot_in", wireSchema, root.toString)
-    val out = new FileTopic("boot_out", outSchema, root.toString)
     // per-key top-k of a static frame as (key, values) seed rows
-    def topkOf(df: org.apache.spark.sql.DataFrame) = {
+    def topkOf(df: DataFrame) = {
       val w = Window.partitionBy(col("name")).orderBy(col("value").desc)
       df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
         .groupBy(col("name").as("key"))
         .agg(sort_array(collect_list(col("value")), asc = false).as("values"))
     }
-    def drain(): Unit = {
-      implicit val kv = org.apache.spark.sql.Encoders
-        .product[StreamOps.KeyedValue]
-      implicit val sd = org.apache.spark.sql.Encoders
-        .product[StreamOps.TopKSeed]
-      // the BATCH-history state seed, re-declared per incarnation (only
-      // the FIRST query start materializes it into the state store;
-      // restarts recover the evolved state from the checkpoint instead)
-      val seed = topkOf(events.filter(col("date") <= fence))
-        .as[StreamOps.TopKSeed]
-      val ranked = StreamOps.topKBootstrapped(
-        in.stream(child).select(col("name").as("key"), col("value"))
-          .as[StreamOps.KeyedValue], seed, k)
-        .toDF()
-        .select(col("key").as("event_type"), col("rank").cast("long"),
-          col("value"))
-      val q = ranked.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("boot_in", topkWireSchema)
+      val out = r.topic("boot_out", topkOutSchema)
+      val q = r.query("topk", "update", out) {
+        implicit val kv = org.apache.spark.sql.Encoders
+          .product[StreamOps.KeyedValue]
+        implicit val sd = org.apache.spark.sql.Encoders
+          .product[StreamOps.TopKSeed]
+        // the BATCH-history state seed, re-declared per incarnation (only
+        // the FIRST query start materializes it into the state store;
+        // restarts recover the evolved state from the checkpoint instead)
+        val seed = topkOf(events.filter(col("date") <= fence))
+          .as[StreamOps.TopKSeed]
+        StreamOps.topKBootstrapped(
+          in.stream(r.child).select(col("name").as("key"), col("value"))
+            .as[StreamOps.KeyedValue], seed, k)
+          .toDF()
+          .select(col("key").as("event_type"), col("rank").cast("long"),
+            col("value"))
+      }
       // ONLY the tail ever reaches the topic: history exists solely as
-      // the seeded state
+      // the seeded state. Incarnation 1: seeded state + first tail half;
+      // incarnation 2: restart — state recovered, NOT re-seeded
+      val tail = r.feed(events, "date", in, new Quarters(lo, hi))
       val tailQuarter = math.max(1L, (hi - fence) / 2)
-      in.append(events.filter(col("date") > fence &&
-        col("date") < fence + tailQuarter).coalesce(1))
-      drain() // incarnation 1: seeded state + first tail half
-      in.append(events.filter(col("date") >= fence + tailQuarter).coalesce(1))
-      drain() // incarnation 2: restart — state recovered, NOT re-seeded
-      val converged = out.batch(child)
-        .groupBy(col("event_type"), col("rank"))
-        .agg(max(col("value")).as("value"))
+      r.waves(() => r.drain(q))(
+        Seq(() => tail.publish(fence + 1, fence + tailQuarter)),
+        Seq(() => tail.publish(fence + tailQuarter, Long.MaxValue)))
+      val converged = convergedRanks(out, r.child)
       // the bootstrap must be load-bearing: tail-only top-k must differ
       // somewhere, else this row degenerates to stream_topic_topk. FULL
       // OUTER + null-safe inequality: a seed whose only effect is
       // contributing ranks the tail can't reach at all (a key with < k
       // tail events) is a presence difference an inner join would hide
-      // (review finding, round 11)
       val tailOnly = topkOf(events.filter(col("date") > fence)
         .select(col("name"), col("value")))
         .select(col("key").as("event_type"),
@@ -2112,9 +1429,8 @@ object StreamReplay {
         s"bootstrap top-$k is vacuous on '$dir': the tail alone already " +
           "produces every converged ranking — move the fence later so " +
           "history contributes a retained value")
-      val rows = converged.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      r.snapshot(converged)
+    }
   }
 
   /** Stream-static LEFT ANTI join over the production source — the
@@ -2128,54 +1444,33 @@ object StreamReplay {
     * mid-stream as always; converged per-type counts of SURVIVING events
     * equal the batch NOT IN aggregate.
     */
-  def streamedTopicBlocklist(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType),
-      StructField("event_type", StringType)))
-    val outSchema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("window_start", LongType),
-      StructField("cnt", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"),
-        col("event_type"))
-    val (lo, hi) = timeBounds(events, s"$dir events (blocklist)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_block")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_block_ckpt")
-    val in = new FileTopic("block_in", wireSchema, root.toString)
-    val out = new FileTopic("block_out", outSchema, root.toString)
-    def drain(): Unit = {
-      val blocklist = broadcast(Tables.customer(child, dir)
-        .filter(col("c_mktsegment") === "MACHINERY")
-        .select(col("c_custkey")))
-      val kept = in.stream(child)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .join(blocklist, col("user_id") === col("c_custkey"), "left_anti")
-      val counts = kept
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("event_type"),
-          col("window.start").cast("long").as("window_start"), col("cnt"))
-      val q = counts.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      runQuartered(events, lo, hi, in, () => drain())
-      val rows = out.batch(child)
+  def streamedTopicBlocklist(spark: SparkSession, dir: String): DataFrame =
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("block_in", schema("user_id" -> LongType,
+        "date" -> LongType, "event_type" -> StringType))
+      val out = r.topic("block_out", schema("event_type" -> StringType,
+        "window_start" -> LongType, "cnt" -> LongType))
+      val q = r.query("counts", "update", out) {
+        val blocklist = broadcast(Tables.customer(r.child, dir)
+          .filter(col("c_mktsegment") === "MACHINERY")
+          .select(col("c_custkey")))
+        in.stream(r.child)
+          .withColumn("ts", timestamp_micros(col("date")))
+          .withWatermark("ts", "10 seconds")
+          .join(blocklist, col("user_id") === col("c_custkey"), "left_anti")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(col("event_type"),
+            col("window.start").cast("long").as("window_start"), col("cnt"))
+      }
+      quarteredOn(r, Tables.events(spark, dir)
+          .select(col("user_id"), unix_micros(col("ts")).as("date"),
+            col("event_type")),
+        in, s"$dir events (blocklist)", () => r.drain(q))
+      r.snapshot(out.batch(r.child)
         .groupBy(col("event_type"), col("window_start"))
-        .agg(max(col("cnt")).as("cnt"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+        .agg(max(col("cnt")).as("cnt")))
+    }
 
   /** Per-user event transitions over the production source on the
     * transformWithState MAP-state primitive ([[StreamOps.TransitionCounts]])
@@ -2189,12 +1484,8 @@ object StreamReplay {
     * the streaming MapState processor and the batch lead() window are two
     * routes to the same answer.
     */
-  def streamedTransitions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(StructField("from_type", StringType),
-      StructField("to_type", StringType), StructField("n", LongType),
-      StructField("frac", DoubleType)))
-    transitionsReplayCore(spark, dir, outSchema) { (child, _, out) =>
+  def streamedTransitions(spark: SparkSession, dir: String): DataFrame =
+    transitionsReplayCore(spark, dir) { (child, _, out) =>
       // converged per-user counts -> global matrix + outgoing fractions
       // (|types|^2 rows; the fraction window runs over that constant size)
       val wf = org.apache.spark.sql.expressions.Window
@@ -2208,9 +1499,7 @@ object StreamReplay {
         .agg(sum(col("n")).as("n"))
         .withColumn("frac",
           col("n").cast("double") / sum(col("n")).over(wf))
-        .collect()
     }
-  }
 
   /** [[streamedTransitions]] under WATERMARK-BOUND RETENTION with
     * TIMER-DRIVEN GC (round 18): the per-user transition matrix is
@@ -2231,24 +1520,15 @@ object StreamReplay {
     * that outlived the window, a timer that never fired, or a gate that
     * admitted a below-horizon destination each moves some pair's count.
     */
-  def streamedTransitionsTtl(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(StructField("user_id", LongType),
-      StructField("pair", StringType), StructField("n", LongType)))
-    transitionsReplayCore(spark, dir, outSchema, windowed = true) {
-      (child, ckpt, _) =>
-        child.read.format("statestore")
-          .option("path", ckpt)
-          .option("stateVarName", "buckets")
-          .load()
-          .select(col("key.value").as("user_id"),
-            col("user_map_key.pair").as("pair"),
-            col("user_map_value.value").as("n"))
-          .groupBy(col("user_id"), col("pair"))
-          .agg(sum(col("n")).as("n"))
-          .collect()
+  def streamedTransitionsTtl(spark: SparkSession, dir: String): DataFrame =
+    transitionsReplayCore(spark, dir, windowed = true) { (child, ckpt, _) =>
+      stateVar(child, ckpt, "buckets")
+        .select(col("key.value").as("user_id"),
+          col("user_map_key.pair").as("pair"),
+          col("user_map_value.value").as("n"))
+        .groupBy(col("user_id"), col("pair"))
+        .agg(sum(col("n")).as("n"))
     }
-  }
 
   /** Offline audit of a `transformWithState` MAP state (round-14 verdict
     * ask #2 — the last cell of the state-type × offline-audit matrix:
@@ -2268,82 +1548,56 @@ object StreamReplay {
     * collect is of those bounded state rows, fenced inside the replay
     * harness like the other state audits.
     */
-  def stateInspectMap(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(StructField("user_id", LongType),
-      StructField("pair", StringType), StructField("n", LongType)))
-    transitionsReplayCore(spark, dir, outSchema) { (child, ckpt, _) =>
-      child.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "counts")
-        .load()
+  def stateInspectMap(spark: SparkSession, dir: String): DataFrame =
+    transitionsReplayCore(spark, dir) { (child, ckpt, _) =>
+      stateVar(child, ckpt, "counts")
         .select(col("key.value").as("user_id"),
           col("user_map_key.value").as("pair"),
           col("user_map_value.value").as("n"))
-        .collect()
     }
-  }
 
   /** The shared transition replay run — quartered publishes through the
     * MapState processor with the mid-stream checkpoint restart (see
     * [[streamedTransitions]]). `finish` reads the answer from the stopped
     * pipeline (the out topic, or the checkpoint's map state) BEFORE the
-    * temp dirs are deleted.
+    * temp root is deleted.
     */
   private def transitionsReplayCore(spark: SparkSession, dir: String,
-      outSchema: org.apache.spark.sql.types.StructType,
-      windowed: Boolean = false)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import graft.streaming.StreamOps
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType),
-      StructField("event_id", LongType), StructField("event_type", StringType)))
-    val pairSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("pair", StringType),
-      StructField("n", LongType)))
+      windowed: Boolean = false)(finish: Finish): DataFrame = {
     val events = Tables.events(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("date"),
         col("event_id"), col("event_type"))
-    val (lo, hi) = timeBounds(events, s"$dir events (transitions)")
+    val (lo, hi) = ReplayHarness.bounds(events, "date",
+      s"$dir events (transitions)")
     // day-aligned retention cutoff (3/5 of the span) with the lookback
     // chosen so the ms-truncated final watermark lands the horizon on
     // it exactly — the stream_distinct_ttl arithmetic
     val cutDay = (lo + (hi - lo) * 3 / 5) / DayUs
     val lookbackUs = (hi / 1000L) * 1000L - cutDay * DayUs
     // transformWithState requires RocksDB
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_trans")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_trans_ckpt")
-    val in = new FileTopic("trans_in", wireSchema, root.toString)
-    val out = new FileTopic("trans_out", pairSchema, root.toString)
-    def drain(): Unit = {
-      implicit val enc = org.apache.spark.sql.Encoders
-        .product[StreamOps.TypedEvent]
-      val typed = (if (windowed)
-          in.stream(child)
-            .withColumn("ets", timestamp_micros(col("date")))
-            .withWatermark("ets", "0 seconds")
-        else in.stream(child))
-        .select(col("user_id").as("user"),
-          timestamp_micros(col("date")).as("ts"),
-          col("event_id").as("eventId"), col("event_type").as("typ"))
-        .as[StreamOps.TypedEvent]
-      val pairs = (if (windowed)
-          StreamOps.transitionCountsTtl(typed, lookbackUs)
-        else StreamOps.transitionCounts(typed))
-        .toDF()
-        .select(col("user").as("user_id"), col("pair"), col("n"))
-      val q = pairs.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("trans_in", schema("user_id" -> LongType,
+        "date" -> LongType, "event_id" -> LongType,
+        "event_type" -> StringType))
+      val out = r.topic("trans_out", schema("user_id" -> LongType,
+        "pair" -> StringType, "n" -> LongType))
+      val q = r.query("pairs", "update", out) {
+        implicit val enc = org.apache.spark.sql.Encoders
+          .product[StreamOps.TypedEvent]
+        val typed = (if (windowed)
+            in.stream(r.child)
+              .withColumn("ets", timestamp_micros(col("date")))
+              .withWatermark("ets", "0 seconds")
+          else in.stream(r.child))
+          .select(col("user_id").as("user"),
+            timestamp_micros(col("date")).as("ts"),
+            col("event_id").as("eventId"), col("event_type").as("typ"))
+          .as[StreamOps.TypedEvent]
+        (if (windowed) StreamOps.transitionCountsTtl(typed, lookbackUs)
+         else StreamOps.transitionCounts(typed))
+          .toDF()
+          .select(col("user").as("user_id"), col("pair"), col("n"))
+      }
       // incarnation 1 checkpoints last-event + count-map state;
       // incarnation 2's boundary transitions need the recovered state.
       // NO redelivery and NO compaction incarnation: transition counts
@@ -2351,10 +1605,10 @@ object StreamReplay {
       // standing GC timers already fire for EVERY key when the last
       // batch advances the watermark to its final value — timer-driven
       // eviction needs no touch pattern (that is its point).
-      runQuartered(events, lo, hi, in, () => drain())
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      r.quartered(Seq(r.feed(events, "date", in, new Quarters(lo, hi))),
+        () => r.drain(q))
+      r.snapshot(finish(r.child, q.ckpt, out))
+    }
   }
 
   /** Streaming deterministic bootstrap (round-14 verdict ask #9 —
@@ -2386,63 +1640,36 @@ object StreamReplay {
     */
   def streamedBootstrapCi(spark: SparkSession, dir: String,
                           b: Int = 40): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
     import graft.operators.RelationalSuite
-    val wireSchema = StructType(Seq(
-      StructField("k", LongType), StructField("priority", StringType),
-      StructField("p", StringType)))
-    val sumsSchema = StructType(Seq(
-      StructField("priority", StringType), StructField("b", LongType),
-      StructField("swp", StringType), StructField("sw", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("priority", StringType),
-      StructField("mean_full", DoubleType),
-      StructField("ci_lo", DoubleType), StructField("ci_hi", DoubleType)))
     val orders = Tables.orders(spark, dir).select(
       col("o_orderkey").as("k"), col("o_orderpriority").as("priority"),
       col("o_totalprice").cast(DecimalType(18, 2)).cast("string").as("p"))
-    val bd = orders.agg(min("k"), max("k")).head()
-    require(!bd.isNullAt(0), s"$dir orders is empty — nothing to replay")
-    val (lo, hi) = (bd.getLong(0), bd.getLong(1))
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_boot")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_boot_ckpt")
-    val in = new FileTopic("boot_in", wireSchema, root.toString)
-    val out = new FileTopic("boot_sums", sumsSchema, root.toString)
-    def wave(from: Long, until: Long, last: Boolean) = orders
-      .filter(col("k") >= from &&
-        (if (last) lit(true) else col("k") < until)).coalesce(1)
-    def drain(): Unit = {
-      val fanned = in.stream(child)
-        .select(col("k"), col("priority"),
-          col("p").cast(DecimalType(18, 2)).as("p"),
-          explode(sequence(lit(-1L), lit((b - 1).toLong))).as("b"))
-        .withColumn("w", when(col("b") === -1L, lit(1))
-          .otherwise(RelationalSuite.bootstrapWeight(col("k"), col("b"))))
-      val sums = fanned.groupBy(col("priority"), col("b"))
-        .agg(sum(col("w") * col("p")).cast("string").as("swp"),
-          sum(col("w")).as("sw"))
-      val q = sums.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      in.append(wave(lo, lo + quarter, last = false))
-      in.append(wave(lo + quarter, lo + 2 * quarter, last = false))
-      drain() // incarnation 1: offsets + partial sums checkpointed
-      in.append(wave(lo + 2 * quarter, lo + 3 * quarter, last = false))
-      in.append(wave(lo + 3 * quarter, Long.MaxValue, last = true))
-      drain() // incarnation 2: recovered sums keep accumulating
+    val (lo, hi) = ReplayHarness.bounds(orders, "k", s"$dir orders")
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("boot_in", schema("k" -> LongType,
+        "priority" -> StringType, "p" -> StringType))
+      val out = r.topic("boot_sums", schema("priority" -> StringType,
+        "b" -> LongType, "swp" -> StringType, "sw" -> LongType))
+      val q = r.query("sums", "update", out) {
+        in.stream(r.child)
+          .select(col("k"), col("priority"),
+            col("p").cast(DecimalType(18, 2)).as("p"),
+            explode(sequence(lit(-1L), lit((b - 1).toLong))).as("b"))
+          .withColumn("w", when(col("b") === -1L, lit(1))
+            .otherwise(RelationalSuite.bootstrapWeight(col("k"), col("b"))))
+          .groupBy(col("priority"), col("b"))
+          .agg(sum(col("w") * col("p")).cast("string").as("swp"),
+            sum(col("w")).as("sw"))
+      }
+      // incarnation 1: offsets + partial sums checkpointed; incarnation 2:
+      // recovered sums keep accumulating
+      r.quartered(Seq(r.feed(orders, "k", in, new Quarters(lo, hi))),
+        () => r.drain(q))
       // converged per-key sums (monotone -> max), then the batch kernel's
       // own finish: degenerate guard + the SHARED survivor-rank CI
       // (RelationalSuite.survivorRankCi — one definition, zero drift
       // between the batch and streaming selections), full-mean join
-      val conv = out.batch(child)
+      val conv = out.batch(r.child)
         .select(col("priority"), col("b"),
           col("swp").cast(DecimalType(38, 2)).as("swp"), col("sw"))
         .groupBy(col("priority"), col("b"))
@@ -2457,12 +1684,10 @@ object StreamReplay {
         .select(col("priority"),
           (col("swp").cast("double") / col("sw").cast("double"))
             .as("mean_full"))
-      val rows = full.join(ci, "priority")
+      r.snapshot(full.join(ci, "priority")
         .select(col("priority"), col("mean_full"), col("ci_lo"),
-          col("ci_hi"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+          col("ci_hi")))
+    }
   }
 
   /** Stream-STATIC enrichment join over the production source — the one
@@ -2479,59 +1704,39 @@ object StreamReplay {
     * replay; converged update-mode counts (monotone, so max = final)
     * must equal the batch join + aggregate under the DuckDB oracle.
     */
-  def streamedTopicEnrich(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("date", LongType),
-      StructField("value", DoubleType)))
-    val outSchema = StructType(Seq(
-      StructField("segment", StringType),
-      StructField("window_start", LongType),
-      StructField("cnt", LongType)))
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("date"), col("value"))
-    val (lo, hi) = timeBounds(events, s"$dir events (enrich)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_enrich")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_enrich_ckpt")
-    val in = new FileTopic("enrich_in", wireSchema, root.toString)
-    val out = new FileTopic("enrich_out", outSchema, root.toString)
-    def drain(): Unit = {
-      // the static side: read on the SAME session as the stream, broadcast
-      // into every micro-batch's join (dim is ~|customers| rows — the
-      // 100 TB enrichment shape is always broadcast-dim against the fact
-      // stream, never a shuffle)
-      val dim = broadcast(Tables.customer(child, dir)
-        .select(col("c_custkey"), col("c_mktsegment")))
-      val enriched = in.stream(child)
-        .filter(col("value") > 100)
-        .withColumn("ts", timestamp_micros(col("date")))
-        .withWatermark("ts", "10 seconds")
-        .join(dim, col("user_id") === col("c_custkey"))
-      val counts = enriched
-        .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("c_mktsegment").as("segment"),
-          col("window.start").cast("long").as("window_start"), col("cnt"))
-      val q = counts.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
+  def streamedTopicEnrich(spark: SparkSession, dir: String): DataFrame =
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("enrich_in", schema("user_id" -> LongType,
+        "date" -> LongType, "value" -> DoubleType))
+      val out = r.topic("enrich_out", schema("segment" -> StringType,
+        "window_start" -> LongType, "cnt" -> LongType))
+      val q = r.query("counts", "update", out) {
+        // the static side: read on the SAME session as the stream,
+        // broadcast into every micro-batch's join (dim is ~|customers|
+        // rows — the 100 TB enrichment shape is always broadcast-dim
+        // against the fact stream, never a shuffle)
+        val dim = broadcast(Tables.customer(r.child, dir)
+          .select(col("c_custkey"), col("c_mktsegment")))
+        in.stream(r.child)
+          .filter(col("value") > 100)
+          .withColumn("ts", timestamp_micros(col("date")))
+          .withWatermark("ts", "10 seconds")
+          .join(dim, col("user_id") === col("c_custkey"))
+          .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(col("c_mktsegment").as("segment"),
+            col("window.start").cast("long").as("window_start"), col("cnt"))
+      }
       // incarnation 1 commits offsets + window state; incarnation 2
       // restarts from checkpoint with the dim re-resolved per trigger
-      runQuartered(events, lo, hi, in, () => drain())
-      val rows = out.batch(child)
+      quarteredOn(r, Tables.events(spark, dir)
+          .select(col("user_id"), unix_micros(col("ts")).as("date"),
+            col("value")),
+        in, s"$dir events (enrich)", () => r.drain(q))
+      r.snapshot(out.batch(r.child)
         .groupBy(col("segment"), col("window_start"))
-        .agg(max(col("cnt")).as("cnt"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+        .agg(max(col("cnt")).as("cnt")))
+    }
 
   /** Streaming MinHash-LSH near-dup dedup over the production source —
     * the online twin of the batch minhash_pairs path, run against the
@@ -2557,163 +1762,87 @@ object StreamReplay {
     * the batch pair set rather than merely approximate it.
     */
   def streamedNearDup(spark: SparkSession, dir: String,
-                      minAgree: Int = 16): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    import graft.operators.Dedup
-    val wireSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("sig", ArrayType(LongType))))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("dup_of", LongType),
-      StructField("agree", IntegerType)))
-    // transformWithState requires the RocksDB provider (same posture as
-    // the timer-session and suppress replays)
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val docs = Tables.documents(child, dir)
-    // persist: five publishes slice this by doc_id — without the cache
-    // each one re-runs the full shingle -> signature pipeline over the
-    // whole corpus just to keep a quarter of the rows
-    val sigs = Dedup.minhashSignatures(docs).select(col("doc_id"), col("sig"))
-      .persist()
-    val b = docs.agg(min("doc_id"), max("doc_id")).head()
-    require(!b.isNullAt(0), s"$dir documents is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val root = java.nio.file.Files.createTempDirectory("graft_neardup")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_neardup_ckpt")
-    val in = new FileTopic("neardup_in", wireSchema, root.toString)
-    val out = new FileTopic("neardup_hits", outSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = sigs
-      .filter(col("doc_id") >= from &&
-        (if (last) lit(true) else col("doc_id") < until)).coalesce(1)
-    val pubRange = stageWire(sigs, "doc_id", in)
-    def drain(): Unit = {
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[StreamOps.BandDoc]
-      val banded = Dedup.lshBucketsWithSig(in.stream(child))
-        .select(col("band"), col("bucket"), col("doc_id").as("docId"),
-          col("sig"))
-        .as[StreamOps.BandDoc]
-      val hits = StreamOps.nearDupHits(banded, minAgree).toDF()
-        .select(col("docId").as("doc_id"), col("dupOf").as("dup_of"),
-          col("agree"))
-      val q = hits.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + bucket indexes checkpointed
-      // REDELIVERY ACROSS THE RESTART: the whole second quarter again —
-      // new files, so only the recovered signature index can absorb them
-      pubRange(q2lo, q2hi, false)
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2
-      val dups = out.batch(child).select(col("doc_id")).distinct()
-      val rows = Tables.documents(child, dir)
-        .join(dups, Seq("doc_id"), "left_anti")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        StructType(Seq(StructField("lang", StringType),
-          StructField("n_kept", LongType, nullable = false))))
-    } finally { sigs.unpersist(); deleteTree(ckpt); deleteTree(root) }
-  }
+                      minAgree: Int = 16): DataFrame =
+    nearDupReplayCore(spark, dir, minAgree)(nearDupKept(dir))
 
-  /** The shared trailing-window near-dup replay (round-18 verdict ask
-    * #1): [[streamedNearDup]]'s wire and publish choreography (quartered
-    * doc_id waves, mid-stream checkpoint restart, whole-quarter
-    * redelivery) run through [[StreamOps.NearDupIndexTtl]] with
-    * day-per-doc_id event times, plus the full-corpus redelivery
-    * incarnation that compacts every bucket at the final horizon
-    * (= day(cutoff), the lexicalReplayCore convention: watermark day(hi)
-    * minus lookback (hi − cutoff) days). `finish` reads the answer from
-    * the stopped pipeline (the hit topic, or the checkpoint's bucket
-    * index) BEFORE the temp dirs are deleted.
+  /** Per-language count of SURVIVING documents: not the later member of
+    * any emitted pair.
     */
-  private def nearDupTtlReplayCore(spark: SparkSession, dir: String,
-      minAgree: Int, outSchema: org.apache.spark.sql.types.StructType)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
+  private def nearDupKept(dir: String): Finish = (child, _, out) =>
+    Tables.documents(child, dir)
+      .join(out.batch(child).select(col("doc_id")).distinct(), Seq("doc_id"),
+        "left_anti")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_kept"))
+
+  /** The shared near-dup replay: [[streamedNearDup]]'s wire and publish
+    * choreography (quartered doc_id waves, mid-stream checkpoint restart,
+    * whole-quarter redelivery). `windowed` runs it through
+    * [[StreamOps.NearDupIndexTtl]] with day-per-doc_id event times, plus
+    * the full-corpus redelivery incarnation that compacts every bucket at
+    * the final horizon (= day(cutoff), the lexicalReplayCore convention:
+    * watermark day(hi) minus lookback (hi − cutoff) days). `finish` reads
+    * the answer from the stopped pipeline (the hit topic, or the
+    * checkpoint's bucket index) BEFORE the temp root is deleted.
+    */
+  private def nearDupReplayCore(spark: SparkSession, dir: String,
+      minAgree: Int, windowed: Boolean = false)(finish: Finish): DataFrame = {
     import graft.operators.Dedup
-    val wireSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("sig", ArrayType(LongType))))
-    val hitSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("dup_of", LongType),
-      StructField("agree", IntegerType)))
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val docs = Tables.documents(child, dir)
-    // persist: the publish waves slice this by doc_id — without the cache
-    // each one re-runs the full shingle -> signature pipeline
-    val sigs = Dedup.minhashSignatures(docs).select(col("doc_id"), col("sig"))
-      .persist()
-    val b = docs.agg(min("doc_id"), max("doc_id")).head()
-    require(!b.isNullAt(0), s"$dir documents is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * DayUs
-    val root = java.nio.file.Files.createTempDirectory("graft_neardup_ttl")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_neardup_ttl_ck")
-    val in = new FileTopic("neardup_ttl_in", wireSchema, root.toString)
-    val out = new FileTopic("neardup_ttl_hits", hitSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = sigs
-      .filter(col("doc_id") >= from &&
-        (if (last) lit(true) else col("doc_id") < until)).coalesce(1)
-    val pubRange = stageWire(sigs, "doc_id", in)
-    def drain(): Unit = {
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[StreamOps.BandDocTs]
-      // watermark BEFORE the band fan-out; the projection may drop the
-      // ets column — the EventTimeWatermark node is already planted
-      val banded = Dedup.lshBucketsWithSig(
-          in.stream(child)
-            .withColumn("ets", timestamp_micros(col("doc_id") * DayUs))
-            .withWatermark("ets", "0 seconds"))
-        .select(col("band"), col("bucket"), col("doc_id").as("docId"),
-          col("sig"), (col("doc_id") * DayUs).as("tsUs"))
-        .as[StreamOps.BandDocTs]
-      val hits = StreamOps.nearDupHitsTtl(banded, minAgree, lookbackUs).toDF()
-        .select(col("docId").as("doc_id"), col("dupOf").as("dup_of"),
-          col("agree"))
-      val q = hits.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val docs = Tables.documents(r.child, dir)
+      // persist: the publish waves slice this by doc_id — without the cache
+      // each one re-runs the full shingle -> signature pipeline over the
+      // whole corpus just to keep a quarter of the rows
+      val sigs = Dedup.minhashSignatures(docs).select(col("doc_id"), col("sig"))
+        .persist()
+      try {
+        val (lo, hi) = ReplayHarness.bounds(docs, "doc_id", s"$dir documents")
+        val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * DayUs
+        val in = r.topic("neardup_in",
+          schema("doc_id" -> LongType, "sig" -> ArrayType(LongType)))
+        val out = r.topic("neardup_hits", schema("doc_id" -> LongType,
+          "dup_of" -> LongType, "agree" -> IntegerType))
+        val q = r.query("hits", "update", out) {
+          val hits = if (windowed) {
+            implicit val enc =
+              org.apache.spark.sql.Encoders.product[StreamOps.BandDocTs]
+            // watermark BEFORE the band fan-out; the projection may drop
+            // the ets column — the EventTimeWatermark node is already planted
+            val banded = Dedup.lshBucketsWithSig(
+                in.stream(r.child)
+                  .withColumn("ets", timestamp_micros(col("doc_id") * DayUs))
+                  .withWatermark("ets", "0 seconds"))
+              .select(col("band"), col("bucket"), col("doc_id").as("docId"),
+                col("sig"), (col("doc_id") * DayUs).as("tsUs"))
+              .as[StreamOps.BandDocTs]
+            StreamOps.nearDupHitsTtl(banded, minAgree, lookbackUs).toDF()
+          } else {
+            implicit val enc =
+              org.apache.spark.sql.Encoders.product[StreamOps.BandDoc]
+            val banded = Dedup.lshBucketsWithSig(in.stream(r.child))
+              .select(col("band"), col("bucket"), col("doc_id").as("docId"),
+                col("sig"))
+              .as[StreamOps.BandDoc]
+            StreamOps.nearDupHits(banded, minAgree).toDF()
+          }
+          hits.select(col("docId").as("doc_id"), col("dupOf").as("dup_of"),
+            col("agree"))
+        }
+        // incarnation 1 checkpoints offsets + bucket indexes; the whole
+        // second quarter is REDELIVERED across the restart — new files, so
+        // only the recovered signature index can absorb them. Windowed,
+        // incarnation 3: the committed watermark sits at day(hi), so the
+        // horizon is exactly day(cutoff) — the FULL corpus redelivery
+        // touches every bucket any document maps to (in-window docs are
+        // resident → skipped; out-of-window ones are gated), compacting
+        // the whole signature index to the retention window with zero new
+        // emissions
+        val f = r.feed(sigs, "doc_id", in, new Quarters(lo, hi))
+        r.quartered(Seq(f), () => r.drain(q), redeliver = true,
+          tail = if (windowed) Seq(Seq(f.q(0, 4))) else Nil)
+        r.snapshot(finish(r.child, q.ckpt, out))
+      } finally sigs.unpersist()
     }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + windowed bucket indexes checkpointed
-      // REDELIVERY ACROSS THE RESTART: the recovered indexes absorb it
-      pubRange(q2lo, q2hi, false)
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2
-      // incarnation 3: the committed watermark sits at day(hi), so the
-      // horizon is exactly day(cutoff) — the FULL corpus redelivery
-      // touches every bucket any document maps to (in-window docs are
-      // resident → skipped; out-of-window ones are gated), compacting
-      // the whole signature index to the retention window with zero new
-      // emissions
-      pubRange(lo, Long.MaxValue, true)
-      drain()
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { sigs.unpersist(); deleteTree(ckpt); deleteTree(root) }
   }
 
   /** [[streamedNearDup]] under WATERMARK-BOUND RETENTION: the crawl
@@ -2732,19 +1861,8 @@ object StreamReplay {
     * moves the per-language counts.
     */
   def streamedNearDupTtl(spark: SparkSession, dir: String,
-                         minAgree: Int = 16): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(StructField("lang", StringType),
-      StructField("n_kept", LongType, nullable = false)))
-    nearDupTtlReplayCore(spark, dir, minAgree, outSchema) { (child, _, out) =>
-      val dups = out.batch(child).select(col("doc_id")).distinct()
-      Tables.documents(child, dir)
-        .join(dups, Seq("doc_id"), "left_anti")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"))
-        .collect()
-    }
-  }
+                         minAgree: Int = 16): DataFrame =
+    nearDupReplayCore(spark, dir, minAgree, windowed = true)(nearDupKept(dir))
 
   /** Offline audit of [[StreamOps.NearDupIndexTtl]]'s ListState — the
     * PRUNED bucket-keyed signature index read out of the restarted
@@ -2761,32 +1879,20 @@ object StreamReplay {
     * provably the exact windowed index.
     */
   def stateInspectNearDupTtl(spark: SparkSession, dir: String,
-                             minAgree: Int = 16): DataFrame = {
-    import org.apache.spark.sql.types._
-    val auditSchema = StructType(Seq(
-      StructField("band", IntegerType),
-      StructField("n_docs", LongType),
-      StructField("n_buckets", LongType),
-      StructField("coll_mass", LongType),
-      StructField("id_sum", LongType)))
-    nearDupTtlReplayCore(spark, dir, minAgree, auditSchema) {
+                             minAgree: Int = 16): DataFrame =
+    nearDupReplayCore(spark, dir, minAgree, windowed = true) {
       (child, ckpt, _) =>
-        val occ = child.read.format("statestore")
-          .option("path", ckpt)
-          .option("stateVarName", "index")
-          .load()
+        stateVar(child, ckpt, "index")
           .select(col("key._1").as("band"), col("key._2").as("bucket"),
             col("list_element.docId").as("doc_id"))
           .groupBy(col("band"), col("bucket"))
           .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("ids"))
-        occ.groupBy(col("band"))
+          .groupBy(col("band"))
           .agg(sum(col("n")).as("n_docs"),
             count(lit(1)).as("n_buckets"),
             sum(col("n") * col("n")).as("coll_mass"),
             sum(col("ids")).as("id_sum"))
-          .collect()
     }
-  }
 
   /** Streaming MULTIMODAL dedup — binary payloads over the wire: real
     * PNG bytes ride the topic (base64 on the JSON wire, BinaryType on
@@ -2807,86 +1913,16 @@ object StreamReplay {
     * fingerprints shuffle — decode-then-reduce INSIDE the stream, state
     * bounded by dup-group sizes, never by content volume.
     */
-  def streamedMediaDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    import graft.operators.Multimodal
-    val wireSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val outSchema = StructType(Seq(
-      StructField("ahash", LongType), StructField("n_images", LongType)))
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    // persist: the encode hides inside a typed mapPartitions, so Catalyst
-    // cannot prune it under the six publish filters — without the cache
-    // every publish (and the bounds agg) would re-encode the whole image
-    // subset executor-side
-    val media = Multimodal
-      .mediaTableReal(Tables.documents(child, dir), "image")
-      .toDF().select(col("doc_id"), col("payload"))
-      .persist()
-    // id bounds from the cheap metadata side — no encode needed
-    val b = Tables.documents(child, dir)
-      .filter(pmod(col("doc_id"), lit(3)) === 0)
-      .agg(min("doc_id"), max("doc_id")).head()
-    require(!b.isNullAt(0), s"$dir documents yields no image rows")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val root = java.nio.file.Files.createTempDirectory("graft_media_dedup")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_media_ckpt")
-    val in = new FileTopic("media_in", wireSchema, root.toString)
-    val out = new FileTopic("media_hash_counts", outSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = media
-      .filter(col("doc_id") >= from &&
-        (if (last) lit(true) else col("doc_id") < until)).coalesce(1)
-    val pubRange = stageWire(media, "doc_id", in)
-    // the re-upload: identical bytes under a fresh id
-    def mirror(df: org.apache.spark.sql.DataFrame) =
-      df.select((-col("doc_id") - 1).as("doc_id"), col("payload"))
-    def drain(): Unit = {
-      implicit val inEnc = org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.BINARY)
-      implicit val idEnc =
-        org.apache.spark.sql.Encoders.product[StreamOps.KeyedId]
-      val hashed = in.stream(child).as[(Long, Array[Byte])]
-        .map { case (id, bytes) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          StreamOps.KeyedId(Multimodal.ahashOf(img), id)
-        }
-      val counts = StreamOps.distinctPerKey(hashed).toDF()
-        .select(col("key").as("ahash"), col("n").as("n_images"))
-      val q = counts.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + per-hash id sets checkpointed
-      // post-restart: redeliver q2's originals (absorbed by recovered
-      // state), mirrors of the early quarters, and the rest of the stream
-      pubRange(q2lo, q2hi, false)
-      in.append(mirror(range(lo, q2hi, last = false)))
-      pubRange(q2hi, Long.MaxValue, true)
-      in.append(mirror(range(q2hi, Long.MaxValue, last = true)))
-      drain() // incarnation 2
-      val rows = out.batch(child)
+  def streamedMediaDedup(spark: SparkSession, dir: String): DataFrame =
+    mediaReplayCore(spark, dir) { (child, _, out) =>
+      out.batch(child)
         .groupBy(col("ahash"))
         .agg(max(col("n_images")).as("n_images"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { media.unpersist(); deleteTree(ckpt); deleteTree(root) }
-  }
+    }
 
-  /** The shared trailing-window media-dedup replay (round-18 verdict ask
-    * #1, second store): [[streamedMediaDedup]]'s wire (real PNG payloads,
-    * re-upload mirrors under fresh ids) and publish choreography, with
-    * the fingerprint-keyed id store swapped to
+  /** The shared media-dedup replay: [[streamedMediaDedup]]'s wire (real
+    * PNG payloads, re-upload mirrors under fresh ids) and publish
+    * choreography. `windowed` swaps the fingerprint-keyed id store to
     * [[StreamOps.DistinctActiveTtl]] — the retention kit COMPOSES: the
     * decode → aHash reduction stays in the stream, and the per-hash
     * distinct-uploader state becomes the sliding-window active set, no
@@ -2897,96 +1933,93 @@ object StreamReplay {
     * every hash key at the final horizon (= day(cutoff)), compacting the
     * whole store. `finish` reads the answer from the stopped pipeline.
     */
-  private def mediaDedupTtlReplayCore(spark: SparkSession, dir: String,
-      outSchema: org.apache.spark.sql.types.StructType)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
+  private def mediaReplayCore(spark: SparkSession, dir: String,
+      windowed: Boolean = false)(finish: Finish): DataFrame = {
     import graft.operators.Multimodal
-    val wireSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val liveSchema = StructType(Seq(
-      StructField("ahash", LongType), StructField("n_images", LongType),
-      StructField("batch_id", LongType)))
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    // persist: same rationale as streamedMediaDedup — the encode hides
-    // inside a typed mapPartitions, unprunable under the publish filters
-    val media = Multimodal
-      .mediaTableReal(Tables.documents(child, dir), "image")
-      .toDF().select(col("doc_id"), col("payload"))
-      .persist()
-    val b = Tables.documents(child, dir)
-      .filter(pmod(col("doc_id"), lit(3)) === 0)
-      .agg(min("doc_id"), max("doc_id")).head()
-    require(!b.isNullAt(0), s"$dir documents yields no image rows")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * DayUs
-    val root = java.nio.file.Files.createTempDirectory("graft_media_ttl")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_media_ttl_ck")
-    val in = new FileTopic("media_ttl_in", wireSchema, root.toString)
-    val out = new FileTopic("media_ttl_counts", liveSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = media
-      .filter(col("doc_id") >= from &&
-        (if (last) lit(true) else col("doc_id") < until)).coalesce(1)
-    val pubRange = stageWire(media, "doc_id", in)
-    def mirror(df: org.apache.spark.sql.DataFrame) =
-      df.select((-col("doc_id") - 1).as("doc_id"), col("payload"))
-    def drain(): Unit = {
-      implicit val inEnc = org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.BINARY,
-        org.apache.spark.sql.Encoders.scalaLong)
-      implicit val idEnc =
-        org.apache.spark.sql.Encoders.product[StreamOps.ActiveId]
-      // mirrors map back to their original's day BEFORE the watermark
-      val orig = when(col("doc_id") < 0, -col("doc_id") - 1)
-        .otherwise(col("doc_id"))
-      val hashed = in.stream(child)
-        .withColumn("ets", timestamp_micros(orig * DayUs))
-        .withWatermark("ets", "0 seconds")
-        .select(col("doc_id"), col("payload"), (orig * DayUs).as("ts_us"))
-        .as[(Long, Array[Byte], Long)]
-        .map { case (id, bytes, tsUs) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          StreamOps.ActiveId(Multimodal.ahashOf(img).toString, id, tsUs)
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      // persist: the encode hides inside a typed mapPartitions, so Catalyst
+      // cannot prune it under the publish filters — without the cache
+      // every publish would re-encode the whole image subset executor-side
+      val media = Multimodal
+        .mediaTableReal(Tables.documents(r.child, dir), "image")
+        .toDF().select(col("doc_id"), col("payload"))
+        .persist()
+      try {
+        // id bounds from the cheap metadata side — no encode needed
+        val (lo, hi) = ReplayHarness.bounds(Tables.documents(r.child, dir)
+          .filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id",
+          s"$dir documents (image rows)")
+        val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * DayUs
+        val in = r.topic("media_in",
+          schema("doc_id" -> LongType, "payload" -> BinaryType))
+        val out = r.topic("media_hash_counts", schema(
+          Seq("ahash" -> LongType, "n_images" -> LongType) ++
+            (if (windowed) Seq("batch_id" -> LongType) else Nil): _*))
+        // windowed: the live feed carries each emission's batch id, so the
+        // finish can pick every key's LAST emission
+        val sink: ReplayHarness.Writer => ReplayHarness.Writer =
+          _.foreachBatch((df: DataFrame, id: Long) => out.sinkBatch(
+            if (windowed) df.withColumn("batch_id", lit(id)) else df, id))
+        val q = r.custom("counts", "update", sink) {
+          if (windowed) {
+            implicit val inEnc = org.apache.spark.sql.Encoders.tuple(
+              org.apache.spark.sql.Encoders.scalaLong,
+              org.apache.spark.sql.Encoders.BINARY,
+              org.apache.spark.sql.Encoders.scalaLong)
+            implicit val idEnc =
+              org.apache.spark.sql.Encoders.product[StreamOps.ActiveId]
+            // mirrors map back to their original's day BEFORE the watermark
+            val orig = when(col("doc_id") < 0, -col("doc_id") - 1)
+              .otherwise(col("doc_id"))
+            val hashed = in.stream(r.child)
+              .withColumn("ets", timestamp_micros(orig * DayUs))
+              .withWatermark("ets", "0 seconds")
+              .select(col("doc_id"), col("payload"), (orig * DayUs).as("ts_us"))
+              .as[(Long, Array[Byte], Long)]
+              .map { case (id, bytes, tsUs) =>
+                val img = javax.imageio.ImageIO.read(
+                  new java.io.ByteArrayInputStream(bytes))
+                StreamOps.ActiveId(Multimodal.ahashOf(img).toString, id, tsUs)
+              }
+            StreamOps.distinctActiveTtl(hashed, lookbackUs).toDF()
+              .select(col("key").cast("long").as("ahash"),
+                col("n").as("n_images"))
+          } else {
+            implicit val inEnc = org.apache.spark.sql.Encoders.tuple(
+              org.apache.spark.sql.Encoders.scalaLong,
+              org.apache.spark.sql.Encoders.BINARY)
+            implicit val idEnc =
+              org.apache.spark.sql.Encoders.product[StreamOps.KeyedId]
+            val hashed = in.stream(r.child).as[(Long, Array[Byte])]
+              .map { case (id, bytes) =>
+                val img = javax.imageio.ImageIO.read(
+                  new java.io.ByteArrayInputStream(bytes))
+                StreamOps.KeyedId(Multimodal.ahashOf(img), id)
+              }
+            StreamOps.distinctPerKey(hashed).toDF()
+              .select(col("key").as("ahash"), col("n").as("n_images"))
+          }
         }
-      val counts = StreamOps.distinctActiveTtl(hashed, lookbackUs).toDF()
-        .select(col("key").cast("long").as("ahash"),
-          col("n").as("n_images"))
-      val q = counts.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df.withColumn("batch_id", lit(id)), id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
+        val qs = new Quarters(lo, hi)
+        val f = r.feed(media, "doc_id", in, qs)
+        // the re-upload: identical bytes under a fresh id, sliced by the
+        // ORIGINAL id
+        val m = new Feed(media.select((-col("doc_id") - 1).as("doc_id"),
+          col("payload")), -col("doc_id") - 1, in, qs)
+        // post-restart: redeliver q2's originals (absorbed by recovered
+        // state), mirrors of the early quarters, and the rest of the
+        // stream. Windowed, incarnation 3: watermark at day(hi) → horizon
+        // exactly day(cutoff); redelivering EVERYTHING (originals +
+        // mirrors) touches every hash key — in-window ids refresh
+        // idempotently (their day is fixed), out-of-window ones are gated,
+        // expired residents evict — so the final emission per key IS its
+        // windowed count and the store holds exactly the window's ids
+        r.waves(() => r.drain(q))(Seq(Seq(f.q(0, 1), f.q(1, 2)),
+          Seq(f.q(1, 2), m.q(0, 2), f.q(2, 4), m.q(2, 4))) ++
+          (if (windowed) Seq(Seq(f.q(0, 4), m.q(0, 4))) else Nil): _*)
+        r.snapshot(finish(r.child, q.ckpt, out))
+      } finally media.unpersist()
     }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + per-hash active sets checkpointed
-      // post-restart: redeliver q2's originals (absorbed by the recovered
-      // sets), mirrors of the early quarters, and the rest of the stream
-      pubRange(q2lo, q2hi, false)
-      in.append(mirror(range(lo, q2hi, last = false)))
-      pubRange(q2hi, Long.MaxValue, true)
-      in.append(mirror(range(q2hi, Long.MaxValue, last = true)))
-      drain() // incarnation 2
-      // incarnation 3: watermark at day(hi) → horizon exactly day(cutoff);
-      // redelivering EVERYTHING (originals + mirrors) touches every hash
-      // key — in-window ids refresh idempotently (their day is fixed),
-      // out-of-window ones are gated, expired residents evict — so the
-      // final emission per key IS its windowed count and the store holds
-      // exactly the window's ids
-      pubRange(lo, Long.MaxValue, true)
-      in.append(mirror(range(lo, Long.MaxValue, last = true)))
-      drain()
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { media.unpersist(); deleteTree(ckpt); deleteTree(root) }
   }
 
   /** [[streamedMediaDedup]] under WATERMARK-BOUND RETENTION: per-hash
@@ -3002,11 +2035,8 @@ object StreamReplay {
     * group (original + mirror). Groups whose window emptied emit 0 and
     * are dropped — the oracle has no such groups.
     */
-  def streamedMediaDedupTtl(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("ahash", LongType), StructField("n_images", LongType)))
-    mediaDedupTtlReplayCore(spark, dir, outSchema) { (child, _, out) =>
+  def streamedMediaDedupTtl(spark: SparkSession, dir: String): DataFrame =
+    mediaReplayCore(spark, dir, windowed = true) { (child, _, out) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("ahash"))
         .orderBy(col("batch_id").desc)
@@ -3014,9 +2044,7 @@ object StreamReplay {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1 && col("n_images") > 0)
         .select(col("ahash"), col("n_images"))
-        .collect()
     }
-  }
 
   /** Offline audit of the media store's [[StreamOps.DistinctActiveTtl]]
     * MapState — the PRUNED per-hash id sets read out of the restarted
@@ -3028,18 +2056,9 @@ object StreamReplay {
     * out-of-window id moves all three). Hash-matched against the DuckDB
     * recompute over in-window image documents.
     */
-  def stateInspectMediaTtl(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val auditSchema = StructType(Seq(
-      StructField("ahash", LongType),
-      StructField("n_ids", LongType),
-      StructField("orig_sum", LongType),
-      StructField("mirror_sum", LongType)))
-    mediaDedupTtlReplayCore(spark, dir, auditSchema) { (child, ckpt, _) =>
-      child.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "active")
-        .load()
+  def stateInspectMediaTtl(spark: SparkSession, dir: String): DataFrame =
+    mediaReplayCore(spark, dir, windowed = true) { (child, ckpt, _) =>
+      stateVar(child, ckpt, "active")
         .select(col("key.value").cast("long").as("ahash"),
           col("user_map_key.value").as("id"))
         .groupBy(col("ahash"))
@@ -3048,9 +2067,7 @@ object StreamReplay {
             .as("orig_sum"),
           sum(when(col("id") < 0, col("id")).otherwise(lit(0L)))
             .as("mirror_sum"))
-        .collect()
     }
-  }
 
   /** Streaming IVF ANN over the production source — the online twin of
     * the batch embed_ivf path, run against the
@@ -3079,8 +2096,8 @@ object StreamReplay {
   def streamedAnn(spark: SparkSession, dir: String,
                   centroids: Seq[Seq[Double]], nProbe: Int,
                   k: Int = 3): DataFrame =
-    streamedAnnCore(spark, dir, centroids, nProbe, rerank = None,
-      annRankSchema("cos"))(annTopKFinish("cos", k))
+    streamedAnnCore(spark, dir, centroids, nProbe, rerank = None)(
+      annTopKFinish("cos", k))
 
   /** Streaming retrieve-then-rerank — [[streamedAnn]]'s online retrieval
     * composed with the late-interaction SECOND stage, all inside the one
@@ -3099,8 +2116,7 @@ object StreamReplay {
                      centroids: Seq[Seq[Double]], nProbe: Int,
                      nTokens: Int, subDim: Int, k: Int = 3): DataFrame =
     streamedAnnCore(spark, dir, centroids, nProbe,
-      rerank = Some((nTokens, subDim)),
-      annRankSchema("score"))(annTopKFinish("score", k))
+      rerank = Some((nTokens, subDim)))(annTopKFinish("score", k))
 
   /** Streaming HYBRID retrieval (round-15 verdict ask #4) — the
     * production serving shape: the semantic index builds ONLINE over the
@@ -3139,86 +2155,58 @@ object StreamReplay {
                      k: Int = 5,
                      lexical: (SparkSession, String, Int) => DataFrame =
                        graft.operators.TextSuite.lexicalRetrieval): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    import graft.operators.{Similarity, SimilaritySuite, TextSuite}
+    import graft.operators.{Similarity, SimilaritySuite}
     val aliasBase = 1L << 40
-    val wireSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val hitsSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("cos", DoubleType)))
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("cand_id", LongType),
-      StructField("rrf", LongType), StructField("n_sources", LongType),
-      StructField("rnk", IntegerType)))
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val emb = Tables.embeddings(child, dir)
-      .select(col("vec_id"), col("embedding"))
-    val b = emb.agg(min("vec_id"), max("vec_id")).head()
-    require(!b.isNullAt(0), s"$dir embeddings is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val root = java.nio.file.Files.createTempDirectory("graft_hybrid")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hybrid_ckpt")
-    val in = new FileTopic("hybrid_in", wireSchema, root.toString)
-    val out = new FileTopic("hybrid_cand", hitsSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = emb
-      .filter(col("vec_id") >= from &&
-        (if (last) lit(true) else col("vec_id") < until)).coalesce(1)
-    val pubRange = stageWire(emb, "vec_id", in)
-    def drain(): Unit = {
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[StreamOps.CellQuery]
-      val routed = in.stream(child)
-        .select(col("vec_id"), col("embedding"),
-          posexplode(Similarity.probeCells(col("embedding"), centroids,
-            nProbe)))
-        // aliased probe rows never insert; corpus rows insert at their
-        // best cell exactly as the stream_ann replay does
-        .select(col("col.cell").as("cell"), col("vec_id").as("vecId"),
-          col("embedding").as("emb"),
-          (col("pos") === 0 && col("vec_id") < aliasBase).as("insert"))
-        .as[StreamOps.CellQuery]
-      val hits = StreamOps.annHits(routed).toDF()
-        // keep only the aliased probes' retrievals; decode the alias and
-        // drop the probe's own resident twin in the same projection
-        .filter(col("queryId") >= aliasBase)
-        .select((col("queryId") - aliasBase).as("query_id"),
-          col("neighborId").as("neighbor_id"), col("cos"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-      val q = hits.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + cell indexes checkpointed
-      pubRange(q2lo, q2hi, false) // redelivery across restart
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2: index complete
-      in.append(emb.filter(col("vec_id") < 5)
-        .select((col("vec_id") + aliasBase).as("vec_id"), col("embedding"))
-        .coalesce(1))
-      drain() // incarnation 3: probes retrieve from the RECOVERED index
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val emb = Tables.embeddings(r.child, dir)
+        .select(col("vec_id"), col("embedding"))
+      val (lo, hi) = ReplayHarness.bounds(emb, "vec_id", s"$dir embeddings")
+      val in = r.topic("hybrid_in", annWireSchema)
+      val out = r.topic("hybrid_cand", schema("query_id" -> LongType,
+        "neighbor_id" -> LongType, "cos" -> DoubleType))
+      val q = r.query("hits", "update", out) {
+        implicit val enc =
+          org.apache.spark.sql.Encoders.product[StreamOps.CellQuery]
+        val routed = in.stream(r.child)
+          .select(col("vec_id"), col("embedding"),
+            posexplode(Similarity.probeCells(col("embedding"), centroids,
+              nProbe)))
+          // aliased probe rows never insert; corpus rows insert at their
+          // best cell exactly as the stream_ann replay does
+          .select(col("col.cell").as("cell"), col("vec_id").as("vecId"),
+            col("embedding").as("emb"),
+            (col("pos") === 0 && col("vec_id") < aliasBase).as("insert"))
+          .as[StreamOps.CellQuery]
+        StreamOps.annHits(routed).toDF()
+          // keep only the aliased probes' retrievals; decode the alias and
+          // drop the probe's own resident twin in the same projection
+          .filter(col("queryId") >= aliasBase)
+          .select((col("queryId") - aliasBase).as("query_id"),
+            col("neighborId").as("neighbor_id"), col("cos"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+      }
+      // incarnation 1: offsets + cell indexes checkpointed; incarnation 2:
+      // redelivery across the restart, index complete; incarnation 3:
+      // probes retrieve from the RECOVERED index
+      val probes: ReplayHarness.Wave = () =>
+        in.append(emb.filter(col("vec_id") < 5)
+          .select((col("vec_id") + aliasBase).as("vec_id"), col("embedding"))
+          .coalesce(1))
+      r.quartered(Seq(r.feed(emb, "vec_id", in, new Quarters(lo, hi))),
+        () => r.drain(q), redeliver = true, tail = Seq(Seq(probes)))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id"))
         .orderBy(col("cos").desc, col("neighbor_id").asc)
-      val sem = out.batch(child).distinct()
+      val sem = out.batch(r.child).distinct()
         .withColumn("rank", row_number().over(w).cast("int"))
         .filter(col("rank") <= k)
-      val rows = SimilaritySuite.hybridFusionOf(
-        lexical(child, dir, k), sem, k).collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      r.snapshot(SimilaritySuite.hybridFusionOf(
+        lexical(r.child, dir, k), sem, k))
+    }
   }
+
+  private val annWireSchema = schema("vec_id" -> LongType,
+    "embedding" -> ArrayType(FloatType))
 
   /** Streaming lexical retrieval (round-15 verdict ask #8 — the
     * stretch): the ONLINE POSTINGS INDEX — [[StreamOps.PostingsIndex]]'s
@@ -3243,21 +2231,18 @@ object StreamReplay {
     * mismatch.
     */
   def streamedLexical(spark: SparkSession, dir: String,
-                      k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.operators.TextSuite
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("doc_id", LongType),
-      StructField("score", LongType), StructField("rnk", IntegerType)))
-    lexicalReplayCore(spark, dir, outSchema) { (child, _, out) =>
+                      k: Int = 5): DataFrame =
+    lexicalReplayCore(spark, dir) { (child, _, out) =>
       // converged postings (each emitted once; max is belt-and-braces
       // against duplicate sink files) → the SHARED batch scoring tail
-      val tf = out.batch(child)
-        .groupBy(col("doc_id"), col("h"))
-        .agg(max(col("tf")).as("tf"))
-      TextSuite.lexicalTopKOf(Tables.documents(child, dir), tf, k).collect()
+      graft.operators.TextSuite.lexicalTopKOf(Tables.documents(child, dir),
+        convergedPostings(out, child), k)
     }
-  }
+
+  private def convergedPostings(out: FileTopic, child: SparkSession) =
+    out.batch(child)
+      .groupBy(col("doc_id"), col("h"))
+      .agg(max(col("tf")).as("tf"))
 
   /** Streaming BM25 retrieval — the SAME online postings index
     * ([[StreamOps.PostingsIndex]] MapState, quartered waves, mid-stream
@@ -3277,19 +2262,11 @@ object StreamReplay {
     * score).
     */
   def streamedBm25(spark: SparkSession, dir: String,
-                   k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.operators.TextSuite
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("doc_id", LongType),
-      StructField("score", LongType), StructField("rnk", IntegerType)))
-    lexicalReplayCore(spark, dir, outSchema) { (child, _, out) =>
-      val tf = out.batch(child)
-        .groupBy(col("doc_id"), col("h"))
-        .agg(max(col("tf")).as("tf"))
-      TextSuite.bm25TopKOf(Tables.documents(child, dir), tf, k).collect()
+                   k: Int = 5): DataFrame =
+    lexicalReplayCore(spark, dir) { (child, _, out) =>
+      graft.operators.TextSuite.bm25TopKOf(Tables.documents(child, dir),
+        convergedPostings(out, child), k)
     }
-  }
 
   /** [[streamedLexical]] under WATERMARK-BOUND RETENTION — the
     * freshness-bounded search index (round-17, completing the r16
@@ -3314,32 +2291,28 @@ object StreamReplay {
     * re-admitted an evicted doc does both.
     */
   def streamedLexicalTtl(spark: SparkSession, dir: String,
-                         k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.operators.TextSuite
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("doc_id", LongType),
-      StructField("score", LongType), StructField("rnk", IntegerType)))
-    lexicalReplayCore(spark, dir, outSchema, windowed = true) {
-      (child, ckpt, _) =>
-        val docs = Tables.documents(child, dir)
-        val bb = docs.agg(min("doc_id"), max("doc_id")).head()
-        val cutoff = lexWindowCutoff(bb.getLong(0), bb.getLong(1))
-        val tf = child.read.format("statestore")
-          .option("path", ckpt)
-          .option("stateVarName", "postings")
-          .load()
-          .select(col("key.value").as("h"),
-            col("user_map_key.value").as("doc_id"),
-            col("user_map_value.tf").as("tf"))
-        TextSuite.lexicalTopKFrom(
-          TextSuite.lexicalQueryShingles(docs),
-          tf,
-          tf.groupBy(col("h")).agg(count(lit(1)).as("df")),
-          docs.filter(col("doc_id") >= cutoff)
-            .agg(count(lit(1)).as("n_docs")),
-          k).collect()
+                         k: Int = 5): DataFrame =
+    lexicalReplayCore(spark, dir, windowed = true) { (child, ckpt, _) =>
+      import graft.operators.TextSuite
+      val docs = Tables.documents(child, dir)
+      val cutoff = docCutoff(docs, dir)
+      val tf = stateVar(child, ckpt, "postings")
+        .select(col("key.value").as("h"),
+          col("user_map_key.value").as("doc_id"),
+          col("user_map_value.tf").as("tf"))
+      TextSuite.lexicalTopKFrom(
+        TextSuite.lexicalQueryShingles(docs),
+        tf,
+        tf.groupBy(col("h")).agg(count(lit(1)).as("df")),
+        docs.filter(col("doc_id") >= cutoff)
+          .agg(count(lit(1)).as("n_docs")),
+        k)
     }
+
+  /** The windowed finishes' retention cutoff over the documents table. */
+  private def docCutoff(docs: DataFrame, dir: String): Long = {
+    val (lo, hi) = ReplayHarness.bounds(docs, "doc_id", s"$dir documents")
+    lexWindowCutoff(lo, hi)
   }
 
   /** Offline audit of [[StreamOps.PostingsIndex]]'s MapState — the
@@ -3369,27 +2342,16 @@ object StreamReplay {
     * rows; the driver collect is of those bounded per-doc audit rows,
     * fenced inside the replay harness like the other state audits.
     */
-  def stateInspectLexical(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_terms", LongType),
-      StructField("dl", LongType),
-      StructField("h_sum", StringType)))
-    lexicalReplayCore(spark, dir, outSchema) { (child, ckpt, _) =>
-      child.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "postings")
-        .load()
+  def stateInspectLexical(spark: SparkSession, dir: String): DataFrame =
+    lexicalReplayCore(spark, dir) { (child, ckpt, _) =>
+      stateVar(child, ckpt, "postings")
         .select(col("key.value").as("h"),
           col("user_map_key.value").as("doc_id"),
           col("user_map_value.value").as("tf"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("dl"),
           sum(col("h").cast("decimal(38,0)")).cast("string").as("h_sum"))
-        .collect()
     }
-  }
 
   /** The composed corpus build run ONLINE — train_corpus as a stream
     * (the nightly production pipeline a corpus team would actually
@@ -3411,11 +2373,8 @@ object StreamReplay {
     * window over survivors.
     */
   def streamedTrainCorpus(spark: SparkSession, dir: String,
-                          cap: Int = 10, minHits: Int = 8): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType)))
-    trainCorpusReplayCore(spark, dir, outSchema) { (child, _, out) =>
+                          cap: Int = 10, minHits: Int = 8): DataFrame =
+    trainCorpusReplayCore(spark, dir) { (child, _, out) =>
       val emitted = out.batch(child).distinct()
       // exactly-once canonicalization is load-bearing: a fingerprint
       // with two emitted docs means the restart lost (or the redelivery
@@ -3426,9 +2385,8 @@ object StreamReplay {
           .filter(col("n") > 1).limit(1).count() == 0,
         s"canonical dedup emitted two docs for one fingerprint on '$dir' " +
           "— min state was not recovered across the restart")
-      trainCorpusFinish(emitted, cap, minHits).collect()
+      trainCorpusFinish(emitted, cap, minHits)
     }
-  }
 
   /** [[streamedTrainCorpus]] under WATERMARK-BOUND RETENTION (round-17
     * verdict ask #3 — the last unbounded online dedup state): documents
@@ -3453,28 +2411,20 @@ object StreamReplay {
     * re-emits an out-of-window id — each moves the capped rows.
     */
   def streamedTrainCorpusTtl(spark: SparkSession, dir: String,
-                             cap: Int = 10, minHits: Int = 8): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType)))
-    trainCorpusReplayCore(spark, dir, outSchema, windowed = true) {
-      (child, _, out) =>
-        val docs = Tables.documents(child, dir)
-        val bb = docs.agg(min("doc_id"), max("doc_id")).head()
-        val cutoff = lexWindowCutoff(bb.getLong(0), bb.getLong(1))
-        val emitted = out.batch(child).distinct()
-          .filter(col("doc_id") >= cutoff)
-        // windowed exactly-once: per fingerprint at most ONE in-window
-        // emission can exist (in-window residents never evict, so a
-        // second in-window doc is always suppressed by the first)
-        require(emitted.groupBy(col("fp"))
-            .agg(countDistinct(col("doc_id")).as("n"))
-            .filter(col("n") > 1).limit(1).count() == 0,
-          s"windowed canonical dedup emitted two in-window docs for one " +
-            s"fingerprint on '$dir' — eviction or the arrival gate broke")
-        trainCorpusFinish(emitted, cap, minHits).collect()
+                             cap: Int = 10, minHits: Int = 8): DataFrame =
+    trainCorpusReplayCore(spark, dir, windowed = true) { (child, _, out) =>
+      val emitted = out.batch(child).distinct()
+        .filter(col("doc_id") >= docCutoff(Tables.documents(child, dir), dir))
+      // windowed exactly-once: per fingerprint at most ONE in-window
+      // emission can exist (in-window residents never evict, so a
+      // second in-window doc is always suppressed by the first)
+      require(emitted.groupBy(col("fp"))
+          .agg(countDistinct(col("doc_id")).as("n"))
+          .filter(col("n") > 1).limit(1).count() == 0,
+        s"windowed canonical dedup emitted two in-window docs for one " +
+          s"fingerprint on '$dir' — eviction or the arrival gate broke")
+      trainCorpusFinish(emitted, cap, minHits)
     }
-  }
 
   /** Offline audit of [[StreamOps.CanonicalFirstTtl]]'s ValueState —
     * the PRUNED dedup store read out of the restarted checkpoint after
@@ -3485,21 +2435,11 @@ object StreamReplay {
     * eviction, or a gate re-admission each changes its fingerprint's
     * row — the store is provably the exact windowed subset.
     */
-  def stateInspectTrainTtl(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val auditSchema = StructType(Seq(
-      StructField("fp", StringType), StructField("doc_id", LongType)))
-    trainCorpusReplayCore(spark, dir, auditSchema, windowed = true) {
-      (child, ckpt, _) =>
-        child.read.format("statestore")
-          .option("path", ckpt)
-          .option("stateVarName", "canonical")
-          .load()
-          .select(col("key.value").as("fp"),
-            col("value.docId").as("doc_id"))
-          .collect()
+  def stateInspectTrainTtl(spark: SparkSession, dir: String): DataFrame =
+    trainCorpusReplayCore(spark, dir, windowed = true) { (child, ckpt, _) =>
+      stateVar(child, ckpt, "canonical")
+        .select(col("key.value").as("fp"), col("value.docId").as("doc_id"))
     }
-  }
 
   /** The shared decontam + per-source-cap tail over the converged
     * deduped emissions — ONE definition for the global and windowed
@@ -3525,27 +2465,14 @@ object StreamReplay {
     * incarnation that compacts every key at the final horizon
     * (= day(cutoff), the lexicalReplayCore convention). `finish` reads
     * the answer from the stopped pipeline (out topic or checkpoint
-    * state) BEFORE the temp dirs are deleted.
+    * state) BEFORE the temp root is deleted.
     */
   private def trainCorpusReplayCore(spark: SparkSession, dir: String,
-      outSchema: org.apache.spark.sql.types.StructType,
-      windowed: Boolean = false)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
+      windowed: Boolean = false)(finish: Finish): DataFrame = {
     import graft.functions.TextFunctions.{contentFingerprint, qualityScore, shingleHashes}
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    val docSchema = StructType(Seq(
-      StructField("fp", StringType), StructField("doc_id", LongType),
-      StructField("source", StringType), StructField("n_hits", LongType)))
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val b = docs.agg(min("doc_id"), max("doc_id")).head()
-    require(!b.isNullAt(0), s"$dir documents is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val (lo, hi) = ReplayHarness.bounds(docs, "doc_id", s"$dir documents")
     val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * DayUs
     // the benchmark shingle set is bounded (the 5 eval docs) — embedded
     // as a literal array so the in-stream hit count stays row-local,
@@ -3553,82 +2480,59 @@ object StreamReplay {
     val benchHashes = docs.filter(col("doc_id") < 5)
       .select(explode(shingleHashes(col("text"), 3)).as("h"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_corpus")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_corpus_ckpt")
-    val in = new FileTopic("corpus_in", wireSchema, root.toString)
-    val out = new FileTopic("corpus_kept", docSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = docs
-      .filter(col("doc_id") >= from &&
-        (if (last) lit(true) else col("doc_id") < until)).coalesce(1)
-    val pubRange = stageWire(docs, "doc_id", in)
-    def drain(): Unit = {
-      val kept = if (windowed) {
-        // NO quality FILTER upstream of the stateful op: Catalyst
-        // pushes a deterministic filter below the EventTimeWatermark
-        // node, so the watermark would track only quality-PASSING event
-        // times (measured: sf0.001's last doc fails quality, the
-        // stalled clock left the horizon one day short). Quality rides
-        // as the `ok` CANDIDATE flag instead — every arrival advances
-        // the clock and compacts its key; only candidates contend.
-        implicit val enc =
-          org.apache.spark.sql.Encoders.product[StreamOps.CorpusDocTs]
-        StreamOps.canonicalFirstTtl(
-          in.stream(child)
-            .withColumn("ets", timestamp_micros(col("doc_id") * DayUs))
-            .withWatermark("ets", "0 seconds")
-            .select(contentFingerprint(col("text")).as("fp"),
-              col("doc_id").as("docId"), col("source"),
-              size(array_intersect(shingleHashes(col("text"), 3),
-                typedLit(benchHashes))).cast("long").as("nHits"),
-              (col("doc_id") * DayUs).as("tsUs"),
-              (qualityScore(col("text")) >= 0.5).as("ok"))
-            .as[StreamOps.CorpusDocTs], lookbackUs).toDF()
-      } else {
-        implicit val enc =
-          org.apache.spark.sql.Encoders.product[StreamOps.CorpusDoc]
-        StreamOps.canonicalFirst(
-          in.stream(child)
-            .filter(qualityScore(col("text")) >= 0.5)
-            .select(contentFingerprint(col("text")).as("fp"),
-              col("doc_id").as("docId"), col("source"),
-              size(array_intersect(shingleHashes(col("text"), 3),
-                typedLit(benchHashes))).cast("long").as("nHits"))
-            .as[StreamOps.CorpusDoc]).toDF()
-      }
-      val q = kept
-        .select(col("fp"), col("docId").as("doc_id"), col("source"),
+    def nHits = size(array_intersect(shingleHashes(col("text"), 3),
+      typedLit(benchHashes))).cast("long").as("nHits")
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("corpus_in", schema("doc_id" -> LongType,
+        "source" -> StringType, "text" -> StringType))
+      val out = r.topic("corpus_kept", schema("fp" -> StringType,
+        "doc_id" -> LongType, "source" -> StringType, "n_hits" -> LongType))
+      val q = r.query("kept", "update", out) {
+        val kept = if (windowed) {
+          // NO quality FILTER upstream of the stateful op: Catalyst
+          // pushes a deterministic filter below the EventTimeWatermark
+          // node, so the watermark would track only quality-PASSING event
+          // times (measured: sf0.001's last doc fails quality, the
+          // stalled clock left the horizon one day short). Quality rides
+          // as the `ok` CANDIDATE flag instead — every arrival advances
+          // the clock and compacts its key; only candidates contend.
+          implicit val enc =
+            org.apache.spark.sql.Encoders.product[StreamOps.CorpusDocTs]
+          StreamOps.canonicalFirstTtl(
+            in.stream(r.child)
+              .withColumn("ets", timestamp_micros(col("doc_id") * DayUs))
+              .withWatermark("ets", "0 seconds")
+              .select(contentFingerprint(col("text")).as("fp"),
+                col("doc_id").as("docId"), col("source"), nHits,
+                (col("doc_id") * DayUs).as("tsUs"),
+                (qualityScore(col("text")) >= 0.5).as("ok"))
+              .as[StreamOps.CorpusDocTs], lookbackUs).toDF()
+        } else {
+          implicit val enc =
+            org.apache.spark.sql.Encoders.product[StreamOps.CorpusDoc]
+          StreamOps.canonicalFirst(
+            in.stream(r.child)
+              .filter(qualityScore(col("text")) >= 0.5)
+              .select(contentFingerprint(col("text")).as("fp"),
+                col("doc_id").as("docId"), col("source"), nHits)
+              .as[StreamOps.CorpusDoc]).toDF()
+        }
+        kept.select(col("fp"), col("docId").as("doc_id"), col("source"),
           col("nHits").as("n_hits"))
-        .writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + fingerprint minima checkpointed
-      pubRange(q2lo, q2hi, false) // redelivery across restart
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2: recovered minima absorb the redelivery
-      if (windowed) {
-        // incarnation 3: the committed watermark sits at day(hi), so the
-        // horizon is exactly day(cutoff) — a FULL corpus redelivery
-        // touches every fingerprint (evicting expired canonicals,
-        // re-emitting the windowed ones the evicted residents had
-        // suppressed; below-horizon rows are refused at the gate),
-        // compacting the whole store to the retention window
-        pubRange(lo, Long.MaxValue, true)
-        drain()
       }
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      // incarnation 1 checkpoints offsets + fingerprint minima;
+      // incarnation 2's recovered minima absorb the redelivery across the
+      // restart. Windowed, incarnation 3: the committed watermark sits at
+      // day(hi), so the horizon is exactly day(cutoff) — a FULL corpus
+      // redelivery touches every fingerprint (evicting expired
+      // canonicals, re-emitting the windowed ones the evicted residents
+      // had suppressed; below-horizon rows are refused at the gate),
+      // compacting the whole store to the retention window
+      val f = r.feed(docs, "doc_id", in, new Quarters(lo, hi))
+      r.quartered(Seq(f), () => r.drain(q), redeliver = true,
+        tail = if (windowed) Seq(Seq(f.q(0, 4))) else Nil)
+      r.snapshot(finish(r.child, q.ckpt, out))
+    }
   }
 
   /** Streaming as-of join — [[graft.operators.AsOf]]'s temporal
@@ -3650,19 +2554,13 @@ object StreamReplay {
     * immutable once written), and a tie-order drift is a different
     * orderkey in the row.
     */
-  private val asOfEnrichedSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_s", LongType), StructField("asof_orderkey", LongType),
-      StructField("asof_totalprice", DoubleType)))
-  }
+  def streamedAsOf(spark: SparkSession, dir: String): DataFrame =
+    asOfReplayCore(spark, dir)(asOfEnriched)
 
   /** The shared converged-enrichment read both as-of replays finish
     * with: the out topic's distinct rows in the oracle's column shape.
     */
-  private def asOfEnrichedFinish(child: SparkSession,
-      out: graft.sources.FileTopic): Array[org.apache.spark.sql.Row] =
+  private val asOfEnriched: Finish = (child, _, out) =>
     out.batch(child).distinct()
       .select(col("event_id"), col("key").as("user_id"),
         // FLOOR division, not `div` (which truncates toward zero):
@@ -3675,12 +2573,6 @@ object StreamReplay {
           .cast("long").as("ts_s"),
         col("order_key").as("asof_orderkey"),
         col("price").as("asof_totalprice"))
-      .collect()
-
-  def streamedAsOf(spark: SparkSession, dir: String): DataFrame =
-    asOfReplayCore(spark, dir, asOfEnrichedSchema) { (child, _, out) =>
-      asOfEnrichedFinish(child, out)
-    }
 
   /** The retention lookback for the PRUNED online as-of index
     * ([[StreamOps.AsOfIndexTtl]]): 26 × 365.25 days in micros. Chosen so
@@ -3711,10 +2603,8 @@ object StreamReplay {
     * the exact SCD-retained strict subset.
     */
   def streamedAsOfTtl(spark: SparkSession, dir: String): DataFrame =
-    asOfReplayCore(spark, dir, asOfEnrichedSchema,
-        ttlLookbackUs = Some(AsOfTtlLookbackUs)) { (child, _, out) =>
-      asOfEnrichedFinish(child, out)
-    }
+    asOfReplayCore(spark, dir, ttlLookbackUs = Some(AsOfTtlLookbackUs))(
+      asOfEnriched)
 
   /** Offline audit of [[StreamOps.AsOfIndex]]'s MapState — the online
     * revision index read out of the restarted checkpoint (the audit the
@@ -3738,27 +2628,16 @@ object StreamReplay {
     * orders recompute, which is exactly the point: the state read must
     * equal the dimension table it indexed.
     */
-  private val asOfAuditSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("n_revisions", LongType),
-      StructField("okey_sum", LongType),
-      StructField("ts_max", LongType),
-      StructField("price_sum", StringType)))
-  }
+  def stateInspectAsOf(spark: SparkSession, dir: String): DataFrame =
+    asOfReplayCore(spark, dir)(asOfAudit)
 
   /** The shared revision-MapState audit read: the `revisions` state
     * variable out of the stopped checkpoint, rolled per customer (see
     * [[stateInspectAsOf]]'s scaladoc for the per-column corruption
     * modes and the VARCHAR price discipline).
     */
-  private def asOfAuditFinish(child: SparkSession,
-      ckpt: String): Array[org.apache.spark.sql.Row] =
-    child.read.format("statestore")
-      .option("path", ckpt)
-      .option("stateVarName", "revisions")
-      .load()
+  private val asOfAudit: Finish = (child, ckpt, _) =>
+    stateVar(child, ckpt, "revisions")
       .select(col("key.value").as("user_id"),
         col("user_map_key.value").as("okey"),
         col("user_map_value.ts").as("ts"),
@@ -3769,12 +2648,6 @@ object StreamReplay {
         max(col("ts")).as("ts_max"),
         sum(col("price").cast("decimal(18,2)"))
           .cast("decimal(18,2)").cast("string").as("price_sum"))
-      .collect()
-
-  def stateInspectAsOf(spark: SparkSession, dir: String): DataFrame =
-    asOfReplayCore(spark, dir, asOfAuditSchema) { (child, ckpt, _) =>
-      asOfAuditFinish(child, ckpt)
-    }
 
   /** Offline audit of the PRUNED revision store — the eviction proof
     * completing [[streamedAsOfTtl]]: after the full TTL replay (probes
@@ -3792,33 +2665,18 @@ object StreamReplay {
     * customers whose history sits entirely inside the window.
     */
   def stateInspectAsOfTtl(spark: SparkSession, dir: String): DataFrame =
-    asOfReplayCore(spark, dir, asOfAuditSchema,
-        ttlLookbackUs = Some(AsOfTtlLookbackUs)) { (child, ckpt, _) =>
-      asOfAuditFinish(child, ckpt)
-    }
+    asOfReplayCore(spark, dir, ttlLookbackUs = Some(AsOfTtlLookbackUs))(
+      asOfAudit)
 
   /** The shared online-revision replay run — quartered o_orderkey waves
     * through [[StreamOps.AsOfIndex]] with the mid-stream restart,
     * whole-quarter redelivery, and the final probe incarnation (see
     * [[streamedAsOf]]). `finish` reads the answer from the stopped
     * pipeline (the out topic's enriched rows, or the checkpoint's
-    * revision state) BEFORE the temp dirs are deleted.
+    * revision state) BEFORE the temp root is deleted.
     */
   private def asOfReplayCore(spark: SparkSession, dir: String,
-      outSchema: org.apache.spark.sql.types.StructType,
-      ttlLookbackUs: Option[Long] = None)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("key", LongType), StructField("is_probe", BooleanType),
-      StructField("id", LongType), StructField("ts", LongType),
-      StructField("price", DoubleType)))
-    val hitSchema = StructType(Seq(
-      StructField("key", LongType), StructField("event_id", LongType),
-      StructField("ts", LongType), StructField("order_key", LongType),
-      StructField("price", DoubleType)))
+      ttlLookbackUs: Option[Long] = None)(finish: Finish): DataFrame = {
     val revisions = Tables.orders(spark, dir)
       .select(col("o_custkey").as("key"), lit(false).as("is_probe"),
         col("o_orderkey").as("id"), unix_micros(col("o_orderdate")).as("ts"),
@@ -3827,81 +2685,59 @@ object StreamReplay {
       .select(col("user_id").as("key"), lit(true).as("is_probe"),
         col("event_id").as("id"), unix_micros(col("ts")).as("ts"),
         lit(0.0).as("price"))
-    val b = revisions.agg(min("id"), max("id")).head()
-    require(!b.isNullAt(0), s"$dir orders is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val (lo, hi) = ReplayHarness.bounds(revisions, "id", s"$dir orders")
     // transformWithState requires RocksDB
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_asof")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_asof_ckpt")
-    val in = new FileTopic("asof_in", wireSchema, root.toString)
-    val out = new FileTopic("asof_hits", hitSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = revisions
-      .filter(col("id") >= from &&
-        (if (last) lit(true) else col("id") < until)).coalesce(1)
-    val pubRange = stageWire(revisions, "id", in)
-    def drain(): Unit = {
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[StreamOps.AsOfRow]
-      // TTL variant: TimeMode.EventTime needs a watermarked event-time
-      // column on the wire — declared upstream, then projected away (the
-      // EventTimeWatermark node survives the projection; the horizon is
-      // watermark − lookback inside the processor)
-      val wire = ttlLookbackUs match {
-        case Some(_) => in.stream(child)
-          .withColumn("ets", timestamp_micros(col("ts")))
-          .withWatermark("ets", "0 seconds")
-        case None => in.stream(child)
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("asof_in", schema("key" -> LongType,
+        "is_probe" -> BooleanType, "id" -> LongType, "ts" -> LongType,
+        "price" -> DoubleType))
+      val out = r.topic("asof_hits", schema("key" -> LongType,
+        "event_id" -> LongType, "ts" -> LongType, "order_key" -> LongType,
+        "price" -> DoubleType))
+      val q = r.query("hits", "update", out) {
+        implicit val enc =
+          org.apache.spark.sql.Encoders.product[StreamOps.AsOfRow]
+        // TTL variant: TimeMode.EventTime needs a watermarked event-time
+        // column on the wire — declared upstream, then projected away (the
+        // EventTimeWatermark node survives the projection; the horizon is
+        // watermark − lookback inside the processor)
+        val wire = ttlLookbackUs match {
+          case Some(_) => in.stream(r.child)
+            .withColumn("ets", timestamp_micros(col("ts")))
+            .withWatermark("ets", "0 seconds")
+          case None => in.stream(r.child)
+        }
+        val rows = wire
+          .select(col("key"), col("is_probe").as("isProbe"), col("id"),
+            col("ts"), col("price"))
+          .as[StreamOps.AsOfRow]
+        ttlLookbackUs.fold(StreamOps.asOfIndex(rows))(
+            lb => StreamOps.asOfIndexTtl(rows, lb))
+          .toDF()
+          .select(col("key"), col("eventId").as("event_id"), col("ts"),
+            col("orderKey").as("order_key"), col("price"))
       }
-      val rows = wire
-        .select(col("key"), col("is_probe").as("isProbe"), col("id"),
-          col("ts"), col("price"))
-        .as[StreamOps.AsOfRow]
-      val hits = ttlLookbackUs.fold(StreamOps.asOfIndex(rows))(
-          lb => StreamOps.asOfIndexTtl(rows, lb))
-        .toDF()
-        .select(col("key"), col("eventId").as("event_id"), col("ts"),
-          col("orderKey").as("order_key"), col("price"))
-      val q = hits.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
+      val f = r.feed(revisions, "id", in, new Quarters(lo, hi))
+      val probe: ReplayHarness.Wave = () => in.append(probes.coalesce(1))
+      // incarnation 1 checkpoints offsets + revision maps; incarnation 2's
+      // recovered maps absorb the redelivery; incarnation 3: probes enrich
+      // from the RECOVERED index. TTL only — incarnation 4: the committed
+      // watermark now sits at the probes' max event time, so every probed
+      // key SCD-compacts at batch start — the redelivered probes re-answer
+      // from the PRUNED map and must emit exactly the incarnation-3 rows
+      // (the downstream distinct + oracle hash prove answers unchanged
+      // within the retention horizon); incarnation 5: a full dimension
+      // redelivery touches EVERY key (only ~10% receive probes),
+      // compacting the whole store at the same horizon; evicted revisions
+      // are refused by the arrival gate, resident ones by
+      // first-delivery-wins — the out topic gains nothing, and the
+      // checkpoint now holds the audit's retained set exactly
+      r.quartered(Seq(f), () => r.drain(q), redeliver = true,
+        tail = Seq(Seq(probe)) ++
+          (if (ttlLookbackUs.isDefined) Seq(Seq(probe), Seq(f.q(0, 4)))
+           else Nil))
+      r.snapshot(finish(r.child, q.ckpt, out))
     }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + revision maps checkpointed
-      pubRange(q2lo, q2hi, false) // redelivery across restart
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2: recovered maps absorb the redelivery
-      in.append(probes.coalesce(1))
-      drain() // incarnation 3: probes enrich from the RECOVERED index
-      ttlLookbackUs.foreach { _ =>
-        // incarnation 4: the committed watermark now sits at the probes'
-        // max event time, so every probed key SCD-compacts at batch
-        // start — the redelivered probes re-answer from the PRUNED map
-        // and must emit exactly the incarnation-3 rows (the downstream
-        // distinct + oracle hash prove answers unchanged within the
-        // retention horizon)
-        in.append(probes.coalesce(1))
-        drain()
-        // incarnation 5: a full dimension redelivery touches EVERY key
-        // (only ~10% receive probes), compacting the whole store at the
-        // same horizon; evicted revisions are refused by the arrival
-        // gate, resident ones by first-delivery-wins — the out topic
-        // gains nothing, and the checkpoint now holds the audit's
-        // retained set exactly
-        pubRange(lo, Long.MaxValue, true)
-        drain()
-      }
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
   }
 
   /** Streaming differential-privacy release — [[graft.operators
@@ -3926,79 +2762,33 @@ object StreamReplay {
     * convergence bug three ways.
     */
   def streamedDpRelease(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    import graft.operators.RelationalSuite
-    val wireSchema = StructType(Seq(
-      StructField("cust", LongType), StructField("nation", LongType),
-      StructField("band", LongType)))
-    val cellSchema = StructType(Seq(
-      StructField("nation", LongType), StructField("band", LongType),
-      StructField("n", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("nation", LongType), StructField("band", LongType),
-      StructField("epsilon", DoubleType),
-      StructField("released", LongType)))
     val rows = Tables.customer(spark, dir)
       .select(col("c_custkey").cast("long").as("cust"),
         col("c_nationkey").cast("long").as("nation"),
         floor(col("c_acctbal") / 1000.0).cast("long").as("band"))
-    val b = rows.agg(min("cust"), max("cust")).head()
-    require(!b.isNullAt(0), s"$dir customer is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_dp")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dp_ckpt")
-    val in = new FileTopic("dp_in", wireSchema, root.toString)
-    val out = new FileTopic("dp_cells", cellSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = rows
-      .filter(col("cust") >= from &&
-        (if (last) lit(true) else col("cust") < until)).coalesce(1)
-    val pubRange = stageWire(rows, "cust", in)
-    def drain(): Unit = {
-      val cells = in.stream(child)
-        .groupBy(col("nation"), col("band"))
-        .agg(count(lit(1)).as("n"))
-      val q = cells.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      pubRange(lo, lo + quarter, false)
-      pubRange(lo + quarter, lo + 2 * quarter, false)
-      drain() // incarnation 1: offsets + count state checkpointed
-      pubRange(lo + 2 * quarter, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2: recovered counts keep accumulating
+    val (lo, hi) = ReplayHarness.bounds(rows, "cust", s"$dir customer")
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("dp_in", schema("cust" -> LongType,
+        "nation" -> LongType, "band" -> LongType))
+      val out = r.topic("dp_cells", schema("nation" -> LongType,
+        "band" -> LongType, "n" -> LongType))
+      val q = r.query("cells", "update", out) {
+        in.stream(r.child)
+          .groupBy(col("nation"), col("band"))
+          .agg(count(lit(1)).as("n"))
+      }
+      // incarnation 1: offsets + count state checkpointed; incarnation 2:
+      // recovered counts keep accumulating
+      r.quartered(Seq(r.feed(rows, "cust", in, new Quarters(lo, hi))),
+        () => r.drain(q))
       // converged counts (update emissions are monotone per cell — the
       // last/max emission IS the final count) → the shared noise ladder
-      val converged = out.batch(child)
-        .groupBy(col("nation"), col("band"))
-        .agg(max(col("n")).as("n"))
-      val released = RelationalSuite.dpNoiseLadderOf(converged).collect()
-      spark.createDataFrame(java.util.Arrays.asList(released: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      r.snapshot(graft.operators.RelationalSuite.dpNoiseLadderOf(
+        out.batch(r.child)
+          .groupBy(col("nation"), col("band"))
+          .agg(max(col("n")).as("n"))))
+    }
   }
-
-  /** The shared online-postings replay run — quartered doc_id waves
-    * through [[StreamOps.PostingsIndex]] with the mid-stream checkpoint
-    * restart and whole-quarter redelivery (see [[streamedLexical]]).
-    * `finish` reads the answer from the stopped pipeline (the out
-    * topic's converged postings, or the checkpoint's map state) BEFORE
-    * the temp dirs are deleted.
-    */
-  /** The DAY-PER-ID event-time convention of the windowed replays:
-    * row id k "arrives" at k days past the epoch — day-aligned, so the
-    * watermark's ms truncation is exact. ONE definition for the wire
-    * projections, the horizon arithmetic, and the finishes' window
-    * cutoffs (shared by the windowed lexical and ANN replays).
-    */
-  private val DayUs = 86400000000L
-  private val LexDayUs = DayUs
 
   /** The windowed replay's retention cutoff: retain the newest 3/5 of
     * the doc_id span (integer arithmetic — DuckDB's `//` on the oracle
@@ -4007,105 +2797,78 @@ object StreamReplay {
   private[graft] def lexWindowCutoff(lo: Long, hi: Long): Long =
     lo + (hi - lo) * 2 / 5
 
+  /** The shared online-postings replay run — quartered doc_id waves
+    * through [[StreamOps.PostingsIndex]] with the mid-stream checkpoint
+    * restart and whole-quarter redelivery (see [[streamedLexical]]).
+    * `finish` reads the answer from the stopped pipeline (the out
+    * topic's converged postings, or the checkpoint's map state) BEFORE
+    * the temp root is deleted.
+    */
   private def lexicalReplayCore(spark: SparkSession, dir: String,
-      outSchema: org.apache.spark.sql.types.StructType,
-      windowed: Boolean = false)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val postSchema = StructType(Seq(
-      StructField("h", LongType), StructField("doc_id", LongType),
-      StructField("tf", LongType)))
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val docs = Tables.documents(child, dir).select(col("doc_id"), col("text"))
-    val b = docs.agg(min("doc_id"), max("doc_id")).head()
-    require(!b.isNullAt(0), s"$dir documents is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    // windowed: horizon at the final watermark (= day(hi), exactly ms-
-    // aligned) must land exactly on day(cutoff), so retention is the
-    // integer predicate doc_id >= cutoff on both engine and oracle sides
-    val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * LexDayUs
-    val root = java.nio.file.Files.createTempDirectory("graft_lex")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_lex_ckpt")
-    val in = new FileTopic("lex_in", wireSchema, root.toString)
-    val out = new FileTopic("lex_postings", postSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = docs
-      .filter(col("doc_id") >= from &&
-        (if (last) lit(true) else col("doc_id") < until)).coalesce(1)
-    val pubRange = stageWire(docs, "doc_id", in)
-    def drain(): Unit = {
-      implicit val tupEnc = org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.STRING)
-      val wire = if (windowed)
-        in.stream(child)
-          .withColumn("ets", timestamp_micros(col("doc_id") * LexDayUs))
-          .withWatermark("ets", "0 seconds")
-          .select(col("doc_id"), col("text"))
-      else in.stream(child)
-      val docRows = wire.as[(Long, String)]
-      def shingles(text: String): Map[Long, Long] =
-        graft.functions.ShingleHash
-          .compute(org.apache.spark.unsafe.types.UTF8String
-            .fromString(if (text == null) "" else text), 3,
-            distinct = false)
-          .toLongArray()
-          .groupBy(identity)
-          .map { case (h, occ) => h -> occ.length.toLong }
-      val postings = if (windowed) {
-        implicit val dtEnc =
-          org.apache.spark.sql.Encoders.product[StreamOps.DocTermTs]
-        StreamOps.postingsIndexTtl(
-          docRows.flatMap { case (id, text) =>
-            shingles(text).map { case (h, tf) =>
-              StreamOps.DocTermTs(h, id, tf, id * LexDayUs)
-            }
-          }, lookbackUs).toDF()
-      } else {
-        implicit val dtEnc =
-          org.apache.spark.sql.Encoders.product[StreamOps.DocTerm]
-        StreamOps.postingsIndex(
-          docRows.flatMap { case (id, text) =>
-            shingles(text).map { case (h, tf) =>
-              StreamOps.DocTerm(h, id, tf)
-            }
-          }).toDF()
+      windowed: Boolean = false)(finish: Finish): DataFrame =
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val docs = Tables.documents(r.child, dir).select(col("doc_id"), col("text"))
+      val (lo, hi) = ReplayHarness.bounds(docs, "doc_id", s"$dir documents")
+      // windowed: horizon at the final watermark (= day(hi), exactly ms-
+      // aligned) must land exactly on day(cutoff), so retention is the
+      // integer predicate doc_id >= cutoff on both engine and oracle sides
+      val lookbackUs = (hi - lexWindowCutoff(lo, hi)) * DayUs
+      val in = r.topic("lex_in",
+        schema("doc_id" -> LongType, "text" -> StringType))
+      val out = r.topic("lex_postings", schema("h" -> LongType,
+        "doc_id" -> LongType, "tf" -> LongType))
+      val q = r.query("postings", "update", out) {
+        implicit val tupEnc = org.apache.spark.sql.Encoders.tuple(
+          org.apache.spark.sql.Encoders.scalaLong,
+          org.apache.spark.sql.Encoders.STRING)
+        val wire = if (windowed)
+          in.stream(r.child)
+            .withColumn("ets", timestamp_micros(col("doc_id") * DayUs))
+            .withWatermark("ets", "0 seconds")
+            .select(col("doc_id"), col("text"))
+        else in.stream(r.child)
+        val docRows = wire.as[(Long, String)]
+        def shingles(text: String): Map[Long, Long] =
+          graft.functions.ShingleHash
+            .compute(org.apache.spark.unsafe.types.UTF8String
+              .fromString(if (text == null) "" else text), 3,
+              distinct = false)
+            .toLongArray()
+            .groupBy(identity)
+            .map { case (h, occ) => h -> occ.length.toLong }
+        val postings = if (windowed) {
+          implicit val dtEnc =
+            org.apache.spark.sql.Encoders.product[StreamOps.DocTermTs]
+          StreamOps.postingsIndexTtl(
+            docRows.flatMap { case (id, text) =>
+              shingles(text).map { case (h, tf) =>
+                StreamOps.DocTermTs(h, id, tf, id * DayUs)
+              }
+            }, lookbackUs).toDF()
+        } else {
+          implicit val dtEnc =
+            org.apache.spark.sql.Encoders.product[StreamOps.DocTerm]
+          StreamOps.postingsIndex(
+            docRows.flatMap { case (id, text) =>
+              shingles(text).map { case (h, tf) =>
+                StreamOps.DocTerm(h, id, tf)
+              }
+            }).toDF()
+        }
+        postings.select(col("h"), col("docId").as("doc_id"), col("tf"))
       }
-      val q = postings
-        .select(col("h"), col("docId").as("doc_id"), col("tf"))
-        .writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
+      // incarnation 1 checkpoints offsets + posting maps; the recovered
+      // maps absorb the redelivery across the restart. Windowed,
+      // incarnation 3: the committed watermark now sits at day(hi), so the
+      // horizon is exactly day(cutoff) — a FULL corpus redelivery touches
+      // every posting list ever written (its rows are refused by
+      // first-delivery or the below-horizon gate), compacting the whole
+      // store to the retention window the finish audits
+      val f = r.feed(docs, "doc_id", in, new Quarters(lo, hi))
+      r.quartered(Seq(f), () => r.drain(q), redeliver = true,
+        tail = if (windowed) Seq(Seq(f.q(0, 4))) else Nil)
+      r.snapshot(finish(r.child, q.ckpt, out))
     }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + posting maps checkpointed
-      pubRange(q2lo, q2hi, false) // redelivery across restart
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2: recovered maps absorb the redelivery
-      if (windowed) {
-        // incarnation 3: the committed watermark now sits at day(hi), so
-        // the horizon is exactly day(cutoff) — a FULL corpus redelivery
-        // touches every posting list ever written (its rows are refused
-        // by first-delivery or the below-horizon gate), compacting the
-        // whole store to the retention window the finish audits
-        pubRange(lo, Long.MaxValue, true)
-        drain()
-      }
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
 
   /** Offline audit of [[StreamOps.CellAnnIndex]]'s ListState — the
     * inverted index ITSELF read out of the checkpoint (round-13 verdict:
@@ -4124,182 +2887,126 @@ object StreamReplay {
     * when to re-shard the index.
     */
   def stateInspectAnn(spark: SparkSession, dir: String,
-                      centroids: Seq[Seq[Double]], nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val auditSchema = StructType(Seq(
-      StructField("cell", IntegerType),
-      StructField("n_vectors", LongType),
-      StructField("id_sum", LongType)))
-    streamedAnnCore(spark, dir, centroids, nProbe, rerank = None,
-      auditSchema) { (child, ckpt, _) =>
-      // the inverted index out of RocksDB: one row per resident
-      // (cell, CellVec) list element, rolled to per-cell occupancy
-      child.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "index")
-        .load()
-        .select(col("key.value").as("cell"),
-          col("list_element.vecId").as("vec_id"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("id_sum"))
-        .collect()
-    }
-  }
+                      centroids: Seq[Seq[Double]], nProbe: Int): DataFrame =
+    streamedAnnCore(spark, dir, centroids, nProbe, rerank = None)(annAudit)
+
+  /** The inverted index out of RocksDB: one row per resident
+    * (cell, CellVec) list element, rolled to per-cell occupancy.
+    */
+  private val annAudit: Finish = (child, ckpt, _) =>
+    stateVar(child, ckpt, "index")
+      .select(col("key.value").as("cell"),
+        col("list_element.vecId").as("vec_id"))
+      .groupBy(col("cell"))
+      .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("id_sum"))
 
   /** The retrieval twins' shared finish: per-query exact top-`k` over the
     * out topic's converged distinct candidate set.
     */
-  private def annTopKFinish(scoreCol: String, k: Int)
-      : (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row] = (child, _, out) => {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id").asc)
-    out.batch(child).distinct()
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .collect()
-  }
+  private def annTopKFinish(scoreCol: String, k: Int): Finish =
+    (child, _, out) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id"))
+        .orderBy(col(scoreCol).desc, col("neighbor_id").asc)
+      out.batch(child).distinct()
+        .withColumn("rank", row_number().over(w).cast("int"))
+        .filter(col("rank") <= k)
+    }
 
-  private def annRankSchema(scoreCol: String)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField(scoreCol, DoubleType), StructField("rank", IntegerType)))
-  }
-
-  /** The shared streaming-ANN replay run — vec_id-ordered waves through
-    * the cell-keyed index with a mid-stream restart and a whole-quarter
-    * redelivery; `rerank` optionally composes the in-stream MaxSim second
-    * stage (it changes the TOPOLOGY, not the return shape). `finish`
-    * reads the answer from the stopped pipeline (the out topic, or the
-    * checkpoint's ListState) BEFORE the temp dirs are deleted — the same
-    * callback seam as [[cdcReplayCore]]/[[transitionsReplayCore]]
-    * (round-14 verdict flagged the old boolean return-schema switch as
-    * the seam that would grow a third mode badly).
-    */
   /** The windowed ANN replay's retention, in id-days: the newest HALF
     * of the vec_id span (integer floor — DuckDB's `// 2` computes the
     * identical value on the oracle side).
     */
   private[graft] def annWindowDays(lo: Long, hi: Long): Long = (hi - lo) / 2
 
+  /** The shared streaming-ANN replay run — vec_id-ordered waves through
+    * the cell-keyed index with a mid-stream restart and a whole-quarter
+    * redelivery; `rerank` optionally composes the in-stream MaxSim second
+    * stage (it changes the TOPOLOGY, not the return shape). `finish`
+    * reads the answer from the stopped pipeline (the out topic, or the
+    * checkpoint's ListState) BEFORE the temp root is deleted — the same
+    * callback seam as [[cdcReplayCore]]/[[transitionsReplayCore]].
+    */
   private def streamedAnnCore(spark: SparkSession, dir: String,
                               centroids: Seq[Seq[Double]], nProbe: Int,
                               rerank: Option[(Int, Int)],
-                              outSchema: org.apache.spark.sql.types.StructType,
                               windowed: Boolean = false)(
-                              finish: (SparkSession, String, graft.sources.FileTopic)
-                                => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
+                              finish: Finish): DataFrame = {
     import graft.operators.Similarity
     val scoreCol = if (rerank.isDefined) "score" else "cos"
-    val wireSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val emb = Tables.embeddings(child, dir)
-      .select(col("vec_id"), col("embedding"))
-    val b = emb.agg(min("vec_id"), max("vec_id")).head()
-    require(!b.isNullAt(0), s"$dir embeddings is empty — nothing to replay")
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val root = java.nio.file.Files.createTempDirectory("graft_ann")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ann_ckpt")
-    val in = new FileTopic("ann_in", wireSchema, root.toString)
-    // the out topic ALWAYS carries candidate hits — its schema must not
-    // follow the caller's return shape (the audit finish doesn't read the
-    // topic back, but a schema-enforcing Topic implementation behind the
-    // swap point would reject the sinked rows; round-14 self-review)
-    val hitsSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField(scoreCol, DoubleType)))
-    val out = new FileTopic("ann_cand", hitsSchema, root.toString)
-    def range(from: Long, until: Long, last: Boolean) = emb
-      .filter(col("vec_id") >= from &&
-        (if (last) lit(true) else col("vec_id") < until)).coalesce(1)
-    val pubRange = stageWire(emb, "vec_id", in)
-    def drain(): Unit = {
-      val raw = if (windowed) {
-        implicit val enc =
-          org.apache.spark.sql.Encoders.product[StreamOps.CellQueryTs]
-        require(rerank.isEmpty, "windowed ANN replay carries no rerank")
-        val routed = in.stream(child)
-          .withColumn("ets", timestamp_micros(col("vec_id") * DayUs))
-          .withWatermark("ets", "0 seconds")
-          .select(col("vec_id"), col("embedding"),
-            posexplode(Similarity.probeCells(col("embedding"), centroids,
-              nProbe)))
-          .select(col("col.cell").as("cell"), col("vec_id").as("vecId"),
-            col("embedding").as("emb"), (col("pos") === 0).as("insert"),
-            (col("vec_id") * DayUs).as("tsUs"))
-          .as[StreamOps.CellQueryTs]
-        StreamOps.annHitsTtl(routed,
-            annWindowDays(lo, hi) * DayUs).toDF()
-          .select(col("queryId").as("query_id"),
-            col("neighborId").as("neighbor_id"), col("cos"))
-      } else {
-        implicit val enc =
-          org.apache.spark.sql.Encoders.product[StreamOps.CellQuery]
-        val routed = in.stream(child)
-          .select(col("vec_id"), col("embedding"),
-            posexplode(Similarity.probeCells(col("embedding"), centroids,
-              nProbe)))
-          .select(col("col.cell").as("cell"), col("vec_id").as("vecId"),
-            col("embedding").as("emb"), (col("pos") === 0).as("insert"))
-          .as[StreamOps.CellQuery]
-        StreamOps.annHits(routed).toDF()
-          .select(col("queryId").as("query_id"),
-            col("neighborId").as("neighbor_id"), col("cos"))
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val emb = Tables.embeddings(r.child, dir)
+        .select(col("vec_id"), col("embedding"))
+      val (lo, hi) = ReplayHarness.bounds(emb, "vec_id", s"$dir embeddings")
+      val in = r.topic("ann_in", annWireSchema)
+      // the out topic ALWAYS carries candidate hits — its schema must not
+      // follow the caller's return shape (the audit finish doesn't read
+      // the topic back, but a schema-enforcing Topic implementation behind
+      // the swap point would reject the sinked rows)
+      val out = r.topic("ann_cand", schema("query_id" -> LongType,
+        "neighbor_id" -> LongType, scoreCol -> DoubleType))
+      val q = r.query("hits", "update", out) {
+        val raw = if (windowed) {
+          implicit val enc =
+            org.apache.spark.sql.Encoders.product[StreamOps.CellQueryTs]
+          require(rerank.isEmpty, "windowed ANN replay carries no rerank")
+          val routed = in.stream(r.child)
+            .withColumn("ets", timestamp_micros(col("vec_id") * DayUs))
+            .withWatermark("ets", "0 seconds")
+            .select(col("vec_id"), col("embedding"),
+              posexplode(Similarity.probeCells(col("embedding"), centroids,
+                nProbe)))
+            .select(col("col.cell").as("cell"), col("vec_id").as("vecId"),
+              col("embedding").as("emb"), (col("pos") === 0).as("insert"),
+              (col("vec_id") * DayUs).as("tsUs"))
+            .as[StreamOps.CellQueryTs]
+          StreamOps.annHitsTtl(routed,
+              annWindowDays(lo, hi) * DayUs).toDF()
+            .select(col("queryId").as("query_id"),
+              col("neighborId").as("neighbor_id"), col("cos"))
+        } else {
+          implicit val enc =
+            org.apache.spark.sql.Encoders.product[StreamOps.CellQuery]
+          val routed = in.stream(r.child)
+            .select(col("vec_id"), col("embedding"),
+              posexplode(Similarity.probeCells(col("embedding"), centroids,
+                nProbe)))
+            .select(col("col.cell").as("cell"), col("vec_id").as("vecId"),
+              col("embedding").as("emb"), (col("pos") === 0).as("insert"))
+            .as[StreamOps.CellQuery]
+          StreamOps.annHits(routed).toDF()
+            .select(col("queryId").as("query_id"),
+              col("neighborId").as("neighbor_id"), col("cos"))
+        }
+        rerank match {
+          case Some((nt, sd)) =>
+            // in-stream rerank: stream-static joins attach the vectors,
+            // the native MaxSim expression scores inside the projection
+            raw.drop("cos")
+              .join(emb.select(col("vec_id").as("query_id"),
+                col("embedding").as("q_emb")), "query_id")
+              .join(emb.select(col("vec_id").as("neighbor_id"),
+                col("embedding").as("n_emb")), "neighbor_id")
+              .select(col("query_id"), col("neighbor_id"),
+                graft.functions.MaxSim.maxSim(col("n_emb"), col("q_emb"),
+                  nt, sd).as(scoreCol))
+          case None => raw
+        }
       }
-      val hits = rerank match {
-        case Some((nt, sd)) =>
-          // in-stream rerank: stream-static joins attach the vectors,
-          // the native MaxSim expression scores inside the projection
-          raw.drop("cos")
-            .join(emb.select(col("vec_id").as("query_id"),
-              col("embedding").as("q_emb")), "query_id")
-            .join(emb.select(col("vec_id").as("neighbor_id"),
-              col("embedding").as("n_emb")), "neighbor_id")
-            .select(col("query_id"), col("neighbor_id"),
-              graft.functions.MaxSim.maxSim(col("n_emb"), col("q_emb"),
-                nt, sd).as(scoreCol))
-        case None => raw
-      }
-      val q = hits.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + cell indexes checkpointed
       // REDELIVERY ACROSS THE RESTART: the whole second quarter again —
-      // only the recovered cell indexes keep it from re-inserting
-      pubRange(q2lo, q2hi, false)
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2
-      if (windowed) {
-        // incarnation 3: the committed watermark now sits at day(hi), so
-        // the horizon is exactly day(hi − windowDays) — a FULL corpus
-        // redelivery touches every cell ever written (in-window rows are
-        // resident, below-horizon rows are gated; re-emissions are
-        // subsets of the originals and the finish's distinct absorbs
-        // them), compacting the whole index to the retention window the
-        // state audit reads
-        pubRange(lo, Long.MaxValue, true)
-        drain()
-      }
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+      // only the recovered cell indexes keep it from re-inserting.
+      // Windowed, incarnation 3: the committed watermark now sits at
+      // day(hi), so the horizon is exactly day(hi − windowDays) — a FULL
+      // corpus redelivery touches every cell ever written (in-window rows
+      // are resident, below-horizon rows are gated; re-emissions are
+      // subsets of the originals and the finish's distinct absorbs them),
+      // compacting the whole index to the retention window the state
+      // audit reads
+      val f = r.feed(emb, "vec_id", in, new Quarters(lo, hi))
+      r.quartered(Seq(f), () => r.drain(q), redeliver = true,
+        tail = if (windowed) Seq(Seq(f.q(0, 4))) else Nil)
+      r.snapshot(finish(r.child, q.ckpt, out))
+    }
   }
 
   /** [[streamedAnn]] under WATERMARK-BOUND RETENTION — sliding-window
@@ -4320,7 +3027,7 @@ object StreamReplay {
                      centroids: Seq[Seq[Double]], nProbe: Int,
                      k: Int = 3): DataFrame =
     streamedAnnCore(spark, dir, centroids, nProbe, rerank = None,
-      annRankSchema("cos"), windowed = true)(annTopKFinish("cos", k))
+      windowed = true)(annTopKFinish("cos", k))
 
   /** Offline audit of the WINDOWED ANN index ([[streamedAnnTtl]]'s
     * checkpoint after the full-redelivery compaction): the ListState
@@ -4332,25 +3039,9 @@ object StreamReplay {
     */
   def stateInspectAnnTtl(spark: SparkSession, dir: String,
                          centroids: Seq[Seq[Double]],
-                         nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val auditSchema = StructType(Seq(
-      StructField("cell", IntegerType),
-      StructField("n_vectors", LongType),
-      StructField("id_sum", LongType)))
+                         nProbe: Int): DataFrame =
     streamedAnnCore(spark, dir, centroids, nProbe, rerank = None,
-      auditSchema, windowed = true) { (child, ckpt, _) =>
-      child.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "index")
-        .load()
-        .select(col("key.value").as("cell"),
-          col("list_element.vecId").as("vec_id"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("id_sum"))
-        .collect()
-    }
-  }
+      windowed = true)(annAudit)
 
   /** Offline checkpoint-state audit via Spark 4's STATE DATA SOURCE —
     * the ops surface every production streaming deployment eventually
@@ -4385,69 +3076,39 @@ object StreamReplay {
     stateAuditCore(spark, dir, changeFeed = true)
 
   private def stateAuditCore(spark: SparkSession, dir: String,
-                             changeFeed: Boolean): DataFrame = {
-    import graft.model.PageEventCodec
-    import graft.sources.{FileTopic, Topics}
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("name", StringType), StructField("user", StringType),
-      StructField("date", LongType), StructField("duration", DoubleType)))
-    val outSchema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("window_start", LongType),
-      StructField("cnt", LongType)))
-    val events = PageEventCodec.toWire(
-      Tables.events(spark, dir)
-        .select(col("event_type").as("name"),
-          concat(lit("U"), col("user_id")).as("user"),
-          col("ts").as("date"), col("value").as("duration")))
-    val (lo, hi) = timeBounds(events, s"$dir events (state audit wire)")
-    val child = replaySession(spark, shufflePartitions = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_state")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_state_ckpt")
-    val t2 = new FileTopic(Topics.T2, wireSchema, root.toString)
-    def drain(): Unit = {
-      val keyed = PageViews.rekey(
-        PageViews.filterValid(PageEventCodec.fromWire(t2.stream(child)),
-          "duration"), "name", "date")
+                             changeFeed: Boolean): DataFrame =
+    ReplayHarness(spark, partitions = 8) { r =>
+      val t2 = r.topic(Topics.T2, pageWireSchema)
       // no watermark, noop sink: nothing leaves the query — the
       // checkpointed store IS the materialization being audited
-      val counts = keyed
-        .groupBy(window(col("date"), "5 seconds"), col("name"))
-        .agg(count(lit(1)).as("cnt"))
-      val q = counts.writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      runQuartered(events, lo, hi, t2, () => drain())
+      val q = r.custom("counts", "update", _.format("noop")) {
+        PageViews.rekey(
+          PageViews.filterValid(PageEventCodec.fromWire(t2.stream(r.child)),
+            "duration"), "name", "date")
+          .groupBy(window(col("date"), "5 seconds"), col("name"))
+          .agg(count(lit(1)).as("cnt"))
+      }
+      quarteredOn(r, pageWire(spark, dir), t2,
+        s"$dir events (state audit wire)", () => r.drain(q))
+      val store = r.child.read.format("statestore").option("path", q.ckpt)
       val stateRows =
         if (changeFeed) {
           // rebuild the final store from its own changelog: per key, the
           // LAST committed update wins (no deletes here — no watermark)
-          val feed = child.read.format("statestore")
-            .option("path", ckpt.toString)
-            .option("readChangeFeed", "true")
-            .option("changeStartBatchId", "0").load()
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("key"))
             .orderBy(col("batch_id").desc)
-          feed.filter(col("change_type") === "update")
+          store.option("readChangeFeed", "true")
+            .option("changeStartBatchId", "0").load()
+            .filter(col("change_type") === "update")
             .withColumn("rn", row_number().over(w))
             .filter(col("rn") === 1)
-        } else {
-          child.read.format("statestore")
-            .option("path", ckpt.toString).load()
-        }
-      val rows = stateRows
+        } else store.load()
+      r.snapshot(stateRows
         .select(col("key.name").as("event_type"),
           col("key.window.start").cast("long").as("window_start"),
-          col("value.count").as("cnt"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
+          col("value.count").as("cnt")))
+    }
 
   /** Streaming CDC materialization — the batch `cdc_apply` run as a
     * production change-data feed, completing the table-stream duality
@@ -4473,20 +3134,12 @@ object StreamReplay {
     * compacted out topic — hash-matched against the SAME DuckDB oracle
     * as the batch twin.
     */
-  def streamedCdc(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.operators.RelationalSuite
-    val outSchema = StructType(Seq(
-      StructField("status", StringType), StructField("n_live", LongType),
-      StructField("n_updated", LongType),
-      StructField("total_price", DoubleType)))
-    cdcReplayCore(spark, dir, outSchema) { (child, ckpt, out) =>
-      RelationalSuite.cdcMaterialize(
+  def streamedCdc(spark: SparkSession, dir: String): DataFrame =
+    cdcReplayCore(spark, dir) { (child, _, out) =>
+      graft.operators.RelationalSuite.cdcMaterialize(
         out.batch(child).select(col("k"), col("status"), col("seq"),
           col("op"), col("p").cast(DecimalType(18, 3)).as("p")))
-        .collect()
     }
-  }
 
   /** Offline audit of a `transformWithState` PROCESSOR store (round-13
     * verdict ask #5): [[stateInspect]] reads the windowed-agg store; this
@@ -4505,75 +3158,47 @@ object StreamReplay {
     * per-key state rows, fenced inside the replay harness like the other
     * state audits.
     */
-  def stateInspectTws(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("k", LongType), StructField("applied_seq", IntegerType)))
-    cdcReplayCore(spark, dir, outSchema) { (child, ckpt, _) =>
-      child.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "applied")
-        .load()
+  def stateInspectTws(spark: SparkSession, dir: String): DataFrame =
+    cdcReplayCore(spark, dir) { (child, ckpt, _) =>
+      stateVar(child, ckpt, "applied")
         .select(col("key.value").as("k"),
           col("value.value").cast("int").as("applied_seq"))
-        .collect()
     }
-  }
 
   /** The shared CDC replay run — synthesized changelog over the topic
     * wire in three seq-major waves, with a checkpoint restart and a full
     * revision-wave redelivery between incarnations (see [[streamedCdc]]
     * for the semantics). `finish` reads the answer from the stopped
     * pipeline (the compacted out topic, or the checkpoint's state store)
-    * BEFORE the temp dirs are deleted.
+    * BEFORE the temp root is deleted.
     */
-  private def cdcReplayCore(spark: SparkSession, dir: String,
-      outSchema: org.apache.spark.sql.types.StructType)(
-      finish: (SparkSession, String, graft.sources.FileTopic)
-        => Array[org.apache.spark.sql.Row]): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    import graft.operators.RelationalSuite
-    val wireSchema = StructType(Seq(
-      StructField("k", LongType), StructField("status", StringType),
-      StructField("seq", IntegerType), StructField("op", StringType),
-      StructField("p", StringType)))
+  private def cdcReplayCore(spark: SparkSession, dir: String)(
+      finish: Finish): DataFrame =
     // transformWithState requires the RocksDB provider
-    val child = replaySession(spark, shufflePartitions = 8,
-      keepRocksDb = true)
-    val log = RelationalSuite.cdcChangelog(child, dir)
-      .select(col("k"), col("status"), col("seq"), col("op"),
-        col("p").cast("string").as("p"))
-    val root = java.nio.file.Files.createTempDirectory("graft_cdc")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt")
-    val in = new FileTopic("cdc_in", wireSchema, root.toString)
-    val out = new FileTopic("cdc_compacted", wireSchema, root.toString)
-    def wave(seq: Int) = log.filter(col("seq") === seq).coalesce(1)
-    def drain(): Unit = {
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[StreamOps.CdcOp]
-      val compacted = StreamOps.compactChangelog(
-        in.stream(child).as[StreamOps.CdcOp]).toDF()
-      val q = compacted.writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val log = graft.operators.RelationalSuite.cdcChangelog(r.child, dir)
+        .select(col("k"), col("status"), col("seq"), col("op"),
+          col("p").cast("string").as("p"))
+      val wire = schema("k" -> LongType, "status" -> StringType,
+        "seq" -> IntegerType, "op" -> StringType, "p" -> StringType)
+      val in = r.topic("cdc_in", wire)
+      val out = r.topic("cdc_compacted", wire)
+      val q = r.query("compact", "update", out) {
+        implicit val enc =
+          org.apache.spark.sql.Encoders.product[StreamOps.CdcOp]
+        StreamOps.compactChangelog(
+          in.stream(r.child).as[StreamOps.CdcOp]).toDF()
+      }
+      // one wave per seq: 1 inserts, 2 revisions, 3 tombstones.
+      // Incarnation 1 applies inserts + revisions; REDELIVERY ACROSS THE
+      // RESTART: the whole revision wave again — only the recovered
+      // per-key seq state keeps it from re-emitting; incarnation 2's
+      // tombstones advance over the recovered state
+      val f = r.feed(log, "seq", in, new Quarters(0, 4))
+      def wave(seq: Int): ReplayHarness.Wave = () => f.publish(seq, seq + 1)
+      r.waves(() => r.drain(q))(Seq(wave(1), wave(2)), Seq(wave(2), wave(3)))
+      r.snapshot(finish(r.child, q.ckpt, out))
     }
-    try {
-      in.append(wave(1))
-      in.append(wave(2))
-      drain() // incarnation 1: inserts + revisions applied, state checkpointed
-      // REDELIVERY ACROSS THE RESTART: the whole revision wave again —
-      // only the recovered per-key seq state keeps it from re-emitting
-      in.append(wave(2))
-      in.append(wave(3))
-      drain() // incarnation 2: tombstones advance over recovered state
-      val rows = finish(child, ckpt.toString, out)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
-  }
 
   /** Sliding-window DISTINCT ACTIVES over the production wire —
     * [[StreamOps.DistinctActiveTtl]]'s "distinct users per event type
@@ -4600,106 +3225,66 @@ object StreamReplay {
     * oracle embeds the identical integer arithmetic.
     */
   def streamedDistinctTtl(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FileTopic
-    import org.apache.spark.sql.types._
-    val wireSchema = StructType(Seq(
-      StructField("event_type", StringType), StructField("user_id", LongType),
-      StructField("date", LongType)))
-    val liveSchema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("n_active", LongType)))
-    val outSchema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("n_active", LongType), StructField("id_sum", LongType)))
     val events = Tables.events(spark, dir)
       .select(col("event_type"), col("user_id"),
         unix_micros(col("ts")).as("date"))
-    val (lo, hi) = timeBounds(events, s"$dir events (distinct ttl)")
+    val (lo, hi) = ReplayHarness.bounds(events, "date",
+      s"$dir events (distinct ttl)")
     val cutoffUs = lo + (hi - lo) * 3 / 5
     val lookbackUs = (hi / 1000L) * 1000L - cutoffUs
-    val child = replaySession(spark, shufflePartitions = 8, keepRocksDb = true)
-    val root = java.nio.file.Files.createTempDirectory("graft_active")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_active_ckpt")
-    val in = new FileTopic("active_in", wireSchema, root.toString)
-    // the live update feed a dashboard would consume — exercised by the
-    // replay (every batch emits each touched key's current count) even
-    // though the converged answer reads from the store
-    val out = new FileTopic("active_counts", liveSchema, root.toString)
-    def drain(): Unit = {
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[StreamOps.ActiveId]
-      val counts = StreamOps.distinctActiveTtl(
-        in.stream(child)
-          .withColumn("ets", timestamp_micros(col("date")))
-          .withWatermark("ets", "0 seconds")
-          .select(col("event_type").as("key"), col("user_id").as("id"),
-            col("date").as("tsUs"))
-          .as[StreamOps.ActiveId], lookbackUs).toDF()
-      val q = counts
-        .select(col("key").as("event_type"), col("n").as("n_active"))
-        .writeStream.outputMode("update")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-          out.sinkBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      val quarter = math.max(1L, (hi - lo) / 4)
-      val (q2lo, q2hi) = (lo + quarter, lo + 2 * quarter)
-      def range(from: Long, until: Long, last: Boolean) = events
-        .filter(col("date") >= from &&
-          (if (last) lit(true) else col("date") < until)).coalesce(1)
-      val pubRange = stageWire(events, "date", in)
-      pubRange(lo, q2lo, false)
-      pubRange(q2lo, q2hi, false)
-      drain() // incarnation 1: offsets + active maps checkpointed
-      pubRange(q2lo, q2hi, false) // redelivery across restart
-      pubRange(q2hi, lo + 3 * quarter, false)
-      pubRange(lo + 3 * quarter, Long.MaxValue, true)
-      drain() // incarnation 2: recovered maps absorb the redelivery
-      // incarnation 3: watermark at floor(hi ms) → horizon = cutoff; the
-      // full redelivery touches every key, compacting the whole store
-      pubRange(lo, Long.MaxValue, true)
-      drain()
-      val rows = child.read.format("statestore")
-        .option("path", ckpt.toString)
-        .option("stateVarName", "active")
-        .load()
+    ReplayHarness(spark, partitions = 8, rocksDb = true) { r =>
+      val in = r.topic("active_in", schema("event_type" -> StringType,
+        "user_id" -> LongType, "date" -> LongType))
+      // the live update feed a dashboard would consume — exercised by the
+      // replay (every batch emits each touched key's current count) even
+      // though the converged answer reads from the store
+      val out = r.topic("active_counts",
+        schema("event_type" -> StringType, "n_active" -> LongType))
+      val q = r.query("counts", "update", out) {
+        implicit val enc =
+          org.apache.spark.sql.Encoders.product[StreamOps.ActiveId]
+        StreamOps.distinctActiveTtl(
+          in.stream(r.child)
+            .withColumn("ets", timestamp_micros(col("date")))
+            .withWatermark("ets", "0 seconds")
+            .select(col("event_type").as("key"), col("user_id").as("id"),
+              col("date").as("tsUs"))
+            .as[StreamOps.ActiveId], lookbackUs).toDF()
+          .select(col("key").as("event_type"), col("n").as("n_active"))
+      }
+      // incarnation 1: offsets + active maps checkpointed; incarnation 2:
+      // the recovered maps absorb the redelivery; incarnation 3: watermark
+      // at floor(hi ms) → horizon = cutoff; the full redelivery touches
+      // every key, compacting the whole store
+      val f = r.feed(events, "date", in, new Quarters(lo, hi))
+      r.quartered(Seq(f), () => r.drain(q), redeliver = true,
+        tail = Seq(Seq(f.q(0, 4))))
+      r.snapshot(stateVar(r.child, q.ckpt, "active")
         .select(col("key.value").as("event_type"),
           col("user_map_key.value").as("user_id"))
         .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_active"), sum(col("user_id")).as("id_sum"))
-        .collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally { deleteTree(ckpt); deleteTree(root) }
+        .agg(count(lit(1)).as("n_active"), sum(col("user_id")).as("id_sum")))
+    }
   }
 
   /** The wire shape of one retrieval REQUEST: a request carries its own
     * content (the text to shingle, the vector to probe) — request
     * processing is per-row work, never a corpus lookup.
     */
-  private val indexServeWireSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("query_id", LongType), StructField("text", StringType),
-      // FLOAT, not DOUBLE: JSON round-trips a float's shortest decimal
-      // repr back to the identical float, while parsing it as double
-      // would land on a DIFFERENT double than widening the float —
-      // bit-identity with the batch cosine would break
-      StructField("embedding", ArrayType(FloatType))))
-  }
+  private val indexServeWireSchema = schema(
+    "query_id" -> LongType, "text" -> StringType,
+    // FLOAT, not DOUBLE: JSON round-trips a float's shortest decimal
+    // repr back to the identical float, while parsing it as double
+    // would land on a DIFFERENT double than widening the float —
+    // bit-identity with the batch cosine would break
+    "embedding" -> ArrayType(FloatType))
 
   /** One candidate emission of the streaming serve — both tails union
     * into this shape (lex rows carry h/contrib, sem rows carry cos).
     */
-  private val indexServeCandSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("query_id", LongType), StructField("src", StringType),
-      StructField("cand", LongType), StructField("h", LongType),
-      StructField("contrib", LongType), StructField("cos", DoubleType)))
-  }
+  private val indexServeCandSchema = schema("query_id" -> LongType,
+    "src" -> StringType, "cand" -> LongType, "h" -> LongType,
+    "contrib" -> LongType, "cos" -> DoubleType)
 
   /** The STREAMING serve plan over the PERSISTED artifacts — exposed as
     * a frame so PlanSpec can pin what matters at 100 TB: the plan reads
@@ -4776,40 +3361,32 @@ object StreamReplay {
   def streamedIndexServe(spark: SparkSession, dir: String, root: String,
                          centroids: Seq[Seq[Double]], nProbe: Int,
                          k: Int): DataFrame = {
-    import graft.sources.FileTopic
-    val child = replaySession(spark, shufflePartitions = 8)
     val requests = Tables.documents(spark, dir)
       .filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"), col("text"))
       .join(Tables.embeddings(spark, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding")),
         Seq("query_id"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_idx_serve")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_idx_serve_ckpt")
-    val in = new FileTopic("serve_req", indexServeWireSchema, tmp.toString)
-    val out = new FileTopic("serve_cand", indexServeCandSchema, tmp.toString)
-    def drain(): Unit = {
-      val cand = indexServeStreamFrame(in.stream(child), root, centroids,
-        nProbe)
-      val q = cand.writeStream.outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => {
-          // per-batch staleness gate (round-18 verdict ask #4c): a
-          // corpus mutation mid-serve fails the next batch loudly —
-          // a metadata listing per batch, never a corpus scan
-          graft.sources.IndexStore.assertFresh(child, dir, root)
-          out.sinkBatch(df, id)
-        })
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drainQuery(q)
-    }
-    try {
-      in.append(requests.filter(col("query_id") < 3).coalesce(1))
-      drain() // incarnation 1: offsets checkpointed
-      in.append(requests.filter(col("query_id") >= 3).coalesce(1))
-      in.append(requests.filter(col("query_id") < 3).coalesce(1)) // redelivery
-      drain() // incarnation 2: recovered offsets + idempotent re-serve
-      val cand = out.batch(child).distinct()
+    ReplayHarness(spark, partitions = 8) { r =>
+      val in = r.topic("serve_req", indexServeWireSchema)
+      val out = r.topic("serve_cand", indexServeCandSchema)
+      // per-batch staleness gate: a corpus mutation mid-serve fails the
+      // next batch loudly — a metadata listing per batch, never a corpus
+      // scan
+      val serve = (df: DataFrame, id: Long) => {
+        graft.sources.IndexStore.assertFresh(r.child, dir, root)
+        out.sinkBatch(df, id)
+      }
+      val q = r.custom("serve", "append", _.foreachBatch(serve)) {
+        indexServeStreamFrame(in.stream(r.child), root, centroids, nProbe)
+      }
+      // incarnation 1: offsets checkpointed; incarnation 2: recovered
+      // offsets + idempotent re-serve of the redelivered first wave
+      val f = r.feed(requests, "query_id", in, new Quarters(0, 4))
+      val first: ReplayHarness.Wave = () => f.publish(Long.MinValue, 3)
+      r.waves(() => r.drain(q))(Seq(first),
+        Seq(() => f.publish(3, Long.MaxValue), first))
+      val cand = out.batch(r.child).distinct()
       val lexRanked = cand.filter(col("src") === "lex")
         .groupBy(col("query_id"), col("cand"))
         .agg(sum(col("contrib")).as("score"))
@@ -4826,10 +3403,8 @@ object StreamReplay {
             .orderBy(col("cos").desc, col("cand").asc)))
         .filter(col("rank") <= k)
         .select(col("query_id"), col("cand").as("neighbor_id"), col("rank"))
-      val fused = graft.operators.SimilaritySuite
-        .hybridFusionOf(lexRanked, semRanked, k)
-      val rows = fused.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), fused.schema)
-    } finally { deleteTree(ckpt); deleteTree(tmp) }
+      r.snapshot(graft.operators.SimilaritySuite
+        .hybridFusionOf(lexRanked, semRanked, k))
+    }
   }
 }
