@@ -511,18 +511,7 @@ object Bench {
           repoRoot.resolve(s"baselines/BENCH_DETAIL_r$k.json"))))
         .getOrElse((0, Map.empty))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf (ignored after the first session exists): see build.sbt
-      // — one pass of the suite generates >100 codegen units, so the
-      // default-100 cache made every warm pass recompile+reload everything
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // untimed warmup: JVM/JIT/codegen startup otherwise lands entirely on
     // whichever query sorts first (~5 s of pure session warmup). Covers the
     // scan/agg, join, and window execution paths so every timed query sees
@@ -552,14 +541,9 @@ object Bench {
         .streamedPageCounts(spark, "/root/testdata/sf0.001", numBatches = 2)
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
-    // optional comma-separated query filter for local iteration, e.g.
     // SPARK_GRAFT_ONLY=dedup_clusters,ngram_jaccard — driver runs unfiltered
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
+    val only = SparkEntry.only
+    val selected = SparkEntry.selected(only)
     // Per-query GC attribution: a query that inherits a heap full of the
     // previous queries' garbage reports THEIR cost as its own wall time.
     // Logging GC delta per query makes that interference visible instead of

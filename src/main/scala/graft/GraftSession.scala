@@ -11,16 +11,25 @@ import org.apache.spark.sql.SparkSession
   * AQE coalesces down per-stage.
   */
 object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** The one `SparkSession` builder: every session in the repository —
+    * the live pipeline, the `Verify`/`Bench` oracle and bench lanes, the test
+    * session and the probes — starts here, so all of them share one
+    * `file:` I/O path and one static conf. A caller adds only what is its
+    * own (the test session's FAIR pools, a probe's broadcast threshold).
+    */
+  def builder(cores: Int): SparkSession.Builder =
     // spawn-free `file:` I/O (graft.io.NioLocalFileSystem) for every
-    // checkpoint, source-log, state and sink file; registered on the
-    // builder because the SparkContext's first FileSystem.get fixes the
-    // cached class
-    val spark = graft.io.NioLocalFileSystem.register(SparkSession.builder())
+    // checkpoint, source-log, state, sink and wire file; registered on
+    // the builder because the SparkContext's first FileSystem.get fixes
+    // the cached class
+    graft.io.NioLocalFileSystem.register(SparkSession.builder())
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      // on the builder, not only in tune: `newSession()` children
+      // (StorageSuite.pushdownSession, indexServeRestart) read it from
+      // the SparkConf
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // static conf (must be set before the first session; spark.conf.set
@@ -29,13 +38,31 @@ object GraftSession {
       // cache miss means recompile + a class load that deopt-storms every
       // already-hot method (round-6 bench postmortem, Bench.scala).
       .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+    val spark = builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
   }
 
-  /** Apply the engine's standard SQL conf to an externally-created session
-    * (e.g. the driver-owned Verify/Bench sessions).
+  /** Conf-scoped child session: `parent.newSession()` (shared
+    * SparkContext and cache, its own SQL conf and temp views) with the
+    * parent's runtime conf copied over, and nothing else — no [[tune]]
+    * optimizer rules or functions. Callers set their own overrides on the
+    * result.
+    */
+  def child(parent: SparkSession): SparkSession = {
+    val child = parent.newSession()
+    parent.conf.getAll.foreach { case (k, v) =>
+      // static and Spark-core entries refuse a runtime set
+      try child.conf.set(k, v)
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
+    }
+    child
+  }
+
+  /** Apply the engine's standard SQL conf, functions and optimizer rules
+    * to a session.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -23,6 +23,17 @@ object SparkEntry {
     EventSuite.queries ++ RelationalSuite.queries ++ TextSuite.queries ++
       SimilaritySuite.queries ++ MediaSuite.queries ++ StorageSuite.queries
 
+  /** The local-iteration filter `SPARK_GRAFT_ONLY=a,b` (comma-separated
+    * query names) that `Verify` and `Bench` honor; None when unset, which
+    * runs every query.
+    */
+  def only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** [[queries]] narrowed to `only`'s names (all of them for None). */
+  def selected(only: Option[Set[String]]): Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries)(names => queries.filter { case (k, _) => names(k) })
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check.
     */

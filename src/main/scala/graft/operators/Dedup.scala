@@ -405,11 +405,7 @@ object Dedup {
 
   private def buildRoundSession(parent: org.apache.spark.sql.SparkSession,
                                 partitions: Int): org.apache.spark.sql.SparkSession = {
-      val child = parent.newSession()
-      parent.conf.getAll.foreach { case (k, v) =>
-        try child.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
+      val child = graft.GraftSession.child(parent)
       child.conf.set("spark.sql.shuffle.partitions", partitions.toString)
       child.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       // The kernels persist their edge sets pre-partitioned on the round

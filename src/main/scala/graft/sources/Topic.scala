@@ -76,8 +76,12 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     * the json datasource — byte-identical to what the write-job path
     * produced). An empty wave writes no file, matching the write-job
     * path, where an empty dataframe produced no part file (and no source
-    * trigger). Dot-tmp + rename so a streaming reader never lists a
-    * partial file.
+    * trigger). One write path for every root: the Hadoop FS resolved from
+    * the path, dot-tmp + rename so a streaming reader never lists a
+    * partial file. On a local root that FS is the spawn-free
+    * [[graft.io.NioLocalFileSystem]] every `GraftSession.builder` session
+    * registers; its `.crc` sidecars are dot-files, which the file source
+    * skips like the dot-tmp.
     */
   private[graft] def appendLines(lines: Iterable[String]): Unit =
     if (lines.nonEmpty) {
@@ -93,35 +97,13 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
         org.apache.spark.sql.SparkSession.getActiveSession
           .map(_.sparkContext.hadoopConfiguration)
           .getOrElse(new org.apache.hadoop.conf.Configuration()))
-      // local fast path (optimization round 20): Hadoop's stock local FS
-      // fork/execs chmod per create when libhadoop's NativeIO is absent
-      // (graft.io.NioLocalFileSystem, registered by GraftSession.local,
-      // removes that spawn) and writes a .crc sidecar per file — per-wave
-      // fixed cost on every publish (see NioCheckpointFileManager's header
-      // for the measurement). java.nio does the identical dot-tmp →
-      // atomic-rename protocol with no spawn and no sidecar under any
-      // session.
-      // Non-local roots (hdfs://, s3a://) keep the Hadoop FS path — the
-      // whole point of resolving the FS from the session conf.
-      if (fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-          fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
-        val dstNio = java.nio.file.Paths.get(dst.toUri.getPath)
-        val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
-        val out = java.nio.file.Files.newBufferedWriter(tmpNio,
-          java.nio.charset.StandardCharsets.UTF_8)
-        try lines.foreach { l => out.write(l); out.write('\n') }
-        finally out.close()
-        java.nio.file.Files.move(tmpNio, dstNio,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } else {
-        val out = fs.create(tmp, true)
-        try lines.foreach { l =>
-          out.write(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          out.write('\n')
-        } finally out.close()
-        if (!fs.rename(tmp, dst))
-          throw new java.io.IOException(s"append rename $tmp -> $dst failed")
-      }
+      val out = fs.create(tmp, true)
+      try lines.foreach { l =>
+        out.write(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        out.write('\n')
+      } finally out.close()
+      if (!fs.rename(tmp, dst))
+        throw new java.io.IOException(s"append rename $tmp -> $dst failed")
     }
 
   override def append(df: DataFrame): Unit =

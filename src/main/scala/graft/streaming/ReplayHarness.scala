@@ -92,11 +92,7 @@ private[graft] object ReplayHarness {
                              keepRocksDb: Boolean = false): SparkSession = {
     val parts = replayParts(shufflePartitions)
     sessionCache.computeIfAbsent((spark, parts, keepRocksDb), _ => {
-      val child = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try child.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
+      val child = graft.GraftSession.child(spark)
       // keepRocksDb: transformWithState REQUIRES the RocksDB provider;
       // every other replay's tiny stateful agg prefers the heap store's
       // lower per-batch open/commit cost
@@ -114,17 +110,14 @@ private[graft] object ReplayHarness {
       // parent session) keep the Spark default.
       child.conf.set(
         "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // java.nio checkpoint I/O: thread-dump sampling attributed ~19% of
-      // the stream execution thread to Hadoop local-FS PROCESS FORKS
-      // (chmod per file create, readlink per rename, without libhadoop's
-      // NativeIO) and ~34% to ChecksumFs CRC machinery — per-batch fixed
-      // cost on every offset/commit-log write and state delta, none of it
-      // query work. This manager (local `file:` paths only, refuses
-      // anything else loudly) skips the forks, the `.crc` sidecars and the
-      // FileContext layers, also on sessions built without the spawn-free
-      // `file:` registration (the Bench session). Production checkpoints
-      // on HDFS/S3 keep Spark's default managers (the parent session is
-      // untouched).
+      // java.nio checkpoint I/O (local `file:` paths only, refuses
+      // anything else loudly): no `.crc` sidecars or FileContext layers
+      // on the offset/commit-log writes and state deltas, and a
+      // hard-link publish under which exactly one of several writers
+      // racing to one batch id wins — Spark's default manager broke that
+      // in 5-125 of 300 rounds (see NioCheckpointFileManager's header).
+      // Production checkpoints on HDFS/S3 keep Spark's default managers
+      // (the parent session is untouched).
       child.conf.set("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.NioCheckpointFileManager")
       // INTERPRETED expression mode: a micro-batch's generated code embeds

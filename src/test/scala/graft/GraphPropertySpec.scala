@@ -170,11 +170,7 @@ class GraphPropertySpec extends SparkSpec {
     // round-scoped child session copies this parent's conf, so the rounds
     // run SortMergeJoin — the shape where a re-shuffle of the cached edges
     // would actually cost an E-row exchange per round.
-    val parent = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try parent.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
+    val parent = GraftSession.child(spark)
     parent.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val rnd = new scala.util.Random(443099L)
     val und = (for {

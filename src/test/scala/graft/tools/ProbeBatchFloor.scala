@@ -54,11 +54,7 @@ object ProbeBatchFloor {
     val rounds = args.headOption.map(_.toInt).getOrElse(3)
     (1 to rounds).foreach { round =>
       variants.foreach { case (label, confs, parts) =>
-        val child = parent.newSession()
-        parent.conf.getAll.foreach { case (k, v) =>
-          try child.conf.set(k, v)
-          catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
+        val child = graft.GraftSession.child(parent)
         child.conf.set("spark.sql.shuffle.partitions", parts.toString)
         child.conf.set(
           "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")

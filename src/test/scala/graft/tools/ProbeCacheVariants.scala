@@ -12,16 +12,11 @@ import org.apache.spark.sql.functions._
 object ProbeCacheVariants {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val parent = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val parent = graft.GraftSession.tune(graft.GraftSession.builder(4)
       // at corpus scale neither join side broadcasts; reproduce that shape
       .config("spark.sql.autoBroadcastJoinThreshold",
         if (args.contains("--no-bhj")) "-1" else "10485760")
-      .getOrCreate()
-    if (!args.contains("--no-tune")) graft.GraftSession.tune(parent)
-    else parent.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate())
     parent.sparkContext.setLogLevel("ERROR")
 
     def directedOn(spark: SparkSession): DataFrame = {

@@ -479,8 +479,7 @@ object Scaling {
     // SPARK_GRAFT_ONLY filters to named families for local iteration on
     // one kernel (same contract as Bench/Verify); a filtered run prints
     // but does NOT write SCALING.json — the artifact stays a full sweep
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val only = graft.SparkEntry.only
     val selected = only match {
       case Some(names) => flagship.filter { case (n, _) => names(n) }
       case None => flagship
