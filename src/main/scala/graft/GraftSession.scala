@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * UTC pinned (epoch-aligned windows must match the DuckDB oracle),
   * shuffle partitions sized to the local core count rather than the 200
   * default — on a real cluster this would be set to ~2-3x total cores and
-  * AQE coalesces down per-stage.
+  * AQE coalesces down per-stage. One exception: the live job
+  * (`PageEventPipeline.startJob`) starts with one state partition, since
+  * its stateful stage sees only (page, window) keys and a partition
+  * costs a state store commit and a reduce task in every micro-batch.
   */
 object GraftSession {
   /** The one `SparkSession` builder: every session in the repository —

@@ -20,4 +20,24 @@ object PageEventCodec {
   /** Engine -> wire. */
   def toWire(df: DataFrame): DataFrame =
     df.withColumn("date", unix_millis(col("date")))
+
+  private val json = new com.fasterxml.jackson.core.JsonFactory()
+
+  /** One event as its JSON wire line, serialized on the caller's thread:
+    * the bytes `toJSON` over [[toWire]] writes (Spark's JacksonGenerator is
+    * the same Jackson writer — schema field order, a null field omitted),
+    * without a Spark job.
+    */
+  def wireLine(ev: PageEvent): String = {
+    val out = new java.io.StringWriter()
+    val g = json.createGenerator(out)
+    g.writeStartObject()
+    if (ev.name != null) g.writeStringField("name", ev.name)
+    if (ev.user != null) g.writeStringField("user", ev.user)
+    if (ev.date != null) g.writeNumberField("date", ev.date.getTime)
+    g.writeNumberField("duration", ev.duration)
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.PageEvent
+import graft.model.{PageEvent, PageEventCodec}
 
 /** Event generators — the reference's two ingest surfaces (SURVEY.md §2.1
   * #1, #2).
@@ -32,6 +32,10 @@ object Generator {
   /** One-row manual ingest (reference PageEventController.java:34-39: GET
     * /publish builds a single event and StreamBridge.sends it). Returns the
     * event it published, like the endpoint echoes it.
+    *
+    * A JSON file topic gets the event serialized on this thread
+    * ([[PageEventCodec.wireLine]]), so a publish runs no Spark job beside
+    * the micro-batches; any other topic gets a one-row append.
     */
   def publish(spark: SparkSession, topic: Topic, name: String,
               rng: java.util.Random = new java.util.Random()): PageEvent = {
@@ -41,7 +45,11 @@ object Generator {
       user = s"U${1 + rng.nextInt(2)}",
       date = new java.sql.Timestamp(System.currentTimeMillis()),
       duration = 10L + rng.nextInt(1000))
-    topic.append(graft.model.PageEventCodec.toWire(Seq(ev).toDS().toDF()))
+    topic match {
+      case f: FileTopic if f.jsonWire =>
+        f.appendLines(Seq(PageEventCodec.wireLine(ev)), Some(spark))
+      case _ => topic.append(PageEventCodec.toWire(Seq(ev).toDS().toDF()))
+    }
     ev
   }
 }

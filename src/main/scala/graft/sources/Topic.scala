@@ -81,22 +81,22 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     * partial file. On a local root that FS is the spawn-free
     * [[graft.io.NioLocalFileSystem]] every `GraftSession.builder` session
     * registers; its `.crc` sidecars are dot-files, which the file source
-    * skips like the dot-tmp.
+    * skips like the dot-tmp. The FS resolves through `session`'s hadoop
+    * conf (non-local roots need its fs.* settings); with no session, a
+    * bare Configuration still resolves local paths.
     */
-  private[graft] def appendLines(lines: Iterable[String]): Unit =
+  private[graft] def appendLines(
+      lines: Iterable[String],
+      session: Option[SparkSession] = SparkSession.getActiveSession): Unit =
     if (lines.nonEmpty) {
       require(jsonWire, s"appendLines on a $wireFormat wire")
       val name =
         f"part-${appendSeq.incrementAndGet()}%06d-${System.nanoTime()}.json"
       val dst = new org.apache.hadoop.fs.Path(dir, name)
       val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-      // resolve the FS through the active session's hadoop conf when one
-      // exists (non-local roots need its fs.* settings); a bare
-      // Configuration still resolves local paths for session-less callers
-      val fs = dst.getFileSystem(
-        org.apache.spark.sql.SparkSession.getActiveSession
-          .map(_.sparkContext.hadoopConfiguration)
-          .getOrElse(new org.apache.hadoop.conf.Configuration()))
+      val fs = dst.getFileSystem(session
+        .map(_.sparkContext.hadoopConfiguration)
+        .getOrElse(new org.apache.hadoop.conf.Configuration()))
       val out = fs.create(tmp, true)
       try lines.foreach { l =>
         out.write(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -51,12 +51,13 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * job with zero forks, zero sidecars and an OS-native atomic publish.
   *
   * Scope: LOCAL PATHS ONLY — construction refuses a non-`file:` scheme
-  * loudly. Production checkpoints on HDFS/S3 keep Spark's default
-  * managers (rename semantics, checksums and durability guarantees there
-  * are exactly what this class strips for the local replay case); the
-  * replay child sessions always opt in via
-  * `spark.sql.streaming.checkpointFileManagerClass` (see
-  * [[ReplayHarness.session]]).
+  * loudly. Checkpoints on HDFS/S3 keep Spark's default managers (rename
+  * semantics, checksums and durability guarantees there are exactly what
+  * this class strips for local paths). Two places opt in via
+  * `spark.sql.streaming.checkpointFileManagerClass`: the replay child
+  * sessions (see [[ReplayHarness.session]]) and every live-pipeline
+  * query whose checkpoint resolves to `file:` (set for its start only,
+  * see `PageEventPipeline.start`).
   *
   * Semantics mirrored from Spark's `FileContextBasedCheckpointFileManager`:
   *   - `createAtomic` writes a dot-tmp in the target directory and

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.model.{PageEvent, PageEventCodec}
 import graft.operators.PageViews
@@ -46,28 +46,28 @@ final class PageEventPipeline(spark: SparkSession, root: String,
     * `************` framing (PageEventHandler.java:27-33).
     */
   def startConsole(checkpoint: String): StreamingQuery =
-    PageEventCodec.fromWire(t1.stream(spark))
-      .writeStream
-      .option("checkpointLocation", s"$checkpoint/console")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.collect().foreach { r =>
-          println("************************")
-          println(r.mkString(", "))
-          println("************************")
+    PageEventPipeline.start(spark, s"$checkpoint/console") {
+      PageEventCodec.fromWire(t1.stream(spark))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.collect().foreach { r =>
+            println("************************")
+            println(r.mkString(", "))
+            println("************************")
+          }
         }
-      }
-      .start()
+    }
 
   /** Entry point B source: the timed supplier feeding T2. */
   def startSupplier(checkpoint: String, rowsPerSecond: Int = 5): StreamingQuery =
-    Generator.supplier(spark, rowsPerSecond)
-      .writeStream
-      .option("checkpointLocation", s"$checkpoint/supplier")
-      .trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        t2.sinkBatch(PageEventCodec.toWire(batch), id)
-      }
-      .start()
+    PageEventPipeline.start(spark, s"$checkpoint/supplier") {
+      Generator.supplier(spark, rowsPerSecond)
+        .writeStream
+        .trigger(Trigger.ProcessingTime("200 milliseconds"))
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          t2.sinkBatch(PageEventCodec.toWire(batch), id)
+        }
+    }
 
   /** The streaming count over a PageEvent stream — exactly
     * PageViews.pageCounts with an event-time watermark in front of the
@@ -98,23 +98,28 @@ final class PageEventPipeline(spark: SparkSession, root: String,
     * lands after the update waits for the T4 write (see
     * [[PageEventPipeline.completeDespiteStop]]), so a stopped job's T4
     * holds everything its store served.
+    *
+    * A fresh job keeps [[PageEventPipeline.StatePartitions]] state
+    * partitions, whatever the session's shuffle fan-out; a restart keeps
+    * the count its checkpoint recorded.
     */
   def startJob(checkpoint: String): StreamingQuery =
-    countsStream(PageEventCodec.fromWire(t2.stream(spark)))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$checkpoint/job")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val out = batch.persist()
-        try {
-          analytics.update(out, id)
-          PageEventPipeline.completeDespiteStop(spark) {
-            t4.sinkBatch(out.select(col("name"), col("window_start"), col("cnt")), id)
-          }
-        } finally out.unpersist()
-      }
-      .start()
+    PageEventPipeline.start(spark, s"$checkpoint/job",
+        "spark.sql.shuffle.partitions" -> PageEventPipeline.StatePartitions.toString) {
+      countsStream(PageEventCodec.fromWire(t2.stream(spark)))
+        .writeStream
+        .outputMode("update")
+        .trigger(Trigger.ProcessingTime("1 second"))
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val out = batch.persist()
+          try {
+            analytics.update(out, id)
+            PageEventPipeline.completeDespiteStop(spark) {
+              t4.sinkBatch(out.select(col("name"), col("window_start"), col("cnt")), id)
+            }
+          } finally out.unpersist()
+        }
+    }
 
   /** Entry point C serving: the reference's HTTP surface (SSE /analytics,
     * /publish, live chart page) over this pipeline's analytics store.
@@ -143,6 +148,50 @@ final class PageEventPipeline(spark: SparkSession, root: String,
 }
 
 object PageEventPipeline {
+  /** State partitions of a fresh live job: one state store and one reduce
+    * task per micro-batch, like the reference's single-partition T2 keeps
+    * one window store. One is enough because partial aggregation runs
+    * map-side at the scan's parallelism: the work that grows with the
+    * event rate never reaches the stateful stage, which sees only
+    * (page, window) keys.
+    */
+  private[graft] val StatePartitions = 1
+
+  /** Starts a pipeline query on `checkpoint` with `conf` in force for its
+    * whole life, and leaves the session's conf as it was. A local
+    * (`file:`) checkpoint also gets [[NioCheckpointFileManager]], whose
+    * hard-link publish lets exactly one of several writers racing to a
+    * batch id win; other schemes keep Spark's default manager, which the
+    * graft manager refuses to stand in for.
+    *
+    * The values only need to hold during `start()`: the query's
+    * `StreamExecution` clones the session's SQL conf when it is built
+    * there. The session lock keeps two concurrent starts from saving and
+    * restoring each other's values; a key unset before is unset again.
+    */
+  private def start(spark: SparkSession, checkpoint: String,
+                    conf: (String, String)*)(
+      writer: DataStreamWriter[_]): StreamingQuery = {
+    val path = new org.apache.hadoop.fs.Path(checkpoint)
+    val scheme = Option(path.toUri.getScheme).getOrElse(
+      org.apache.hadoop.fs.FileSystem
+        .getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    val manager =
+      if (scheme == "file")
+        Seq("spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[NioCheckpointFileManager].getName)
+      else Nil
+    val scoped = conf ++ manager
+    spark.synchronized {
+      val before = spark.conf.getAll
+      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+      try writer.option("checkpointLocation", checkpoint).start()
+      finally scoped.foreach { case (k, _) =>
+        before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
+  }
+
   /** Runs a sink write to completion even when its query is stopped
     * meanwhile. `StreamingQuery.stop()` cancels the query's job group and
     * interrupts the stream thread, which aborts a write in flight; after

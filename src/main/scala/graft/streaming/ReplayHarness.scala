@@ -106,8 +106,8 @@ private[graft] object ReplayHarness {
       // long-lived checkpoints on remote object stores. A replay writes
       // its checkpoint to local disk, reads it back within the same minute
       // and deletes it; the sidecars double the small-file count per
-      // micro-batch for zero protection. Production checkpoints (the
-      // parent session) keep the Spark default.
+      // micro-batch for zero protection. Long-lived checkpoints (the
+      // live pipeline's among them) keep the Spark default.
       child.conf.set(
         "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // java.nio checkpoint I/O (local `file:` paths only, refuses
@@ -116,8 +116,8 @@ private[graft] object ReplayHarness {
       // hard-link publish under which exactly one of several writers
       // racing to one batch id wins — Spark's default manager broke that
       // in 5-125 of 300 rounds (see NioCheckpointFileManager's header).
-      // Production checkpoints on HDFS/S3 keep Spark's default managers
-      // (the parent session is untouched).
+      // The live pipeline sets the same manager for its local
+      // checkpoints; checkpoints on HDFS/S3 keep Spark's default managers.
       child.conf.set("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.NioCheckpointFileManager")
       // INTERPRETED expression mode: a micro-batch's generated code embeds

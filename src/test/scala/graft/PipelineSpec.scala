@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.model.PageEventCodec
+import graft.model.{PageEvent, PageEventCodec}
 import graft.streaming.PageEventPipeline
 
 /** End-to-end topology smoke over emulated file topics: publish -> T1;
@@ -21,6 +24,198 @@ class PipelineSpec extends SparkSpec {
     val rows = PageEventCodec.fromWire(p.t1.batch(spark)).collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("name") == "PX")
+  }
+
+  test("publish writes toJSON's bytes without a Spark job, escapes included") {
+    val names = Seq("P1", "say \"hi\"", "back\\slash", "Zürich 日本 😀",
+      "ctl\u0001\n\t\u001f", "")
+    names.foreach { n =>
+      val ev = PageEvent(n, "U1", new java.sql.Timestamp(1754990000123L), 4242L)
+      val viaSpark = PageEventCodec.toWire(Seq(ev).toDF()).toJSON.collect()
+      assert(viaSpark.length == 1)
+      assert(PageEventCodec.wireLine(ev).getBytes(UTF_8).sameElements(
+        viaSpark.head.getBytes(UTF_8)), s"wire bytes differ for ${ev.name}")
+    }
+    // a null field is omitted, as toJSON omits it
+    val nameless = PageEvent(null, "U2", new java.sql.Timestamp(5L), 10L)
+    assert(PageEventCodec.wireLine(nameless) ==
+      PageEventCodec.toWire(Seq(nameless).toDF()).toJSON.collect().head)
+
+    // what publish lands on the topic: the echoed event's toJSON line
+    val root = tmpDir("topics")
+    val p = new PageEventPipeline(spark, root)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val echoed = try {
+      sc.setJobGroup("pipeline-spec-publish", "publish")
+      val evs = names.map(p.publish(_))
+      // a later job on the same thread: once the listener has seen it, it
+      // has seen every job the publishes started
+      sc.setJobGroup("pipeline-spec-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("pipeline-spec-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("pipeline-spec-sentinel"))
+      assert(!groups.contains("pipeline-spec-publish"), "publish ran a Spark job")
+      evs
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    val onWire = new java.io.File(root, p.t1.name).listFiles()
+      .filter(f => f.getName.endsWith(".json") && !f.getName.startsWith("."))
+      .flatMap(f => java.nio.file.Files.readAllLines(f.toPath, UTF_8).toArray)
+      .map(_.toString).toSet
+    assert(onWire == echoed.map(e =>
+      PageEventCodec.toWire(Seq(e).toDF()).toJSON.collect().head).toSet)
+    assert(PageEventCodec.fromWire(p.t1.batch(spark)).as[PageEvent]
+      .collect().toSet == echoed.toSet)
+  }
+
+  private def stateDirs(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+      .filter(_.forall(_.isDigit))
+
+  /** Hadoop checksum sidecars (`.<name>.crc`) in a checkpoint log dir. */
+  private def crcSidecars(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+      .filter(n => n.startsWith(".") && n.endsWith(".crc"))
+
+  test("a fresh startJob keeps one state partition") {
+    val p = new PageEventPipeline(spark, tmpDir("topics"))
+    val ckpt = tmpDir("ckpt")
+    p.t2.append(Seq(("P1", "U1", 10001L, 101L), ("P2", "U1", 14000L, 5000L),
+      ("P1", "U2", 17000L, 300L)).toDF("name", "user", "date", "duration"))
+    val job = p.startJob(ckpt)
+    try job.processAllAvailable() finally job.stop()
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4",
+      "the session keeps its own fan-out")
+    assert(stateDirs(s"$ckpt/job/state") == Set("0"))
+    assert(stateDirs(s"$ckpt/job/state/0") == Set("0"),
+      "the windowed count must keep exactly one state partition")
+    assert(p.t4.batch(spark)
+      .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
+      .as[(String, Long, Long)].collect().toSet ==
+      Set(("P1", 10L, 1L), ("P2", 10L, 1L), ("P1", 15L, 1L)))
+  }
+
+  test("startJob leaves the session conf as it was, also under concurrent starts") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    def scoped(s: org.apache.spark.sql.SparkSession) =
+      keys.map(k => k -> s.conf.getAll.get(k)).toMap
+    val before = scoped(spark)
+    assert(before("spark.sql.shuffle.partitions").contains("4"))
+    assert(before("spark.sql.streaming.checkpointFileManagerClass").isEmpty)
+
+    val pipes = Seq.fill(2)(new PageEventPipeline(spark, tmpDir("topics")))
+    val ckpts = Seq.fill(2)(tmpDir("ckpt"))
+    pipes.foreach(_.t2.append(Seq(("P1", "U1", 10001L, 101L))
+      .toDF("name", "user", "date", "duration")))
+    val gate = new java.util.concurrent.CyclicBarrier(2)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQuery]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = pipes.zip(ckpts).map { case (p, c) =>
+      new Thread(() => {
+        try { gate.await(); started.add(p.startJob(c)) }
+        catch { case e: Throwable => failures.add(e) }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    try {
+      assert(failures.isEmpty, s"startJob failed: $failures")
+      assert(scoped(spark) == before)
+      started.forEach(_.processAllAvailable())
+    } finally started.forEach(_.stop())
+    ckpts.foreach(c => assert(stateDirs(s"$c/job/state/0") == Set("0")))
+
+    // a key unset before is unset again
+    val bare = GraftSession.tune(spark.newSession())
+    bare.conf.unset("spark.sql.shuffle.partitions")
+    val unsetBefore = scoped(bare)
+    assert(unsetBefore.values.forall(_.isEmpty))
+    val job = new PageEventPipeline(bare, tmpDir("topics")).startJob(tmpDir("ckpt"))
+    job.stop()
+    assert(scoped(bare) == unsetBefore)
+  }
+
+  test("the live job checkpoints through NioCheckpointFileManager and restarts exactly") {
+    val p = new PageEventPipeline(spark, tmpDir("topics"))
+    val ckpt = tmpDir("ckpt")
+    def wire(rows: (String, String, Long, Long)*) =
+      p.t2.append(rows.toSeq.toDF("name", "user", "date", "duration"))
+    def logsClean(): Unit = Seq("offsets", "commits").foreach { log =>
+      assert(stateDirs(s"$ckpt/job/$log").nonEmpty, s"no $log written")
+      assert(crcSidecars(s"$ckpt/job/$log").isEmpty,
+        s"Hadoop .crc sidecars in $log: Spark's default manager wrote it")
+    }
+
+    wire(("P1", "U1", 10001L, 101L), ("P1", "U2", 12000L, 300L))
+    val job1 = p.startJob(ckpt)
+    try job1.processAllAvailable() finally job1.stop()
+    logsClean()
+
+    wire(("P1", "U1", 13000L, 400L), ("P2", "U1", 16000L, 200L))
+    val job2 = p.startJob(ckpt)
+    try job2.processAllAvailable() finally job2.stop()
+    logsClean()
+    val t4Final = p.t4.batch(spark)
+      .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
+      .as[(String, Long, Long)].collect().toSet
+    assert(t4Final == Set(("P1", 10L, 3L), ("P2", 15L, 1L)))
+  }
+
+  test("a 4-partition checkpoint from the earlier layout restarts with 4 partitions, exactly") {
+    val p = new PageEventPipeline(spark, tmpDir("topics"))
+    val ckpt = tmpDir("ckpt")
+    def wire(rows: (String, String, Long, Long)*) =
+      p.t2.append(rows.toSeq.toDF("name", "user", "date", "duration"))
+    def versions(part: String): Int =
+      new java.io.File(s"$ckpt/job/state/0/$part").list().length
+
+    // the job as it was started before it had its own state partitions:
+    // the session's fan-out (4) and Spark's default checkpoint manager
+    wire(("P1", "U1", 10001L, 101L), ("P1", "U2", 12000L, 300L))
+    val old = p.countsStream(PageEventCodec.fromWire(p.t2.stream(spark)))
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation", s"$ckpt/job")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val out = batch.persist()
+        try {
+          p.analytics.update(out, id)
+          p.t4.sinkBatch(out.select($"name", $"window_start", $"cnt"), id)
+        } finally out.unpersist()
+      }
+      .start()
+    try old.processAllAvailable() finally old.stop()
+    val parts = Set("0", "1", "2", "3")
+    assert(stateDirs(s"$ckpt/job/state/0") == parts)
+    assert(crcSidecars(s"$ckpt/job/offsets").nonEmpty,
+      "the fixture must be written by Spark's default manager")
+    val before = parts.map(q => q -> versions(q)).toMap
+
+    wire(("P1", "U1", 13000L, 400L), ("P2", "U1", 16000L, 200L))
+    val job = p.startJob(ckpt)
+    try job.processAllAvailable() finally job.stop()
+    assert(stateDirs(s"$ckpt/job/state/0") == parts)
+    parts.foreach { q =>
+      assert(versions(q) > before(q), s"partition $q got no new state version")
+    }
+    val t4Final = p.t4.batch(spark)
+      .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
+      .as[(String, Long, Long)].collect().toSet
+    assert(t4Final == Set(("P1", 10L, 3L), ("P2", 15L, 1L)))
+    assert(p.analytics.snapshot(14L) == Map("P1" -> 3L))
+    assert(p.analytics.snapshot(15L) == Map("P1" -> 3L, "P2" -> 1L))
+    p.restoreAnalytics()
+    assert(p.analytics.snapshot(15L) == Map("P1" -> 3L, "P2" -> 1L))
   }
 
   test("T2 -> job -> T4 + analytics, and snapshot restore from changelog") {
