@@ -12,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   * (`PageEventPipeline.startJob`) starts with one state partition, since
   * its stateful stage sees only (page, window) keys and a partition
   * costs a state store commit and a reduce task in every micro-batch.
+  *
+  * File listing stays on the driver (no parallel partition discovery): a
+  * session is one `local[n]` JVM, so a distributed listing job's tasks
+  * list the same filesystem from the same JVM and add only scheduling and
+  * a serialized Hadoop conf per task — paid in every trigger of a file
+  * stream over more than 32 files.
   */
 object GraftSession {
   /** The one `SparkSession` builder: every session in the repository —
@@ -35,6 +41,11 @@ object GraftSession {
       // the SparkConf
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // file indexes list on the driver (see the header); on the builder,
+      // for every session, because a file source reads the conf of the
+      // session that read the stream, not its query's cloned conf
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       // static conf (must be set before the first session; spark.conf.set
       // would throw): size the janino compiled-class cache to a many-query
       // session — the default 100 entries thrashes past ~50 queries and a

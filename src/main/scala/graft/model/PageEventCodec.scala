@@ -23,21 +23,37 @@ object PageEventCodec {
 
   private val json = new com.fasterxml.jackson.core.JsonFactory()
 
-  /** One event as its JSON wire line, serialized on the caller's thread:
-    * the bytes `toJSON` over [[toWire]] writes (Spark's JacksonGenerator is
-    * the same Jackson writer — schema field order, a null field omitted),
-    * without a Spark job.
+  /** One JSON object, serialized on the caller's thread by the Jackson
+    * writer Spark's JacksonGenerator wraps, so the line holds the bytes
+    * `toJSON` and `df.write.json` write for the same row (schema field
+    * order, a null field omitted), without a Spark job.
     */
-  def wireLine(ev: PageEvent): String = {
+  private def line(fields: com.fasterxml.jackson.core.JsonGenerator => Unit): String = {
     val out = new java.io.StringWriter()
     val g = json.createGenerator(out)
     g.writeStartObject()
+    fields(g)
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
+
+  /** One event as its JSON wire line: what `toJSON` over [[toWire]]
+    * writes.
+    */
+  def wireLine(ev: PageEvent): String = line { g =>
     if (ev.name != null) g.writeStringField("name", ev.name)
     if (ev.user != null) g.writeStringField("user", ev.user)
     if (ev.date != null) g.writeNumberField("date", ev.date.getTime)
     g.writeNumberField("duration", ev.duration)
-    g.writeEndObject()
-    g.close()
-    out.toString
+  }
+
+  /** One T4 refinement `(name, window_start, cnt)` as its JSON wire line:
+    * what `df.write.json` writes for the row.
+    */
+  def countLine(name: String, windowStart: Long, cnt: Long): String = line { g =>
+    if (name != null) g.writeStringField("name", name)
+    g.writeNumberField("window_start", windowStart)
+    g.writeNumberField("cnt", cnt)
   }
 }

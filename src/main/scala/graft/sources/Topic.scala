@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -47,64 +48,100 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
   val dir = s"$root/$name"
   new java.io.File(dir).mkdirs()
 
-  /** Producer-side serialization (optimization round 20, guide §1.2 —
-    * the publish choreography was the replay harnesses' dominant harness-
-    * lane cost). A wire append is a PRODUCER act: rows originate at the
-    * client and are written to the transport — KafkaProducer.send's
-    * shape, and the reference's own producer is a driver-side supplier
-    * loop (5 events/s). The previous implementation routed every append
-    * through a distributed write job (task commit + job commit + temp-dir
-    * rename per wave, ~150-180 ms each; ~280 waves per bench run); the
-    * JSON wire now serializes via `toJSON` (the SAME JacksonGenerator the
-    * json datasource writes with — byte-identical lines) and lands as one
-    * file through the Hadoop FS API, dot-tmp + rename so readers never
-    * see a partial file (~60-70 ms, ProbePublish). Consumer-scale data
-    * does NOT flow through here — the distributed, per-batch-idempotent
-    * [[sinkBatch]] is the high-volume writer, and non-JSON wires (the
-    * Avro binary transport) keep the distributed write path.
+  /** Driver-side writers (optimization round 20, guide §1.2 — the publish
+    * choreography was the replay harnesses' dominant harness-lane cost).
+    * A wire append is a PRODUCER act: rows originate at the client and are
+    * written to the transport — KafkaProducer.send's shape, and the
+    * reference's own producer is a driver-side supplier loop (5
+    * events/s). Routing every append through a distributed write job cost
+    * a task commit + job commit + temp-dir rename per wave (~150-180 ms
+    * each; ~280 waves per bench run); the JSON wire instead lands as one
+    * file through the Hadoop FS API, dot-tmp + rename so readers never see
+    * a partial file (~60-70 ms, ProbePublish). The live job's T4 sink
+    * takes the same path ([[sinkLines]]): its rows are the at most
+    * pages x live windows refinements the Analytics update collects
+    * anyway, so a write job, its output committer and a second pass over
+    * the batch would buy nothing. The distributed, per-batch-idempotent
+    * [[sinkBatch]] stays the writer for data that lives on the executors
+    * (the supplier, the replay harnesses), and non-JSON wires (the Avro
+    * binary transport) keep the distributed write path.
     */
   private val appendSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** True when this topic's wire is the JSON line format — the
-    * precondition for [[appendLines]] (a caller holding pre-serialized
-    * lines must not write them to a binary wire).
+    * precondition for [[appendLines]] and [[sinkLines]] (a caller holding
+    * pre-serialized lines must not write them to a binary wire).
     */
   private[graft] def jsonWire: Boolean = wireFormat == "json"
+
+  /** The Hadoop FS of `path`, resolved through `session`'s Hadoop conf as
+    * Spark's own writers resolve it (`sessionState.newHadoopConf()`: the
+    * context's conf plus the session's SQL conf, so session-scoped fs.*
+    * settings hold); with no session, a bare Configuration still resolves
+    * local paths. On a local root that FS is the spawn-free
+    * [[graft.io.NioLocalFileSystem]] every `GraftSession.builder` session
+    * registers; its `.crc` sidecars are dot-files, which the file source
+    * skips like the dot-tmp.
+    */
+  private def fileSystem(path: Path, session: Option[SparkSession]): FileSystem =
+    path.getFileSystem(session.map(_.sessionState.newHadoopConf())
+      .getOrElse(new org.apache.hadoop.conf.Configuration()))
+
+  /** `lines` as the file `name` in `parent`: written as a dot-tmp, then
+    * renamed, so a reader listing `parent` never sees a partial file.
+    */
+  private def writeLines(fs: FileSystem, parent: Path, name: String,
+                         lines: Iterable[String]): Unit = {
+    val dst = new Path(parent, name)
+    val tmp = new Path(parent, s".$name.tmp")
+    val out = fs.create(tmp, true)
+    try lines.foreach { l =>
+      out.write(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.write('\n')
+    } finally out.close()
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"rename $tmp -> $dst failed")
+  }
 
   /** Append pre-serialized JSON lines as one wire file. The lines must be
     * this schema's `to_json`/`toJSON` output (same JacksonGenerator as
     * the json datasource — byte-identical to what the write-job path
     * produced). An empty wave writes no file, matching the write-job
     * path, where an empty dataframe produced no part file (and no source
-    * trigger). One write path for every root: the Hadoop FS resolved from
-    * the path, dot-tmp + rename so a streaming reader never lists a
-    * partial file. On a local root that FS is the spawn-free
-    * [[graft.io.NioLocalFileSystem]] every `GraftSession.builder` session
-    * registers; its `.crc` sidecars are dot-files, which the file source
-    * skips like the dot-tmp. The FS resolves through `session`'s hadoop
-    * conf (non-local roots need its fs.* settings); with no session, a
-    * bare Configuration still resolves local paths.
+    * trigger). The FS resolves through `session` (non-local roots need
+    * its fs.* settings).
     */
   private[graft] def appendLines(
       lines: Iterable[String],
       session: Option[SparkSession] = SparkSession.getActiveSession): Unit =
     if (lines.nonEmpty) {
       require(jsonWire, s"appendLines on a $wireFormat wire")
-      val name =
-        f"part-${appendSeq.incrementAndGet()}%06d-${System.nanoTime()}.json"
-      val dst = new org.apache.hadoop.fs.Path(dir, name)
-      val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-      val fs = dst.getFileSystem(session
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration()))
-      val out = fs.create(tmp, true)
-      try lines.foreach { l =>
-        out.write(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.write('\n')
-      } finally out.close()
-      if (!fs.rename(tmp, dst))
-        throw new java.io.IOException(s"append rename $tmp -> $dst failed")
+      val parent = new Path(dir)
+      writeLines(fileSystem(parent, session), parent,
+        f"part-${appendSeq.incrementAndGet()}%06d-${System.nanoTime()}.json",
+        lines)
     }
+
+  /** [[sinkBatch]] for pre-serialized JSON lines, written on the calling
+    * thread: the lines (this schema's `df.write.json` output, e.g.
+    * `PageEventCodec.countLine`) go to one part file in the batch
+    * directory, then the `_SUCCESS` marker, under sinkBatch's per-batchId
+    * contract — an existing marker means the batch landed and a replay is
+    * skipped; a directory without one is a crash's partial write and is
+    * replaced. An empty batch commits a marker and no part file.
+    */
+  private[graft] def sinkLines(lines: Iterable[String], batchId: Long,
+                               session: SparkSession): Unit = {
+    require(jsonWire, s"sinkLines on a $wireFormat wire")
+    val path = new Path(s"$dir/batch-$batchId")
+    val marker = new Path(path, "_SUCCESS")
+    val fs = fileSystem(path, Some(session))
+    if (!fs.exists(marker)) {
+      fs.delete(path, true)
+      if (lines.nonEmpty) writeLines(fs, path, "part-00000.json", lines)
+      fs.create(marker, true).close()
+    }
+  }
 
   override def append(df: DataFrame): Unit =
     if (jsonWire) appendLines(df.toJSON.collect())
@@ -120,7 +157,7 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     */
   override def sinkBatch(df: DataFrame, batchId: Long): Unit = {
     val path = s"$dir/batch-$batchId"
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
+    val marker = new Path(s"$path/_SUCCESS")
     val fs = marker.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker))

@@ -38,10 +38,16 @@ final class Analytics(keyCol: String = "event_type",
   /** foreachBatch hook: upsert this micro-batch's refinements, then evict
     * windows that fell out of retention.
     */
-  def update(batch: DataFrame, batchId: Long): Unit = {
-    batch.select(keyCol, "window_start", "cnt").collect().foreach { r =>
-      val ws = r.getLong(1)
-      store.put((r.getString(0), ws), r.getLong(2))
+  def update(batch: DataFrame, batchId: Long): Unit =
+    upsert(batch.select(keyCol, "window_start", "cnt").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
+
+  /** [[update]] from refinements `(key, window_start, cnt)` already on the
+    * driver.
+    */
+  def upsert(rows: Iterable[(String, Long, Long)]): Unit = {
+    rows.foreach { case (key, ws, cnt) =>
+      store.put((key, ws), cnt)
       if (ws > maxWs) maxWs = ws
     }
     val horizon = maxWs - retentionSec

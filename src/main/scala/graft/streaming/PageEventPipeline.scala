@@ -29,7 +29,7 @@ final class PageEventPipeline(spark: SparkSession, root: String,
   // (String, Long) after the window-unwrap map (PageEventHandler.java:57);
   // we retain window_start so the Analytics snapshot can be rebuilt from the
   // topic after a restart (SURVEY.md §7.4.2).
-  val t4: Topic = new FileTopic(Topics.T4,
+  val t4: FileTopic = new FileTopic(Topics.T4,
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.LongType),
@@ -87,11 +87,14 @@ final class PageEventPipeline(spark: SparkSession, root: String,
     * Update output mode = the KTable changelog (SURVEY.md §2.1 #10); each
     * micro-batch's refinements go to the T4 topic and the snapshot store.
     *
-    * Serve before sink: the snapshot store is updated first, so the first
-    * action on the persisted batch (the Analytics collect) runs the
-    * stateful stage and a refinement is visible without waiting for the
-    * T4 write job and its commit protocol — as the reference's interactive
-    * query reads the window store before the changelog commit. A crash
+    * The count's collect is the micro-batch's only Spark job: it brings the
+    * batch's refinements (at most pages x live windows rows) to the
+    * driver, and both sinks are fed from those rows. Serve before sink:
+    * the snapshot store is updated first, so a refinement is visible
+    * without waiting for the T4 write — as the reference's interactive
+    * query reads the window store before the changelog commit. T4 is then
+    * written on the driver as one JSON-lines file per batch
+    * ([[FileTopic.sinkLines]], the bytes `df.write.json` writes). A crash
     * between the two re-runs the uncommitted batch on restart: the store
     * upsert is idempotent, T4 stays per-batchId idempotent, and
     * `restoreAnalytics` still rebuilds the store from T4. A `stop()` that
@@ -111,13 +114,13 @@ final class PageEventPipeline(spark: SparkSession, root: String,
         .outputMode("update")
         .trigger(Trigger.ProcessingTime("1 second"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          val out = batch.persist()
-          try {
-            analytics.update(out, id)
-            PageEventPipeline.completeDespiteStop(spark) {
-              t4.sinkBatch(out.select(col("name"), col("window_start"), col("cnt")), id)
-            }
-          } finally out.unpersist()
+          val rows = batch.select(col("name"), col("window_start"), col("cnt"))
+            .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+          analytics.upsert(rows)
+          PageEventPipeline.completeDespiteStop {
+            t4.sinkLines(rows.map { case (n, w, c) => PageEventCodec.countLine(n, w, c) },
+              id, spark)
+          }
         }
     }
 
@@ -193,21 +196,16 @@ object PageEventPipeline {
   }
 
   /** Runs a sink write to completion even when its query is stopped
-    * meanwhile. `StreamingQuery.stop()` cancels the query's job group and
-    * interrupts the stream thread, which aborts a write in flight; after
-    * serve-before-sink that would leave a refinement the store already
-    * served missing from T4 until the next restart. The write runs on its
-    * own thread, in a job group of its own (the thread inherits the
-    * batch's other local properties), and the stream thread waits it out
-    * through interrupts, then restores its interrupt status so the stop
-    * proceeds. A failing write still fails the batch.
+    * meanwhile. `StreamingQuery.stop()` interrupts the stream thread, which
+    * aborts a write in flight on a filesystem whose I/O is interruptible
+    * (the HDFS client's, for one); after serve-before-sink that would leave
+    * a refinement the store already served missing from T4 until the next
+    * restart. The write runs on its own thread, and the stream thread
+    * waits it out through interrupts, then restores its interrupt status
+    * so the stop proceeds. A failing write still fails the batch.
     */
-  private def completeDespiteStop(spark: SparkSession)(write: => Unit): Unit = {
-    val task = new java.util.concurrent.FutureTask[Unit](() => {
-      spark.sparkContext.setJobGroup("graft-sink", "sink write",
-        interruptOnCancel = false)
-      write
-    })
+  private def completeDespiteStop(write: => Unit): Unit = {
+    val task = new java.util.concurrent.FutureTask[Unit](() => write)
     val thread = new Thread(task, "graft-sink")
     thread.setDaemon(true)
     thread.start()

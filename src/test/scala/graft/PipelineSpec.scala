@@ -476,44 +476,180 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("stop() during the T4 write leaves T4 holding what the store served") {
-    // stop() cancels the query's jobs and interrupts its thread; with the
-    // store updated first, a T4 write aborted by it would leave served
-    // refinements out of T4 until a restart
+    // stop() interrupts the query's thread; with the store updated first, a
+    // T4 write aborted by it would leave served refinements out of T4
+    // until a restart. T4 is written on the driver, so the job runs on a
+    // session whose `file:` FS parks the T4 write until the stop has
+    // landed, then fails it if the writing thread was interrupted, as an
+    // interruptible (remote) FS client would
+    val session = GraftSession.child(spark)
+    session.conf.set("fs.file.impl", classOf[PipelineSpec.ParkingFs].getName)
+    session.conf.set("fs.file.impl.disable.cache", "true")
     val root = tmpDir("topics")
-    val p = new PageEventPipeline(spark, root)
+    val ckpt = tmpDir("ckpt")
+    val p = new PageEventPipeline(session, root)
     p.t2.append(Seq(
       ("P1", "U1", 10001L, 101L), ("P1", "U2", 12000L, 300L),
       ("P2", "U1", 14000L, 5000L)).toDF("name", "user", "date", "duration"))
     val job = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.streaming.StreamingQuery]()
     val stopper = new java.util.concurrent.atomic.AtomicReference[Thread]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-              if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelation") &&
-                x.physicalPlanDescription.contains(s"$root/${p.t4.name}") =>
-            val t = new Thread(() => {
-              while (job.get == null) Thread.sleep(1)
-              job.get.stop()
-            })
-            if (stopper.compareAndSet(null, t)) t.start()
-          case _ => ()
+    // what the store served and whether the batch was committed, as the
+    // T4 write began
+    val atWrite = new java.util.concurrent.atomic.AtomicReference[(Map[String, Long], Boolean)]()
+    PipelineSpec.onCreate.set { path =>
+      if (path.toString.contains(s"$root/${p.t4.name}/batch-") &&
+          atWrite.compareAndSet(null, (p.analytics.snapshot(14L),
+            new java.io.File(s"$ckpt/job/commits/0").exists()))) {
+        val t = new Thread(() => {
+          while (job.get == null) Thread.sleep(1)
+          job.get.stop()
+        })
+        stopper.set(t)
+        t.start()
+        try {
+          // stop() marks the query inactive, then interrupts its thread
+          while (job.get == null || job.get.isActive) Thread.sleep(1)
+          Thread.sleep(300)
+        } catch {
+          case _: InterruptedException =>
+            throw new java.io.InterruptedIOException("T4 write interrupted")
         }
+      }
     }
-    spark.sparkContext.addSparkListener(listener)
     try {
-      job.set(p.startJob(tmpDir("ckpt")))
+      job.set(p.startJob(ckpt))
       job.get.awaitTermination(60000)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally PipelineSpec.onCreate.set(_ => ())
     assert(stopper.get != null, "the T4 write never started")
     stopper.get.join()
+    assert(atWrite.get == ((Map("P1" -> 2L, "P2" -> 1L), false)),
+      s"the stop must land after the store update, before the commit: ${atWrite.get}")
     assert(job.get.exception.isEmpty, s"stop must not fail the job: ${job.get.exception}")
     assert(p.analytics.snapshot(14L) == Map("P1" -> 2L, "P2" -> 1L))
     val t4 = p.t4.batch(spark)
       .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
       .as[(String, Long, Long)].collect().toSet
     assert(t4 == Set(("P1", 10L, 2L), ("P2", 10L, 1L)))
+  }
+
+  test("T4 lines written on the driver are df.write.json's bytes, read back exactly") {
+    val rows = Seq[(String, Long, Long)](("P1", 10L, 2L), ("say \"hi\"", 15L, 1L),
+      ("back\\slash", 20L, 3L), ("Zürich 日本 😀", 25L, 4L),
+      ("ctl\u0001\n\t\u001f", 30L, 5L), ("", 35L, 6L), (null, 40L, 7L))
+    def partBytes(dir: String): Seq[Byte] =
+      new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+        .sortBy(_.getName)
+        .flatMap(f => java.nio.file.Files.readAllBytes(f.toPath)).toSeq
+    val viaSpark = s"${tmpDir("t4json")}/out"
+    rows.toDF("name", "window_start", "cnt").coalesce(1).write.json(viaSpark)
+
+    val root = tmpDir("topics")
+    val p = new PageEventPipeline(spark, root)
+    p.t4.sinkLines(rows.map { case (n, w, c) => PageEventCodec.countLine(n, w, c) }, 0L, spark)
+    val batch0 = s"$root/${p.t4.name}/batch-0"
+    assert(partBytes(batch0).nonEmpty)
+    assert(partBytes(batch0) == partBytes(viaSpark), "T4 bytes differ from df.write.json")
+    assert(new java.io.File(batch0, "_SUCCESS").exists())
+    assert(p.t4.batch(spark).as[(String, Long, Long)].collect().sortBy(_._2).toSeq == rows)
+  }
+
+  test("sinkLines keeps sinkBatch's contract: a replay is skipped, a partial batch repaired") {
+    val root = tmpDir("topics")
+    val p = new PageEventPipeline(spark, root)
+    def lines(rows: (String, Long, Long)*) =
+      rows.map { case (n, w, c) => PageEventCodec.countLine(n, w, c) }
+    def t4() = p.t4.batch(spark).as[(String, Long, Long)].collect().toSet
+    val good = lines(("P1", 10L, 2L), ("P2", 10L, 1L))
+    p.t4.sinkLines(good, 3L, spark)
+    assert(t4() == Set(("P1", 10L, 2L), ("P2", 10L, 1L)))
+    // recovery re-delivers the same batchId: skipped, even with other lines
+    p.t4.sinkLines(lines(("P1", 10L, 9L)), 3L, spark)
+    assert(t4() == Set(("P1", 10L, 2L), ("P2", 10L, 1L)),
+      "a replayed batch must not be written again")
+
+    // a crash's partial batch: no marker, a torn part file and a stray one
+    val dir = new java.io.File(s"$root/${p.t4.name}/batch-3")
+    assert(new java.io.File(dir, "_SUCCESS").delete(), "fixture setup")
+    val part = dir.listFiles().filter(_.getName.endsWith(".json"))
+    assert(part.length == 1, "fixture setup")
+    java.nio.file.Files.write(part.head.toPath,
+      good.head.take(10).getBytes(UTF_8))
+    java.nio.file.Files.write(new java.io.File(dir, "part-99999.json").toPath,
+      (good.head + "\n").getBytes(UTF_8))
+    p.t4.sinkLines(good, 3L, spark)
+    assert(t4() == Set(("P1", 10L, 2L), ("P2", 10L, 1L)),
+      "the partial batch must be replaced by the redelivered one")
+    assert(dir.listFiles().map(_.getName).filterNot(_.startsWith(".")).toSet ==
+      Set("part-00000.json", "_SUCCESS"))
+    // a new batch still lands; an empty one commits a marker only
+    p.t4.sinkLines(lines(("P1", 15L, 1L)), 4L, spark)
+    p.t4.sinkLines(Nil, 5L, spark)
+    assert(t4() == Set(("P1", 10L, 2L), ("P2", 10L, 1L), ("P1", 15L, 1L)))
+    assert(new java.io.File(s"$root/${p.t4.name}/batch-5/_SUCCESS").exists())
+  }
+
+  /** Descriptions of the Spark jobs `body` starts on this context. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // a later job: once the listener has seen it, it has seen the others
+      sc.setJobDescription("pipeline-spec-sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("pipeline-spec-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("pipeline-spec-sentinel"))
+    } finally { sc.setJobDescription(null); sc.removeSparkListener(listener) }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  private def listingJobs(ds: Seq[String]) = ds.filter(_.startsWith("Listing leaf files"))
+
+  test("a trigger over more than 32 files and restoreAnalytics over 40 T4 batches run no listing job") {
+    val root = tmpDir("topics")
+    val p = new PageEventPipeline(spark, root)
+    val t2 = p.t2.asInstanceOf[graft.sources.FileTopic]
+    (0 until 40).foreach { i =>
+      t2.appendLines(Seq(PageEventCodec.wireLine(
+        PageEvent("P1", "U1", new java.sql.Timestamp(10000L + i * 100L), 500L))), Some(spark))
+    }
+    val job = p.startJob(tmpDir("ckpt"))
+    val onStream = jobDescriptions {
+      try job.processAllAvailable() finally job.stop()
+    }
+    assert(job.recentProgress.map(_.numInputRows).toSeq.filter(_ > 0) == Seq(40L),
+      "the 40 files must arrive in one trigger")
+    assert(p.analytics.snapshot(10L) == Map("P1" -> 40L))
+    assert(listingJobs(onStream).isEmpty, s"listing jobs: ${listingJobs(onStream)}")
+
+    (0 until 40).foreach { i =>
+      p.t4.sinkLines(Seq(PageEventCodec.countLine("Q", i * 5L, i + 1L)), 100L + i, spark)
+    }
+    val onRestore = jobDescriptions(p.restoreAnalytics())
+    assert(listingJobs(onRestore).isEmpty, s"listing jobs: ${listingJobs(onRestore)}")
+    assert(p.analytics.snapshot(195L, 0L) == Map("Q" -> 40L))
+
+    // control: at Spark's default threshold the same reads list with a job
+    val child = GraftSession.child(spark)
+    child.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+    val control = jobDescriptions {
+      val q = p.t2.stream(child).writeStream
+        .foreachBatch((_: DataFrame, _: Long) => ())
+        .option("checkpointLocation", tmpDir("ckptC")).start()
+      try q.processAllAvailable() finally q.stop()
+      p.t4.batch(child).count()
+    }
+    assert(listingJobs(control).size >= 2, s"control saw no listing job: $control")
   }
 
   test("sinkBatch is idempotent when foreachBatch replays a micro-batch") {
@@ -565,5 +701,25 @@ class PipelineSpec extends SparkSpec {
       !col("user").isin("U1", "U2") ||
       col("duration") < 10 || col("duration") > 10009).count()
     assert(bad == 0)
+  }
+}
+
+object PipelineSpec {
+  /** Called with the path of every file a [[ParkingFs]] creates. */
+  val onCreate = new java.util.concurrent.atomic.AtomicReference[
+    org.apache.hadoop.fs.Path => Unit](_ => ())
+
+  /** The `file:` FS with a hook on file creation, for a session that sets
+    * it as `fs.file.impl` (with the FS cache off for the scheme).
+    */
+  class ParkingFs extends graft.io.NioLocalFileSystem {
+    override def create(f: org.apache.hadoop.fs.Path,
+                        permission: org.apache.hadoop.fs.permission.FsPermission,
+                        overwrite: Boolean, bufferSize: Int, replication: Short,
+                        blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+        : org.apache.hadoop.fs.FSDataOutputStream = {
+      onCreate.get()(f)
+      super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    }
   }
 }
