@@ -910,7 +910,7 @@ object EventSuite {
         |       count(*) AS cnt
         |FROM events WHERE value > 100 GROUP BY 1, 2""".stripMargin,
     // the production-source execution (FileTopic readStream -> pipeline ->
-    // Topic.sinkBatch, with a mid-stream consumer restart) must converge
+    // FileTopic.sinkBatch, with a mid-stream consumer restart) must converge
     // to the identical batch answer: same oracle as page_counts
     "stream_topic_counts" ->
       """SELECT event_type,

@@ -33,23 +33,18 @@ object Generator {
     * /publish builds a single event and StreamBridge.sends it). Returns the
     * event it published, like the endpoint echoes it.
     *
-    * A JSON file topic gets the event serialized on this thread
-    * ([[PageEventCodec.wireLine]]), so a publish runs no Spark job beside
-    * the micro-batches; any other topic gets a one-row append.
+    * The event is serialized on this thread ([[PageEventCodec.wireLine]])
+    * and appended to the topic's JSON wire, so a publish runs no Spark job
+    * beside the micro-batches; a topic on another wire refuses it.
     */
-  def publish(spark: SparkSession, topic: Topic, name: String,
+  def publish(spark: SparkSession, topic: FileTopic, name: String,
               rng: java.util.Random = new java.util.Random()): PageEvent = {
-    import spark.implicits._
     val ev = PageEvent(
       name = name,
       user = s"U${1 + rng.nextInt(2)}",
       date = new java.sql.Timestamp(System.currentTimeMillis()),
       duration = 10L + rng.nextInt(1000))
-    topic match {
-      case f: FileTopic if f.jsonWire =>
-        f.appendLines(Seq(PageEventCodec.wireLine(ev)), Some(spark))
-      case _ => topic.append(PageEventCodec.toWire(Seq(ev).toDS().toDF()))
-    }
+    topic.appendLines(Seq(PageEventCodec.wireLine(ev)), spark)
     ev
   }
 }

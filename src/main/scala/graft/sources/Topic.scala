@@ -10,41 +10,17 @@ import org.apache.spark.sql.types.StructType
   * No spark-sql-kafka connector jar ships in /opt/spark/jars (SURVEY.md
   * §7.1), so transport is a directory of JSON files: append-only and
   * replayable-by-offset — the two properties a Structured Streaming source
-  * needs — with the reference's exact JSON wire format on disk. The operator
-  * layer never sees the transport: swap `FileTopic` for a `format("kafka")`
-  * reader/writer behind the same trait in a connector-present deployment.
-  */
-trait Topic {
-  def name: String
-  def schema: StructType
-
-  /** Producer side (≙ KafkaProducer / StreamBridge.send). */
-  def append(df: DataFrame): Unit
-
-  /** Streaming consumer side (≙ KStream source). */
-  def stream(spark: SparkSession): DataFrame
-
-  /** Batch view of everything published so far (for parity tests / oracles). */
-  def batch(spark: SparkSession): DataFrame
-
-  /** Streaming sink side: write each micro-batch of a query to this topic.
-    * Implementations MUST be idempotent per batchId: foreachBatch
-    * re-delivers a batch after recovery, and at-least-once appends would
-    * show duplicates to every downstream consumer. Deliberately abstract —
-    * a default that appended would silently violate the contract for any
-    * implementation that forgot to override it.
-    */
-  def sinkBatch(df: DataFrame, batchId: Long): Unit
-}
-
-/** @param wireFormat any file-based datasource name or FileFormat class —
+  * needs — with the reference's exact JSON wire format on disk. A
+  * connector-present deployment would put a `format("kafka")`
+  * reader/writer behind this class's methods.
+  *
+  * @param wireFormat any file-based datasource name or FileFormat class —
   *   "json" (default; the reference's human-readable wire) or e.g. the
   *   Avro FileFormat for a compact binary wire. The operator layer is
-  *   identical either way; that indifference is the Topic contract.
+  *   identical either way.
   */
 final class FileTopic(val name: String, val schema: StructType, root: String,
-                      wireFormat: String = "json")
-    extends Topic {
+                      wireFormat: String = "json") {
   val dir = s"$root/$name"
   new java.io.File(dir).mkdirs()
 
@@ -59,12 +35,13 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     * file through the Hadoop FS API, dot-tmp + rename so readers never see
     * a partial file (~60-70 ms, ProbePublish). The live job's T4 sink
     * takes the same path ([[sinkLines]]): its rows are the at most
-    * pages x live windows refinements the Analytics update collects
-    * anyway, so a write job, its output committer and a second pass over
-    * the batch would buy nothing. The distributed, per-batch-idempotent
-    * [[sinkBatch]] stays the writer for data that lives on the executors
-    * (the supplier, the replay harnesses), and non-JSON wires (the Avro
-    * binary transport) keep the distributed write path.
+    * pages x live windows refinements the job collects for its Analytics
+    * update anyway, so a write job, its output committer and a second
+    * pass over the batch would buy nothing. The distributed,
+    * per-batch-idempotent [[sinkBatch]] stays the writer for data that
+    * lives on the executors (the supplier, the replay harnesses), and
+    * non-JSON wires (the Avro binary transport) keep the distributed
+    * write path.
     */
   private val appendSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -77,15 +54,14 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
   /** The Hadoop FS of `path`, resolved through `session`'s Hadoop conf as
     * Spark's own writers resolve it (`sessionState.newHadoopConf()`: the
     * context's conf plus the session's SQL conf, so session-scoped fs.*
-    * settings hold); with no session, a bare Configuration still resolves
-    * local paths. On a local root that FS is the spawn-free
-    * [[graft.io.NioLocalFileSystem]] every `GraftSession.builder` session
-    * registers; its `.crc` sidecars are dot-files, which the file source
-    * skips like the dot-tmp.
+    * settings hold). Every FS access of this class goes through here, with
+    * the session the data belongs to. On a local root that FS is the
+    * spawn-free [[graft.io.NioLocalFileSystem]] every
+    * `GraftSession.builder` session registers; its `.crc` sidecars are
+    * dot-files, which the file source skips like the dot-tmp.
     */
-  private def fileSystem(path: Path, session: Option[SparkSession]): FileSystem =
-    path.getFileSystem(session.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration()))
+  private def fileSystem(path: Path, session: SparkSession): FileSystem =
+    path.getFileSystem(session.sessionState.newHadoopConf())
 
   /** `lines` as the file `name` in `parent`: written as a dot-tmp, then
     * renamed, so a reader listing `parent` never sees a partial file.
@@ -111,9 +87,8 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     * trigger). The FS resolves through `session` (non-local roots need
     * its fs.* settings).
     */
-  private[graft] def appendLines(
-      lines: Iterable[String],
-      session: Option[SparkSession] = SparkSession.getActiveSession): Unit =
+  private[graft] def appendLines(lines: Iterable[String],
+                                 session: SparkSession): Unit =
     if (lines.nonEmpty) {
       require(jsonWire, s"appendLines on a $wireFormat wire")
       val parent = new Path(dir)
@@ -135,7 +110,7 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     require(jsonWire, s"sinkLines on a $wireFormat wire")
     val path = new Path(s"$dir/batch-$batchId")
     val marker = new Path(path, "_SUCCESS")
-    val fs = fileSystem(path, Some(session))
+    val fs = fileSystem(path, session)
     if (!fs.exists(marker)) {
       fs.delete(path, true)
       if (lines.nonEmpty) writeLines(fs, path, "part-00000.json", lines)
@@ -143,28 +118,33 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
     }
   }
 
-  override def append(df: DataFrame): Unit =
-    if (jsonWire) appendLines(df.toJSON.collect())
+  /** Producer side (≙ KafkaProducer / StreamBridge.send), on the FS of
+    * `df`'s session.
+    */
+  def append(df: DataFrame): Unit =
+    if (jsonWire) appendLines(df.toJSON.collect(), df.sparkSession)
     else df.write.mode("append").format(wireFormat).save(dir)
 
-  /** Exactly-once under foreachBatch replay: each micro-batch lands in a
-    * batchId-named subpath. A replayed batchId whose _SUCCESS marker exists
-    * is skipped; a partial dir from a crash (no marker) is overwritten.
-    * The marker check goes through the Hadoop FileSystem resolved from the
-    * path — java.io.File would silently report "absent" for every
-    * non-local root (hdfs://, s3a://), turning the skip into dead code on
-    * exactly the deployments the Topic swap point is for.
+  /** Streaming sink side: write micro-batch `batchId` of a query to this
+    * topic, exactly once under foreachBatch replay. foreachBatch
+    * re-delivers a batch after recovery, and at-least-once appends would
+    * show duplicates to every downstream consumer, so each micro-batch
+    * lands in a batchId-named subpath: a replayed batchId whose _SUCCESS
+    * marker exists is skipped; a partial dir from a crash (no marker) is
+    * overwritten. The marker check goes through the Hadoop FileSystem of
+    * `df`'s session — java.io.File would silently report "absent" for
+    * every non-local root (hdfs://, s3a://), turning the skip into dead
+    * code on exactly the deployments a connector swap is for.
     */
-  override def sinkBatch(df: DataFrame, batchId: Long): Unit = {
+  def sinkBatch(df: DataFrame, batchId: Long): Unit = {
     val path = s"$dir/batch-$batchId"
     val marker = new Path(s"$path/_SUCCESS")
-    val fs = marker.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker))
+    if (!fileSystem(marker, df.sparkSession).exists(marker))
       df.write.mode("overwrite").format(wireFormat).save(path)
   }
 
-  override def stream(spark: SparkSession): DataFrame =
+  /** Streaming consumer side (≙ KStream source). */
+  def stream(spark: SparkSession): DataFrame =
     spark.readStream.schema(schema)
       // bound per-trigger work so a large backlog replays incrementally
       // instead of as one giant first micro-batch
@@ -173,7 +153,8 @@ final class FileTopic(val name: String, val schema: StructType, root: String,
       .option("recursiveFileLookup", "true")
       .format(wireFormat).load(dir)
 
-  override def batch(spark: SparkSession): DataFrame =
+  /** Batch view of everything published so far (for parity tests / oracles). */
+  def batch(spark: SparkSession): DataFrame =
     spark.read.schema(schema)
       .option("recursiveFileLookup", "true")
       .format(wireFormat).load(dir)

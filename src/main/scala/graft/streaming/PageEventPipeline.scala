@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 
 import graft.model.{PageEvent, PageEventCodec}
 import graft.operators.PageViews
-import graft.sources.{FileTopic, Generator, Topic, Topics}
+import graft.sources.{FileTopic, Generator, Topics}
 
 /** The full reference topology over emulated topics (SURVEY.md §3):
   *
@@ -23,8 +23,8 @@ final class PageEventPipeline(spark: SparkSession, root: String,
                               watermark: String = "10 seconds") {
   import graft.model.PageEvent.wireSchema
 
-  val t1: Topic = new FileTopic(Topics.T1, wireSchema, root)
-  val t2: Topic = new FileTopic(Topics.T2, wireSchema, root)
+  val t1: FileTopic = new FileTopic(Topics.T1, wireSchema, root)
+  val t2: FileTopic = new FileTopic(Topics.T2, wireSchema, root)
   // T4 wire: (name String, window_start Long, cnt Long) — the reference emits
   // (String, Long) after the window-unwrap map (PageEventHandler.java:57);
   // we retain window_start so the Analytics snapshot can be rebuilt from the
@@ -39,7 +39,7 @@ final class PageEventPipeline(spark: SparkSession, root: String,
   val analytics = new Analytics(keyCol = "name")
 
   /** Entry point A ingest: one event to a named topic. */
-  def publish(name: String, topic: Topic = t1): PageEvent =
+  def publish(name: String, topic: FileTopic = t1): PageEvent =
     Generator.publish(spark, topic, name)
 
   /** Entry point A consumer: console printer with the reference's
@@ -89,18 +89,16 @@ final class PageEventPipeline(spark: SparkSession, root: String,
     *
     * The count's collect is the micro-batch's only Spark job: it brings the
     * batch's refinements (at most pages x live windows rows) to the
-    * driver, and both sinks are fed from those rows. Serve before sink:
-    * the snapshot store is updated first, so a refinement is visible
-    * without waiting for the T4 write — as the reference's interactive
-    * query reads the window store before the changelog commit. T4 is then
-    * written on the driver as one JSON-lines file per batch
-    * ([[FileTopic.sinkLines]], the bytes `df.write.json` writes). A crash
-    * between the two re-runs the uncommitted batch on restart: the store
-    * upsert is idempotent, T4 stays per-batchId idempotent, and
-    * `restoreAnalytics` still rebuilds the store from T4. A `stop()` that
-    * lands after the update waits for the T4 write (see
-    * [[PageEventPipeline.completeDespiteStop]]), so a stopped job's T4
-    * holds everything its store served.
+    * driver, and both sinks are fed from those rows on the stream thread.
+    * Sink, then serve: T4 is written first, on the driver, as one
+    * JSON-lines file per batch ([[FileTopic.sinkLines]], the bytes
+    * `df.write.json` writes), and only then is the snapshot store
+    * updated, so the store never serves a refinement T4 lacks. A `stop()`
+    * that aborts the T4 write aborts a batch the store has not served; a
+    * crash between the write and the update re-runs the uncommitted batch
+    * on restart, where the write is skipped (its marker exists), the
+    * upsert is idempotent, and `restoreAnalytics` rebuilds the same store
+    * from T4.
     *
     * A fresh job keeps [[PageEventPipeline.StatePartitions]] state
     * partitions, whatever the session's shuffle fan-out; a restart keeps
@@ -116,11 +114,9 @@ final class PageEventPipeline(spark: SparkSession, root: String,
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val rows = batch.select(col("name"), col("window_start"), col("cnt"))
             .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+          t4.sinkLines(rows.map { case (n, w, c) => PageEventCodec.countLine(n, w, c) },
+            id, spark)
           analytics.upsert(rows)
-          PageEventPipeline.completeDespiteStop {
-            t4.sinkLines(rows.map { case (n, w, c) => PageEventCodec.countLine(n, w, c) },
-              id, spark)
-          }
         }
     }
 
@@ -193,30 +189,5 @@ object PageEventPipeline {
         before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
     }
-  }
-
-  /** Runs a sink write to completion even when its query is stopped
-    * meanwhile. `StreamingQuery.stop()` interrupts the stream thread, which
-    * aborts a write in flight on a filesystem whose I/O is interruptible
-    * (the HDFS client's, for one); after serve-before-sink that would leave
-    * a refinement the store already served missing from T4 until the next
-    * restart. The write runs on its own thread, and the stream thread
-    * waits it out through interrupts, then restores its interrupt status
-    * so the stop proceeds. A failing write still fails the batch.
-    */
-  private def completeDespiteStop(write: => Unit): Unit = {
-    val task = new java.util.concurrent.FutureTask[Unit](() => write)
-    val thread = new Thread(task, "graft-sink")
-    thread.setDaemon(true)
-    thread.start()
-    var interrupted = false
-    try {
-      var done = false
-      while (!done)
-        try { task.get(); done = true }
-        catch { case _: InterruptedException => interrupted = true }
-    } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    } finally if (interrupted) Thread.currentThread().interrupt()
   }
 }

@@ -142,40 +142,11 @@ private[graft] object ReplayHarness {
     })
   }
 
-  /** Last-seen micro-batch id per streaming-query id, for the progress
-    * hook's per-drain attribution. Query ids are unique per incarnation,
-    * so a restart naturally restarts attribution.
-    */
-  private val drainSeen = new ConcurrentHashMap[java.util.UUID, Long]()
-
   /** The one blocking drain step: engine-owned micro-batch execution,
     * timed into [[StreamReplay.EngineTimer]].
     */
-  private[streaming] def pump(q: StreamingQuery): Unit = {
+  private[streaming] def pump(q: StreamingQuery): Unit =
     StreamReplay.EngineTimer.timed(q.processAllAvailable())
-    // per-drain micro-batch count + driver-side duration breakdown (the
-    // numbers that attribute a replay's engine lane to planning vs WAL vs
-    // state commit); off unless SPARK_GRAFT_STREAM_PROGRESS is set —
-    // progress JSON assembly is itself driver work. recentProgress is
-    // CUMULATIVE across the drains of one incarnation and capped at
-    // spark.sql.streaming.numRecentProgressUpdates (100) entries, so only
-    // entries newer than the last-seen batch id are summed; replay drains
-    // are tens of batches, well under the cap.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS")) {
-      val last = drainSeen.getOrDefault(q.id, -1L)
-      val ps = q.recentProgress.filter(_.batchId > last)
-      if (ps.nonEmpty) drainSeen.put(q.id, ps.map(_.batchId).max)
-      val keys = ps.flatMap(p =>
-        scala.jdk.CollectionConverters.MapHasAsScala(p.durationMs)
-          .asScala.keys).distinct.sorted
-      val sums = keys.map { k =>
-        k -> ps.map(p => Option(p.durationMs.get(k)).map(_.longValue)
-          .getOrElse(0L)).sum
-      }
-      System.err.println(s"[drain] batches=${ps.length} " +
-        sums.map { case (k, v) => s"$k=$v" }.mkString(" "))
-    }
-  }
 
   /** Stops each query in its own finally: if one stop throws, the rest
     * must still stop, or they keep tailing topic dirs the scope is about
@@ -239,7 +210,7 @@ private[graft] final class Feed(df: DataFrame, key: Column,
     if (topic.jsonWire)
       topic.appendLines(staged.collect {
         case (k, j) if k >= from && (open || k < until) => j
-      })
+      }, df.sparkSession)
     else
       topic.append(df.filter(key >= from &&
         (if (open) lit(true) else key < until)).coalesce(1))

@@ -93,7 +93,7 @@ object StreamReplay {
     * ingest path — the replay source collects the fixture to the driver
     * because a simulated wire must originate somewhere (declared in
     * CollectLintSpec's allow-list). Production streams enter via
-    * readStream sources (Topic/FileTopic, sources/Topic.scala) with no
+    * readStream sources (FileTopic, sources/Topic.scala) with no
     * driver involvement; the pipeline between source and sink — the thing
     * being verified — is identical.
     */
@@ -327,14 +327,14 @@ object StreamReplay {
   /** The reference topology end-to-end over the PRODUCTION source and sink:
     * T2 (`FileTopic.stream` — the engine's Kafka-consumer stand-in,
     * reference application.properties:26) -> filter -> rekey -> 5 s
-    * tumbling window -> count -> T4 (`Topic.sinkBatch`, idempotent per
+    * tumbling window -> count -> T4 (`FileTopic.sinkBatch`, idempotent per
     * batchId). Unlike the MemoryStream replays above, every row enters
     * through `readStream` offset tracking: the fixture is PUBLISHED to the
     * topic in event-time-ordered chunks, and the consumer is deliberately
     * STOPPED and RESTARTED from its checkpoint between publishes — the
     * restart proves the file-source offset log and the sink's batchId
     * dedup survive recovery (the at-least-once redelivery path
-    * `Topic.sinkBatch`'s contract exists for). Converged counts (update
+    * `FileTopic.sinkBatch`'s contract exists for). Converged counts (update
     * mode, monotone, max per key) equal the batch answer, so the
     * page_counts oracle checks this query too.
     *
@@ -346,8 +346,8 @@ object StreamReplay {
   def streamedTopicCounts(spark: SparkSession, dir: String): DataFrame =
     streamedTopicWindows(spark, dir, slide = None)
 
-  /** The IDENTICAL tumbling-count replay over an AVRO wire — the Topic
-    * swap-point demonstration: only the transport encoding changes
+  /** The IDENTICAL tumbling-count replay over an AVRO wire — the
+    * transport swap-point demonstration: only the transport encoding changes
     * (binary Avro container files instead of JSON lines), the topology,
     * checkpointing, restart, and converged answer do not, and the row
     * hash-matches stream_topic_counts' own oracle. The short name "avro"
@@ -2941,8 +2941,8 @@ object StreamReplay {
       val in = r.topic("ann_in", annWireSchema)
       // the out topic ALWAYS carries candidate hits — its schema must not
       // follow the caller's return shape (the audit finish doesn't read
-      // the topic back, but a schema-enforcing Topic implementation behind
-      // the swap point would reject the sinked rows)
+      // the topic back, but a schema-enforcing transport behind the swap
+      // point would reject the sinked rows)
       val out = r.topic("ann_cand", schema("query_id" -> LongType,
         "neighbor_id" -> LongType, scoreCol -> DoubleType))
       val q = r.query("hits", "update", out) {

@@ -409,8 +409,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("serve before sink: a T4 write failing after the Analytics update recovers exactly") {
-    // the job updates Analytics before it writes T4; a T4 write that fails
-    // after the update fails the batch, which is not committed, so the
+    // the job writes T4 before it updates Analytics (sink, then serve); a
+    // T4 write that fails fails the batch before the update, so the store
+    // keeps serving phase 1 only, and the batch is not committed, so the
     // restart re-runs it: T4 and the store must end where a no-fault
     // control ends, with no refinement lost or doubled. No-data batches
     // are off so the only batch after phase 1 is phase 2's data batch,
@@ -451,8 +452,9 @@ class PipelineSpec extends SparkSpec {
         jobV.processAllAvailable()
       }
     } finally jobV.stop()
-    // the store already serves phase 2: the update ran before the write
-    assert(victim.analytics.snapshot(20L) == control.analytics.snapshot(20L))
+    // the store still serves phase 1 only: the update never ran
+    assert(victim.analytics.snapshot(14L) == Map("P1" -> 2L, "P2" -> 1L))
+    assert(victim.analytics.snapshot(20L).isEmpty)
     assert(t4Final(victim) != t4Final(control), "the T4 write must have failed")
 
     java.nio.file.Files.delete(t4)
@@ -476,12 +478,12 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("stop() during the T4 write leaves T4 holding what the store served") {
-    // stop() interrupts the query's thread; with the store updated first, a
-    // T4 write aborted by it would leave served refinements out of T4
-    // until a restart. T4 is written on the driver, so the job runs on a
-    // session whose `file:` FS parks the T4 write until the stop has
-    // landed, then fails it if the writing thread was interrupted, as an
-    // interruptible (remote) FS client would
+    // stop() interrupts the query's thread; the job writes T4 before it
+    // updates the store, so a T4 write aborted by the stop can only abort
+    // a batch the store has not served. T4 is written on the driver, so
+    // the job runs on a session whose `file:` FS parks the T4 write until
+    // the stop has landed, then fails it if the writing thread was
+    // interrupted, as an interruptible (remote) FS client would
     val session = GraftSession.child(spark)
     session.conf.set("fs.file.impl", classOf[PipelineSpec.ParkingFs].getName)
     session.conf.set("fs.file.impl.disable.cache", "true")
@@ -523,14 +525,21 @@ class PipelineSpec extends SparkSpec {
     } finally PipelineSpec.onCreate.set(_ => ())
     assert(stopper.get != null, "the T4 write never started")
     stopper.get.join()
-    assert(atWrite.get == ((Map("P1" -> 2L, "P2" -> 1L), false)),
-      s"the stop must land after the store update, before the commit: ${atWrite.get}")
+    assert(atWrite.get == ((Map.empty[String, Long], false)),
+      s"the stop must land before the store update and the commit: ${atWrite.get}")
     assert(job.get.exception.isEmpty, s"stop must not fail the job: ${job.get.exception}")
-    assert(p.analytics.snapshot(14L) == Map("P1" -> 2L, "P2" -> 1L))
-    val t4 = p.t4.batch(spark)
+    def t4() = p.t4.batch(spark)
       .groupBy($"name", $"window_start").agg(max($"cnt").as("cnt"))
       .as[(String, Long, Long)].collect().toSet
-    assert(t4 == Set(("P1", 10L, 2L), ("P2", 10L, 1L)))
+    // the aborted batch is in neither T4 nor the store
+    assert(t4().isEmpty)
+    assert(p.analytics.size == 0)
+
+    // the restart re-runs the uncommitted batch into both
+    val again = p.startJob(ckpt)
+    try again.processAllAvailable() finally again.stop()
+    assert(p.analytics.snapshot(14L) == Map("P1" -> 2L, "P2" -> 1L))
+    assert(t4() == Set(("P1", 10L, 2L), ("P2", 10L, 1L)))
   }
 
   test("T4 lines written on the driver are df.write.json's bytes, read back exactly") {
@@ -621,7 +630,7 @@ class PipelineSpec extends SparkSpec {
     val t2 = p.t2.asInstanceOf[graft.sources.FileTopic]
     (0 until 40).foreach { i =>
       t2.appendLines(Seq(PageEventCodec.wireLine(
-        PageEvent("P1", "U1", new java.sql.Timestamp(10000L + i * 100L), 500L))), Some(spark))
+        PageEvent("P1", "U1", new java.sql.Timestamp(10000L + i * 100L), 500L))), spark)
     }
     val job = p.startJob(tmpDir("ckpt"))
     val onStream = jobDescriptions {
@@ -684,6 +693,25 @@ class PipelineSpec extends SparkSpec {
       s"partial batch must be repaired to 2 rows (was $torn after tear)")
     assert(new java.io.File(dir, "_SUCCESS").exists(),
       "repaired batch must re-commit its marker")
+  }
+
+  test("FileTopic.append writes through the FS of its frame's session") {
+    // the frame belongs to a child session whose `file:` FS is its own
+    // (FS cache off for the scheme); this thread's active session is the
+    // parent, whose FS must not see the write
+    val child = GraftSession.child(spark)
+    child.conf.set("fs.file.impl", classOf[PipelineSpec.ParkingFs].getName)
+    child.conf.set("fs.file.impl.disable.cache", "true")
+    val root = tmpDir("topics")
+    val topic = new graft.sources.FileTopic("T", PageEvent.wireSchema, root)
+    val df = child.createDataFrame(Seq(("P1", "U1", 1000L, 200L)))
+      .toDF("name", "user", "date", "duration")
+    val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    PipelineSpec.onCreate.set(path => created.add(path.toString))
+    try topic.append(df) finally PipelineSpec.onCreate.set(_ => ())
+    assert(created.toArray.exists(_.toString.contains(s"$root/T/")),
+      s"the append did not reach the child's FS: $created")
+    assert(topic.batch(spark).count() == 1)
   }
 
   test("supplier generates schema-valid events at the configured rate") {
