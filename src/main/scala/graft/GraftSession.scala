@@ -18,6 +18,17 @@ import org.apache.spark.sql.SparkSession
   * list the same filesystem from the same JVM and add only scheduling and
   * a serialized Hadoop conf per task — paid in every trigger of a file
   * stream over more than 32 files.
+  *
+  * One class loader for every task: session artifact isolation is off, so
+  * the top-level session, every [[child]] and every streaming query's
+  * session clone run their tasks under the executor's default class
+  * loader instead of one loader per session UUID. Spark's codegen cache
+  * is keyed by the context class loader plus the generated source, so
+  * with one loader a new query, a restart or a child session's query
+  * reuses the classes an earlier query compiled, and the JIT's work on
+  * them; with a loader per session it compiles and loads its plan's
+  * classes again. Isolation only separates the jars, files and archives
+  * a session adds; graft adds none (`ArtifactLintSpec` keeps it so).
   */
 object GraftSession {
   /** The one `SparkSession` builder: every session in the repository —
@@ -46,6 +57,9 @@ object GraftSession {
       // session that read the stream, not its query's cloned conf
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
+      // one executor class loader for every session (see the header);
+      // read when a session is created, so it must be on the builder
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // static conf (must be set before the first session; spark.conf.set
       // would throw): size the janino compiled-class cache to a many-query
       // session — the default 100 entries thrashes past ~50 queries and a

@@ -120,16 +120,19 @@ private[graft] object ReplayHarness {
       // checkpoints; checkpoints on HDFS/S3 keep Spark's default managers.
       child.conf.set("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.NioCheckpointFileManager")
-      // INTERPRETED expression mode: a micro-batch's generated code embeds
-      // the CURRENT WATERMARK as a literal, so every batch of every
-      // incarnation compiles and classloads fresh predicate/projection
-      // classes that can never hit the codegen cache (measured ~280 class
-      // loads and ~9 JIT seconds per stream_asof_ttl run at steady
-      // state). At replay scale compilation can never amortize:
-      // interpreted rows cost microseconds while each compile costs
-      // milliseconds (stream_asof_ttl engine 7.4 -> 5.0 s). Production
-      // streams (parent session) keep codegen — at real volume the
-      // amortization argument flips, which is why this is per-session.
+      // INTERPRETED expression mode: a stateful micro-batch's eviction
+      // predicate (Spark's watermarkPredicateForKeysForEviction) embeds
+      // the CURRENT WATERMARK as a literal, so every batch whose watermark
+      // moved compiles and classloads a fresh predicate class that misses
+      // the codegen cache. A new incarnation's other classes hit it (one
+      // executor class loader for every session, see GraftSession); the
+      // measurement behind this setting (~280 class loads and ~9 JIT
+      // seconds per stream_asof_ttl run, engine 7.4 -> 5.0 s) predates
+      // that, when each query's own loader made them miss as well. At
+      // replay scale interpreted rows cost microseconds while each
+      // compile costs milliseconds. Production streams (parent session)
+      // keep codegen — at real volume the amortization argument flips,
+      // which is why this is per-session.
       child.conf.set("spark.sql.codegen.wholeStage", "false")
       // factoryMode is marked internal in Spark (a testing knob for the
       // expression-codegen fallback path) — acceptable because these child
