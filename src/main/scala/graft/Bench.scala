@@ -4,80 +4,55 @@ object Bench {
   /** One query's measurements within one pass: wall seconds, GC seconds,
     * JIT-compilation seconds, classes loaded during the query, epoch-ms
     * start timestamp, and the 1-min system load average at start. The
-    * timestamp + load make external interference PROVABLE from the
-    * artifact: a contiguous wall-clock band of slow queries with flat
-    * gc/jit/cls and elevated load is machine contention, not a plan
-    * regression (round-9 postmortem: a ~172 s pass-2 band was only
-    * attributable by inference because neither field existed).
-    */
-  /** `ok = false` when the measured run THREW — the elapsed seconds are
-    * still real wall time (pass totals stay honest) but a failed run must
-    * never count as evidence of health (a crashing p3 re-run would
-    * otherwise return a near-zero wall and "exonerate" the anomaly it was
-    * meant to attribute).
+    * timestamp + load place a slow row in the host's wall-clock history:
+    * a run of slow rows with flat gc/jit/cls and elevated load is machine
+    * contention, not a plan regression.
     */
   /** `eng` is the engine-owned wall (the replay harnesses' accumulated
-    * `processAllAvailable` time, round-14 verdict ask #4) — 0 for plain
-    * batch queries, where the whole wall IS engine time. `sec - eng` is
-    * the harness choreography (fixture collects, topic publishes,
-    * checkpoint setup, restarts) for stream_ / state_ rows.
+    * `processAllAvailable` time) — 0 for plain batch queries, where the
+    * whole wall IS engine time. `sec - eng` is the harness choreography
+    * (fixture collects, topic publishes, checkpoint setup, restarts) for
+    * stream_ / state_ rows.
+    */
+  /** `cpu` is the process CPU seconds the query used (driver and local
+    * executor threads, `OperatingSystemMXBean.getProcessCpuTime`). It is
+    * published beside the wall so a reader can tell a slower plan (more
+    * CPU) from a slower machine (same CPU, more wall); it never gates.
     */
   final case class QStat(sec: Double, gc: Double, jit: Double, cls: Long,
-                         startMs: Long, load: Double, ok: Boolean = true,
-                         eng: Double = 0.0)
+                         startMs: Long, load: Double, eng: Double = 0.0,
+                         cpu: Double = 0.0)
 
-  /** One elevated row's attribution after the isolated p3 re-run
-    * (round-10 verdict ask #1, widened by round-13 ask #2): `transient`
-    * when the re-run lands back at pass-1 level under the ELEVATED
-    * thresholds; `severe` marks the strict-anomaly tier (the only tier
-    * that can flip the record unhealthy on its own).
+  /** One elevated row: its pass-1 and pass-2 seconds in the row's gating
+    * lane; `severe` marks the strict-anomaly tier, the tier that flips the
+    * record unhealthy on its own.
     */
-  final case class Verdict(name: String, idx: Int, p1: Double, p2: Double,
-                           p3: Option[Double], transient: Boolean,
+  final case class Verdict(name: String, p1: Double, p2: Double,
                            severe: Boolean)
 
-  /** Tri-state record health (ADVICE r10): "ok" (clean, or every flagged
-    * row attributed by its p3 re-run), "external" (contiguous contention
-    * band — the machine, not the engine), "unhealthy" (reproducible
-    * severe warm regression or an unexplained pass-2 blowup).
+  /** Record health: "unhealthy" on any severe warm-pass row or an
+    * unexplained pass-2 blowup, else "ok".
     *
-    * HEADLINE METRIC IS PINNED TO PASS 2 (round-13 verdict ask #3): the
-    * r13 record silently switched the headline pass1↔pass2 via the old
-    * fallback, breaking the cross-round series. The warm pass is the
-    * plan-quality signal and stays the headline unconditionally; both
+    * HEADLINE METRIC IS PINNED TO PASS 2: the warm pass is the
+    * plan-quality signal and stays the headline unconditionally (a record
+    * that once switched pass1↔pass2 broke the cross-record series); both
     * raw pass walls are always published top-level, contamination is
-    * expressed via `status` + `pass2_adjusted_sec` instead of a metric
-    * switch, and BenchHealthSpec pins the constant.
+    * expressed via `status`, and BenchHealthSpec pins the constant.
     */
-  /** `reproducible` is the attribution ledger the status rests on: out of
-    * a band it is every non-transient verdict; inside a band it is
-    * exactly the severe rows whose ISOLATED p3 reproduced severe (or
-    * whose p3 re-run crashed — no attribution), so an "unhealthy" banded
-    * record always NAMES the rows that flipped it (round-15 self-review:
-    * the old derived Nil-when-band contradicted the new band-severe
-    * unhealthy trigger).
-    */
-  final case class Health(verdicts: Seq[Verdict], band: Boolean,
-                          status: String, headlinePass: Int, pass2Adj: Double,
-                          reproducible: Seq[Verdict]) {
+  final case class Health(verdicts: Seq[Verdict], status: String) {
     def ok: Boolean = status != "unhealthy"
   }
 
   /** The pinned headline pass — see [[Health]]. */
   val headlineMetric: String = "pass2"
 
-  /** The GATING lane for one row (round-16 verdict ask #8, completing
-    * the split the drift section already runs): replay rows — the ones
-    * carrying an engine-owned wall (`eng > 0` on both passes) — flag on
-    * ENGINE seconds, so publish/restart choreography jitter on a loaded
-    * box can no longer manufacture an anomaly verdict against the
-    * engine; 13 of the 18 slowest r16 rows were replay rows whose p2
-    * exceeded p1 purely under load. Harness drift still surfaces — the
-    * drift section's harness_sec lane and the published per-row split
-    * keep it visible — it just can't flip health. Plain batch rows
-    * (eng = 0) gate on wall exactly as before. (The choreography itself
-    * cannot move off the timed path wholesale: the publish/restart
-    * interleaving IS the scenario each replay proves.)
+  /** The GATING lane for one row: replay rows — the ones carrying an
+    * engine-owned wall (`eng > 0` on both passes) — flag on ENGINE
+    * seconds, so publish/restart choreography jitter on a loaded box
+    * cannot manufacture an anomaly verdict against the engine. Harness
+    * drift still surfaces in the drift section's harness_sec lane and
+    * the published per-row split; it just can't flip health. Plain batch
+    * rows (eng = 0) gate on wall.
     */
   private def lane(s1: QStat, s2: QStat)(s: QStat): Double =
     if (s1.eng > 0 && s2.eng > 0) s.eng else s.sec
@@ -91,149 +66,44 @@ object Bench {
     l(s2) > 3 * l(s1) && l(s2) - l(s1) > 1.0 && s2.jit < 0.5 && s2.cls < 500
   }
 
-  /** An ELEVATED pass-2 row (round-13 verdict ask #2): >1.5x its pass-1
-    * time (engine lane for replay rows) with >1 s absolute excess. EVERY
-    * such row gets an isolated p3 re-run and a recorded
-    * transient/reproducible verdict — r13 shipped
-    * stream_zscore/fk_audit/stream_backfill_union inflated pass-2 with no
-    * attribution because only the severe tier triggered re-runs. No
-    * jit/cls exemption: a codegen-cache miss explains the slowness, but
-    * the re-run (which hits the now-warm cache) attributes it measurably
-    * instead of by inference.
+  /** An ELEVATED pass-2 row: >1.5x its pass-1 time (engine lane for
+    * replay rows) with >1 s absolute excess. Recorded as a verdict; no
+    * jit/cls exemption, since the published jit2/cls2 let a reader see a
+    * codegen-cache miss next to the row.
     */
   def elevated(s1: QStat, s2: QStat): Boolean = {
     val l = lane(s1, s2) _
     l(s2) > 1.5 * l(s1) && l(s2) - l(s1) > 1.0
   }
 
-  /** Pure health classification over both passes + the isolated p3 re-runs
-    * (seconds, keyed by query name). Kept free of measurement side effects
-    * so BenchHealthSpec can drive every branch with synthetic stats.
+  /** Pure health classification over both passes, kept free of
+    * measurement side effects so BenchHealthSpec can drive every branch
+    * with synthetic stats. A severe row is unhealthy wherever it sits in
+    * the run order, and the pass-ratio gate compares raw wall totals:
+    * pass 2 more than 1.2x pass 1 is a broad warm-pass slowdown.
     */
-  /** `p3Failed` names flagged rows whose isolated re-run THREW (their
-    * wall is not evidence of anything): inside a band, a severe row with
-    * a crashed re-run keeps NO attribution and must not hide behind the
-    * band — it classifies reproducible/unhealthy exactly like the
-    * missing-p3 severe row does outside one.
-    */
-  def classify(stats: Seq[(String, QStat, QStat)],
-               p3: Map[String, Double],
-               p3Failed: Set[String] = Set.empty): Health = {
-    val flagged = stats.zipWithIndex.collect {
-      case (((n, s1, s2)), i) if elevated(s1, s2) => (n, i)
-    }
-    // external CPU contention hits whichever queries run during its
-    // wall-clock window, so >=3 elevated rows packed into one run-order
-    // band classify as external; scattered rows are the engine's problem
-    val band = flagged.size >= 3 && {
-      val idx = flagged.map(_._2)
-      (idx.max - idx.min + 1) <= math.ceil(1.5 * flagged.size).toInt
-    }
-    val verdicts = flagged.map { case (n, i) =>
-      val s1 = stats(i)._2
-      val s2 = stats(i)._3
-      val t3 = p3.get(n)
-      // the verdict's p1/p2/p3 all live in the row's GATING lane (engine
-      // seconds for replay rows — the caller's p3 map is lane-consistent)
-      // so the exoneration and severe-reproduction thresholds compare
-      // like with like
+  def classify(stats: Seq[(String, QStat, QStat)]): Health = {
+    val verdicts = stats.collect { case (n, s1, s2) if elevated(s1, s2) =>
       val l = lane(s1, s2) _
-      // elevated thresholds for exoneration: the re-run is "back at
-      // pass-1 level" iff it would NOT have been flagged against p1
-      val transient = t3.exists(t => t <= 1.5 * l(s1) || t - l(s1) <= 1.0)
-      Verdict(n, i, l(s1), l(s2), t3, transient,
-        severe = anomalous(s1, s2))
+      Verdict(n, l(s1), l(s2), severe = anomalous(s1, s2))
     }
-    // A severe flag flips the record unhealthy only when its p3 re-run
-    // ITSELF lands at severe level against p1 (or never ran): a severe
-    // 4.5x flag whose isolated re-run comes back at 2.6x reproduced the
-    // mild elevation, not the severe anomaly that triggered the flag —
-    // it stays a recorded non-transient verdict (and counts un-exonerated
-    // toward the ratio gate) without alone declaring the engine broken
-    // (round-14 self-review: the elevated-tier exoneration thresholds had
-    // silently tightened the unhealthy trigger for severe rows).
-    //
-    // INSIDE a band (ADVICE r14): the band explains the ELEVATED tier —
-    // contention hits whatever runs in its window — but a severe row
-    // whose ISOLATED p3 re-run still lands at severe level reproduced a
-    // real regression the band cannot explain away, so it flips the
-    // record unhealthy even when it sits inside a mild band. A banded
-    // severe row whose re-run CRASHED (p3Failed) kept no attribution and
-    // classifies the same way; one that was never SCHEDULED stays
-    // external — the severe-first p3 ordering makes that reachable only
-    // past a >12-severe storm, which is a collapse with or without this
-    // row's verdict.
-    def severeReproduces(v: Verdict, t: Double): Boolean =
-      t > 3 * v.p1 && t - v.p1 > 1.0
-    val reproducibleSevere = verdicts.filter { v =>
-      v.severe && (
-        if (band) v.p3.exists(severeReproduces(v, _)) || p3Failed(v.name)
-        else v.p3.forall(severeReproduces(v, _)))
-    }
-    // Pass-ratio check on the EXONERATED pass-2 total: transient rows'
-    // p2 contributions are replaced by their isolated p3 re-measurements,
-    // so a single 18 s one-off can't fail the ratio gate on its own — but
-    // a broad un-attributed slowdown still does. Totals stay WALL-based
-    // (the pass is a wall-clock fact); for a replay row the verdict's
-    // p2−p3 delta lives in the ENGINE lane, and wall excess = engine
-    // excess + harness drift, which can run EITHER way — if the isolated
-    // p3's harness share undercuts p2's, the engine-lane delta exceeds
-    // the row's wall delta and an uncapped subtraction would LOOSEN the
-    // wall-based gate (ADVICE r17). Cap each row's subtracted excess at
-    // its own pass-2-vs-pass-1 wall delta: never more wall is forgiven
-    // than the row actually added to the pass-2 total.
     val pass1Total = stats.map(_._2.sec).sum
     val pass2Total = stats.map(_._3.sec).sum
-    val exoneratedExcess = verdicts.collect {
-      case v if v.transient =>
-        val laneExcess = math.max(0.0, v.p2 - v.p3.getOrElse(v.p2))
-        val wallDelta =
-          math.max(0.0, stats(v.idx)._3.sec - stats(v.idx)._2.sec)
-        math.min(laneExcess, wallDelta)
-    }.sum
-    val pass2Adj = pass2Total - exoneratedExcess
     val status =
-      if (reproducibleSevere.nonEmpty) "unhealthy"
-      else if (band) "external"
-      else if (pass2Adj > 1.2 * pass1Total) "unhealthy"
+      if (verdicts.exists(_.severe) || pass2Total > 1.2 * pass1Total) "unhealthy"
       else "ok"
-    // headlinePass is CONSTANT 2 (pinned metric — see Health's scaladoc);
-    // kept as a field so the record keeps publishing which pass the
-    // numbers bind to.
-    val reproducible =
-      if (band) reproducibleSevere else verdicts.filterNot(_.transient)
-    Health(verdicts, band, status, headlinePass = 2, pass2Adj, reproducible)
+    Health(verdicts, status)
   }
 
   /** One baseline row parsed out of a committed BENCH_DETAIL: per-query
-    * min seconds, the scale it ran at, and — for replay rows since r15 —
-    * the engine-owned share of that min (0.0 when the record predates
-    * the split or the row is plain batch).
+    * min seconds, the scale it ran at, and — for replay rows — the
+    * engine-owned share of that min (0.0 when the row is plain batch).
     */
-  final case class PrevRow(sec: Double, sf: String, eng: Double = 0.0,
-                           iso: Double = 0.0)
+  final case class PrevRow(sec: Double, sf: String, eng: Double = 0.0)
   /** This run's side of the same comparison. */
   final case class CurRow(name: String, sec: Double, sf: String,
-                          eng: Double = 0.0, iso: Double = 0.0)
+                          eng: Double = 0.0)
 
-  /** Rows whose drift gate runs on an ISOLATED-lane measurement instead
-    * of the in-suite min (round-18 verdict ask #2, closing three rounds
-    * of recurring flags): the cached-edge graph trio's fixpoint loops
-    * are sensitive to suite cache/memory pressure — isolated A/B at the
-    * flagged commits was commit-indistinguishable every round (r16-r18),
-    * so the in-suite min measures SUITE CONTEXT for these rows, not the
-    * plan. Each gets one extra isolated measurement after pass 2 (same
-    * warmed JVM, nothing interleaved — the p3 protocol), published as
-    * "iso" in BENCH_DETAIL; the drift compare prefers iso on BOTH sides
-    * when available, else compares this run's iso against the baseline's
-    * in-suite min (iso ≤ min under no contention, so exoneration is
-    * conservative: a flag in that mixed compare means the ISOLATED time
-    * exceeds the old SUITE time — a real regression). sketch_accuracy
-    * rides along per verdict ask #5 (fourth flagged row, same
-    * suite-pressure profile: a cached-input accuracy sweep).
-    */
-  val IsoLane: Set[String] = Set(
-    "cluster_split", "pagerank", "pagerank_convergence", "sketch_accuracy")
   /** One drift verdict: `metric` names which lane compared —
     * "engine_sec" / "harness_sec" for replay rows whose both records
     * carry the split, "sec" otherwise.
@@ -241,29 +111,51 @@ object Bench {
   final case class DriftFlag(name: String, prev: Double, now: Double,
                              metric: String)
 
-  /** Cross-round drift baseline (round-11 verdict ask #6): the per-query
-    * min seconds, sf, and engine share of a committed BENCH_DETAIL,
-    * parsed with a regex over the format this file itself writes (no
-    * JSON dep needed for a self-authored format). Rows whose sf changed
-    * between records are incomparable and skipped.
+  /** The CPU counts a record was measured with: the host's
+    * `availableProcessors` and the engine's local cores
+    * (`SPARK_GRAFT_CPUS`). Wall times measured with other counts are
+    * another machine's numbers, so drift compares only equal counts.
+    */
+  final case class Cpus(host: Int, graft: Int)
+
+  def readCpus(text: String): Option[Cpus] =
+    for {
+      h <- """"host_cpus":\s*(\d+)""".r.findFirstMatchIn(text)
+      g <- """"spark_graft_cpus":\s*(\d+)""".r.findFirstMatchIn(text)
+    } yield Cpus(h.group(1).toInt, g.group(1).toInt)
+
+  /** Drift baseline: the per-query min seconds, sf, and engine share of
+    * a committed BENCH_DETAIL, parsed with a regex over the format this
+    * file itself writes (no JSON dep needed for a self-authored format).
     */
   def readPrevDetail(text: String, recordSf: String): Map[String, PrevRow] = {
-    // whitespace-tolerant: a round-13 tooling pass committed a PRETTIFIED
-    // record and the strict regex silently parsed zero rows — drift gate
-    // vacuous for one run. Never let formatting disable the gate again.
+    // whitespace-tolerant: a prettified committed record once parsed zero
+    // rows with a strict regex and left the drift gate vacuous
     val row = """"([a-z0-9_]+)":\s*\{\s*"sec":\s*([0-9.]+)([^}]*)\}""".r
     val qsf = """"qsf":\s*"([^"]+)"""".r
     val engRx = """"engine_sec":\s*([0-9.]+)""".r
-    val isoRx = """"iso":\s*([0-9.]+)""".r
     row.findAllMatchIn(text).map { m =>
       val sf = qsf.findFirstMatchIn(m.group(3)).map(_.group(1)).getOrElse(recordSf)
       val eng = engRx.findFirstMatchIn(m.group(3)).map(_.group(1).toDouble)
         .getOrElse(0.0)
-      val iso = isoRx.findFirstMatchIn(m.group(3)).map(_.group(1).toDouble)
-        .getOrElse(0.0)
-      m.group(1) -> PrevRow(m.group(2).toDouble, sf, eng, iso)
+      m.group(1) -> PrevRow(m.group(2).toDouble, sf, eng)
     }.toMap
   }
+
+  /** The baseline rows of a committed record, when it was measured with
+    * `cpus`; otherwise the reason nothing is compared.
+    */
+  def baselineRows(text: String, cpus: Cpus): Either[String, Map[String, PrevRow]] =
+    readCpus(text) match {
+      case Some(c) if c == cpus =>
+        val recSf = """"sf":\s*"([^"]+)"""".r.findFirstMatchIn(text)
+          .map(_.group(1)).getOrElse("")
+        Right(readPrevDetail(text, recSf))
+      case Some(c) =>
+        Left(s"baseline measured with host_cpus=${c.host}, " +
+          s"spark_graft_cpus=${c.graft}; this run has ${cpus.host}, ${cpus.graft}")
+      case None => Left("baseline records no CPU counts")
+    }
 
   /** Pure drift classification (unit-tested by BenchHealthSpec): compare
     * this run's per-query (min-sec, sf) against a baseline record's,
@@ -271,14 +163,13 @@ object Bench {
     * would flag 0.1 -> 0.2 s noise); rows whose sf changed between
     * records are incomparable and counted separately.
     *
-    * ENGINE/HARNESS SPLIT (round-15 verdict ask #7): when BOTH records
-    * carry engine_sec for a row (a replay row measured since the split
-    * shipped), the primary compare runs on ENGINE seconds — a real plan
-    * or state-store regression — and the harness remainder (publish
+    * ENGINE/HARNESS SPLIT: when BOTH records carry engine_sec for a row
+    * (a replay row), the primary compare runs on ENGINE seconds — a real
+    * plan or state-store regression — and the harness remainder (publish
     * waves, checkpoint setup, restarts) is flagged SEPARATELY, so
     * publish-choreography noise can never mask an engine regression
     * under the total, nor masquerade as one. Rows without the split on
-    * both sides compare on total sec as before.
+    * both sides compare on total sec.
     *
     * Returns (flagged, compared, skipped_sf_changed, harness_flagged).
     */
@@ -295,149 +186,45 @@ object Bench {
     // regression is exactly what the gate exists for. Clamp the baseline
     // to one rounding quantum for the ratio math; the absolute-delta
     // gate (now - prev > 0.5) still filters sub-millisecond noise.
-    def gate(p: Double, c: Double): Boolean =
-      c > ratio * math.max(p, 0.001) && c - p > 0.5
-    val flagged = comparable.flatMap { case (c, p) =>
-      if (c.iso > 0) {
-        // isolated-lane row (IsoLane): compare iso-vs-iso when the
-        // baseline carries it, else this run's ISOLATED time against the
-        // baseline's in-suite min — iso ≤ suite-min under no contention,
-        // so a flag still means a real plan regression (see IsoLane doc)
-        if (p.iso > 0) {
-          if (gate(p.iso, c.iso))
-            Some(DriftFlag(c.name, math.max(p.iso, 0.001), c.iso, "iso_sec"))
-          else None
-        } else if (gate(p.sec, c.iso))
-          Some(DriftFlag(c.name, math.max(p.sec, 0.001), c.iso,
-            "iso_vs_prev_min"))
-        else None
-      } else if (p.eng > 0 && c.eng > 0) {
-        if (gate(p.eng, c.eng))
-          Some(DriftFlag(c.name, math.max(p.eng, 0.001), c.eng, "engine_sec"))
-        else None
-      } else if (gate(p.sec, c.sec))
-        Some(DriftFlag(c.name, math.max(p.sec, 0.001), c.sec, "sec"))
+    def flag(name: String, p: Double, c: Double, metric: String) =
+      if (c > ratio * math.max(p, 0.001) && c - p > 0.5)
+        Some(DriftFlag(name, math.max(p, 0.001), c, metric))
       else None
+    val flagged = comparable.flatMap { case (c, p) =>
+      if (p.eng > 0 && c.eng > 0) flag(c.name, p.eng, c.eng, "engine_sec")
+      else flag(c.name, p.sec, c.sec, "sec")
     }
     val harnessFlagged = comparable.flatMap { case (c, p) =>
-      if (p.eng > 0 && c.eng > 0 && gate(p.sec - p.eng, c.sec - c.eng))
-        Some(DriftFlag(c.name, math.max(p.sec - p.eng, 0.001),
-          c.sec - c.eng, "harness_sec"))
+      if (p.eng > 0 && c.eng > 0)
+        flag(c.name, p.sec - p.eng, c.sec - c.eng, "harness_sec")
       else None
     }
     (flagged, comparable.size, skipped, harnessFlagged)
   }
-
-  /** Machine-speed CANARY (round 19): a fixed, plan-free, allocation-free
-    * CPU workload timed around the suite passes, published in the record
-    * so drift readers can mechanically separate environment noise from
-    * plan changes — the round-19 sessions measured the same commit at
-    * 304 s (canary-flat window) and 425-473 s (host noisy-neighbor
-    * window) with ZERO code delta, and without a canary that reads as 30
-    * spurious per-query flags. Single-thread (st) tracks per-core speed
-    * (frequency, steal on this core); all-cores (mt) tracks aggregate
-    * throughput (the thing a noisy co-tenant actually taxes). The hash
-    * loop is a fixed-iteration splitmix-style mix — deterministic
-    * work, result consumed so it cannot dead-code-eliminate.
-    */
-  private def canarySpin(iters: Long): Long = {
-    var h = 0x9E3779B97F4A7C15L
-    var i = 0L
-    while (i < iters) {
-      h = h * 6364136223846793005L + 1442695040888963407L
-      h ^= h >>> 33
-      i += 1
-    }
-    h
-  }
-
-  def canaryStSec(iters: Long = 400000000L): Double = {
-    val t0 = System.nanoTime()
-    val h = canarySpin(iters)
-    val dt = (System.nanoTime() - t0) / 1e9
-    if (h == 42L) System.err.println("") // consume the result
-    dt
-  }
-
-  def canaryMtSec(itersPerThread: Long = 200000000L): Double = {
-    val n = Runtime.getRuntime.availableProcessors()
-    val sink = new java.util.concurrent.atomic.AtomicLong()
-    val t0 = System.nanoTime()
-    val ts = (0 until n).map { _ =>
-      val t = new Thread(() => sink.addAndGet(canarySpin(itersPerThread)))
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Parse a committed record's canary block; absent in pre-r19 records. */
-  def readPrevCanary(text: String): Option[(Seq[Double], Seq[Double])] = {
-    val rx = """"canary":\{"st":\[([^\]]*)\],"mt":\[([^\]]*)\]\}""".r
-    rx.findFirstMatchIn(text).map { m =>
-      def nums(s: String) =
-        s.split(',').map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-      (nums(m.group(1)), nums(m.group(2)))
-    }
-  }
-
-  /** Environment verdict for the drift section: this run's best mt canary
-    * vs the baseline's — >1.3x means the MACHINE was slower, and the
-    * per-query flags of this run are pre-attributed to environment.
-    */
-  def canaryRatio(prev: Option[(Seq[Double], Seq[Double])],
-                  curMt: Seq[Double]): Option[Double] =
-    for {
-      (_, pmt) <- prev
-      if pmt.nonEmpty && curMt.nonEmpty
-    } yield curMt.min / pmt.min
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Replay rows (stream_*) are VERIFICATION HARNESSES — multi-query
     // micro-batch lifecycles whose wall is checkpoint/restart machinery,
     // not engine throughput; their semantics are oracle-proven at sf0.01
-    // by Verify. Round 11 measured them at sf0.1: 16 rows carried ~115 s
-    // of the 247 s pass-2 headline and their per-pass JIT/class churn
-    // taxed NEIGHBORING queries (the round-11 1.22x shared-query drift —
-    // isolated re-runs at both commits reproduce round-10 times exactly).
-    // They now run at sf0.001 (round-11 verdict ask #7), declared per-row
-    // via "qsf" and record-level via "replay_sf" so cross-round tooling
-    // never mis-joins the two scales.
+    // by Verify. At sf0.1, 16 of them carried ~115 s of a 247 s pass-2
+    // headline and their per-pass JIT/class churn taxed NEIGHBORING
+    // queries, so they run at sf0.001, declared per-row via "qsf" and
+    // record-level via "replay_sf" so tooling never mis-joins the scales.
     val replaySfDir = sys.env.getOrElse("SPARK_GRAFT_REPLAY_SF_DIR",
       "/root/testdata/sf0.001")
     // state_* rows are the same replay harnesses (publish waves, restart,
-    // then an offline checkpoint read) — round 14 moves them to the
-    // replay scale with the stream_ rows: state_inspect_ann at sf0.1 was
-    // the suite's most expensive row (13.9 s warm, 1329 pass-1 class
-    // loads) and all four are oracle-proven at sf0.01 by Verify; their
-    // qsf field marks the scale so the drift gate skips the transition
+    // then an offline checkpoint read): state_inspect_ann at sf0.1 was the
+    // suite's most expensive row (13.9 s warm, 1329 pass-1 class loads),
+    // and all of them are oracle-proven at sf0.01 by Verify
     def dirFor(name: String): String =
       if (name.startsWith("stream_") || name.startsWith("state_"))
         replaySfDir
       else sfDir
-    // CROSS-ROUND baseline (round-14 verdict "what's wrong" #1): the r14
-    // drift section compared a round-14 run against an EARLIER round-14
-    // run, because Bench read the live BENCH_DETAIL.json it had itself
-    // overwritten mid-round. The baseline is now a per-round SNAPSHOT:
-    // the first Bench invocation of round N finds BENCH_DETAIL.json still
-    // holding round N-1's committed record (nothing else writes it) and
-    // copies it to baselines/BENCH_DETAIL_r{N-1}.json before any
-    // overwrite; every run of round N then drifts against that frozen
-    // snapshot. N-1 is read off the highest committed BENCH_r{K}.json
-    // (the driver writes one per completed round). The record publishes
-    // "baseline_round" so the judge sees WHICH round it compared against,
-    // and BenchHealthSpec asserts it is the previous round.
-    // ROUND FILES RESOLVE AGAINST THE REPO ROOT, not the process CWD
-    // (ADVICE r15): a Bench launched from elsewhere used to find no
-    // BENCH_r*.json, snapshot baselines/ into the wrong directory, and
-    // leave the drift gate silently vacuous — the exact
-    // formatting-disables-the-gate failure mode the round-13 note guards
-    // against. Walk up from CWD to the first directory holding build.sbt
-    // (the sbt launch root); if none is in reach, keep CWD but FAIL
-    // LOUDLY when the directory carries a BENCH_DETAIL.json with no
-    // BENCH_r*.json beside it — that combination only happens when the
-    // round files live somewhere this process can't see.
+    // BENCH_DETAIL.json resolves against the repo root, not the process
+    // CWD: walk up from CWD to the first directory holding build.sbt (the
+    // sbt launch root), so a Bench launched from elsewhere still reads
+    // its baseline and writes its record in one place.
     val repoRoot: java.nio.file.Path = {
       def up(p: java.nio.file.Path): Option[java.nio.file.Path] =
         if (p == null) None
@@ -446,72 +233,17 @@ object Bench {
       up(java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath)
         .getOrElse(java.nio.file.Paths.get(".").toAbsolutePath.getParent)
     }
-    val prevRound: Int = locally {
-      val rx = """BENCH_r(\d+)\.json""".r
-      Option(repoRoot.toFile.listFiles()).toSeq.flatten
-        .flatMap(f => rx.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-        .sorted.lastOption.getOrElse(0)
-    }
-    require(prevRound > 0 ||
-        !java.nio.file.Files.exists(repoRoot.resolve("BENCH_DETAIL.json")),
-      s"no BENCH_r*.json under $repoRoot but BENCH_DETAIL.json exists — " +
-        "the round files are elsewhere and every drift compare would be " +
-        "silently vacuous; launch Bench from the repo root")
-    val baselinePath =
-      repoRoot.resolve(s"baselines/BENCH_DETAIL_r$prevRound.json")
-    try {
-      val live = repoRoot.resolve("BENCH_DETAIL.json")
-      if (java.nio.file.Files.exists(live) &&
-          !java.nio.file.Files.exists(baselinePath)) {
-        java.nio.file.Files.createDirectories(baselinePath.getParent)
-        // copy-then-ATOMIC_MOVE: a crash mid-copy must never leave a
-        // truncated baseline that silently shrinks every drift compare
-        // for the rest of the round (round-15 self-review)
-        val tmp = baselinePath.resolveSibling(baselinePath.getFileName + ".tmp")
-        java.nio.file.Files.copy(live, tmp,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.move(tmp, baselinePath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] baseline snapshot failed: $e")
-    }
-    def readBaseline(p: java.nio.file.Path): Map[String, PrevRow] =
-      try {
-        if (java.nio.file.Files.exists(p)) {
-          val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          val recSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(text)
-            .map(_.group(1)).getOrElse("")
-          readPrevDetail(text, recSf)
-        } else Map.empty
-      } catch { case _: Throwable => Map.empty }
-    val prevDetail: Map[String, PrevRow] = readBaseline(baselinePath)
-    // the baseline's canary block, for the environment verdict in the
-    // drift section (absent when the baseline predates round 19)
-    val prevCanary: Option[(Seq[Double], Seq[Double])] =
-      try {
-        if (java.nio.file.Files.exists(baselinePath))
-          readPrevCanary(new String(
-            java.nio.file.Files.readAllBytes(baselinePath), "UTF-8"))
-        else None
-      } catch { case _: Throwable => None }
-    // CUMULATIVE cross-round baseline (round-15 verdict ask #2's gate
-    // half): the round-over-round compare can never flag a row that
-    // climbs <=1.4x EVERY round — so every run also compares against the
-    // OLDEST committed snapshot in baselines/ at a wider 1.8x gate,
-    // closing the repeat-drifter blind spot. Advisory like the primary
-    // drift section; rows whose qsf moved since that round are skipped
-    // by the same sf match.
-    val (oldestRound, oldestDetail): (Int, Map[String, PrevRow]) = locally {
-      val rx = """BENCH_DETAIL_r(\d+)\.json""".r
-      Option(repoRoot.resolve("baselines").toFile.listFiles()).toSeq.flatten
-        .flatMap(f => rx.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-        .sorted.headOption
-        .map(k => (k, readBaseline(
-          repoRoot.resolve(s"baselines/BENCH_DETAIL_r$k.json"))))
-        .getOrElse((0, Map.empty))
-    }
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val detailPath = repoRoot.resolve("BENCH_DETAIL.json")
+    val graftCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Cpus(Runtime.getRuntime.availableProcessors(), graftCpus)
+    // DRIFT baseline: the BENCH_DETAIL.json this run finds when it starts
+    // (the last committed unfiltered record), read before anything
+    // overwrites it
+    val baseText: Either[String, String] =
+      try Right(new String(java.nio.file.Files.readAllBytes(detailPath), "UTF-8"))
+      catch { case e: java.io.IOException => Left(s"no readable baseline: $e") }
+    val baseline = baseText.flatMap(baselineRows(_, cpus))
+    val spark = GraftSession.local(graftCpus)
     // untimed warmup: JVM/JIT/codegen startup otherwise lands entirely on
     // whichever query sorts first (~5 s of pure session warmup). Covers the
     // scan/agg, join, and window execution paths so every timed query sees
@@ -547,19 +279,19 @@ object Bench {
     // Per-query GC attribution: a query that inherits a heap full of the
     // previous queries' garbage reports THEIR cost as its own wall time.
     // Logging GC delta per query makes that interference visible instead of
-    // letting it masquerade as a plan regression (round-3 postmortem: six
-    // queries reported 6-12x their isolated times in-suite).
+    // letting it masquerade as a plan regression (six queries once
+    // reported 6-12x their isolated times in-suite).
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     // Engine-health counters per pass: a healthy WARM pass compiles ~nothing
-    // and loads ~no classes (codegen cache hits); the round-6 collapse showed
+    // and loads ~no classes (codegen cache hits); a pass-2 collapse shows
     // as pass-2 jit_sec >> pass-1 with every plan re-loaded. Publishing the
     // deltas makes that failure mode visible in the record instead of only
     // inferable from per-query times.
     // getTotalCompilationTime throws UnsupportedOperationException when the
     // JVM doesn't support compilation-time monitoring — guard both the null
-    // bean and the unsupported case (ADVICE r7).
+    // bean and the unsupported case.
     def jitMillis(): Long = Option(java.lang.management.ManagementFactory
       .getCompilationMXBean)
       .filter(_.isCompilationTimeMonitoringSupported)
@@ -575,8 +307,14 @@ object Bench {
     // interference — a query that loads classes on pass 2 missed the codegen
     // cache (its generated source differs run-to-run), and each such load
     // CHA-invalidates hot compiled code, taxing its NEIGHBORS' wall time.
-    def loadAvg(): Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    def loadAvg(): Double = osBean.getSystemLoadAverage
+    // process CPU (-1 where the JVM cannot measure it: the field reads 0)
+    def cpuSec(): Double = osBean match {
+      case b: com.sun.management.OperatingSystemMXBean =>
+        math.max(b.getProcessCpuTime, 0L) / 1e9
+      case _ => 0.0
+    }
     def measure(pass: String, name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QStat = {
       val gc0 = gcMillis()
@@ -584,19 +322,19 @@ object Bench {
       val c0 = classesLoaded()
       val startMs = System.currentTimeMillis()
       val load0 = loadAvg()
-      // engine-vs-harness split for replay rows (round-14 verdict ask #4):
-      // the replay harnesses accumulate their processAllAvailable wall here
+      // engine-vs-harness split for replay rows: the replay harnesses
+      // accumulate their processAllAvailable wall here
       graft.streaming.StreamReplay.EngineTimer.reset()
+      val cpu0 = cpuSec()
       val t0 = System.nanoTime()
       // noop sink forces full materialization of every output column
       // (a bare .count() would let Catalyst prune the whole projection).
-      var ran = true
       try { fn(spark, dirFor(name)).write.format("noop").mode("overwrite").save() }
       catch { case e: Throwable =>
-        ran = false
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
+      val cpu = cpuSec() - cpu0
       val eng = graft.streaming.StreamReplay.EngineTimer.engineSec
       val gc = (gcMillis() - gc0) / 1e3
       val jit = (jitMillis() - j0) / 1e3
@@ -605,34 +343,31 @@ object Bench {
       // set) so one query's storage footprint can't tax the next 50
       graft.operators.Dedup.releaseComponentCache(spark)
       System.err.println(
-        f"[bench:$pass] $name%-22s $dt%8.2f s  (gc $gc%5.2f s, jit $jit%6.2f s, cls $cls%5d, load $load0%4.1f" +
+        f"[bench:$pass] $name%-22s $dt%8.2f s  (cpu $cpu%6.2f s, gc $gc%5.2f s, jit $jit%6.2f s, cls $cls%5d, load $load0%4.1f" +
           (if (eng > 0) f", eng $eng%5.2f s" else "") + ")")
-      QStat(dt, gc, jit, cls, startMs, load0, ok = ran, eng = eng)
+      QStat(dt, gc, jit, cls, startMs, load0, eng = eng, cpu = cpu)
     }
     def runPass(pass: Int): Seq[(String, QStat)] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>
         name -> measure(pass.toString, name, fn)
       }
-    // TWO full passes, report the per-query MIN. Loading a query's freshly
-    // generated classes invalidates CHA-based speculative inlining in
-    // already-JIT-compiled code, so whichever query runs during the
-    // resulting deopt/recompile window reports the storm's cost as its own
-    // (measured: the same query 2.2 s vs 26.5 s across two suite runs, pure
-    // CPU, zero GC delta). Pass 1 loads every plan's classes; by pass 2 the
-    // class set is stable and each query measures its steady-state plan.
-    // Both pass walls are published alongside the per-query mins.
+    // TWO full passes. Loading a query's freshly generated classes
+    // invalidates CHA-based speculative inlining in already-JIT-compiled
+    // code, so whichever query runs during the resulting deopt/recompile
+    // window reports the storm's cost as its own (measured: the same query
+    // 2.2 s vs 26.5 s across two suite runs, pure CPU, zero GC delta).
+    // Pass 1 loads every plan's classes; by pass 2 the class set is stable
+    // and each query measures its steady-state plan. Both pass walls are
+    // published alongside the per-query mins.
     //
-    // ROUND-6 POSTMORTEM — "pass-2 collapse" (269 s -> 624 s warm): the
-    // paragraph above assumed the class set stabilizes by pass 2, but the
-    // janino codegen cache's default 100 entries is smaller than one pass of
-    // the 141-query suite, so pass 2 got zero cache hits — every plan
-    // re-compiled and RE-LOADED a brand-new generated class, re-running the
-    // very deopt storm the second pass exists to avoid, on top of a code
-    // cache now holding two passes' worth of nmethods. Fixed by sizing
-    // spark.sql.codegen.cache.maxEntries to the suite (build.sbt; static
-    // conf). The per-pass jit/classes/code-cache deltas recorded below make
-    // a recurrence visible directly: healthy warm pass == near-zero pass-2
-    // class loads and jit seconds.
+    // That holds only while the janino codegen cache holds one pass of the
+    // suite: at its default 100 entries pass 2 got zero cache hits and
+    // collapsed (269 s -> 624 s warm), re-running the deopt storm the
+    // second pass exists to avoid. build.sbt sizes
+    // spark.sql.codegen.cache.maxEntries to the suite (static conf); the
+    // per-pass jit/classes/code-cache deltas recorded below make a
+    // recurrence visible: healthy warm pass == near-zero pass-2 class
+    // loads and jit seconds.
     var passJit = Vector.empty[(Double, Long, Double)] // (jit s, classes, codecache MB)
     def instrumented(pass: Int): Seq[(String, QStat)] = {
       val (j0, c0) = (jitMillis(), classesLoaded())
@@ -640,217 +375,74 @@ object Bench {
       passJit :+= (((jitMillis() - j0) / 1e3, classesLoaded() - c0, codeCacheMb()))
       out
     }
-    // canary samples bracket both passes (see canaryStSec/canaryMtSec):
-    // three points each — a mid-run noise window shows as an inflated
-    // middle or tail sample even when the launch-time load looked quiet
-    var canSt = Vector.empty[Double]
-    var canMt = Vector.empty[Double]
-    def sampleCanary(): Unit = {
-      canSt :+= canaryStSec(); canMt :+= canaryMtSec()
-    }
-    sampleCanary()
     val pass1 = instrumented(1)
-    sampleCanary()
     val pass2 = instrumented(2)
-    sampleCanary()
-    // isolated-lane measurements (see IsoLane): one quiet re-measure per
-    // pinned row after both suite passes — nothing interleaved, same
-    // warmed JVM with the steady-state class set, the p3 protocol. A
-    // pre-pass-1 variant was tried (r19) and measured COLD — the engine
-    // warmup does not cover these plans' codegen (800+ class loads,
-    // 20+ jit-seconds), so it always lost the min and only polluted
-    // pass-1 warmth; post-suite-only is the honest same-JVM floor. The
-    // authoritative cross-round attribution for these rows remains the
-    // /tmp-clone interleaved A/B (see the record note).
-    val isoStats: Map[String, QStat] =
-      selected.keySet.intersect(IsoLane).toSeq.sorted
-        .map(n => n -> measure("iso", n, selected(n))).toMap
     val passTotals = Seq(pass1, pass2).map(_.map(_._2.sec).sum)
-    // HEADLINE = the wall total of the latest CLEAN pass (see headlinePass
-    // below): a number some real pass actually produced. The old headline
-    // (sum of per-query min over both passes) is a composite no single run
-    // ever saw — round 9's 147.4 s headline sat against real pass walls of
-    // [432.7, 321.2] s and silently absorbed a ~172 s pass-2 anomaly.
-    // Min-of-passes stays available as the secondary "min_sec" (per-query
-    // steady-state floor).
+    // HEADLINE = the pass-2 wall total: a number a real pass actually
+    // produced. A sum of per-query mins over both passes is a composite no
+    // single run ever saw (it once sat at 147.4 s against real pass walls
+    // of [432.7, 321.2] s and absorbed a ~172 s pass-2 anomaly). The
+    // per-query steady-state floor stays available as "min_sec".
     val minTotal = pass1.zip(pass2)
       .map { case ((_, s1), (_, s2)) => math.min(s1.sec, s2.sec) }.sum
-    // Warm-pass health gate (round-7/9 ask): a warm pass that regresses
-    // vs pass 1 without JIT/class-load attribution is either an engine
-    // defect or external contention. Flag per-query anomalies
-    // (p2 > 3x p1, >1 s absolute excess, jit2+cls2 ~ 0 so codegen-cache
-    // misses are ruled out), then check CONTIGUITY in execution order:
-    // external CPU contention hits whichever queries run during its
-    // wall-clock window, so >=3 anomalies packed into one run-order band
-    // (with the band's timestamps in BENCH_DETAIL proving the overlay)
-    // classify as external; scattered anomalies or a >1.2x pass-2 wall
-    // with no band mark the record UNHEALTHY — a regression to chase,
-    // not a number to publish quietly.
     val stats = pass1.zip(pass2).map { case ((n, s1), (_, s2)) => (n, s1, s2) }
-    // ANOMALY ATTRIBUTION (round-10 verdict ask #1): a flagged anomaly gets
-    // an automatic third, ISOLATED re-run of just that query in the same
-    // warmed JVM; classify() then attributes it transient (one-off:
-    // scheduler, page cache, CPU-frequency dip) or reproducible (a REAL
-    // warm-state defect -> unhealthy). Capped at 8 re-runs to bound bench
-    // wall time; a >8-anomaly storm is either a contiguous band (classified
-    // external) or an engine collapse (unhealthy either way). A banded
-    // record skips the re-runs entirely — classify() would discard their
-    // verdicts as external anyway, and re-running during the very
-    // contention window that caused the band would only repeat the
-    // contaminated walls (review finding, round 11). Only re-runs that
-    // actually COMPLETED feed classification: a crashed re-run's wall is
-    // not evidence the query recovered.
-    // round-13 verdict ask #2: EVERY elevated row (p2 > 1.5x p1, >1 s
-    // excess) re-runs, not just the severe tier; cap raised 8 -> 12 to
-    // cover the widened detector (a >12-row storm is a band or collapse).
-    // ADVICE r14 (both bench items): (a) a band suppresses the elevated-
-    // tier re-runs (classify discards their verdicts as external anyway)
-    // but SEVERE rows keep theirs — a reproducible severe regression
-    // packed inside a mild contention band must not lose its attribution;
-    // (b) the cap is applied severe-FIRST (then by absolute excess), so
-    // the rows that can single-handedly flip the record unhealthy are
-    // never the ones a >12-row storm pushes past the cap.
-    val preBand = classify(stats, Map.empty).band
-    val flaggedRows = stats.filter { case (_, s1, s2) => elevated(s1, s2) }
-    // CANARY-GUARDED p3 (round 19): a re-run measured while the machine
-    // canary reads >1.3x this run's best quiet sample is CONTENTION
-    // evidence, not engine evidence — the r19 sessions watched five
-    // replay rows classify "reproducible" purely because their p3s
-    // landed in a host-noise window (canary mt 1.0-1.2 vs 0.52 quiet,
-    // p3 up to 6x the suite pass). Each flagged row retries up to three
-    // times, keeping the attempt with the CLEANEST canary bracket and
-    // stopping early on a clean one; classify() stays pure and pinned —
-    // only the measurement got more careful.
-    val quietMt = canMt.min
-    def p3Measure(n: String): QStat = {
-      var best: (QStat, Double) = null
-      var attempt = 0
-      var clean = false
-      while (attempt < 3 && !clean) {
-        val c0 = canaryMtSec()
-        val s = measure("3", n, selected(n))
-        val c1 = canaryMtSec()
-        val c = math.max(c0, c1)
-        if (best == null || c < best._2) best = (s, c)
-        clean = c <= quietMt * 1.3
-        attempt += 1
-      }
-      best._1
-    }
-    val p3 = (if (preBand)
-        flaggedRows.filter { case (_, s1, s2) => anomalous(s1, s2) }
-      else flaggedRows)
-      .sortBy { case (_, s1, s2) => (!anomalous(s1, s2), s1.sec - s2.sec) }
-      .take(12)
-      .map { case (n, _, _) => n -> p3Measure(n) }
-      .toMap
-    // The verdict lane is decided by BOTH suite passes (eng > 0 on p1
-    // and p2 — classify's `lane`); the p3 value must live in that same
-    // lane, THREADED from the suite stats rather than inferred from the
-    // p3 stat alone (ADVICE r17: a row gating on wall because p2 lost
-    // its engine metric must not exonerate against an engine-lane p3).
-    // An engine-lane row whose p3 lost ITS engine metric falls back to
-    // the p3 wall — wall ≥ engine, so exoneration only gets harder.
-    val engLane = stats.collect {
-      case (n, s1, s2) if s1.eng > 0 && s2.eng > 0 => n
-    }.toSet
-    val hc = classify(stats,
-      p3.collect { case (n, s) if s.ok =>
-        n -> (if (engLane(n) && s.eng > 0) s.eng else s.sec) },
-      p3.collect { case (n, s) if !s.ok => n }.toSet)
-    val verdicts = hc.verdicts
-    val band = hc.band
-    val status = hc.status
-    val healthOk = hc.ok
-    val headlinePass = hc.headlinePass
-    val pass2Adj = hc.pass2Adj
-    val reproducible = hc.reproducible
-    val total = passTotals(headlinePass - 1)
-    val headline = if (headlinePass == 2) pass2 else pass1
+    val hc = classify(stats)
+    val total = passTotals.last
     // gc_sec binds to the same pass as the headline it accompanies
-    val gcTotal = headline.map(_._2.gc).sum
+    val gcTotal = pass2.map(_._2.gc).sum
     val sfName = new java.io.File(sfDir).getName
-    // CROSS-ROUND DRIFT (round-11 verdict ask #6): per-query min vs the
-    // previous committed record, flagged at >1.5x AND >0.5 s absolute
-    // excess (the ratio alone would flag 0.1 -> 0.2 s noise). Advisory —
-    // it never changes health status — but it makes the judge's
-    // hand-diff of BENCH_DETAIL mins mechanical. Rows whose sf changed
-    // between records (e.g. the round-12 replay-row move to sf0.001)
-    // are incomparable and counted in "skipped_sf_changed".
+    // DRIFT: per-query min vs the baseline record, flagged at >1.5x AND
+    // >0.5 s absolute excess. Advisory — it never changes health status.
+    // Rows whose sf changed between records are incomparable and counted
+    // in "skipped_sf_changed"; a baseline measured with other CPU counts
+    // compares nothing and says why in "reason".
     val (driftJson, driftFlagged) = locally {
-      val cur = pass1.zip(pass2).map { case ((n, s1), (_, s2)) =>
+      val cur = stats.map { case (n, s1, s2) =>
         val minStat = if (s1.sec <= s2.sec) s1 else s2
-        CurRow(n, minStat.sec, new java.io.File(dirFor(n)).getName,
-          minStat.eng, isoStats.get(n).map(_.sec).getOrElse(0.0))
+        CurRow(n, minStat.sec, new java.io.File(dirFor(n)).getName, minStat.eng)
       }
-      val (flagged, compared, skipped, harness) = driftFlags(prevDetail, cur)
-      val (cumFlagged, cumCompared, cumSkipped, _) =
-        driftFlags(oldestDetail, cur, ratio = 1.8)
+      val (flagged, compared, skipped, harness) =
+        baseline.fold(_ => (Nil, 0, 0, Nil), driftFlags(_, cur))
+      (flagged ++ harness).foreach { f =>
+        System.err.println(f"[bench:drift] ${f.name} ${f.metric} ${f.prev}%.3f -> ${f.now}%.3f s")
+      }
+      System.err.println(s"[bench:drift] compared $compared rows" +
+        baseline.left.toOption.fold("")(r => s" ($r)"))
       def fj(f: DriftFlag): String =
         f"""{"name":"${f.name}","prev":${f.prev}%.3f,"now":${f.now}%.3f,""" +
           f""""ratio":${f.now / f.prev}%.2f,"metric":"${f.metric}"}"""
-      // environment verdict: this run's best all-cores canary vs the
-      // baseline's — >1.3x pre-attributes this run's flags to a slower
-      // MACHINE (noisy co-tenant), not slower plans
-      val canJson = canaryRatio(prevCanary, canMt)
-        .map(r => f""""canary_ratio":$r%.2f,""" +
-          s""""canary_inflated":${r > 1.3},""")
-        .getOrElse("")
-      (s"""{"baseline_round":$prevRound,"compared":$compared,""" +
-        s""""skipped_sf_changed":$skipped,$canJson""" +
-        s""""flagged":${flagged.map(fj).mkString("[", ",", "]")},""" +
-        s""""harness_flagged":${harness.map(fj).mkString("[", ",", "]")},""" +
-        s""""cumulative":{"baseline_round":$oldestRound,""" +
-        s""""compared":$cumCompared,"skipped_sf_changed":$cumSkipped,""" +
-        s""""ratio_gate":1.8,""" +
-        s""""flagged":${cumFlagged.map(fj).mkString("[", ",", "]")}}}""",
+      val baseCpus = baseText.toOption.flatMap(readCpus).fold(
+        """"baseline_host_cpus":null,"baseline_spark_graft_cpus":null""")(c =>
+        s""""baseline_host_cpus":${c.host},"baseline_spark_graft_cpus":${c.graft}""")
+      val reason = baseline.left.toOption
+        .fold("")(r => s""""reason":"${r.replace("\"", "'")}",""")
+      (s"""{$baseCpus,"compared":$compared,"skipped_sf_changed":$skipped,""" +
+        s"""$reason"flagged":${flagged.map(fj).mkString("[", ",", "]")},""" +
+        s""""harness_flagged":${harness.map(fj).mkString("[", ",", "]")}}""",
         flagged.size)
     }
+    val health = s"""{"status":"${hc.status}","ok":${hc.ok},""" +
+      f""""pass_ratio":${passTotals.last / passTotals.head}%.2f,"""
     // Full-fidelity per-query record (min + both passes + gc, 3 decimals)
     // goes to a FILE in the repo — the stdout line is size-capped by the
-    // recorder's 2000-char tail, the file is not, and the driver commits
-    // untracked files at round end so the detail reaches the judge.
-    // never from a SPARK_GRAFT_ONLY run: a filtered local iteration must
-    // not clobber the committed full-suite record
+    // recorder's 2000-char tail, the file is not. Never from a
+    // SPARK_GRAFT_ONLY run: a filtered local iteration must not clobber
+    // the committed full-suite record (nor the next run's baseline).
     if (only.isEmpty) locally {
-      // a banded row that still classified reproducible (severe, isolated
-      // re-run reproduced or crashed) must be LABELED reproducible — an
-      // unhealthy record whose every verdict reads "external_band" would
-      // never name the row that flipped it (round-15 self-review)
-      val reproNames = reproducible.map(_.name).toSet
-      def verdictOf(v: Verdict): String =
-        if (reproNames(v.name)) "reproducible"
-        else if (band) "external_band"
-        else if (v.transient) "transient"
-        else "reproducible"
-      def severeOf(v: Verdict): String = if (v.severe) "true" else "false"
-      val byName = verdicts.map(v => v.name -> v).toMap
-      val detail = pass1.zip(pass2).map { case ((n, s1), (_, s2)) =>
-        val extra = (byName.get(n), p3.get(n)) match {
-          case (Some(v), Some(s3)) =>
-            f""","p3":${s3.sec}%.3f,"gc3":${s3.gc}%.2f,""" +
-              f""""jit3":${s3.jit}%.2f,"cls3":${s3.cls},"t3":${s3.startMs},""" +
-              f""""load3":${s3.load}%.1f,"verdict":"${verdictOf(v)}""""
-          case (Some(v), None) => s""","verdict":"${verdictOf(v)}""""
-          case _ => ""
-        }
-        // harness/engine split (round-14 verdict ask #4), bound to the
-        // same min pass as "sec": replay rows' wall is mostly publish/
-        // restart choreography — engine_sec is what the engine owns
+      val verdictOf = hc.verdicts.map(v => v.name -> v).toMap
+      val detail = stats.map { case (n, s1, s2) =>
+        val flag = verdictOf.get(n).fold("")(v => s""","severe":${v.severe}""")
+        // harness/engine split, bound to the same min pass as "sec":
+        // replay rows' wall is mostly publish/restart choreography —
+        // engine_sec is what the engine owns
         val minStat = if (s1.sec <= s2.sec) s1 else s2
         val split = if (minStat.eng > 0)
           f""""engine_sec":${minStat.eng}%.3f,""" +
             f""""harness_sec":${minStat.sec - minStat.eng}%.3f,"""
         else ""
-        // isolated-lane measurement (IsoLane rows): the number the drift
-        // gate compares for this row — suite pressure can't pollute it
-        val isoField = isoStats.get(n)
-          .map(s => f""""iso":${s.sec}%.3f,""").getOrElse("")
-        f"""  "$n":{"sec":${math.min(s1.sec, s2.sec)}%.3f,$split$isoField""" +
+        f"""  "$n":{"sec":${minStat.sec}%.3f,$split""" +
           f""""p1":${s1.sec}%.3f,"p2":${s2.sec}%.3f,""" +
-          // 1/2-suffixed like every other pass pair (the old bare "gc"
-          // carried min-pass gc — renamed so the semantics change is
-          // visible to cross-round readers)
+          f""""cpu1":${s1.cpu}%.2f,"cpu2":${s2.cpu}%.2f,""" +
           f""""gc1":${s1.gc}%.2f,"gc2":${s2.gc}%.2f,""" +
           f""""jit1":${s1.jit}%.2f,"jit2":${s2.jit}%.2f,""" +
           f""""cls1":${s1.cls},"cls2":${s2.cls},""" +
@@ -858,119 +450,41 @@ object Bench {
           f""""load1":${s1.load}%.1f,"load2":${s2.load}%.1f""" +
           (if (dirFor(n) != sfDir)
             s""","qsf":"${new java.io.File(dirFor(n)).getName}""""
-          else "") + s"$extra}"
+          else "") + s"$flag}"
       }.mkString(",\n")
       val jit = passJit.zipWithIndex.map { case ((js, cl, cc), i) =>
         f""""pass${i + 1}":{"jit_sec":$js%.1f,"classes_loaded":$cl,"code_cache_mb":$cc%.1f}"""
       }.mkString("{", ",", "}")
-      val anomalyJson = verdicts.map { v =>
-        f"""{"name":"${v.name}","p1":${v.p1}%.3f,"p2":${v.p2}%.3f""" +
-          v.p3.map(t => f""","p3":$t%.3f""").getOrElse("") +
-          s""","severe":${severeOf(v)},"verdict":"${verdictOf(v)}"}"""
+      val anomalyJson = hc.verdicts.map { v =>
+        f"""{"name":"${v.name}","p1":${v.p1}%.3f,"p2":${v.p2}%.3f,""" +
+          s""""severe":${v.severe}}"""
       }.mkString("[", ",", "]")
-      val health = s"""{"status":"$status","ok":$healthOk,""" +
-        f""""pass_ratio":${passTotals.last / passTotals.head}%.2f,""" +
-        f""""pass_ratio_adjusted":${pass2Adj / passTotals.head}%.2f,""" +
-        f""""pass2_adjusted_sec":$pass2Adj%.1f,""" +
-        s""""anomalies":$anomalyJson,"contiguous_band":$band,""" +
-        s""""headline_pass":$headlinePass}"""
-      // per-round attribution notes, carried in the record so cross-round
-      // readers see the cause next to the numbers it explains
-      val note = "round-19 record context. SURFACE: 243 queries (r18: " +
-        "239) — the retention matrix CLOSES: stream_neardup_ttl " +
-        "(trailing-window MinHash dedup through NearDupIndexTtl — " +
-        "per-probe event-time window, horizon eviction, arrival gate) " +
-        "+ state_inspect_neardup_ttl (pruned bucket index rolled per " +
-        "band: residents, buckets, collision mass, id sum) and " +
-        "stream_media_dedup_ttl (in-stream PNG decode -> aHash feeding " +
-        "DistinctActiveTtl — the retention kit composes, no new " +
-        "processor; answer read from the live feed's final per-key " +
-        "emission) + state_inspect_media_ttl (pruned store, original/" +
-        "mirror id sums separated) join the sf0.001 replay surface — " +
-        "expect the headline to absorb ~4 heavy replay rows (each " +
-        "publishes waves, restarts mid-stream, redelivers a quarter, " +
-        "then full-redelivers to compact every key). " +
-        "stream_index_serve now re-checks the corpus fingerprint EVERY " +
-        "micro-batch (IndexStore.assertFresh — a metadata listing per " +
-        "batch, r18 ask #4c), a small harness-lane addition to that " +
-        "row. ISOLATED DRIFT LANE (r18 asks #2/#5): cluster_split/" +
-        "pagerank/pagerank_convergence/sketch_accuracy — drift-flagged " +
-        "three rounds running, every time attributed to suite " +
-        "cache/memory pressure by commit-indistinguishable isolated " +
-        "A/Bs — now carry an 'iso' measurement (one quiet re-run after " +
-        "both passes) and their drift gate compares iso-vs-iso; " +
-        "against the r18 baseline (which predates the field) the gate " +
-        "compares THIS run's isolated time to the old in-suite min " +
-        "(metric iso_vs_prev_min), which only flags a real plan " +
-        "regression since iso <= suite-min under no contention. " +
-        "CUMULATIVE-LANE ATTRIBUTION (the 1.8x-vs-r14 compare): the r14 " +
-        "record's graph-trio values (cluster_split 1.83, pagerank 2.26) " +
-        "are NOT REPRODUCIBLE BY THE R14 CODE today — a /tmp clone at " +
-        "the r14 bench commit (a225d68), run isolated in the same quiet " +
-        "window as HEAD (interleaved A/B, load<1 at launch), measures " +
-        "p2 cluster_split 3.25 / pagerank 4.18 / convergence 3.19 / " +
-        "sketch 2.52 vs HEAD's 3.43 / 3.83 / 3.39 / 2.99 — " +
-        "commit-indistinguishable (HEAD pagerank faster); the box's " +
-        "baseline cost for these cached-fixpoint shapes rose ~1.5x " +
-        "since round 14 — environment drift, not plan regressions — so " +
-        "a residual cumulative-lane flag on these rows is the OLD " +
-        "RECORD being unreproducible, not a regression HEAD could fix. " +
-        "MACHINE CANARY (new): a fixed plan-free CPU workload (1-thread " +
-        "and all-cores) sampled before/between/after the passes, " +
-        "published as canary{st,mt} with a drift-section " +
-        "canary_ratio/canary_inflated verdict vs the baseline's canary " +
-        "— measured necessity: the same round-19 commit benched 304 s " +
-        "(quiet) and 425-473 s (host co-tenant noise, in-VM idle load 0 " +
-        "the whole time), and without a machine-speed reference those " +
-        "windows read as ~30 spurious per-query flags. The p3 anomaly " +
-        "re-runs are canary-GUARDED: an attempt bracketed by a dirty " +
-        "canary (>1.3x the run's best) retries up to three times and " +
-        "keeps the cleanest bracket — watched necessity: five replay " +
-        "rows classified 'reproducible' in one noisy window purely " +
-        "because their p3s landed in the noise (p3 up to 6x the suite " +
-        "pass, canary 2x quiet at that moment). " +
-        "FULL-TAIL LEDGER (r18 ask #7): the drift lanes have always " +
-        "compared EVERY row, not the stdout top-49 — the record's " +
-        "drift.compared field counts the whole surface (243 minus " +
-        "sf-changed skips); the stdout top-N is a display cap only, " +
-        "the complete per-row compare lives in this file vs the " +
-        "committed baselines. DRIFT baseline is the committed " +
-        "round-18 record (baselines/BENCH_DETAIL_r18.json, snapshotted " +
-        "by this round's first run); cumulative lane seeds from " +
-        "baselines/BENCH_DETAIL_r14.json, the oldest committed " +
-        "snapshot."
       val body = f"""{"sf":"$sfName","total_sec":$total%.3f,""" +
         s""""headline":"$headlineMetric",""" +
-        f""""queries_metric":"pass$headlinePass",""" +
-        s""""note":"$note",""" +
+        s""""queries_metric":"$headlineMetric",""" +
         s""""replay_sf":"${new java.io.File(replaySfDir).getName}",""" +
+        s""""host_cpus":${cpus.host},"spark_graft_cpus":${cpus.graft},""" +
         f""""min_sec":$minTotal%.3f,""" +
         f""""gc_sec":$gcTotal%.2f,"pass_sec":[${passTotals.head}%.1f,""" +
         f"""${passTotals.last}%.1f],"jit":$jit,""" +
-        s""""canary":{"st":${canSt.map(c => f"$c%.3f").mkString("[", ",", "]")},""" +
-        s""""mt":${canMt.map(c => f"$c%.3f").mkString("[", ",", "]")}},""" +
-        f""""health":$health,""" +
-        f""""drift":$driftJson,""" +
+        s""""health":$health"anomalies":$anomalyJson},""" +
+        s""""drift":$driftJson,""" +
         f""""queries":{\n$detail\n}}\n"""
-      try java.nio.file.Files.write(repoRoot.resolve("BENCH_DETAIL.json"),
-        body.getBytes("UTF-8"))
+      try java.nio.file.Files.write(detailPath, body.getBytes("UTF-8"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] BENCH_DETAIL.json write failed: $e")
       }
     }
-    // The stdout JSON line must survive the recorder's 2000-char tail
-    // (BENCH_r04 overflowed it and parsed as null). Budget 1700 chars:
+    // The stdout JSON line must survive the recorder's 2000-char tail (a
+    // line that overflowed it once parsed as null). Budget 1700 chars:
     // try full query maps at decreasing precision; if even dp=1 overflows
     // (the suite keeps growing), drop the FASTEST queries into an honest
     // "queries_omitted"/"omitted_sec" rollup — the slow ones are the
     // signal, the total stays exact, and the full map is in
     // BENCH_DETAIL.json. "value" stays the LAST key so the headline total
-    // survives any future head-truncation.
-    // per-query stdout numbers come from the SAME pass as the headline
-    // (whichever clean pass "queries_metric" names), so the line is
-    // internally consistent; per-query min and both raw passes live in
-    // BENCH_DETAIL.json
-    val results = headline.map { case (n, s) => n -> s.sec }
+    // survives any future head-truncation. Per-query stdout numbers come
+    // from pass 2, like the headline, so the line is internally consistent.
+    val results = pass2.map { case (n, s) => n -> s.sec }
     def line(dp: Int, keep: Int): String = {
       val byTime = results.sortBy(-_._2)
       val (kept, dropped) = byTime.splitAt(math.min(keep, byTime.size))
@@ -980,21 +494,16 @@ object Bench {
       val omitted = if (dropped.isEmpty) ""
       else f""","queries_omitted":${dropped.size},"omitted_sec":${dropped.map(_._2).sum}%.1f"""
       val jitSec = passJit.map(j => f"${j._1}%.1f").mkString("[", ",", "]")
-      val health = s"""{"status":"$status","ok":$healthOk,""" +
-        f""""pass_ratio":${passTotals.last / passTotals.head}%.2f,""" +
-        f""""pass_ratio_adjusted":${pass2Adj / passTotals.head}%.2f,""" +
-        s""""anomalies":${verdicts.size},""" +
-        s""""transient":${verdicts.count(_.transient)},""" +
-        s""""reproducible":${reproducible.size},"contiguous_band":$band,""" +
-        f""""canary_mt_min":${canMt.min}%.2f,""" +
-        s""""drift_flagged":$driftFlagged}"""
       s"""{"metric":"total","unit":"sec","sf":"$sfName",""" +
         s""""replay_sf":"${new java.io.File(replaySfDir).getName}",""" +
         s""""headline":"$headlineMetric",""" +
-        s""""queries_metric":"pass$headlinePass","queries":$qs$omitted,""" +
+        s""""queries_metric":"$headlineMetric","queries":$qs$omitted,""" +
         s""""gc_sec":${f"$gcTotal%.2f"},"pass_sec":[${f"${passTotals.head}%.1f"},""" +
         s"""${f"${passTotals.last}%.1f"}],"jit_sec":$jitSec,""" +
-        s""""min_sec":${f"$minTotal%.3f"},"health":$health,""" +
+        s""""min_sec":${f"$minTotal%.3f"},"health":$health""" +
+        s""""anomalies":${hc.verdicts.size},""" +
+        s""""severe":${hc.verdicts.count(_.severe)},""" +
+        s""""drift_flagged":$driftFlagged},""" +
         s""""value":${f"$total%.3f"}}"""
     }
     val all = results.size

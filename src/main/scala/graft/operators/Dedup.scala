@@ -362,10 +362,11 @@ object Dedup {
     * failure to copy any genuinely runtime conf surfaces to the caller
     * instead of silently running the rounds under different semantics.
     */
-  // private[graft] so graft.tools probes can run A/B variants under the
-  // SAME round scoping as the shipped path (ADVICE r10: the round-10
-  // prefix-unroll rejection measurement was confounded by comparing a
-  // session-default-partition variant against the 8-partition baseline)
+  // private[graft] so the other round-scoped work shares this one scoping:
+  // RelationalSuite's pagerank rounds run in the same child session, and
+  // SketchDeterminismSpec runs its sketches under it (an A/B that compares
+  // a session-default-partition variant against the 8-partition kernels
+  // is confounded, as the prefix-unroll measurement in 0cb0d89 was)
   //
   // Cached per (parent, partitions) — the same churn argument as
   // ReplayHarness.session: a fresh newSession per invocation makes
@@ -414,12 +415,12 @@ object Dedup {
       // partitioning at plan time (a conservative re-exchange gets
       // planned), but once the TableCacheQueryStage materializes, AQE's
       // runtime re-planning sees the cache's real hashpartitioning and
-      // ELIDES that exchange (measured: ProbeCacheVariants' final plans
-      // join SortMergeJoin directly over TableCacheQueryStage;
-      // GraphPropertySpec pins it). That elision needs the cached plan's
-      // final partition COUNT to stay put — this flag stops AQE's
-      // final-stage shuffle optimization from coalescing it away from the
-      // round partition count the rank side shuffles to.
+      // ELIDES that exchange (measured in e11cb5f: the final plans of the
+      // pagerank edge-cache variants join SortMergeJoin directly over
+      // TableCacheQueryStage; GraphPropertySpec pins it). That elision
+      // needs the cached plan's final partition COUNT to stay put — this
+      // flag stops AQE's final-stage shuffle optimization from coalescing
+      // it away from the round partition count the rank side shuffles to.
       child.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       child
@@ -524,7 +525,7 @@ object Dedup {
     * the first 4 flooding rounds job-free into the initial plan — one
     * materialization covering diameter <= 4 before the eager loop — is
     * SLOWER on the wired cluster_split pairs (interleaved in-JVM A/B,
-    * ProbeFixpointPrefix: median 4.06 s prefixed vs 3.38 s plain at
+    * 84324ca: median 4.06 s prefixed vs 3.38 s plain at
     * sf0.1 local[32]): the chained 4-shuffle prefix job costs more than
     * the small per-round jobs it replaces. Per-round checkpoints stay.
     */

@@ -242,8 +242,8 @@ object SimilaritySuite {
     * from the same seeded hyperplane literals, so the comparison is exact
     * even though LSH recall at this threshold is probabilistic.
     *
-    * Scaling attribution (round-13, measured by ProbeLshCandidates at
-    * the exact autoBits widths): across the 20k -> 200k decade, bucket
+    * Scaling attribution (round-13, measured in 5fb8804 at the exact
+    * autoBits widths): across the 20k -> 200k decade, bucket
     * collisions — the in-join cosine verify work — grew 15.5x and wall
     * time 6.6x (within-decade slope 0.82), while the TRUE OUTPUT at the
     * 0.4 threshold grew 27.8x (8.7k -> 242k pairs, ~n^1.4): the fixture

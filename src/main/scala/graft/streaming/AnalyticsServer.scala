@@ -17,7 +17,10 @@ import graft.model.PageEvent
   *     `Flux.interval(1s)` SSE over the interactive-query store).
   *   - `GET /publish?name=&topic=` — one-row ingest via the supplied
   *     publish function; echoes the event as JSON with the reference's
-  *     field shape (date as epoch millis).
+  *     field shape (date as epoch millis). A request the publish function
+  *     refuses with an IllegalArgumentException (an unknown topic, a
+  *     malformed escape) answers 400 with the message; nothing is
+  *     published.
   *   - `GET /` — static live-chart page. The reference pulls smoothie.js
   *     from a CDN; this offline build inlines an equivalent canvas chart.
   *
@@ -90,9 +93,11 @@ final class AnalyticsServer(
           s""""date":${ev.date.getTime},"duration":${ev.duration}}""")
     } catch {
       // without this the exchange is never closed and the client hangs
-      // until its own timeout instead of seeing the failure
+      // until its own timeout instead of seeing the failure; a refused
+      // request is the client's error (400), anything else the server's
       case e: Exception =>
-        respond(ex, 500, "application/json",
+        respond(ex, if (e.isInstanceOf[IllegalArgumentException]) 400 else 500,
+          "application/json",
           s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
     }
   })

@@ -122,12 +122,16 @@ final class PageEventPipeline(spark: SparkSession, root: String,
 
   /** Entry point C serving: the reference's HTTP surface (SSE /analytics,
     * /publish, live chart page) over this pipeline's analytics store.
-    * port 0 = ephemeral (see AnalyticsServer.boundPort).
+    * port 0 = ephemeral (see AnalyticsServer.boundPort). `/publish`
+    * writes to T1 or T2 (T1 when the request names no topic) and refuses
+    * any other topic with a 400 that names the two.
     */
   def startServer(port: Int = 0): AnalyticsServer = {
     val topics = Map(Topics.T1 -> t1, Topics.T2 -> t2)
     new AnalyticsServer(analytics,
-      (name, topic) => publish(name, topics.getOrElse(topic, t1)),
+      (name, topic) => publish(name, topics.getOrElse(topic,
+        throw new IllegalArgumentException(s"unknown topic '$topic'; " +
+          s"known topics: ${topics.keys.toSeq.sorted.mkString(", ")}"))),
       port = port).start()
   }
 

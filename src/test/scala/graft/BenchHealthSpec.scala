@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench.classify — the warm-pass health gate's pure core (round-10
-  * verdict ask #1 / ADVICE r10). Every branch driven with synthetic
-  * QStats: clean record, transient anomaly (p3 exonerates, headline
-  * stays accountable), reproducible anomaly (unhealthy), contiguous
-  * contention band (external), missing p3 (stays unattributed =
-  * reproducible), and the exonerated pass-ratio check.
+/** Bench's pure cores: the warm-pass health gate (`classify`), the drift
+  * compare (`driftFlags`), the baseline reader (`readPrevDetail`,
+  * `baselineRows`) and the committed record's shape. Every branch is
+  * driven with synthetic QStats and records: clean record, severe rows
+  * (unhealthy wherever they sit in the run order), the elevated tier, the
+  * pass-ratio gate, the engine lane of replay rows, and a baseline that
+  * compares only when it was measured with this run's CPU counts.
   */
 class BenchHealthSpec extends AnyFunSuite {
   import Bench.{QStat, classify}
@@ -20,104 +21,66 @@ class BenchHealthSpec extends AnyFunSuite {
       : Seq[(String, QStat, QStat)] =
     (0 until n).map(i => (f"q$i%02d", q(1.0), q(p2Over.getOrElse(i, 1.0))))
 
-  test("clean two-pass record: ok, headline binds to pass 2") {
-    val h = classify(stats(10), Map.empty)
-    assert(h.status == "ok" && h.ok && h.headlinePass == 2)
-    assert(h.verdicts.isEmpty && !h.band)
+  /** The committed record, read from the repo root (the test JVM's CWD). */
+  private def committedRecord(): String = {
+    val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
+    assert(java.nio.file.Files.exists(p), "BENCH_DETAIL.json is not committed")
+    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
   }
 
-  test("single anomaly exonerated by p3: ok; headline metric stays pinned to pass 2") {
-    // the unpivot_metrics shape: 1 s -> 18.7 s with jit/cls ~ 0
-    val h = classify(stats(10, Map(4 -> 18.7)), Map("q04" -> 1.1))
-    assert(h.verdicts.size == 1 && h.verdicts.head.transient &&
-      h.verdicts.head.severe)
-    assert(h.status == "ok" && h.ok)
-    // headline is PINNED (round-13 verdict ask #3): contamination is
-    // expressed via pass2Adj/status, never by switching the metric
-    assert(h.headlinePass == 2)
-    // exonerated ratio: 9x1 + 1.1 vs 10 -> no blowup
-    assert(math.abs(h.pass2Adj - 10.1) < 1e-9)
+  test("clean two-pass record: ok, headline binds to pass 2") {
+    val h = classify(stats(10))
+    assert(h.status == "ok" && h.ok && h.verdicts.isEmpty)
+    assert(Bench.headlineMetric == "pass2")
   }
 
   test("severe anomaly reproduced by p3: unhealthy") {
-    val h = classify(stats(10, Map(4 -> 18.7)), Map("q04" -> 17.9))
-    assert(h.verdicts.size == 1 && !h.verdicts.head.transient)
-    assert(h.status == "unhealthy" && !h.ok && h.headlinePass == 2)
-  }
-
-  test("anomaly with NO p3 measurement stays unattributed = unhealthy") {
-    val h = classify(stats(10, Map(4 -> 18.7)), Map.empty)
+    // no re-run is consulted any more: the severe pass-2 row itself is
+    // the reproduction, and it flips the record
+    val h = classify(stats(10, Map(4 -> 18.7)))
+    assert(h.verdicts.map(v => (v.name, v.p1, v.p2, v.severe)) ==
+      Seq(("q04", 1.0, 18.7, true)))
     assert(h.status == "unhealthy" && !h.ok)
   }
 
-  test("contiguous band of anomalies: external; headline metric still pinned") {
-    val h = classify(stats(12, Map(3 -> 9.0, 4 -> 8.0, 5 -> 7.5)), Map.empty)
-    assert(h.band && h.status == "external" && h.ok && h.headlinePass == 2)
-    assert(h.reproducible.isEmpty)
+  test("anomaly with NO p3 measurement stays unattributed = unhealthy") {
+    val h = classify(stats(10, Map(4 -> 18.7)))
+    assert(h.status == "unhealthy" && !h.ok)
   }
 
-  test("committed drift section compares against the PREVIOUS round's snapshot") {
-    // round-14 verdict "what's wrong" #1: the drift gate compared r14 to
-    // an earlier r14 run. The committed record must name its baseline
-    // round, and that round must be the previous one: during round N the
-    // highest committed BENCH_r{K}.json is K = N-1 = baseline_round; at
-    // judge time (after the driver commits BENCH_r{N}.json) it is K = N =
-    // baseline_round + 1. Anything older means the snapshot went stale.
-    val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
-    if (java.nio.file.Files.exists(p)) {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      """"baseline_round":(\d+)""".r.findFirstMatchIn(text).foreach { m =>
-        val baseline = m.group(1).toInt
-        val rx = """BENCH_r(\d+)\.json""".r
-        val maxK = Option(new java.io.File(".").listFiles()).toSeq.flatten
-          .flatMap(f => rx.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-          .sorted.lastOption.getOrElse(0)
-        assert(baseline == maxK || baseline == maxK - 1,
-          s"drift baseline r$baseline is stale vs newest BENCH_r$maxK")
-        assert(java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"baselines/BENCH_DETAIL_r$baseline.json")),
-          s"baseline snapshot baselines/BENCH_DETAIL_r$baseline.json missing")
-      }
-    }
+  test("three contiguous severe rows classify unhealthy") {
+    // adjacent in run order, the shape a contention band used to excuse
+    // as "external": severe rows flip the record wherever they sit
+    val h = classify(stats(12, Map(3 -> 9.0, 4 -> 8.0, 5 -> 7.5)))
+    assert(h.verdicts.map(_.name) == Seq("q03", "q04", "q05"))
+    assert(h.verdicts.forall(_.severe))
+    assert(h.status == "unhealthy" && !h.ok)
   }
 
-  test("severe row inside a band: p3 attribution decides, not the band (ADVICE r14)") {
-    // a severe 9x row packed between two mild 2.2x rows forms a 3-row
-    // band; the old severe-only logic would have re-run it, the r14
-    // elevated-band logic skipped ALL re-runs and called it external.
-    // Now: a p3 that REPRODUCES severe flips unhealthy through the band...
-    val banded = stats(12, Map(3 -> 2.2, 4 -> 9.0, 5 -> 2.3))
-    val h = classify(banded, Map("q04" -> 8.5))
-    assert(h.band, "three packed elevated rows must band")
-    assert(h.status == "unhealthy",
-      s"severe reproduced in isolation cannot hide behind the band: $h")
-    // ...a p3 back at pass-1 level stays external (band took the blame)...
-    val h2 = classify(banded, Map("q04" -> 1.1))
-    assert(h2.band && h2.status == "external", s"exonerated in-band: $h2")
-    // ...a banded severe row with NO p3 SCHEDULED keeps the band's
-    // external verdict (reachable only past a >12-severe storm under the
-    // severe-first ordering)...
-    val h3 = classify(banded, Map.empty)
-    assert(h3.band && h3.status == "external", s"no-p3 in-band default: $h3")
-    // ...but a banded severe row whose re-run CRASHED kept no attribution
-    // and must classify unhealthy, not hide behind the band — and the
-    // reproducible ledger must NAME it (round-15 self-review findings)
-    val h4 = classify(banded, Map.empty, p3Failed = Set("q04"))
-    assert(h4.status == "unhealthy",
-      s"crashed re-run of a banded severe row must not exonerate: $h4")
-    assert(h4.reproducible.map(_.name) == Seq("q04"),
-      s"the ledger must name the row that flipped the record: $h4")
-    // the reproduced-severe case (h above) names its row too
-    assert(h.reproducible.map(_.name) == Seq("q04"),
-      s"banded reproduced-severe must be in the ledger: $h")
-    // and the clean-band case keeps an empty ledger
-    assert(h2.reproducible.isEmpty && h3.reproducible.isEmpty)
+  test("committed drift section names its baseline's CPU counts") {
+    // the record says which machine its drift baseline came from, and it
+    // compared rows only when that machine's counts equal its own
+    val text = committedRecord()
+    val own = Bench.readCpus(text)
+    assert(own.isDefined, "the record must publish host_cpus and spark_graft_cpus")
+    val drift = """"drift":\{[^\[]*""".r.findFirstIn(text)
+    assert(drift.isDefined, "the record has no drift section")
+    val base = """"baseline_host_cpus":(null|\d+),"baseline_spark_graft_cpus":(null|\d+)""".r
+      .findFirstMatchIn(drift.get)
+    assert(base.isDefined, s"drift section does not name its baseline's CPU counts: ${drift.get}")
+    val compared = """"compared":(\d+)""".r.findFirstMatchIn(drift.get).get.group(1).toInt
+    if (compared > 0)
+      assert(base.get.group(1) == own.get.host.toString &&
+        base.get.group(2) == own.get.graft.toString,
+        s"compared $compared rows against another machine's baseline: ${drift.get}")
+    else assert(drift.get.contains(""""reason":"""),
+      s"a drift section that compared nothing must say why: ${drift.get}")
   }
 
   test("headline metric constant is pass2 and matches any committed record") {
-    // the r13 record switched pass2 -> pass1 silently; the metric is now
-    // a pinned constant, and any future BENCH_DETAIL carrying the
-    // explicit "headline" field must agree with it
+    // a record once switched pass2 -> pass1 silently; the metric is a
+    // pinned constant, and any BENCH_DETAIL carrying the explicit
+    // "headline" field must agree with it
     assert(Bench.headlineMetric == "pass2")
     val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
     if (java.nio.file.Files.exists(p)) {
@@ -129,71 +92,45 @@ class BenchHealthSpec extends AnyFunSuite {
     }
   }
 
-  test("severe flag whose p3 reproduces only the MILD tier does not flip unhealthy") {
-    // p1=1.0, p2=4.5 (severe), isolated p3=2.6: the severe anomaly did
-    // NOT reproduce (2.6 < 3x), only an elevation did — recorded as a
-    // non-transient verdict (counts un-exonerated toward the ratio gate)
-    // but the record stays ok; p3 at severe level (3.5) still flips it
-    // 20 queries so the un-exonerated 3.5 s excess stays under the 1.2x
-    // ratio gate — the boundary under test is the severe trigger alone
-    val h = classify(stats(20, Map(4 -> 4.5)), Map("q04" -> 2.6))
-    assert(h.verdicts.size == 1 && h.verdicts.head.severe &&
-      !h.verdicts.head.transient)
-    assert(h.status == "ok", s"mild-reproduced severe flag must stay ok: $h")
-    val h2 = classify(stats(20, Map(4 -> 4.5)), Map("q04" -> 3.5))
-    assert(h2.status == "unhealthy",
-      s"severe-reproduced flag must stay unhealthy: $h2")
-  }
-
   test("elevated tier (round-13 ask #2): 1.5x-3x rows get verdicts, not unhealthy alone") {
-    // embed_ivfpq's r13 shape: 1.67 -> 3.14 s (1.9x, non-severe). With a
-    // p3 that reproduces the elevation, the row is recorded reproducible
-    // but only the SEVERE tier can flip the record unhealthy by itself.
-    val h = classify(
-      Seq(("ivfpq", q(1.67), q(3.14))) ++ stats(9),
-      Map("ivfpq" -> 3.0))
+    // embed_ivfpq's shape: 1.67 -> 3.14 s (1.9x, non-severe). The row is
+    // recorded, but only the SEVERE tier flips the record by itself.
+    val h = classify(Seq(("ivfpq", q(1.67), q(3.14))) ++ stats(9))
     assert(h.verdicts.size == 1 && !h.verdicts.head.severe)
-    assert(!h.verdicts.head.transient)
-    assert(h.status == "ok", s"mild reproducible row must not flip status: $h")
-    // and the same row exonerated by p3 subtracts its excess from pass2Adj
-    val h2 = classify(
-      Seq(("ivfpq", q(1.67), q(3.14))) ++ stats(9),
-      Map("ivfpq" -> 1.7))
-    assert(h2.verdicts.head.transient)
-    assert(math.abs(h2.pass2Adj - (9.0 + 1.7)) < 1e-9)
+    assert(h.status == "ok", s"an elevated row must not flip status: $h")
   }
 
   test("scattered anomalies (no band): unhealthy even when >=3") {
-    val h = classify(stats(20, Map(0 -> 9.0, 9 -> 8.0, 19 -> 7.5)), Map.empty)
-    assert(!h.band && h.status == "unhealthy")
+    val h = classify(stats(20, Map(0 -> 9.0, 9 -> 8.0, 19 -> 7.5)))
+    assert(h.status == "unhealthy")
   }
 
   test("broad un-attributed pass-2 blowup fails the ratio gate") {
     // every query 1.5x slower warm: no single anomaly, but pass ratio 1.5
-    val h = classify((0 until 10).map(i => (s"q$i", q(1.0), q(1.5))), Map.empty)
-    assert(h.verdicts.isEmpty && h.status == "unhealthy" && h.headlinePass == 2)
+    val h = classify((0 until 10).map(i => (s"q$i", q(1.0), q(1.5))))
+    assert(h.verdicts.isEmpty && h.status == "unhealthy")
   }
 
   test("tier boundaries: 2.9x is elevated-not-severe; sub-1s excess flags nothing") {
     // "a" 1.0 -> 2.9 s: elevated (gets a verdict) but below the severe 3x;
     // "b" 0.2 -> 0.9 s: >3x ratio yet under the 1 s absolute floor of BOTH
-    // tiers — never flagged
+    // tiers — never flagged. 20 flat rows keep the two rows' 2.6 s of
+    // excess under the 1.2x ratio gate: the boundary under test is the
+    // tiers alone
     val h = classify(
       Seq(("a", q(1.0), q(2.9)), ("b", q(0.2), q(0.9))) ++
-        stats(8).map { case (n, s1, s2) => (n + "x", s1, s2) },
-      Map("a" -> 1.1))
+        stats(20).map { case (n, s1, s2) => (n + "x", s1, s2) })
     assert(h.verdicts.map(_.name) == Seq("a"))
-    assert(!h.verdicts.head.severe && h.verdicts.head.transient)
+    assert(!h.verdicts.head.severe)
     assert(h.status == "ok")
   }
 
   test("pass-2 jit/class loads disqualify the SEVERE flag but not the elevated verdict") {
     // jit/cls attribute the slowness to a codegen-cache miss, so the row
-    // is never severe — but the widened elevated tier still owes it a p3
-    // verdict; absent one, the un-exonerated excess fails the ratio gate
+    // is never severe — but it is still an elevated verdict, and its
+    // excess still counts toward the ratio gate
     val h = classify(
-      Seq(("a", q(1.0), q(9.0, jit = 2.0, cls = 1000))) ++ stats(9),
-      Map.empty)
+      Seq(("a", q(1.0), q(9.0, jit = 2.0, cls = 1000))) ++ stats(9))
     assert(h.verdicts.size == 1 && !h.verdicts.head.severe)
     assert(h.status == "unhealthy")
   }
@@ -207,43 +144,23 @@ class BenchHealthSpec extends AnyFunSuite {
           QStat(8.0, 0, 0, 0, 0L, 3.0, eng = 1.1))
       else (f"q$i%02d", q(1.0), q(1.0))
     }
-    assert(classify(harnessNoise, Map.empty).verdicts.isEmpty)
+    assert(classify(harnessNoise).verdicts.isEmpty)
     // the same row with a REAL engine regression flags severe, and its
-    // p3 compares in the same engine lane: an isolated re-run back at
-    // engine pass-1 level exonerates even if its wall stays noisy
+    // verdict reports the engine lane's seconds
     val engineReg = (0 until 10).map { i =>
       if (i == 4)
         ("q04", QStat(3.0, 0, 0, 0, 0L, 1.0, eng = 1.0),
           QStat(8.0, 0, 0, 0, 0L, 1.0, eng = 6.0))
       else (f"q$i%02d", q(1.0), q(1.0))
     }
-    val flagged = classify(engineReg, Map.empty)
+    val flagged = classify(engineReg)
     assert(flagged.verdicts.size == 1 && flagged.verdicts.head.severe &&
       flagged.verdicts.head.p1 == 1.0 && flagged.verdicts.head.p2 == 6.0,
       s"engine-lane verdict wrong: ${flagged.verdicts}")
     assert(flagged.status == "unhealthy")
-    val exonerated = classify(engineReg, Map("q04" -> 1.2))
-    assert(exonerated.verdicts.head.transient && exonerated.status == "ok")
-    // a plain batch row (eng = 0) still gates on wall exactly as before
+    // a plain batch row (eng = 0) still gates on wall
     val batch = stats(10, Map(4 -> 8.0))
-    assert(classify(batch, Map.empty).verdicts.size == 1)
-  }
-
-  test("exonerated excess is capped at the row's WALL delta (ADVICE r17)") {
-    // engine-lane transient: lane excess p2−p3 = 6.0−1.2 = 4.8 but the
-    // row only added 7.0−3.0 = 4.0 s of wall to pass 2 (the isolated
-    // re-run's harness share undercut p2's) — the wall-based ratio gate
-    // must forgive at most the wall the row actually contributed
-    val rows = (0 until 10).map { i =>
-      if (i == 4)
-        ("q04", QStat(3.0, 0, 0, 0, 0L, 1.0, eng = 1.0),
-          QStat(7.0, 0, 0, 0, 0L, 1.0, eng = 6.0))
-      else (f"q$i%02d", q(1.0), q(1.0))
-    }
-    val h = classify(rows, Map("q04" -> 1.2))
-    assert(h.verdicts.size == 1 && h.verdicts.head.transient)
-    // pass2Total = 9 + 7 = 16; capped exoneration = 4.0 (not 4.8)
-    assert(math.abs(h.pass2Adj - 12.0) < 1e-9, s"pass2Adj: ${h.pass2Adj}")
+    assert(classify(batch).verdicts.size == 1)
   }
 
   test("driftFlags: ratio+absolute gate, sf-changed rows skipped, new rows ignored") {
@@ -297,103 +214,18 @@ class BenchHealthSpec extends AnyFunSuite {
       s"harness drift must flag separately, never as engine: $harness")
   }
 
-  test("isolated lane (r18 ask #2): IsoLane rows gate on iso, suite pressure cannot flag") {
-    import Bench.{CurRow, PrevRow}
-    // the pinned set is exactly the recurring drift-flagged rows: the
-    // cached-edge graph trio + sketch_accuracy (r18 ask #5)
-    assert(Bench.IsoLane == Set("cluster_split", "pagerank",
-      "pagerank_convergence", "sketch_accuracy"))
-    val prev = Map(
-      // the three-round scenario this lane exists for: the suite min
-      // inflated 2.0 -> 3.8 (would flag on the sec lane) but isolated
-      // is commit-indistinguishable (2.0 -> 2.1) -> NO flag
-      "pagerank"   -> PrevRow(2.0, "sf0.1", iso = 2.0),
-      // a REAL plan regression shows in the isolated lane too -> flags
-      // with metric iso_sec
-      "iso_regr"   -> PrevRow(2.0, "sf0.1", iso = 2.0),
-      // baseline predates the iso field (e.g. the r18 snapshot): this
-      // run's ISOLATED time compares against the old in-suite min —
-      // iso <= suite-min under no contention, so silence means the plan
-      // held and a flag means the isolated time exceeds even the old
-      // suite time
-      "first_iso"  -> PrevRow(2.0, "sf0.1"),
-      "first_bad"  -> PrevRow(2.0, "sf0.1"))
-    val cur = Seq(
-      CurRow("pagerank", 3.8, "sf0.1", iso = 2.1),
-      CurRow("iso_regr", 4.1, "sf0.1", iso = 4.0),
-      CurRow("first_iso", 3.8, "sf0.1", iso = 2.1),
-      CurRow("first_bad", 4.2, "sf0.1", iso = 4.1))
-    val (flagged, compared, _, _) = Bench.driftFlags(prev, cur)
-    assert(compared == 4)
-    assert(flagged.map(f => (f.name, f.metric)).toSet ==
-      Set(("iso_regr", "iso_sec"), ("first_bad", "iso_vs_prev_min")),
-      s"iso lane must exonerate suite pressure and flag real regressions: $flagged")
-  }
-
-  test("readPrevDetail parses the iso field into the baseline") {
-    val text = """{"sf":"sf0.1","queries":{
-      |  "pagerank":{"sec":3.575,"iso":2.210,"p1":3.6,"p2":3.58},
-      |  "q1_agg":{"sec":0.4,"p1":0.5,"p2":0.4}
-      |}}""".stripMargin
-    val prev = Bench.readPrevDetail(text, "sf0.1")
-    assert(prev("pagerank").iso == 2.210 && prev("pagerank").sec == 3.575)
-    assert(prev("q1_agg").iso == 0.0)
-  }
-
-  test("machine canary: block round-trips, ratio verdicts, absent baseline stays silent") {
-    val text = """"jit":{},"canary":{"st":[0.412,0.405,0.420],"mt":[0.510,0.498,0.530]},"health":{}"""
-    val parsed = Bench.readPrevCanary(text)
-    assert(parsed.contains((Seq(0.412, 0.405, 0.420), Seq(0.510, 0.498, 0.530))))
-    // quiet run vs quiet baseline: ratio ~1, not inflated
-    val quiet = Bench.canaryRatio(parsed, Seq(0.52, 0.50, 0.55))
-    assert(quiet.exists(r => r > 0.9 && r < 1.2))
-    // noisy-neighbor run: best mt sample 1.5x the baseline's best
-    val noisy = Bench.canaryRatio(parsed, Seq(0.80, 0.75, 0.92))
-    assert(noisy.exists(_ > 1.3),
-      s"a 1.5x-slower machine must read as inflated: $noisy")
-    // pre-r19 baseline (no canary block): verdict absent, never a flag
-    assert(Bench.readPrevCanary(""""health":{}""").isEmpty)
-    assert(Bench.canaryRatio(None, Seq(0.5)).isEmpty)
-  }
-
-  test("cumulative gate (r15 ask #2): a repeat <=1.4x climber flags at 1.8x vs the oldest baseline") {
-    import Bench.{CurRow, PrevRow}
-    // three rounds of 1.35x climbs: 1.0 -> 1.35 -> 1.82. Each
-    // round-over-round step passes the 1.5x gate; vs the OLDEST baseline
-    // the 1.8x cumulative gate catches it.
-    val oldest = Map("q_creep" -> PrevRow(1.0, "sf0.1"),
-      "q_flat" -> PrevRow(2.0, "sf0.1"))
-    val prevRound = Map("q_creep" -> PrevRow(1.35, "sf0.1"),
-      "q_flat" -> PrevRow(2.0, "sf0.1"))
-    val cur = Seq(CurRow("q_creep", 1.82, "sf0.1"),
-      CurRow("q_flat", 2.1, "sf0.1"))
-    val (roundFlags, _, _, _) = Bench.driftFlags(prevRound, cur)
-    assert(roundFlags.isEmpty, s"the per-round gate is blind to the creep: $roundFlags")
-    val (cumFlags, _, _, _) = Bench.driftFlags(oldest, cur, ratio = 1.8)
-    assert(cumFlags.map(_.name) == Seq("q_creep"),
-      s"the cumulative gate must catch it: $cumFlags")
-  }
-
-  test("committed drift section carries the cumulative compare") {
-    val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
-    if (java.nio.file.Files.exists(p)) {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      if (text.contains(""""cumulative"""")) {
-        // once present, the cumulative block must bind to the OLDEST
-        // committed snapshot and publish its wider gate
-        val m = """"cumulative":\{"baseline_round":(\d+)""".r
-          .findFirstMatchIn(text)
-        assert(m.isDefined, "cumulative block lost its baseline_round")
-        val rx = """BENCH_DETAIL_r(\d+)\.json""".r
-        val oldest = Option(new java.io.File("baselines").listFiles())
-          .toSeq.flatten
-          .flatMap(f => rx.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-          .sorted.headOption
-        oldest.foreach(k => assert(m.get.group(1).toInt == k,
-          s"cumulative baseline r${m.get.group(1)} is not the oldest snapshot r$k"))
-        assert(text.contains(""""ratio_gate":1.8"""))
-      }
-    }
+  test("committed record publishes its CPU counts and per-row CPU seconds") {
+    // the record a later run drifts against: the two counts decide whether
+    // it is comparable at all, and every row carries both passes' process
+    // CPU seconds beside their walls
+    val text = committedRecord()
+    val cpus = Bench.readCpus(text)
+    assert(cpus.exists(c => c.host >= 1 && c.graft >= 1), s"CPU counts: $cpus")
+    val rows = """"([a-z0-9_]+)":\{"sec":[^}]*\}""".r.findAllMatchIn(text).toSeq
+    assert(rows.nonEmpty, "the record has no query rows")
+    val missing = rows.filterNot(m =>
+      m.matched.contains(""""cpu1":""") && m.matched.contains(""""cpu2":"""))
+    assert(missing.isEmpty, s"rows without cpu1/cpu2: ${missing.map(_.group(1))}")
   }
 
   test("readPrevDetail parses its own row format, qsf overrides record sf") {
@@ -441,5 +273,35 @@ class BenchHealthSpec extends AnyFunSuite {
     val m = Bench.readPrevDetail(pretty, "sf0.1")
     assert(m("q_engine") == Bench.PrevRow(2.3, "sf0.1"), s"parsed: $m")
     assert(m("stream_x") == Bench.PrevRow(1.1, "sf0.001"), s"parsed: $m")
+  }
+
+  test("a baseline with a different CPU count compares nothing and says why") {
+    val text = """{"sf":"sf0.1","host_cpus":32,"spark_graft_cpus":8,"queries":{
+      |  "q_slow":{"sec":1.000,"p1":1.1,"p2":1.0}
+      |}}""".stripMargin
+    val other = Bench.baselineRows(text, Bench.Cpus(host = 4, graft = 8))
+    assert(other.left.exists(r => r.contains("host_cpus=32") &&
+      r.contains("spark_graft_cpus=8")), s"reason: $other")
+    // a record that predates the counts is not comparable either
+    val old = Bench.baselineRows(
+      """{"sf":"sf0.1","queries":{"q_slow":{"sec":1.0}}}""", Bench.Cpus(4, 4))
+    assert(old.left.exists(_.contains("no CPU counts")), s"reason: $old")
+  }
+
+  test("a baseline with the same CPU counts compares") {
+    import Bench.{CurRow, PrevRow}
+    val text = """{"sf":"sf0.1","host_cpus":4,"spark_graft_cpus":4,"queries":{
+      |  "graph_reachability":{"sec":3.440,"p1":5.0,"p2":3.44,"cpu1":12.1,"cpu2":9.9},
+      |  "triangle_coocc":{"sec":3.750,"p1":6.2,"p2":3.75,"cpu1":14.0,"cpu2":11.0}
+      |}}""".stripMargin
+    val rows = Bench.baselineRows(text, Bench.Cpus(host = 4, graft = 4))
+    assert(rows == Right(Map(
+      "graph_reachability" -> PrevRow(3.44, "sf0.1"),
+      "triangle_coocc" -> PrevRow(3.75, "sf0.1"))), s"rows: $rows")
+    val (flagged, compared, _, _) = Bench.driftFlags(rows.toOption.get, Seq(
+      CurRow("graph_reachability", 12.59, "sf0.1"),
+      CurRow("triangle_coocc", 3.9, "sf0.1")))
+    assert(compared == 2)
+    assert(flagged.map(_.name) == Seq("graph_reachability"), s"flags: $flagged")
   }
 }
